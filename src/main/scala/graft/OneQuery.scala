@@ -1,25 +1,13 @@
 package graft
 
-/** Profile a single catalog query: tools/run.sh graft.OneQuery <name> [sfDir] [reps]
-  * Set SPARK_GRAFT_NOEXT=1 to build the session without the
-  * SparkSessionExtensions registration (bisection aid). */
+/** Profile a single catalog query: tools/run.sh graft.OneQuery <name> [sfDir] [reps] */
 object OneQuery {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val builder =
-      if (sys.env.contains("SPARK_GRAFT_NOEXT"))
-        org.apache.spark.sql.SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus.toString)
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")
-      else GraftSession.builder(cpus, "graft-onequery")
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.builder(cpus, "graft-onequery").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()

@@ -10,38 +10,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     JoinQueries.queries("q10_join_star")(spark, "/root/testdata/sf0.001")
 
+  private def sets: Seq[QuerySet] = Seq(
+    AggQueries, JoinQueries, WindowQueries, CalcQueries, EventQueries,
+    TextQueries, VectorQueries, ExtraQueries, PipelineQueries, TpchQueries,
+    TpchQueries2, TpcdsShapes, GraphQueries, StreamParityQueries,
+    StreamParityQueries2, StreamParityQueries3, UdxQueries, FormatQueries,
+    Partitioning, SourceQueries, CorpusQueries, StreamParityQueries4,
+    SqlFrontendQueries, CurationQueries, StreamParityQueries5, IvfPqQueries,
+    FluentApiQueries, SketchQueries, LayoutQueries, CapstoneQueries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    AggQueries.queries ++ JoinQueries.queries ++ WindowQueries.queries ++
-    CalcQueries.queries ++ EventQueries.queries ++
-    TextQueries.queries ++ VectorQueries.queries ++ ExtraQueries.queries ++
-    PipelineQueries.queries ++ TpchQueries.queries ++ TpchQueries2.queries ++
-    TpcdsShapes.queries ++ GraphQueries.queries ++
-    StreamParityQueries.queries ++ StreamParityQueries2.queries ++
-    StreamParityQueries3.queries ++
-    UdxQueries.queries ++ FormatQueries.queries ++ Partitioning.queries ++
-    SourceQueries.queries ++ CorpusQueries.queries ++
-    StreamParityQueries4.queries ++ SqlFrontendQueries.queries ++
-    CurationQueries.queries ++ StreamParityQueries5.queries ++
-    IvfPqQueries.queries ++ FluentApiQueries.queries ++
-    SketchQueries.queries ++ LayoutQueries.queries ++
-    CapstoneQueries.queries
+    sets.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    AggQueries.oracle ++ JoinQueries.oracle ++ WindowQueries.oracle ++
-    CalcQueries.oracle ++ EventQueries.oracle ++
-    TextQueries.oracle ++ VectorQueries.oracle ++ ExtraQueries.oracle ++
-    PipelineQueries.oracle ++ TpchQueries.oracle ++ TpchQueries2.oracle ++
-    TpcdsShapes.oracle ++ GraphQueries.oracle ++
-    StreamParityQueries.oracle ++ StreamParityQueries2.oracle ++
-    StreamParityQueries3.oracle ++
-    UdxQueries.oracle ++ FormatQueries.oracle ++ Partitioning.oracle ++
-    SourceQueries.oracle ++ CorpusQueries.oracle ++
-    StreamParityQueries4.oracle ++ SqlFrontendQueries.oracle ++
-    CurationQueries.oracle ++ StreamParityQueries5.oracle ++
-    IvfPqQueries.oracle ++ FluentApiQueries.oracle ++
-    SketchQueries.oracle ++ LayoutQueries.oracle ++
-    CapstoneQueries.oracle
+  def oracleSql: Map[String, String] = sets.map(_.oracle).reduce(_ ++ _)
 }

@@ -17,7 +17,7 @@ import graft.Tables
   * same plan holds at 100 TB. Distinct aggs are planned by Spark's
   * RewriteDistinctAggregates into a two-stage expand+agg.
   */
-object AggQueries {
+object AggQueries extends QuerySet {
 
   val queries: Map[String, Q] = Map(
     // TPC-H Q1 shape: scan → filter → project → partial agg → final agg → sort.

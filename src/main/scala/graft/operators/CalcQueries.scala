@@ -18,7 +18,7 @@ import graft.functions.GraftFunctions._
   * (GraftFunctions) — everything stays inside whole-stage codegen; no
   * Scala UDF appears in any of these plans.
   */
-object CalcQueries {
+object CalcQueries extends QuerySet {
 
   val queries: Map[String, Q] = Map(
     // String function battery over part names.

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** END-TO-END CURATION PIPELINE CAPSTONE (r11 ask 8): the corpus
   * operators this library grew one oracle row at a time — quality
@@ -34,7 +34,7 @@ import graft.Tables
   * this adds the durable snapshot-per-stage contract its
   * FileSystem-sink pipelines approximate with directories.
   */
-object CapstoneQueries {
+object CapstoneQueries extends QuerySet {
 
   private def toks(c: org.apache.spark.sql.Column) = split(c, " ")
   private def md5i(c: org.apache.spark.sql.Column) =
@@ -53,7 +53,7 @@ object CapstoneQueries {
   val queries: Map[String, Q] = Map(
     "q340_curation_pipeline" -> ((s, d) => {
       import graft.sources.ManifestTable
-      val tmp = java.nio.file.Files.createTempDirectory("graft-capstone")
+      val tmp = Scratch.dir("capstone")
       def tableOf(n: String) = s"$tmp/$n"
       // each stage's survivors become a manifest snapshot (doc_id-
       // clustered, stats-carrying) …

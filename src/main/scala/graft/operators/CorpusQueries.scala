@@ -20,7 +20,7 @@ import graft.Tables
   * Determinism: hashes are md5-derived; ranking tiebreaks are total
   * orders (score desc, term asc) / (md5, doc_id).
   */
-object CorpusQueries {
+object CorpusQueries extends QuerySet {
 
   /** 32-bit integer hash of a string column: first 8 hex chars of md5. */
   private def md5i(c: Column): Column =

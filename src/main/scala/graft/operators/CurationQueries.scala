@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Corpus-curation tier 3 — model-free quality scoring and corpus-
   * statistics filters for LLM training-data pipelines: unigram-LM
@@ -29,7 +29,7 @@ import graft.Tables
   * metadata-sized aggregates (a corpus token total), same discipline
   * as q201's corpus count.
   */
-object CurationQueries {
+object CurationQueries extends QuerySet {
 
   /** 32-bit integer hash of a string column: first 8 hex chars of md5
     * (same family as CorpusQueries/TextQueries — one md5 per value). */
@@ -480,7 +480,7 @@ object CurationQueries {
     // driver scalar (metadata-sized).
     "q218_stream_surprisal" -> ((s, d) => {
       import graft.streaming.Replay
-      val base = java.nio.file.Files.createTempDirectory("graft-surpstream")
+      val base = Scratch.dir("surpstream")
       val docs = Tables.documents(s, d)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       val half = maxId / 2
@@ -683,7 +683,7 @@ object CurationQueries {
     // must equal q236's one-shot audit exactly — same oracle SQL.
     "q237_stream_leakage" -> ((s, d) => {
       import graft.streaming.Replay
-      val base = java.nio.file.Files.createTempDirectory("graft-leakstream")
+      val base = Scratch.dir("leakstream")
       val bucket = pmod(md5i(col("text")), lit(100))
       val docs = Tables.documents(s, d)
         .withColumn("split",
@@ -1459,7 +1459,7 @@ object CurationQueries {
     // legs can never drift.
     "q284_winnow_stream" -> ((s, d) => {
       import graft.streaming.Replay
-      val base = java.nio.file.Files.createTempDirectory("graft-winstream2")
+      val base = Scratch.dir("winstream2")
       // TWO projection steps, not one expression: a Column subtree is
       // DUPLICATED at every reference, so inlining `keys` into the
       // per-window lambda would re-run every gram md5 once per window

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
+import StreamParityQueries.runAppend
 
 /** Time-windowing + temporal operators over the events table — the
   * batch analogs of the reference's streaming operators (SURVEY §2.2,
@@ -26,7 +27,7 @@ import graft.Tables
   * partitions, no per-row subquery — which scales linearly and avoids
   * the O(n·m) correlated-lookup plan.
   */
-object EventQueries {
+object EventQueries extends QuerySet {
 
   // Order-independent exact sum of a 2-decimal double column: sum
   // integer cents, and KEEP it integer cents (BIGINT) — a DECIMAL
@@ -240,15 +241,13 @@ object EventQueries {
     "q118_cep_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Cep, Event}
-      import org.apache.spark.sql.streaming.Trigger
       val pat = Cep.Pattern.begin[Event]("a")((e, _) => e.event_type == "view")
         .followedBy("b") { (e, bound) =>
           e.event_type == "purchase" &&
             Event.micros(e.ts) > Event.micros(bound("a").head.ts)
         }
         .within(600000000L)
-      val base = java.nio.file.Files.createTempDirectory("graft-cepstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("cepstream")
       val ev = Tables.events(s, d).as[Event]
         .filter(e => e.event_type == "view" || e.event_type == "purchase")
       // time-ordered chunks replayed one-per-micro-batch. One
@@ -275,12 +274,7 @@ object EventQueries {
         val a = m("a").head; val b = m("b").head
         (user, a.event_id, b.event_id, Event.micros(b.ts) - Event.micros(a.ts))
       }.toDF("user_id", "view_id", "purchase_id", "delta_us")
-      val q = matched.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out)
+      runAppend(matched, base.toString, s)
         .orderBy(col("user_id"), col("view_id"))
     }),
 
@@ -298,9 +292,7 @@ object EventQueries {
     "q129_window_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay}
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-winstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("winstream")
       val real = Tables.events(s, d).as[Event]
       // chunk bounds from the DATA's own span (two bounded scalars) so
       // the replay is genuinely multi-batch at every scale factor
@@ -345,12 +337,7 @@ object EventQueries {
         .agg(count(lit(1)).as("n"), sumCents.as("cents_v"))
         .select(col("w.start").as("w_start"), col("event_type"),
           col("n"), col("cents_v"))
-      val q = agg.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).filter(col("event_type") =!= "flush")
+      runAppend(agg, base.toString, s).filter(col("event_type") =!= "flush")
         .orderBy(col("w_start"), col("event_type"))
     }),
 
@@ -367,9 +354,7 @@ object EventQueries {
     "q265_windowall_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay}
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-winall")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("winall")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -394,12 +379,7 @@ object EventQueries {
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n"), sumCents.as("cents_v"))
         .select(col("w.start").as("w_start"), col("n"), col("cents_v"))
-      val q = agg.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).filter(col("w_start") <= lit(tsOf(hiUs)))
+      runAppend(agg, base.toString, s).filter(col("w_start") <= lit(tsOf(hiUs)))
         .orderBy(col("w_start"))
     }),
 
@@ -439,9 +419,7 @@ object EventQueries {
     "q130_session_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay}
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-sessstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("sessstream")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -469,12 +447,7 @@ object EventQueries {
           sumCents.as("cents_v"))
         .select(col("user_id"), col("n_events"), col("sess_start"),
           col("sess_end"), col("cents_v"))
-      val q = sess.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).filter(col("user_id") >= 0) // drop flush sentinels
+      runAppend(sess, base.toString, s).filter(col("user_id") >= 0) // drop flush sentinels
         .withColumn("sess_id", row_number().over(
           Window.partitionBy(col("user_id")).orderBy(col("sess_start")))
           .cast("long"))
@@ -494,9 +467,7 @@ object EventQueries {
     "q131_dedup_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay, StatefulOps}
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-dedupstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("dedupstream")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -513,12 +484,7 @@ object EventQueries {
       val deduped = StatefulOps
         .dedupFirstWithTtl(Replay.stream(s, inDir, schema), Long.MaxValue / 2)
         .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
-      val q = deduped.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).orderBy(col("user_id"), col("event_type"))
+      runAppend(deduped, base.toString, s).orderBy(col("user_id"), col("event_type"))
     }),
 
     // STREAMING interval join oracle-bound (the reference's
@@ -532,9 +498,7 @@ object EventQueries {
     "q132_interval_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay, StreamJoins}
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-ivstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("ivstream")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -557,12 +521,7 @@ object EventQueries {
           "user_id", "ts", "1 minute", "10 MINUTES", "10 MINUTES")
         .select(expr("l.user_id").as("user_id"), col("p_id"), col("e_id"),
           (unix_micros(expr("r.ts")) - unix_micros(expr("l.ts"))).as("delta_us"))
-      val q = joined.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).orderBy(col("user_id"), col("p_id"), col("e_id"))
+      runAppend(joined, base.toString, s).orderBy(col("user_id"), col("p_id"), col("e_id"))
     }),
 
     // STREAMING temporal as-of join oracle-bound (the reference's
@@ -578,9 +537,7 @@ object EventQueries {
     "q133_asof_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, EventTimeOps, Replay}
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-asofstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("asofstream")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -601,12 +558,7 @@ object EventQueries {
       val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
       val joined = EventTimeOps.asOfJoinBuffered(
           Replay.stream(s, inDir, schema), "view", "purchase", "1 minute")
-      val q = joined.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).filter(col("user_id") >= 0)
+      runAppend(joined.toDF(), base.toString, s).filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("purchase_id"))
     }),
 
@@ -621,9 +573,7 @@ object EventQueries {
     "q134_over_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay, StatefulOps}
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-overstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("overstream")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -641,15 +591,11 @@ object EventQueries {
           Replay.stream(s, inDir, schema)
             .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
           n = 5)
-      val q = over.toDF()
+      runAppend(over.toDF()
         .select(col("user_id"), col("event_id"),
-          expr("cast(sum_prev as bigint)").as("cents_prev"), col("cnt_prev"))
-        .writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).orderBy(col("user_id"), col("event_id"))
+          expr("cast(sum_prev as bigint)").as("cents_prev"), col("cnt_prev")),
+        base.toString, s)
+        .orderBy(col("user_id"), col("event_id"))
     }),
 
     // Count-tumbling window batch analog (CountTumblingWindowAssigner):

@@ -9,7 +9,7 @@ import graft.Tables
   * physical operator verified against the SAME DuckDB SQL as the
   * union+window form.
   */
-object ExtraQueries {
+object ExtraQueries extends QuerySet {
 
   // Exact revenue: l_extendedprice (2 decimals) × (1-l_discount)
   // (2 decimals) has exactly 4 decimals → ×10⁴ is integral, and an

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.streaming.FluentTable
+import StreamParityQueries.runAppend
 
 /** Oracle bindings for the fluent Table-API string-expression facade
   * (graft.streaming.TableApi / FluentTable — reference Table.java:104
@@ -12,9 +11,7 @@ import graft.streaming.FluentTable
   * text, no direct Column construction — so the whole
   * tokenizer→parser→Column path is what the hash binds.
   */
-object FluentApiQueries {
-
-  private type Q = (SparkSession, String) => DataFrame
+object FluentApiQueries extends QuerySet {
 
   val queries: Map[String, Q] = Map(
 
@@ -151,9 +148,7 @@ object FluentApiQueries {
       import graft.streaming.{Event, Replay}
       import graft.streaming.GroupWindows.Tumble
       import org.apache.spark.sql.functions.{col, lit, min, max}
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-fluentstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("fluentstream")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -182,12 +177,7 @@ object FluentApiQueries {
         .select("w.start as ws, w.end as we, event_type, " +
           "event_type.count as n, cents.sum as cents_sum")
         .toDF
-      val q = agg.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).filter(col("event_type") =!= "flush")
+      runAppend(agg, base.toString, s).filter(col("event_type") =!= "flush")
         .orderBy(col("ws"), col("event_type"))
     }),
 
@@ -206,9 +196,7 @@ object FluentApiQueries {
       import graft.streaming.{Event, Replay}
       import graft.streaming.GroupWindows.Session
       import org.apache.spark.sql.functions.{col, lit, min, max}
-      import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-fluentsess")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("fluentsess")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -237,12 +225,7 @@ object FluentApiQueries {
         .select("w.start as ss, w.end as se, user_id, " +
           "user_id.count as n_events, cents.sum as cents_v")
         .toDF
-      val q = agg.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).filter(col("user_id") >= 0)
+      runAppend(agg, base.toString, s).filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("ss"))
     }),
 

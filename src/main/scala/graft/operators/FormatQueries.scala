@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Format-connector round-trip binds (SURVEY §2.7): each query writes
   * the events table through a non-parquet format, reads it back with
@@ -18,7 +18,7 @@ import graft.Tables
   * binary and round-trips the full row including µs timestamps and
   * raw doubles.
   */
-object FormatQueries {
+object FormatQueries extends QuerySet {
 
   private def aggAfter(df: org.apache.spark.sql.DataFrame) =
     df.groupBy(col("event_type"))
@@ -34,7 +34,7 @@ object FormatQueries {
   val queries: Map[String, Q] = Map(
 
     "q167_csv_roundtrip" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-csvrt")
+      val base = Scratch.dir("csvrt")
       val ev = centsProj(s, d)
       ev.write.mode("overwrite").option("header", "true").csv(s"$base/csv")
       aggAfter(s.read.schema(ev.schema).option("header", "true")
@@ -42,7 +42,7 @@ object FormatQueries {
     }),
 
     "q168_json_roundtrip" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-jsonrt")
+      val base = Scratch.dir("jsonrt")
       val ev = centsProj(s, d)
       ev.write.mode("overwrite").json(s"$base/json")
       aggAfter(s.read.schema(ev.schema).json(s"$base/json"))
@@ -62,7 +62,7 @@ object FormatQueries {
     // under failOnMissingField=false → null). Quarantine counts and
     // the clean-row aggregate face the oracle.
     "q259_json_errmodes" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-jsonerr")
+      val base = Scratch.dir("jsonerr")
       val ev = centsProj(s, d)
       val full = to_json(struct(col("event_id"), col("user_id"),
         col("event_type"), col("cents")))
@@ -108,7 +108,7 @@ object FormatQueries {
     // ORC is binary: full-fidelity round trip including the µs
     // timestamp and the raw double — the aggregate covers both.
     "q169_orc_roundtrip" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-orcrt")
+      val base = Scratch.dir("orcrt")
       val ev = Tables.events(s, d)
       ev.write.mode("overwrite").orc(s"$base/orc")
       s.read.orc(s"$base/orc")
@@ -129,7 +129,7 @@ object FormatQueries {
     // read partitioning breaks the oracle row. The 2PC/MERGE write
     // paths are separately bound by q140 + TxnSinkSpec.
     "q186_jdbc_roundtrip" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-jdbcrt")
+      val base = Scratch.dir("jdbcrt")
       val url = s"jdbc:derby:$base/db;create=true"
       val ev = centsProj(s, d)
       ev.write.format("jdbc")
@@ -170,7 +170,7 @@ object FormatQueries {
     "q188_stream_csv_sink" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay}
-      val base = java.nio.file.Files.createTempDirectory("graft-csvsink")
+      val base = Scratch.dir("csvsink")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = StreamParityQueries.spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real,
@@ -196,7 +196,7 @@ object FormatQueries {
     // schema mapping, the snappy-coded container framing, or the
     // two-phase task-file commit breaks the oracle row.
     "q242_avro_roundtrip" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-avrort")
+      val base = Scratch.dir("avrort")
       val ev = Tables.events(s, d)
       ev.write.format("graft-avro").mode("overwrite").save(s"$base/avro")
       s.read.format("graft-avro").load(s"$base/avro")
@@ -215,7 +215,7 @@ object FormatQueries {
     // src IS NULL, so a generation misrouted, a null not synthesized,
     // or a field matched by position instead of name breaks the row.
     "q248_avro_evolution" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-avroev")
+      val base = Scratch.dir("avroev")
       val ev = centsProj(s, d)
       ev.filter(col("event_id") % 2 === 0)
         .write.format("graft-avro").mode("append").save(s"$base/avro")
@@ -244,7 +244,7 @@ object FormatQueries {
     // encode corruption breaks the row.
     "q253_stream_avro_sink" -> ((s, d) => {
       import graft.streaming.{Event, Replay}
-      val base = java.nio.file.Files.createTempDirectory("graft-avsink")
+      val base = Scratch.dir("avsink")
       val real = Tables.events(s, d).as(org.apache.spark.sql.Encoders.product[Event])
       val (lo, hi) = StreamParityQueries.spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real,
@@ -261,7 +261,7 @@ object FormatQueries {
     }),
 
     "q187_partitioned_table" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-cattbl")
+      val base = Scratch.dir("cattbl")
       Tables.documents(s, d)
         .write.partitionBy("source").mode("overwrite")
         .option("path", s"$base/tbl")
@@ -290,7 +290,7 @@ object FormatQueries {
     "q281_txn_sink_recovery" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay, TxnSink}
-      val base = java.nio.file.Files.createTempDirectory("graft-txnrec")
+      val base = Scratch.dir("txnrec")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = StreamParityQueries.spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real,
@@ -357,7 +357,7 @@ object FormatQueries {
     "q303_cdc_stream_merge" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Cdc, Event, Replay}
-      val base = java.nio.file.Files.createTempDirectory("graft-cdcstream")
+      val base = Scratch.dir("cdcstream")
       val real = Tables.events(s, d)
       val (lo, hi) = StreamParityQueries.spanOf(real.as[Event])
       // checkpoint the wire BEFORE the replay prep: fileEpochs writes
@@ -520,7 +520,7 @@ object FormatQueries {
     "q326_cdc_compact" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Cdc, Event, Replay}
-      val base = java.nio.file.Files.createTempDirectory("graft-cdccompact")
+      val base = Scratch.dir("cdccompact")
       val real = Tables.events(s, d)
       val (lo, hi) = StreamParityQueries.spanOf(real.as[Event])
       val wire = Cdc.envelope(real).localCheckpoint()
@@ -568,8 +568,8 @@ object FormatQueries {
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     import graft.streaming.{Cdc, Event, Replay}
-    val base = java.nio.file.Files.createTempDirectory(
-      if (timeOrdered) "graft-scd2stream" else "graft-scd2ooo")
+    val base = Scratch.dir(
+      if (timeOrdered) "scd2stream" else "scd2ooo")
     val real = Tables.events(s, d)
       .filter(pmod(col("user_id"), lit(50)) === keyMod)
     val wire = Cdc.envelope(real).localCheckpoint()

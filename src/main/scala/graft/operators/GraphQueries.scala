@@ -18,7 +18,7 @@ import graft.Tables
   * and the join is co-located after one shuffle on orderkey. ~18k
   * edges over ~1.8k vertices at sf0.01.
   */
-object GraphQueries {
+object GraphQueries extends QuerySet {
 
   /** Canonical co-purchase edges (src < dst, distinct). */
   private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Oracle bindings for the composed IVF+PQ ANN index (IvfPq.scala —
   * q146's coarse quantizer pruning q211's ADC scan to nprobe lists).
@@ -24,9 +24,7 @@ import graft.Tables
   *    metric is recall@5 against the brute-force ground truth (q70's
   *    exact top-5) as an exact integer permille — q240's audit shape.
   */
-object IvfPqQueries {
-
-  private type Q = (SparkSession, String) => DataFrame
+object IvfPqQueries extends QuerySet {
 
   private val dims = 64
 
@@ -132,7 +130,7 @@ object IvfPqQueries {
     "q297_ivfpq_stream_ingest" -> ((s, d) => {
       import graft.streaming.Replay
       import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-ivfingest")
+      val base = Scratch.dir("ivfingest")
       val idx = s"$base/index"
       val e = Tables.embeddings(s, d)
       val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
@@ -185,7 +183,7 @@ object IvfPqQueries {
     // anti-join, a compaction dropping a live row, or an overwrite
     // clobbering a cold partition all break the hash.
     "q312_ivfpq_delete" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-ivfdel")
+      val base = Scratch.dir("ivfdel")
       val idx = s"$base/index"
       val e = Tables.embeddings(s, d)
       val model = IvfPq.fit(e, "embedding", kCoarse = 8, lloydIters = 2,
@@ -272,7 +270,7 @@ object IvfPqQueries {
     // actually halves and cold partitions stay byte-identical. At
     // 100 TB a rebalance touches one inverted list's directory.
     "q325_ivf_rebalance" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-ivfreb")
+      val base = Scratch.dir("ivfreb")
       val idx = s"$base/index"
       val e = Tables.embeddings(s, d)
       val model = IvfPq.fit(e, "embedding", kCoarse = 8, lloydIters = 2,

@@ -20,7 +20,7 @@ import graft.Tables
   * to broadcast when a filtered side turns out small and splits skewed
   * partitions.
   */
-object JoinQueries {
+object JoinQueries extends QuerySet {
 
   val queries: Map[String, Q] = Map(
     // TPC-H Q5 shape: 5-way star join, dims broadcast, fact-fact shuffled.

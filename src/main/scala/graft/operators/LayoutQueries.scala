@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Data-layout operators: Z-ORDER (Morton-curve) clustering keys — the
   * multi-dimensional file-clustering technique lakehouse tables run at
@@ -24,7 +24,7 @@ import graft.Tables
   * clustering (flink-runtime sort/partition operators) is the 1-D
   * special case; the Morton key generalizes it to 2-D pruning.
   */
-object LayoutQueries {
+object LayoutQueries extends QuerySet {
 
   private val bits = 16
 
@@ -169,7 +169,7 @@ object LayoutQueries {
     // between scanning every file and only the rectangle's files for
     // any 2-D range predicate.
     "q310_zorder_prune" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-zprune")
+      val base = Scratch.dir("zprune")
       val (natDir, zDir, plo, phi, slo, shi) =
         writeZorderLayouts(s, d, base.toString)
       probeRect(s, natDir, "natural", plo, phi, slo, shi)
@@ -195,7 +195,7 @@ object LayoutQueries {
     // post-OPTIMIZE probe scan reads strictly fewer rows.
     "q314_zorder_optimize" -> ((s, d) => {
       import graft.sources.ManifestTable
-      val tmp = java.nio.file.Files.createTempDirectory("graft-zopt")
+      val tmp = Scratch.dir("zopt")
       val (table, plo, phi, slo, shi) = writeOptimizeTable(s, d, tmp.toString)
       ManifestTable.optimize(s, table, deltaFilesOf(table),
         col("zkey"), numFiles = 4)
@@ -218,7 +218,7 @@ object LayoutQueries {
     // training-data snapshot re-reads bit-identically until vacuumed.
     "q319_manifest_timetravel" -> ((s, d) => {
       import graft.sources.ManifestTable
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ztt")
+      val tmp = Scratch.dir("ztt")
       val (table, plo, phi, slo, shi) = writeOptimizeTable(s, d, tmp.toString)
       ManifestTable.optimize(s, table, deltaFilesOf(table),
         col("zkey"), numFiles = 4)
@@ -243,7 +243,7 @@ object LayoutQueries {
     // poll reads only the new files, never the table.
     "q327_manifest_changelog" -> ((s, d) => {
       import graft.sources.ManifestTable
-      val tmp = java.nio.file.Files.createTempDirectory("graft-mlog")
+      val tmp = Scratch.dir("mlog")
       val table = s"$tmp/table"
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -284,7 +284,7 @@ object LayoutQueries {
     // the probe covers ~1/5 of a 20-file key-clustered table.
     "q335_manifest_prune" -> ((s, d) => {
       import graft.sources.ManifestTable
-      val tmp = java.nio.file.Files.createTempDirectory("graft-mprune")
+      val tmp = Scratch.dir("mprune")
       val table = s"$tmp/table"
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -323,7 +323,7 @@ object LayoutQueries {
     // refusal to scan across a merge commit.
     "q328_manifest_merge" -> ((s, d) => {
       import graft.sources.ManifestTable
-      val tmp = java.nio.file.Files.createTempDirectory("graft-mrg")
+      val tmp = Scratch.dir("mrg")
       val table = s"$tmp/table"
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -368,7 +368,7 @@ object LayoutQueries {
     "q336_manifest_stream" -> ((s, d) => {
       import graft.sources.ManifestTable
       import graft.streaming.Replay
-      val base = java.nio.file.Files.createTempDirectory("graft-mstream")
+      val base = Scratch.dir("mstream")
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
         .localCheckpoint() // one scan feeds every commit/probe below (r12)
@@ -428,7 +428,7 @@ object LayoutQueries {
     // ManifestSpec).
     "q337_manifest_cdc" -> ((s, d) => {
       import graft.sources.ManifestTable
-      val tmp = java.nio.file.Files.createTempDirectory("graft-mcdclog")
+      val tmp = Scratch.dir("mcdclog")
       val table = s"$tmp/table"
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -471,7 +471,7 @@ object LayoutQueries {
     // broadcast anti-join until the next maintenance window.
     "q338_manifest_delete" -> ((s, d) => {
       import graft.sources.ManifestTable
-      val tmp = java.nio.file.Files.createTempDirectory("graft-mdelq")
+      val tmp = Scratch.dir("mdelq")
       val table = s"$tmp/table"
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -578,7 +578,7 @@ object LayoutQueries {
     // keeps the demonstration honest at test scale where orders
     // would otherwise broadcast.
     "q306_bucketed_join" -> ((s, d) => {
-      val wh = java.nio.file.Files.createTempDirectory("graft-buck")
+      val wh = Scratch.dir("buck")
       // Per-run table names (suffixed with the temp-dir token): the
       // fixed global names would race across sessions sharing a
       // metastore, and DROP TABLE on a path-based (external) table
@@ -592,7 +592,7 @@ object LayoutQueries {
               org.apache.spark.sql.catalyst.TableIdentifier(t.name)).location
             var dir = java.nio.file.Paths.get(loc)
             if (dir.getParent != null &&
-                dir.getParent.getFileName.toString.startsWith("graft-buck"))
+                dir.getParent.getFileName.toString.startsWith("buck"))
               dir = dir.getParent
             if (java.nio.file.Files.exists(dir)) {
               val walk = java.nio.file.Files.walk(dir)

@@ -32,7 +32,7 @@ import graft.Tables
   * data paths (the range check collects one (min,max) row per
   * partition, ≤ numParts rows).
   */
-object Partitioning {
+object Partitioning extends QuerySet {
 
   /** Route rows with an explicit partitioner (`user_id mod parts` —
     * SQL-reproducible on purpose) and roll up each partition in place:

@@ -32,7 +32,7 @@ import graft.Tables
   * - All ratios are integer ppm (exact cross-engine, no float
   *   rounding boundary).
   */
-object PipelineQueries {
+object PipelineQueries extends QuerySet {
 
   private def ws(t: Column) = split(t, " ")
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Frequency-sketch operators: Count-Min heavy hitters over the corpus
   * token stream (Cormode & Muthukrishnan 2005 — the streaming-frequency
@@ -23,7 +23,7 @@ import graft.Tables
   * sketch-partial-aggregation pattern (flink-table-runtime-blink
   * aggregate partials); Count-Min is its frequency-domain sibling.
   */
-object SketchQueries {
+object SketchQueries extends QuerySet {
 
   /** 32-bit integer hash of a string column: first 8 hex chars of md5. */
   private def md5i(c: Column): Column =
@@ -104,7 +104,7 @@ object SketchQueries {
     // cell table (newest emission per cell) then answers the q298
     // heavy-hitter audit bit-for-bit — same oracle.
     "q313_cms_stream" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-cmsstream")
+      val base = Scratch.dir("cmsstream")
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
       val (inDir, schema) = graft.streaming.Replay
@@ -219,7 +219,7 @@ object SketchQueries {
     // the batch cube — live quantile dashboards without rescans.
     "q323_kll_stream" -> ((s, d) => {
       import graft.functions.Kll
-      val base = java.nio.file.Files.createTempDirectory("graft-kllstream")
+      val base = Scratch.dir("kllstream")
       val kllAgg = udaf(new Kll.Agg)
       val statsUdf = udf((b: Array[Byte]) => Kll.stats(b))
       val docs = Tables.documents(s, d)
@@ -331,7 +331,7 @@ object SketchQueries {
     // unique to one), audited against the exact distinct-join counts.
     "q332_theta_stream" -> ((s, d) => {
       import graft.functions.Theta
-      val base = java.nio.file.Files.createTempDirectory("graft-thstream")
+      val base = Scratch.dir("thstream")
       val thetaAgg = udaf(new Theta.Agg)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("text"))
@@ -446,7 +446,7 @@ object SketchQueries {
     // ingest pipeline keeps live cardinality dashboards without ever
     // re-scanning: the q307 cube's cells maintained incrementally.
     "q308_hll_stream" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-hllstream")
+      val base = Scratch.dir("hllstream")
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("text"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)

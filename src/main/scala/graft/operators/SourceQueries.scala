@@ -23,7 +23,7 @@ import graft.Tables
   * driver-local by nature (one socket, one ladder) — data-scale
   * ingest is the file/parquet path used everywhere else.
   */
-object SourceQueries {
+object SourceQueries extends QuerySet {
 
   /** Serve `lines` over a local server socket, read them back through
     * the socket streaming source, return once `expect` rows arrived

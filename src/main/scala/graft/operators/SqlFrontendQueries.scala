@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.streaming.{FlinkDdl, FlinkSql, FlinkSqlJoins, GroupWindowSql}
 import org.apache.spark.sql.Row
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.Row
   * .java` (TUMBLE/HOP/SESSION + `_START`/`_END` auxiliaries), compiled
   * by `StreamExecGroupWindowAggregate.scala:33`.
   */
-object SqlFrontendQueries {
+object SqlFrontendQueries extends QuerySet {
 
   /** The literal Flink-SQL text: all three group-window assigners +
     * their START/END auxiliaries in one statement. Day tumble and
@@ -70,7 +70,7 @@ object SqlFrontendQueries {
       import s.implicits._
       import org.apache.spark.sql.functions.col
       import graft.streaming.{Event, Replay}
-      val base = java.nio.file.Files.createTempDirectory("graft-sesssql")
+      val base = Scratch.dir("sesssql")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(org.apache.spark.sql.functions.min(col("ts")),
@@ -156,7 +156,7 @@ object SqlFrontendQueries {
     // were current across reference versions).
     "q225_flinksql_ddl_pipeline" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
-      val base = java.nio.file.Files.createTempDirectory("graft-ddl")
+      val base = Scratch.dir("ddl")
       Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"),
         org.apache.spark.sql.functions.expr("cast(round(value*100) as bigint)").as("cents"))
@@ -192,7 +192,7 @@ object SqlFrontendQueries {
     // warehouse sink needs, driven purely from DDL text.
     "q226_flinksql_ddl_partitioned" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
-      val base = java.nio.file.Files.createTempDirectory("graft-ddl2")
+      val base = Scratch.dir("ddl2")
       Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"),
         org.apache.spark.sql.functions.expr("cast(round(value*100) as bigint)").as("cents"))
@@ -236,7 +236,7 @@ object SqlFrontendQueries {
     // load-bearing end to end.
     "q243_flinksql_ddl_avro" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, expr}
-      val base = java.nio.file.Files.createTempDirectory("graft-ddl-avro")
+      val base = Scratch.dir("ddl-avro")
       Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"),
         expr("cast(round(value*100) as bigint)").as("cents"))
@@ -279,7 +279,7 @@ object SqlFrontendQueries {
     // shifts a window aggregate and breaks the row.
     "q244_flinksql_ddl_avro_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val base = java.nio.file.Files.createTempDirectory("graft-ddl-avs")
+      val base = Scratch.dir("ddl-avs")
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"),
         unix_micros(col("ts")).as("ts_us"))
@@ -332,7 +332,7 @@ object SqlFrontendQueries {
 
     "q227_flinksql_ddl_stream" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val base = java.nio.file.Files.createTempDirectory("graft-ddl3")
+      val base = Scratch.dir("ddl3")
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"),
         unix_micros(col("ts")).as("ts_us"))
@@ -395,7 +395,7 @@ object SqlFrontendQueries {
     // pasted whole.
     "q228_flinksql_unified" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val base = java.nio.file.Files.createTempDirectory("graft-uni")
+      val base = Scratch.dir("uni")
       Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"),
         expr("cast(round(value*100) as bigint)").as("cents"),
@@ -440,7 +440,7 @@ object SqlFrontendQueries {
     // (csv parse, window rewrite, NFA, join) breaks the row.
     "q234_flinksql_app" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val base = java.nio.file.Files.createTempDirectory("graft-app")
+      val base = Scratch.dir("app")
       graft.functions.Udx.register(s)
       Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"), col("value"), col("props"),

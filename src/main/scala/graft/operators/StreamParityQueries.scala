@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.streaming.{Event, Replay, Retract, SemiAntiJoin, StatefulOps}
 
 /** Round-5 streaming↔batch parity pack: the remaining spec-only
@@ -30,7 +30,7 @@ import graft.streaming.{Event, Replay, Retract, SemiAntiJoin, StatefulOps}
   * keyed JDBC table (tombstones = DELETE), proving the changelog
   * algebra lands a downstream materialization on the one-shot truth.
   */
-object StreamParityQueries {
+object StreamParityQueries extends QuerySet {
 
   // Oracle-side CTE: same ns→µs truncation the Spark loader applies
   // (see EventQueries.evCte).
@@ -136,7 +136,7 @@ object StreamParityQueries {
     // trick). Final state = newest refresh per (user, rank).
     "q135_topn_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-topnstream")
+      val base = Scratch.dir("topnstream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -160,7 +160,7 @@ object StreamParityQueries {
     // emission per key; oracle = the identical q55 SQL.
     "q136_dedup_last_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-keylaststream")
+      val base = Scratch.dir("keylaststream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -183,7 +183,7 @@ object StreamParityQueries {
     // batch EXISTS semantics.
     "q137_semi_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-semistream")
+      val base = Scratch.dir("semistream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -208,7 +208,7 @@ object StreamParityQueries {
     // batch in which the armed event-time timeouts actually fire.
     "q138_anti_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-antistream")
+      val base = Scratch.dir("antistream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val spanMs = (hi - lo) / 1000
@@ -245,7 +245,7 @@ object StreamParityQueries {
     // count(*) = 10). Cents mapped before the op for exact sums.
     "q139_countwin_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-cntwinstream")
+      val base = Scratch.dir("cntwinstream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -267,7 +267,7 @@ object StreamParityQueries {
     // every 5th row by row_number with a ROWS 9 PRECEDING frame.
     "q142_countslide_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-cntslidestream")
+      val base = Scratch.dir("cntslidestream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -290,7 +290,7 @@ object StreamParityQueries {
     // cannot diverge between the op's (ts, event_id) order and SQL.
     "q143_rangeover_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-rangestream")
+      val base = Scratch.dir("rangestream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -313,7 +313,7 @@ object StreamParityQueries {
     // has the same shape).
     "q144_sortlimit_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-sortlimitstream")
+      val base = Scratch.dir("sortlimitstream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -340,7 +340,7 @@ object StreamParityQueries {
     "q145_outer_interval_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.StreamJoins
-      val base = java.nio.file.Files.createTempDirectory("graft-outerivstream")
+      val base = Scratch.dir("outerivstream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       def drain(id: Long, typ: String, offDays: Long) = Event(id,
@@ -387,7 +387,7 @@ object StreamParityQueries {
     "q150_session_dynamic_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.WindowedAggs
-      val base = java.nio.file.Files.createTempDirectory("graft-dynsessstream")
+      val base = Scratch.dir("dynsessstream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       def flush(id: Long, offDays: Long) = Event(id,
@@ -428,7 +428,7 @@ object StreamParityQueries {
     "q151_lookup_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.StreamJoins
-      val base = java.nio.file.Files.createTempDirectory("graft-lookupstream")
+      val base = Scratch.dir("lookupstream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -448,7 +448,7 @@ object StreamParityQueries {
     "q152_lookup_async_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.StreamJoins
-      val base = java.nio.file.Files.createTempDirectory("graft-alookupstream")
+      val base = Scratch.dir("alookupstream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -473,7 +473,7 @@ object StreamParityQueries {
     "q153_late_tag_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.WindowedAggs
-      val base = java.nio.file.Files.createTempDirectory("graft-latestream")
+      val base = Scratch.dir("latestream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val cut = (q: Long) => lit(tsOf(lo + (hi - lo) * q / 4))
@@ -497,7 +497,7 @@ object StreamParityQueries {
     // stream-static LEFT ANTI on md5(text) drops exact re-crawls.
     "q154_dedup_corpus_stream" -> ((s, d) => {
       import graft.streaming.StreamDedup
-      val base = java.nio.file.Files.createTempDirectory("graft-dedupstream")
+      val base = Scratch.dir("dedupstream")
       val docs = Tables.documents(s, d)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       val half = maxId / 2
@@ -522,7 +522,7 @@ object StreamParityQueries {
     // banded-minhash algebra in DuckDB (sig SQL shared with q64/q65).
     "q155_neardup_corpus_stream" -> ((s, d) => {
       import graft.streaming.StreamDedup
-      val base = java.nio.file.Files.createTempDirectory("graft-neardupstream")
+      val base = Scratch.dir("neardupstream")
       val docs = Tables.documents(s, d)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       val half = maxId / 2
@@ -545,7 +545,7 @@ object StreamParityQueries {
     "q156_full_outer_interval_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.StreamJoins
-      val base = java.nio.file.Files.createTempDirectory("graft-fouterivstream")
+      val base = Scratch.dir("fouterivstream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       def drain(id: Long, typ: String, offDays: Long) = Event(id,
@@ -619,7 +619,7 @@ object StreamParityQueries {
     // oracle, not just the property models.
     "q140_retract_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-retractstream")
+      val base = Scratch.dir("retractstream")
       val (out, ck) = (s"$base/out", s"$base/ck")
       val url = s"jdbc:derby:$base/db;create=true"
       initRankTable(url)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.streaming.{Event, EventTimeOps, Replay, StreamDedup, StreamIterate, WindowOps}
 import StreamParityQueries.{evCte, quarterChunks, runAppend, spanOf, tsOf}
 
@@ -32,7 +32,7 @@ import StreamParityQueries.{evCte, quarterChunks, runAppend, spanOf, tsOf}
   * spec-only: its fires depend on micro-batch watermark timing, which
   * a one-shot SQL cannot see).
   */
-object StreamParityQueries2 {
+object StreamParityQueries2 extends QuerySet {
 
   /** Real events + two far-future flush sentinels (user_id = -1),
     * chunked into the four time quarters + one batch per sentinel.
@@ -75,7 +75,7 @@ object StreamParityQueries2 {
   private def fires(s: SparkSession, d: String, tag: String,
                     trigger: WindowOps.Trigger,
                     evictor: WindowOps.Evictor): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(s"graft-$tag")
+    val base = Scratch.dir(tag)
     val (inDir, schema) = flushedReplay(s, d, base.toString)
     val out = WindowOps.tumble(centsStream(s, inDir, schema),
       sizeMs = weekMs, delay = "1 minute", trigger = trigger,
@@ -121,7 +121,7 @@ object StreamParityQueries2 {
     // buffering/release — the part with state in it.)
     "q157_sort_delta_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-sortstream")
+      val base = Scratch.dir("sortstream")
       val (inDir, schema) = flushedReplay(s, d, base.toString)
       // The sort RELEASES rows as the watermark passes them, so by
       // construction its output is at-watermark — Spark's global-
@@ -164,7 +164,7 @@ object StreamParityQueries2 {
     // exit value AND loop depth must match, so multi-hop feedback
     // routing (up to 9 generations here) faces the oracle directly.
     "q158_iterate_stream" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-iterstream")
+      val base = Scratch.dir("iterstream")
       val (in, fb, out, ck) = (s"$base/in", s"$base/fb", s"$base/out", s"$base/ck")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(fb))
@@ -190,7 +190,7 @@ object StreamParityQueries2 {
     // survivors-count aggregation makes this a batch-composed stage
     // (foreachBatch), the documented scale shape for it.
     "q159_neardrop_corpus_stream" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-neardropstream")
+      val base = Scratch.dir("neardropstream")
       val docs = Tables.documents(s, d)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       val half = maxId / 2
@@ -250,7 +250,7 @@ object StreamParityQueries2 {
     "q170_right_outer_interval_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.StreamJoins
-      val base = java.nio.file.Files.createTempDirectory("graft-routerivstream")
+      val base = Scratch.dir("routerivstream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       def drain(id: Long, typ: String, offDays: Long) = Event(id,
@@ -290,7 +290,7 @@ object StreamParityQueries2 {
     // current state, so `spark.table(...)` is the point-lookup surface
     // while the query runs. Its FINAL content faces the one-shot SQL.
     "q171_queryable_state" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-qstate")
+      val base = Scratch.dir("qstate")
       val real = { import s.implicits._; Tables.events(s, d).as[Event] }
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -314,7 +314,7 @@ object StreamParityQueries2 {
     // GROUP BY. Savepoint analysis facing the oracle.
     "q172_state_read" -> ((s, d) => {
       import graft.streaming.StateInspect
-      val base = java.nio.file.Files.createTempDirectory("graft-stateread")
+      val base = Scratch.dir("stateread")
       val real = { import s.implicits._; Tables.events(s, d).as[Event] }
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)

@@ -3,7 +3,7 @@ package graft.operators
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.streaming.{BroadcastState, Cep, CepDsl, Event, MatchRecognize, Replay, StateBootstrap, StateV2, StatefulOps, WindowOps}
 import StreamParityQueries.{evCte, latestPerKey, quarterChunks, runAppend, runUpdate, spanOf, tsOf}
 
@@ -18,7 +18,7 @@ import StreamParityQueries.{evCte, latestPerKey, quarterChunks, runAppend, runUp
   * `flatMapGroupsWithState(..., initialState)` — see
   * `streaming/StateBootstrap.scala`.
   */
-object StreamParityQueries3 {
+object StreamParityQueries3 extends QuerySet {
 
   val queries: Map[String, Q] = Map(
 
@@ -33,7 +33,7 @@ object StreamParityQueries3 {
     // merge path is load-bearing for nearly every output row.
     "q173_state_bootstrap" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-bootstrap")
+      val base = Scratch.dir("bootstrap")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val mid = tsOf(lo + (hi - lo) / 2)
@@ -90,7 +90,7 @@ object StreamParityQueries3 {
     // Reference: windowing/triggers/ContinuousEventTimeTrigger.java.
     "q174_cont_trigger_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-cet")
+      val base = Scratch.dir("cet")
       val real = Tables.events(s, d).as[Event]
         .map(e => e.copy(value = math.round(e.value * 100).toDouble))
       val (lo, hi) = spanOf(real)
@@ -131,7 +131,7 @@ object StreamParityQueries3 {
     // earlier — apply-before-merge, a dropped store merge, or
     // cross-batch leakage each break the hash.
     "q177_broadcast_state_stream" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-bstate")
+      val base = Scratch.dir("bstate")
       import s.implicits._
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
@@ -157,7 +157,7 @@ object StreamParityQueries3 {
     // oracle — the v2 API must land on the v1 rows exactly.
     "q178_statev2_dedup_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-statev2")
+      val base = Scratch.dir("statev2")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -211,7 +211,7 @@ object StreamParityQueries3 {
     // the running double sum exact (q134 trick).
     "q180_statev2_liststate" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-statev2l")
+      val base = Scratch.dir("statev2l")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -238,7 +238,7 @@ object StreamParityQueries3 {
     // break the hash.
     "q181_statev2_mapstate" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-statev2m")
+      val base = Scratch.dir("statev2m")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -293,7 +293,6 @@ object StreamParityQueries3 {
     // dropped partial each break the hash.
     "q198_match_star_stream" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
       val sql = """
         MATCH_RECOGNIZE (
           PARTITION BY user_id
@@ -305,8 +304,7 @@ object StreamParityQueries3 {
                  C AS C.event_type = 'purchase'
         )"""
       val parsed = MatchRecognize.parse(sql)
-      val base = java.nio.file.Files.createTempDirectory("graft-starstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val base = Scratch.dir("starstream")
       val types = Set("view", "click", "purchase")
       val ev = Tables.events(s, d).as[Event].filter(e => types(e.event_type))
       val straddleTs = Cep.matchBatchSorted(ev, parsed.pattern, parsed.skip)
@@ -324,12 +322,8 @@ object StreamParityQueries3 {
       val matches = Cep.matchStream(Replay.stream(s, inDir, schema),
         parsed.pattern, parsed.skip)
       val measures = CepDsl.compileMeasures[Event](parsed.measuresSrc, Event.fieldTable)
-      val q = Cep.selectMeasures(matches, parsed.partitionBy, measures)
-        .writeStream.option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out).orderBy(col("user_id"), col("view_id"))
+      runAppend(Cep.selectMeasures(matches, parsed.partitionBy, measures), base.toString, s)
+        .orderBy(col("user_id"), col("view_id"))
     }),
 
     // TTL'd keyed state oracle-bound — the carried-forward "keyed
@@ -345,7 +339,7 @@ object StreamParityQueries3 {
     // or an off-by-one at exactly TTL each break the hash.
     "q190_ttl_dedup_stream" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-ttl")
+      val base = Scratch.dir("ttl")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -366,7 +360,7 @@ object StreamParityQueries3 {
     // or an emit on non-change each break the hash.
     "q200_statev2_reducing" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-statev2r")
+      val base = Scratch.dir("statev2r")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
@@ -392,7 +386,7 @@ object StreamParityQueries3 {
     // QueryableStateClient.java` + `KeyedStream.java:1005`.
     "q182_queryable_history" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-qhist")
+      val base = Scratch.dir("qhist")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)

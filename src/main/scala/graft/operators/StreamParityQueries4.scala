@@ -1,12 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.streaming.{QuotaSampler, Replay}
 import StreamParityQueries.runAppend
 
 /** Round-7 parity pack: streaming corpus-curation additions. */
-object StreamParityQueries4 {
+object StreamParityQueries4 extends QuerySet {
 
   val queries: Map[String, Q] = Map(
 
@@ -20,7 +20,7 @@ object StreamParityQueries4 {
     // key partitioning leaks rows across languages.
     "q207_stream_quota" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-quota")
+      val base = Scratch.dir("quota")
       val docs = Tables.documents(s, d)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       val (c1, c2) = (maxId / 3, 2 * maxId / 3)
@@ -46,7 +46,7 @@ object StreamParityQueries4 {
     "q239_hop_window_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay}
-      val base = java.nio.file.Files.createTempDirectory("graft-hopstream")
+      val base = Scratch.dir("hopstream")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -89,7 +89,7 @@ object StreamParityQueries4 {
     "q238_distinct_window_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Event, Replay}
-      val base = java.nio.file.Files.createTempDirectory("graft-distinctwin")
+      val base = Scratch.dir("distinctwin")
       val real = Tables.events(s, d).as[Event]
       val (loUs, hiUs) = {
         val r = real.agg(min(col("ts")), max(col("ts"))).head()
@@ -133,7 +133,7 @@ object StreamParityQueries4 {
     // update mode over- or under-emits, state resets between batches,
     // or the late quarter fails to re-fire its windows.
     "q233_window_update_history" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-updhist")
+      val base = Scratch.dir("updhist")
       val ev = Tables.events(s, d).select(col("event_type"),
         expr("cast(round(value*100) as bigint)").as("cents"), col("ts"),
         unix_micros(col("ts")).as("tu"))
@@ -169,7 +169,7 @@ object StreamParityQueries4 {
     // members — never the whole corpus.
     "q213_semdedup_stream" -> ((s, d) => {
       import graft.streaming.Replay
-      val base = java.nio.file.Files.createTempDirectory("graft-semdedupstream")
+      val base = Scratch.dir("semdedupstream")
       val e = Tables.embeddings(s, d)
       val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
       val half = maxId / 2
@@ -215,7 +215,7 @@ object StreamParityQueries4 {
     // per-batch, or a batch boundary splits a score.
     "q263_gaussian_gate_stream" -> ((s, d) => {
       import graft.streaming.Replay
-      val base = java.nio.file.Files.createTempDirectory("graft-gaussgate")
+      val base = Scratch.dir("gaussgate")
       val e = Tables.embeddings(s, d)
       val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
       val half = maxId / 2

@@ -1,13 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Round-7 parity pack: quantified concatenation groups on both CEP
   * surfaces (reference `cep/pattern/GroupPattern.java:30` —
   * `Pattern.begin(Pattern)` quantified via the inherited
   * times/oneOrMore — and its SQL `PATTERN ((A B){2})` form). */
-object StreamParityQueries5 {
+object StreamParityQueries5 extends QuerySet {
 
   private val evCte =
     """WITH ev AS (SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts,
@@ -76,7 +76,7 @@ object StreamParityQueries5 {
     // reference user runs around every job. The already-analyzed
     // SELECT frame survives the teardown (plans bind at analysis).
     "q256_ddl_lifecycle" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-ddlcycle")
+      val base = Scratch.dir("ddlcycle")
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("cast(round(value*100) as bigint)").as("cents"))
@@ -125,7 +125,7 @@ object StreamParityQueries5 {
     // with the post-alter read — two disjoint row sets through ONE
     // table name.
     "q258_ddl_alter" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-ddlalter")
+      val base = Scratch.dir("ddlalter")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("cast(round(value*100) as bigint)").as("cents"))
@@ -209,7 +209,7 @@ object StreamParityQueries5 {
     // resolutions of one table name side by side. Any cross-catalog
     // leak (shared table registry, unswitched view binding, wrong
     // current-database tracking) breaks the hash.
-    val base = java.nio.file.Files.createTempDirectory("graft-multicat")
+    val base = Scratch.dir("multicat")
     val ev = Tables.events(s, d).select(col("event_id"), col("event_type"))
     ev.filter(col("event_id") % 2 === 0)
       .write.mode("overwrite").option("header", "false").csv(s"$base/a")

@@ -22,7 +22,7 @@ import graft.Tables
   * everywhere); ratios are integer ppm (no float rounding boundary);
   * minhash values parse the first 8 md5 hex chars as a BIGINT.
   */
-object TextQueries {
+object TextQueries extends QuerySet {
 
   /** Tokens of `text` split on single spaces. */
   private def toks(c: Column) = split(c, " ")

@@ -22,7 +22,7 @@ import graft.Tables
   * div with the numerator widened through DECIMAL(38,0) so the
   * multiply cannot wrap at any scale factor (oracle-parity-rules).
   */
-object TpcdsShapes {
+object TpcdsShapes extends QuerySet {
 
   private val liCents =
     "cast(round(l_extendedprice * (1 - l_discount) * 100) as bigint)"

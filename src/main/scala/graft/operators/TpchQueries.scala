@@ -23,7 +23,7 @@ import graft.Tables
   * qualifying-key sets are never force-broadcast (AQE decides), and
   * money stays integer cents/e4 (see oracle-parity-rules).
   */
-object TpchQueries {
+object TpchQueries extends QuerySet {
 
   private def revenueE4 =
     expr("sum(cast(round(l_extendedprice * (1 - l_discount) * 10000) as bigint))")

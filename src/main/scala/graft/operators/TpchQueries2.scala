@@ -32,7 +32,7 @@ import graft.Tables
   * integral div (oracle-parity-rules); ppm numerators go through
   * DECIMAL(38,0) so the multiply cannot wrap at any scale factor.
   */
-object TpchQueries2 {
+object TpchQueries2 extends QuerySet {
 
   private def centsE(e: String) = expr(s"sum(cast(round($e * 100) as bigint))")
   private def centsESql(e: String) =

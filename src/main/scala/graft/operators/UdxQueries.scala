@@ -25,7 +25,7 @@ import graft.functions.Udx
   *    the oracle side restores parity; all-space texts (split → empty
   *    array vs [''] mismatch) are excluded on both sides.
   */
-object UdxQueries {
+object UdxQueries extends QuerySet {
 
   val queries: Map[String, Q] = Map(
 

@@ -18,7 +18,7 @@ import graft.Tables
   * Hyperplanes are ±1 signs derived from md5 at build time and inlined
   * as literals into both the Spark plan and the oracle SQL.
   */
-object VectorQueries {
+object VectorQueries extends QuerySet {
 
   private val dims = 64
   private val nPlanes = 8

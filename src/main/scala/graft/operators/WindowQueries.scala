@@ -21,7 +21,7 @@ import graft.Tables
   * row_number + filter, which Spark pushes the limit into via
   * WindowGroupLimit at scale (no full sort of each partition).
   */
-object WindowQueries {
+object WindowQueries extends QuerySet {
 
   private val byCust = Window.partitionBy(col("o_custkey"))
     .orderBy(col("o_orderdate"), col("o_orderkey"))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import graft.Scratch
 
 /** Hive catalog exercise (reference `flink-connector-hive/.../
   * HiveTableSource.java` / `HiveTableSink.java`; SURVEY maps both to
@@ -14,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   */
 object HiveCatalogDemo {
   def main(args: Array[String]): Unit = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-hive-wh").toString
-    val ms = java.nio.file.Files.createTempDirectory("graft-hive-ms").toString
+    val wh = Scratch.dir("hive-wh").toString
+    val ms = Scratch.dir("hive-ms").toString
     val spark = SparkSession.builder()
       .master("local[4]")
       .appName("graft-hive")

@@ -40,7 +40,7 @@ class TablesSchemaSpec extends SparkSpec {
     val dir = getClass.getResource("/events_nanos.parquet")
     assume(dir != null, "fixture missing")
     // copy the fixture into the expected <dir>/events.parquet layout
-    val tmp = java.nio.file.Files.createTempDirectory("graft-nanos").toString
+    val tmp = Scratch.dir("nanos").toString
     val dest = java.nio.file.Paths.get(tmp, "events.parquet")
     val in = getClass.getResourceAsStream("/events_nanos.parquet")
     try java.nio.file.Files.copy(in, dest) finally in.close()

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.{SparkSpec, Tables}
+import graft.{Scratch, SparkSpec, Tables}
 
 /** Semantic checks for the tier-3 curation operators (q214–q218) —
   * the oracle gate proves Spark≡DuckDB; these prove the operators
@@ -44,7 +44,7 @@ class CurationQueriesSpec extends SparkSpec {
       (0L, s"$shared alpha beta"),
       (1L, s"$shared gamma delta")).toDF("doc_id", "text")
     val q = CurationQueries.queries("q216_boilerplate_strip")
-    val dir = java.nio.file.Files.createTempDirectory("graft-boiler")
+    val dir = Scratch.dir("boiler")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = q(spark, dir.toString).collect()
       .map(r => r.getLong(0) -> (r.getLong(2), r.getString(3))).toMap
@@ -56,7 +56,7 @@ class CurationQueriesSpec extends SparkSpec {
     val text = (1 to 12).map(i => s"t$i").mkString(" ")
     val fresh = (1 to 12).map(i => s"u$i").mkString(" ")
     val docs = Seq((0L, text), (1L, text), (2L, fresh)).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-novel")
+    val dir = Scratch.dir("novel")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = CurationQueries.queries("q217_novelty_score")(spark, dir.toString)
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
@@ -105,7 +105,7 @@ class CurationQueriesSpec extends SparkSpec {
       (0L, s"a1 a2 $shared z1 z2"),
       (1L, s"b1 $shared c1 c2 c3"),
       (2L, (1 to 15).map(i => s"u$i").mkString(" "))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-spans")
+    val dir = Scratch.dir("spans")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = CurationQueries.queries("q231_dup_spans_maximal")(spark, dir.toString)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -116,7 +116,7 @@ class CurationQueriesSpec extends SparkSpec {
   }
 
   test("source drift is zero for a single-source corpus, positive when vocabularies split") {
-    val dir1 = java.nio.file.Files.createTempDirectory("graft-drift1")
+    val dir1 = Scratch.dir("drift1")
     Seq((0L, "a b c", "en", "s0", 5L), (1L, "a b", "en", "s0", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir1/documents.parquet")
@@ -124,7 +124,7 @@ class CurationQueriesSpec extends SparkSpec {
       .collect()
     assert(one.length == 1 && one(0).getLong(2) == 0L)
 
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-drift2")
+    val dir2 = Scratch.dir("drift2")
     Seq((0L, "a a a a", "en", "s0", 7L), (1L, "b b b b", "en", "s1", 7L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")

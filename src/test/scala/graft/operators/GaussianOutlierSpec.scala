@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** q261's diagonal-covariance Gaussian scorer (reference surface:
@@ -79,7 +79,7 @@ class GaussianOutlierSpec extends SparkSpec {
     val rows = inliers.map { case (id, lb, e) =>
       val e2 = e.clone(); e2(3) = e(0); (id, lb, e2)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-corrspec")
+    val dir = Scratch.dir("corrspec")
     corpus(rows).write.mode("overwrite")
       .parquet(dir.resolve("embeddings.parquet").toString)
     val top = VectorQueries.queries("q262_dim_correlation")(spark, dir.toString)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkSpec, Tables}
+import graft.{Scratch, SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** Composed IVF+PQ index invariants (IvfPq.scala): the structural
@@ -105,7 +105,7 @@ class IvfPqSpec extends SparkSpec {
     // the scan as PARTITION pruning (directories skipped, not rows
     // filtered) — that is what makes a probe touch nprobe/K of the
     // corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-idx").toString
+    val dir = Scratch.dir("ivfpq-idx").toString
     IvfPq.index(emb, "embedding", model)
       .write.partitionBy("cluster").mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
@@ -123,7 +123,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("deletes: tombstones never surface, compaction is partition-local and lossless") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ivfdelspec")
+    val base = Scratch.dir("ivfdelspec")
     val idx = s"$base/index"
     IvfPq.index(emb, "embedding", model)
       .write.partitionBy("cluster").parquet(idx)
@@ -175,7 +175,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("rebalance: hot list splits locally, cold partitions stay byte-identical") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ivfrebspec")
+    val base = Scratch.dir("ivfrebspec")
     val idx = s"$base/index"
     IvfPq.index(emb, "embedding", model)
       .write.partitionBy("cluster").parquet(idx)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 class MultimodalSpec extends SparkSpec {
 
@@ -33,7 +33,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("media table round-trips through parquet byte-identically") {
     val spark2 = spark; import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-media").toString
+    val dir = Scratch.dir("media").toString
     val m = Multimodal.syntheticMedia(spark, sf).limit(50)
     m.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir).as[Multimodal.MediaRow]

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
@@ -28,13 +28,13 @@ class ScaleJoinSpec extends SparkSpec {
 
   test("dynamic partition pruning kicks in for a filtered dim join") {
     val spark2 = spark; import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val dir = Scratch.dir("dpp").toString
     (1 to 2000).map(i => (i, i % 10)).toDF("v", "part")
       .write.partitionBy("part").mode("overwrite").parquet(dir)
     val fact = spark.read.parquet(dir)
     // the dim must be a real source: a local Seq gets constant-folded
     // (ConvertToLocalRelation) and DPP then sees no selective filter
-    val dimDir = java.nio.file.Files.createTempDirectory("graft-dpp-dim").toString
+    val dimDir = Scratch.dir("dpp-dim").toString
     (0 until 10).map(i => (i, if (i < 2) "keep" else "drop"))
       .toDF("part", "tag").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)

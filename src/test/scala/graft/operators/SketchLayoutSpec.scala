@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkSpec, Tables}
+import graft.{Scratch, SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** Count-Min (SketchQueries) and Z-order (LayoutQueries) properties
@@ -74,7 +74,7 @@ class SketchLayoutSpec extends SparkSpec {
   }
 
   test("z-order parquet layout: the scan itself reads strictly fewer rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zprunespec")
+    val base = Scratch.dir("zprunespec")
     val (natDir, zDir, plo, phi, slo, shi) =
       LayoutQueries.writeZorderLayouts(spark, sf, base.toString)
     // AQE off so executedPlan is the static plan the scan lives in
@@ -112,7 +112,7 @@ class SketchLayoutSpec extends SparkSpec {
 
   test("incremental OPTIMIZE: base files untouched, delta pruned after") {
     import graft.sources.ManifestTable
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zoptspec")
+    val tmp = Scratch.dir("zoptspec")
     val (dir, plo, phi, slo, shi) =
       LayoutQueries.writeOptimizeTable(spark, sf, tmp.toString)
     val baseFiles = ManifestTable.files(dir, 0).toSet

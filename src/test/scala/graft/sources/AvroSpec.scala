@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{SparkSpec, Tables}
+import graft.{Scratch, SparkSpec, Tables}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,7 +13,7 @@ import java.sql.{Date, Timestamp}
 class AvroSpec extends SparkSpec {
 
   private def tmp(name: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-$name").toString + "/out"
+    Scratch.dir(name).toString + "/out"
 
   test("avro round-trips events exactly (timestamps µs, doubles, strings)") {
     val ev = Tables.events(spark, sf)
@@ -129,7 +129,7 @@ class AvroSpec extends SparkSpec {
     // name-keyed merging would hand old files the NEW type's decoder
     // and die mid-scan with a raw ClassCastException — inference must
     // instead refuse up front, naming the column
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro-typeconflict")
+    val dir = Scratch.dir("avro-typeconflict")
     def writeOne(name: String, vAsDouble: Boolean): Unit = {
       val sch =
         if (vAsDouble) SchemaBuilder.record("r").fields()
@@ -171,7 +171,7 @@ class AvroSpec extends SparkSpec {
     import graft.sources.avro.{AvroEpochCommit, AvroStreamingWrite}
     import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro-staged").toString
+    val dir = Scratch.dir("avro-staged").toString
     Seq((1L, "committed")).toDF("k", "v").write.format("graft-avro")
       .mode("overwrite").save(dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -208,7 +208,7 @@ class AvroSpec extends SparkSpec {
     val avroSchema = SchemaBuilder.record("r").fields()
       .requiredLong("k").name("ts").`type`(millisType).noDefault()
       .endRecord()
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro-ntzms")
+    val dir = Scratch.dir("avro-ntzms")
     val f = dir.resolve("ext-00000.avro").toFile
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avroSchema))
     w.create(avroSchema, f)
@@ -228,7 +228,7 @@ class AvroSpec extends SparkSpec {
     import graft.sources.avro.{AvroEpochCommit, AvroStreamingWrite}
     import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro-epoch").toString
+    val dir = Scratch.dir("avro-epoch").toString
     // a prior attempt of epoch 1 committed TWO partitions
     Seq((1L, "stale")).toDF("k", "v").write.format("graft-avro")
       .mode("overwrite").save(dir)

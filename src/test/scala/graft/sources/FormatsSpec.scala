@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{SparkSpec, Tables}
+import graft.{Scratch, SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** Round-trip every supported format with exact row equality against
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class FormatsSpec extends SparkSpec {
 
   private def tmp(name: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    Scratch.dir(name).toString
 
   private def sortedRows(df: org.apache.spark.sql.DataFrame) =
     df.orderBy(col("n_nationkey")).collect().toSeq
@@ -118,7 +118,7 @@ class FormatsSpec extends SparkSpec {
     // the q187 scale contract: a source=… predicate over the
     // partitioned table must become a PartitionFilters entry (one
     // directory scanned), not a post-scan filter over all partitions
-    val base = java.nio.file.Files.createTempDirectory("graft-cattbl-spec")
+    val base = Scratch.dir("cattbl-spec")
     Tables.documents(spark, sf)
       .write.partitionBy("source").mode("overwrite")
       .option("path", s"$base/tbl")

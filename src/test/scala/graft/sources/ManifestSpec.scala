@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Crash/atomicity contract of the manifest table format — the r10
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class ManifestSpec extends SparkSpec {
 
   private def freshTable(): (String, Long, Long, Long, Long) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-manifest")
+    val tmp = Scratch.dir("manifest")
     graft.operators.LayoutQueries
       .writeOptimizeTable(spark, sf, tmp.toString)
   }
@@ -170,7 +170,7 @@ class ManifestSpec extends SparkSpec {
   }
 
   test("file stats ride commits; readRange prunes files and loses no rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mstats")
+    val tmp = Scratch.dir("mstats")
     val table = s"$tmp/table"
     val o = graft.Tables.orders(spark, sf)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -319,7 +319,7 @@ class ManifestSpec extends SparkSpec {
     }
     val o = graft.Tables.orders(spark, sf)
       .select(c("o_orderkey"), c("o_totalprice"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mshard")
+    val tmp = Scratch.dir("mshard")
     val (small, big) = (s"$tmp/small", s"$tmp/big")
     // same content, 16× the files — the metadata a commit writes must
     // not scale with the table's file count
@@ -355,7 +355,7 @@ class ManifestSpec extends SparkSpec {
 
   test("merge-on-read delete: tombstone commit, filtered reads, OPTIMIZE materializes") {
     import org.apache.spark.sql.functions.{col => c, lit => l}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mdel")
+    val tmp = Scratch.dir("mdel")
     val table = s"$tmp/table"
     val o = graft.Tables.orders(spark, sf)
       .select(c("o_orderkey"), c("o_totalprice"))
@@ -417,7 +417,7 @@ class ManifestSpec extends SparkSpec {
 
   test("CDC across merge and delete: changelog reconciles the snapshot diff") {
     import org.apache.spark.sql.functions.{col => c, lit => l, sum => su, count}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mcdc")
+    val tmp = Scratch.dir("mcdc")
     val table = s"$tmp/table"
     val o = graft.Tables.orders(spark, sf)
       .select(c("o_orderkey"), c("o_totalprice"))
@@ -472,7 +472,7 @@ class ManifestSpec extends SparkSpec {
 
   test("appendBatch: replayed micro-batch ids are skipped exactly-once") {
     import org.apache.spark.sql.functions.{col => c}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mbatch")
+    val tmp = Scratch.dir("mbatch")
     val table = s"$tmp/table"
     val o = graft.Tables.orders(spark, sf)
       .select(c("o_orderkey"), c("o_totalprice"))

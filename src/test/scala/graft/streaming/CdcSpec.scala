@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{SparkSpec, Tables}
+import graft.{Scratch, SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** CDC envelope/materialize semantics (Cdc.scala) beyond the q302/q303
@@ -47,7 +47,7 @@ class CdcSpec extends SparkSpec {
 
   test("mergeBatch is idempotent and version-guarded") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-cdcspec")
+    val base = Scratch.dir("cdcspec")
     val url = s"jdbc:derby:$base/db;create=true"
     Cdc.initStateTable(url)
     val b1 = Seq(("c", 100L, 1L, 1L, 10.0, 5L),
@@ -78,7 +78,7 @@ class CdcSpec extends SparkSpec {
 
   test("tombstone compaction drops only sub-watermark tombstones") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-cdccomp")
+    val base = Scratch.dir("cdccomp")
     val url = s"jdbc:derby:$base/db;create=true"
     Cdc.initStateTable(url)
     val b = Seq(("d", 100L, 1L, 1L, 0.0, 0L),   // old tombstone
@@ -111,7 +111,7 @@ class CdcSpec extends SparkSpec {
 
   test("scd2Batch repairs out-of-order versions to the window-built truth") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-scd2oospec")
+    val base = Scratch.dir("scd2oospec")
     val url = s"jdbc:derby:$base/db;create=true"
     Cdc.initScd2Table(url)
     // batch 1: ts 100 and 300 → intervals [100,300), [300,∞)
@@ -136,7 +136,7 @@ class CdcSpec extends SparkSpec {
 
   test("scd2Batch replay survives a mid-key crash that pre-stamped the bound") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-scd2crash")
+    val base = Scratch.dir("scd2crash")
     val url = s"jdbc:derby:$base/db;create=true"
     Cdc.initScd2Table(url)
     val batch = Seq(("c", 100L, 1L, 1L, 1.0, 1L),

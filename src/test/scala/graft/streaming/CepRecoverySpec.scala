@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming CEP across a query restart: open partial matches live in
@@ -17,7 +17,7 @@ class CepRecoverySpec extends SparkSpec {
   test("an open partial survives restart and completes on the second half") {
     val spark2 = spark; import spark2.implicits._
     implicit val ctx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cep-ck").toString
+    val ckpt = Scratch.dir("cep-ck").toString
     val pat = Cep.Pattern.begin[Event]("v")((e, _) => e.event_type == "view")
       .followedBy("p")((e, _) => e.event_type == "purchase")
     val ms = MemoryStream[Event]

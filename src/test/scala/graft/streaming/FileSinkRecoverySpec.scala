@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Exactly-once streaming file sink (reference
@@ -18,8 +18,8 @@ class FileSinkRecoverySpec extends SparkSpec {
   test("restart from the checkpoint neither duplicates nor drops rows") {
     val spark2 = spark; import spark2.implicits._
     implicit val ctx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft-fsink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-fsink-ck").toString
+    val out = Scratch.dir("fsink").toString
+    val ckpt = Scratch.dir("fsink-ck").toString
     val ms = MemoryStream[Event]
     def start() = ms.toDS()
       .writeStream.format("parquet")
@@ -51,7 +51,7 @@ class StateRecoverySpec extends SparkSpec {
   test("flatMapGroupsWithState state is restored from the checkpoint") {
     val spark2 = spark; import spark2.implicits._
     implicit val ctx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-st-ck").toString
+    val ckpt = Scratch.dir("st-ck").toString
     val ms = MemoryStream[Event]
     // memory sink refuses checkpoint recovery; foreachBatch (driver-
     // side) is the recoverable sink shape

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.types._
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** DDL front-end contract: type lattice, quote-aware script
   * splitting, positional INSERT semantics, the WATERMARK→stream
@@ -53,7 +53,7 @@ class FlinkDdlSpec extends SparkSpec {
   }
 
   test("INSERT aligns positionally and casts to declared types") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ddlspec")
+    val base = Scratch.dir("ddlspec")
     val env = new FlinkDdl.Env(spark)
     env.executeSql(
       s"""CREATE TABLE snk (big BIGINT, name STRING)
@@ -67,7 +67,7 @@ class FlinkDdlSpec extends SparkSpec {
   }
 
   test("column-count mismatch on INSERT fails loudly") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ddlspec2")
+    val base = Scratch.dir("ddlspec2")
     val env = new FlinkDdl.Env(spark)
     env.executeSql(
       s"""CREATE TABLE snk2 (a BIGINT, b STRING)
@@ -79,7 +79,7 @@ class FlinkDdlSpec extends SparkSpec {
   }
 
   test("WATERMARK clause becomes withWatermark on the stream read") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ddlspec3")
+    val base = Scratch.dir("ddlspec3")
     import spark.implicits._
     Seq((1L, 1000000L)).toDF("a", "ts_us").write
       .option("header", "false").csv(s"$base/src")
@@ -97,7 +97,7 @@ class FlinkDdlSpec extends SparkSpec {
   }
 
   test("SHOW TABLES and DESCRIBE expose the DDL catalog") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ddlshow")
+    val base = Scratch.dir("ddlshow")
     val env = new FlinkDdl.Env(spark)
     env.executeSql(
       s"""CREATE TABLE shown (a BIGINT, ts_us BIGINT,
@@ -126,7 +126,7 @@ class FlinkDdlSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException](
       env.executeSql("ALTER TABLE t RENAME TO u"))
       .getMessage.contains("unknown table"))
-    val base = java.nio.file.Files.createTempDirectory("graft-ddlspec4")
+    val base = Scratch.dir("ddlspec4")
     env.executeSql(
       s"""CREATE TABLE gone (a BIGINT)
          |WITH ('connector' = 'filesystem', 'path' = '$base/x',
@@ -139,7 +139,7 @@ class FlinkDdlSpec extends SparkSpec {
 
   test("avro DDL tables write+read through graft-avro; partition leg rejects") {
     val env = new FlinkDdl.Env(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft-ddlspec5")
+    val base = Scratch.dir("ddlspec5")
     env.executeSql(
       s"""CREATE TABLE av (a BIGINT, s STRING)
          |WITH ('connector' = 'filesystem', 'path' = '$base/av',
@@ -159,7 +159,7 @@ class FlinkDdlSpec extends SparkSpec {
 
   test("DDL tail: DROP TABLE/VIEW flag semantics and object-kind checks") {
     val env = new FlinkDdl.Env(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft-ddltail1")
+    val base = Scratch.dir("ddltail1")
     // DROP TABLE without IF EXISTS on an unknown name fails loudly
     assert(intercept[IllegalArgumentException](
       env.executeSql("DROP TABLE nope")).getMessage.contains("IF EXISTS"))
@@ -182,7 +182,7 @@ class FlinkDdlSpec extends SparkSpec {
 
   test("DDL tail: ALTER TABLE RENAME keeps the data visible") {
     val env = new FlinkDdl.Env(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft-ddltail2")
+    val base = Scratch.dir("ddltail2")
     env.executeSql(
       s"""CREATE TABLE before_t (a BIGINT)
          |WITH ('connector' = 'filesystem', 'path' = '$base/t',
@@ -273,7 +273,7 @@ class FlinkDdlSpec extends SparkSpec {
 
   test("DDL tail: database lifecycle with RESTRICT/CASCADE and USE") {
     val env = new FlinkDdl.Env(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft-ddltail3")
+    val base = Scratch.dir("ddltail3")
     env.executeSql("CREATE DATABASE mart")
     assert(intercept[IllegalArgumentException](
       env.executeSql("CREATE DATABASE mart")).getMessage.contains("IF NOT EXISTS"))
@@ -308,7 +308,7 @@ class FlinkDdlSpec extends SparkSpec {
   test("ALTER TABLE SET repoints path and format; alias spellings merge") {
     import spark.implicits._
     val env = new FlinkDdl.Env(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft-ddlalter1")
+    val base = Scratch.dir("ddlalter1")
     Seq((1L, "csv-row")).toDF("a", "s").write
       .option("header", "false").csv(s"$base/a")
     Seq((2L, "parquet-row")).toDF("a", "s").write.parquet(s"$base/b")

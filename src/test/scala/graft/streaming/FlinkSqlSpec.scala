@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{SparkSpec, Tables}
+import graft.{Scratch, SparkSpec, Tables}
 
 /** Unified-executeSql routing: each statement kind must land on the
   * same result its dedicated front-end produces (q228 binds the
@@ -96,7 +96,7 @@ class FlinkSqlSpec extends SparkSpec {
   test("EXPLAIN INSERT shows the sink plan without writing") {
     // the reference explains INSERT statements (explainSql surface) —
     // the plan must come back WITHOUT the side effect executing
-    val base = java.nio.file.Files.createTempDirectory("graft-explins")
+    val base = Scratch.dir("explins")
     val env2 = new FlinkSql.Env(spark)
     Tables.events(spark, sf).createOrReplaceTempView("events_ei")
     env2.executeSql(

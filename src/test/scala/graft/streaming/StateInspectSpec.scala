@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -20,7 +19,7 @@ class StateInspectSpec extends SparkSpec {
   test("offline state read returns the aggregate's keyed state") {
     val spark2 = spark; import spark2.implicits._
     implicit val ctx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft-state").toString
+    val ckpt = Scratch.dir("state").toString
     val ms = MemoryStream[Event]
     val agg = ms.toDF().groupBy(col("user_id"))
       .agg(count(lit(1)).as("cnt"))
@@ -49,7 +48,7 @@ class StateInspectSpec extends SparkSpec {
   test("point-in-time read sees the earlier batch's state") {
     val spark2 = spark; import spark2.implicits._
     implicit val ctx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft-state2").toString
+    val ckpt = Scratch.dir("state2").toString
     val ms = MemoryStream[Event]
     val q = ms.toDF().groupBy(col("user_id"))
       .agg(count(lit(1)).as("cnt"))

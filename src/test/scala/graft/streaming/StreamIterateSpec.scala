@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Feedback-loop streaming iteration (reference
@@ -13,7 +13,7 @@ class StreamIterateSpec extends SparkSpec {
 
   test("records loop through the feedback edge until the exit condition") {
     val spark2 = spark; import spark2.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-sit")
+    val base = Scratch.dir("sit")
     val (in, fb, out, ck) = (s"$base/in", s"$base/fb", s"$base/out", s"$base/ck")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(fb))
@@ -39,7 +39,7 @@ class StreamIterateSpec extends SparkSpec {
 
   test("NULL exit predicate routes to the exit side, not the void") {
     val spark2 = spark; import spark2.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-sitn")
+    val base = Scratch.dir("sitn")
     val (in, fb, out, ck) = (s"$base/in", s"$base/fb", s"$base/out", s"$base/ck")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(fb))
