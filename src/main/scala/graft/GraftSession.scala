@@ -31,6 +31,22 @@ object GraftSession {
       // timestamp[us], which this flag does not affect.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Generated code stays warm across query invocations. Spark caches
+      // compiled classes per (class loader, source), JVM-wide, capped by
+      // this static conf (default 100) and evicted roughly LRU, so a
+      // working set over the cap misses on every cyclic pass. Measured at
+      // sf0.01 with an unbounded cache: the graft.Bench headline set
+      // compiles 1,480 classes in its first pass and 4-26 new ones per
+      // later pass; the perfbench ingest workload needs about 119 and
+      // corpus_4x 92. 2,048 is the smallest power of two that holds the
+      // headline set.
+      .config("spark.sql.codegen.cache.maxEntries", "2048")
+      // Artifact isolation (default on in Spark 4.1) makes every cloned
+      // session, so every writeStream.start() and newSession(), ship its
+      // own session UUID to the executor, which builds a fresh class
+      // loader for it; the cache and the JIT then start over per stream.
+      // graft adds no session artifacts, so isolation protects nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(cores).getOrCreate()

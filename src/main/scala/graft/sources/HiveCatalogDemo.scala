@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-import graft.Scratch
+import graft.{GraftSession, Scratch}
 
 /** Hive catalog exercise (reference `flink-connector-hive/.../
   * HiveTableSource.java` / `HiveTableSink.java`; SURVEY maps both to
@@ -17,14 +16,10 @@ object HiveCatalogDemo {
   def main(args: Array[String]): Unit = {
     val wh = Scratch.dir("hive-wh").toString
     val ms = Scratch.dir("hive-ms").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-hive")
+    val spark = GraftSession.builder(4, "graft-hive")
       .config("spark.sql.warehouse.dir", wh)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$ms/metastore_db;create=true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
