@@ -61,7 +61,7 @@ object Bench {
     "q242_avro_roundtrip",  // avro DSv2 write + read back (container codec)
     // round-7 Gaussian statistics family
     "q261_gaussian_outliers", // moments fit + scan-speed Mahalanobis tail
-    "q262_dim_correlation",   // 2016-key centered pair-product rollup
+    "q262_dim_correlation",   // fused Gram-moment pair rollup (gram_moments)
     // round-8 additions
     "q268_ivfpq_exact",       // composed IVF+PQ ANN through the ML pipeline
     "q270_fluent_pipeline",   // fluent Table-API string-expression path

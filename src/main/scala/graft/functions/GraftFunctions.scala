@@ -101,6 +101,14 @@ object GraftFunctions {
     org.apache.spark.sql.GraftSqlBridge.column(BpeApplyMerges(
       org.apache.spark.sql.GraftSqlBridge.expression(toks), merges))
 
+  /** gram_moments(xs, pairs) — aggregate: exact BIGINT n, Σx_i, Σx_i²
+    * and, with `pairs`, Σx_i·x_j (i < j) of equal-width array<bigint>
+    * rows, one long[] buffer per partition (see [[GramMoments]]). */
+  def gram_moments(xs: Column, pairs: Boolean): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(GramMoments(
+      org.apache.spark.sql.GraftSqlBridge.expression(xs), pairs)
+      .toAggregateExpression())
+
   /** HASH_CODE(str) — Java String.hashCode (native codegen expression). */
   def hash_code(s: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(

@@ -104,32 +104,9 @@ object CapstoneQueries extends QuerySet {
       // shuffle; ≥0.1-Jaccard edges close into components via
       // pointer-jumping; every non-canonical member is removed. The
       // CC state is dup-graph-sized — the corpus never enters it.
-      val postings = spread(s1r)
-        .select(col("doc_id"), explode(TextQueries.shingles4(col("text")))
-          .as("sh"))
-        .distinct()
-        .groupBy(col("sh"))
-        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")) <= TextQueries.dfCap)
-      val pairsArr = flatten(transform(col("ds"), (x, i) =>
-        transform(slice(col("ds"), i + 2, size(col("ds"))),
-          y => struct(x.as("a"), y.as("b")))))
-      val singles = transform(col("ds"),
-        x => struct(x.as("a"), lit(-1L).as("b")))
-      val counts = postings
-        .select(explode(concat(singles, pairsArr)).as("p"))
-        .groupBy(col("p.a").as("id_a"), col("p.b").as("id_b"))
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint() // the shingle pipeline runs ONCE
-      val sizes = counts.filter(col("id_b") === -1L)
-        .select(col("id_a").as("doc_id"), col("cnt").as("n_sh"))
-      val edges = counts.filter(col("id_b") =!= -1L)
-        .join(sizes.withColumnRenamed("doc_id", "id_a")
-          .withColumnRenamed("n_sh", "na"), "id_a")
-        .join(sizes.withColumnRenamed("doc_id", "id_b")
-          .withColumnRenamed("n_sh", "nb"), "id_b")
-        .filter(col("cnt") * lit(1000000L) >=
-          (col("na") + col("nb") - col("cnt")) * lit(100000L))
+      val edges = TextQueries.shinglePairs(spread(s1r))
+        .filter(col("co") * lit(1000000L) >=
+          (col("na") + col("nb") - col("co")) * lit(100000L))
         .select(col("id_a").as("src"), col("id_b").as("dst"))
         .localCheckpoint()
       val verts = edges.select(col("src").as("id"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -37,6 +37,54 @@ object TextQueries extends QuerySet {
   private[graft] val nSig = 8 // minhash signature length
   private val nBits = 64 // simhash bits (production width: 4×16-bit bands)
   private[operators] val dfCap = 50 // q66: drop shingles in more than dfCap docs
+
+  /** Co-occurring document pairs of `docs` (doc_id, text) with their
+    * shared-shingle count and each side's shingle count:
+    * (id_b, id_a, co, na, nb), id_a < id_b — q66's pipeline, also
+    * q340's near-dup stage.
+    *
+    * Shingles are computed ONCE, then per-shingle sorted doc lists
+    * generate the co-occurring pairs (a naive self-join on shingle
+    * recomputed the exploded shingle subplan per branch — 8 scans in
+    * the physical plan). Postings also bound skew structurally: a
+    * shingle with df docs contributes df·(df-1)/2 pairs from one row —
+    * no hot join key. The df-cap drops stopword-like shingles outright:
+    * one shingle in df documents emits O(df²) pairs, so at corpus scale
+    * an uncapped "the end of the" posting would dominate the whole job;
+    * capped postings bound any shingle's contribution to dfCap²/2
+    * pairs. ONE pass over postings: each posting row explodes into its
+    * co-occurrence pairs AND one singleton marker per member doc
+    * (id_b = -1), so pair counts and per-doc shingle counts come out of
+    * a single shuffle. The aggregated result (pairs + docs, tiny next
+    * to the corpus) is localCheckpoint()ed so both consumers — pairs
+    * and sizes — read the materialized output instead of recomputing
+    * the shingle pipeline. */
+  private[operators] def shinglePairs(docs: DataFrame): DataFrame = {
+    val postings = docs
+      .select(col("doc_id"), explode(shingles4(col("text"))).as("sh"))
+      .distinct()
+      .groupBy(col("sh"))
+      .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
+      .filter(size(col("ds")) <= dfCap)
+    val pairsArr = flatten(transform(col("ds"), (x, i) =>
+      transform(slice(col("ds"), i + 2, size(col("ds"))),
+        y => struct(x.as("a"), y.as("b")))))
+    val singles = transform(col("ds"),
+      x => struct(x.as("a"), lit(-1L).as("b")))
+    val counts = postings
+      .select(explode(concat(singles, pairsArr)).as("p"))
+      .groupBy(col("p.a").as("id_a"), col("p.b").as("id_b"))
+      .agg(count(lit(1)).as("cnt"))
+      .localCheckpoint() // heavy subtree runs once (eager + lineage cut)
+    val sizes = counts.filter(col("id_b") === -1L)
+      .select(col("id_a").as("doc_id"), col("cnt").as("n_sh"))
+    counts.filter(col("id_b") =!= -1L)
+      .withColumnRenamed("cnt", "co")
+      .join(sizes.withColumnRenamed("doc_id", "id_a")
+                 .withColumnRenamed("n_sh", "na"), "id_a")
+      .join(sizes.withColumnRenamed("doc_id", "id_b")
+                 .withColumnRenamed("n_sh", "nb"), "id_b")
+  }
 
   val queries: Map[String, Q] = Map(
     // Exact dedup: hash-groupBy on md5(text), keep min doc_id.
@@ -117,58 +165,17 @@ object TextQueries extends QuerySet {
       minhashAgreePairs(minhashSigs(Tables.documents(s, d)).localCheckpoint())
         .orderBy(col("id_a"), col("id_b"))),
 
-    // Exact n-gram Jaccard via posting lists: shingles computed ONCE,
-    // then per-shingle sorted doc lists generate the co-occurring
-    // pairs (a naive self-join on shingle recomputed the exploded
-    // shingle subplan per branch — 8 scans in the physical plan).
-    // Postings also bound skew structurally: a shingle with df docs
-    // contributes df·(df-1)/2 pairs from one row — no hot join key.
-    // The df-cap drops stopword-like shingles outright: one shingle in
-    // df documents emits O(df²) pairs, so at corpus scale an uncapped
-    // "the end of the" posting would dominate the whole job; capped
-    // postings bound any shingle's contribution to dfCap²/2 pairs.
-    // Jaccard is then over each document's capped shingle set (both
-    // sides of the oracle compare use the same capped sets).
-    // ONE pass over postings: each posting row explodes into its
-    // co-occurrence pairs AND one singleton marker per member doc
-    // (id_b = -1), so pair counts and per-doc shingle counts come out
-    // of a single shuffle. The aggregated result (pairs + docs, tiny
-    // next to the corpus) is localCheckpoint()ed so both consumers —
-    // co and sizes — read the materialized output instead of
-    // recomputing the shingle pipeline (measured 3× subtree
-    // re-execution before, the round-1 TODO residual).
-    "q66_ngram_jaccard" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val postings = docs
-        .select(col("doc_id"), explode(shingles4(col("text"))).as("sh"))
-        .distinct()
-        .groupBy(col("sh"))
-        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")) <= dfCap)
-      val pairsArr = flatten(transform(col("ds"), (x, i) =>
-        transform(slice(col("ds"), i + 2, size(col("ds"))),
-          y => struct(x.as("a"), y.as("b")))))
-      val singles = transform(col("ds"),
-        x => struct(x.as("a"), lit(-1L).as("b")))
-      val counts = postings
-        .select(explode(concat(singles, pairsArr)).as("p"))
-        .groupBy(col("p.a").as("id_a"), col("p.b").as("id_b"))
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint() // heavy subtree runs once (eager + lineage cut)
-      val sizes = counts.filter(col("id_b") === -1L)
-        .select(col("id_a").as("doc_id"), col("cnt").as("n_sh"))
-      val co = counts.filter(col("id_b") =!= -1L)
-        .withColumnRenamed("cnt", "co")
-      co.join(sizes.withColumnRenamed("doc_id", "id_a")
-                   .withColumnRenamed("n_sh", "na"), "id_a")
-        .join(sizes.withColumnRenamed("doc_id", "id_b")
-                   .withColumnRenamed("n_sh", "nb"), "id_b")
+    // Exact n-gram Jaccard via posting lists ([[shinglePairs]]): pairs
+    // come from per-shingle sorted doc lists, never a doc×doc join, and
+    // Jaccard is over each document's df-capped shingle set (both sides
+    // of the oracle compare use the same capped sets).
+    "q66_ngram_jaccard" -> ((s, d) =>
+      shinglePairs(Tables.documents(s, d))
         .select(col("id_a"), col("id_b"), col("co"),
           (col("co") * lit(1000000L) / (col("na") + col("nb") - col("co")))
             .cast("long").as("jacc_ppm"))
         .filter(col("jacc_ppm") >= 100000)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
+        .orderBy(col("id_a"), col("id_b"))),
 
     // NEAR-DUP CLUSTER ELECTION — the step every production dedup
     // pipeline runs AFTER pair generation (CCNet / RefinedWeb shape):

@@ -110,39 +110,64 @@ object VectorQueries extends QuerySet {
     e.select(col("vec_id"), col("label"),
       transform(col("embedding"), gridCode _).as("xs"))
 
+  /** Exact BIGINT sufficient statistics of a grid-coded corpus's `xs`
+    * column from ONE `gram_moments` aggregate job: n, Σx_d, Σx_d² and,
+    * with `pairs`, Σx_i·x_j for i < j in row-major order. The kernel
+    * enforces the width caps (65,536 dims, 512 with pairs), equal
+    * widths, no null elements and overflow-checked sums; empty input
+    * fails here, by name. */
+  private[graft] case class Gram(n: Long, sx: Array[Long], qx: Array[Long],
+                                 sxy: Array[Long])
+
+  private[graft] def gram(codes: org.apache.spark.sql.DataFrame,
+                          pairs: Boolean): Gram = {
+    val r = codes.agg(graft.functions.GraftFunctions
+      .gram_moments(col("xs"), pairs)).head().getStruct(0)
+    def longs(i: Int) = r.getSeq[Long](i).toArray
+    require(r != null && longs(1).nonEmpty,
+      "gram_moments fit: empty input, no non-null non-empty xs row")
+    Gram(r.getLong(0), longs(1), longs(2), if (pairs) longs(3) else null)
+  }
+
   /** Per-dimension Gaussian moments of a grid-coded corpus, all exact
     * BIGINT: rounded mean μ̂ = (2Σx+n) div 2n, ≥1-guarded variance
     * v̂ = Σx² div n − μ̂², centered sum of squares
-    * ssd = Σx² − 2μ̂Σx + nμ̂² (the correlation denominator). One
-    * `dims`-key map-side-combined aggregation, bounded collect. */
+    * ssd = Σx² − 2μ̂Σx + nμ̂² (the correlation denominator). */
   private[graft] case class Moments(n: Long, mu: Array[Long],
                                         vr: Array[Long], ssd: Array[Long])
 
+  /** [[Moments]] from one diagonal-mode `gram_moments` job (no width
+    * probe, no shuffle of per-dimension keys). */
   private[graft] def gaussianMoments(codes: org.apache.spark.sql.DataFrame)
-      : Moments = {
-    // loud valve BEFORE the dims-bounded collect runs (a post-collect
-    // check would materialize the rows first and OOM anyway): one
-    // cheap first-row probe of the array width
-    val dims = codes.select(size(col("xs"))).head().getInt(0)
-    require(dims <= 65536,
-      s"gaussianMoments: $dims dimensions exceeds the 65536 " +
-        "moment-collect cap; shard the moment pass per dimension range")
-    val st = codes
-      .select(posexplode(col("xs")).as(Seq("d", "x")))
-      .groupBy(col("d"))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum(col("x") * col("x")).as("qx"))
-      .collect()                         // bounded: exactly `dims` rows
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1)
-    val mu = st.map { case (_, n, sx, _) => (2 * sx + n) / (2 * n) }
-    val vr = st.zipWithIndex.map { case ((_, n, _, qx), i) =>
-      math.max(qx / n - mu(i) * mu(i), 1L)
+      : Moments = momentsOf(gram(codes, pairs = false))
+
+  /** The driver half of the fit, overflow-checked like the kernel. */
+  private[graft] def momentsOf(g: Gram): Moments = {
+    import Math.{addExact, multiplyExact, subtractExact}
+    val n = g.n
+    val mu = g.sx.map(sx => addExact(multiplyExact(2L, sx), n) / multiplyExact(2L, n))
+    val vr = mu.indices.map(i =>
+      math.max(subtractExact(g.qx(i) / n, multiplyExact(mu(i), mu(i))), 1L)).toArray
+    val ssd = mu.indices.map(i => addExact(
+      subtractExact(g.qx(i), multiplyExact(multiplyExact(2L, mu(i)), g.sx(i))),
+      multiplyExact(multiplyExact(n, mu(i)), mu(i)))).toArray
+    Moments(n, mu, vr, ssd)
+  }
+
+  /** q262's centered pair sums (i, j, Σ(x_i−μ̂_i)(x_j−μ̂_j)), i < j in
+    * row-major order, from a pair-mode [[Gram]]:
+    * Σx_ix_j − μ̂_jΣx_i − μ̂_iΣx_j + nμ̂_iμ̂_j, exact or an
+    * ArithmeticException. */
+  private[graft] def centeredPairs(g: Gram, mu: Array[Long])
+      : IndexedSeq[(Int, Int, Long)] = {
+    import Math.{addExact, multiplyExact, subtractExact}
+    val ij = for (i <- mu.indices; j <- i + 1 until mu.length) yield (i, j)
+    ij.zipWithIndex.map { case ((i, j), k) =>
+      (i, j, addExact(
+        subtractExact(subtractExact(g.sxy(k), multiplyExact(mu(j), g.sx(i))),
+          multiplyExact(mu(i), g.sx(j))),
+        multiplyExact(multiplyExact(g.n, mu(i)), mu(j))))
     }
-    val ssd = st.zipWithIndex.map { case ((_, n, sx, qx), i) =>
-      qx - 2 * mu(i) * sx + n * mu(i) * mu(i)
-    }
-    Moments(st.head._2, mu, vr, ssd)
   }
 
   /** Integer division via pmod: operands are non-negative and the
@@ -320,12 +345,12 @@ object VectorQueries extends QuerySet {
     // the score a per-dim integer division summed — no IEEE op
     // anywhere, so Spark and DuckDB agree bit-for-bit.
     //
-    // Scale: one 64-key aggregation (map-side combined) → a bounded
-    // `dims`-row collect (the IvfAnn-centroid precedent) → scoring is
-    // a pure scan-speed projection against literal μ̂/v̂ arrays — the
-    // corpus never shuffles. Headroom: Σx² per dim ≤ n·(16000)², so
-    // BIGINT holds past 3×10¹⁰ vectors; beyond that the decomposable
-    // moments shard-and-combine.
+    // Scale: one diagonal-mode `gram_moments` aggregate job (one
+    // long[] buffer per partition, merged once) → scoring is a pure
+    // scan-speed projection against literal μ̂/v̂ arrays — the corpus
+    // never shuffles. Headroom: Σx² per dim ≤ n·(16000)², so BIGINT
+    // holds past 3×10¹⁰ vectors; past that the kernel's exact sums
+    // throw, and the decomposable moments shard-and-combine.
     "q261_gaussian_outliers" -> ((s, d) =>
       gaussianOutliers(Tables.embeddings(s, d), topK = 20)),
 
@@ -403,33 +428,29 @@ object VectorQueries extends QuerySet {
     // which dimensions are redundant before whitening/PCA.
     //
     // Exactness: q261's grid codes centered on the integer rounded
-    // mean; per-pair Σ(cx·cy) and per-dim centered Σcx² are exact
-    // BIGINTs, so the only IEEE ops are the final multiply/sqrt/divide
-    // (q197's one-division discipline) — bit-identical both engines.
+    // mean μ̂; per-pair Σ(x_i−μ̂_i)(x_j−μ̂_j) and per-dim centered
+    // Σ(x−μ̂)² are exact BIGINTs, so the only IEEE ops are the final
+    // multiply/sqrt/divide (q197's one-division discipline) —
+    // bit-identical both engines.
     //
-    // Scale: each row expands to a FIXED d(d−1)/2 = 2016-element pair
-    // array — bounded by the DIMENSION, not the data (contrast the
-    // degree-dependent arrays de-hubbed in GraphOps) — and partial
-    // aggregation collapses every partition to ≤2016 keys before the
-    // one tiny shuffle. Denominators ride literal arrays; the corpus
-    // never shuffles at full width.
+    // Scale: ONE pair-mode `gram_moments` job folds every partition
+    // into a 2d + d(d−1)/2-long buffer (n, Σx_i, Σx_i², raw Σx_i·x_j)
+    // and merges the buffers once; the corpus is scanned once and never
+    // shuffled. The driver centers each pair exactly,
+    // Σx_ix_j − μ̂_jΣx_i − μ̂_iΣx_j + nμ̂_iμ̂_j (overflow-checked), and the
+    // d(d−1)/2 = 2016 (di, dj, sxy) rows feed the correlation tail as a
+    // local relation. Denominators ride literal arrays. Width is capped
+    // at 512 dims, `MultivariateGaussian.fit`'s dense cap.
     "q262_dim_correlation" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val codes = gridCodes(e)
-      val m = gaussianMoments(codes)
-      val muLit = array(m.mu.toIndexedSeq.map(lit(_)): _*)
+      val g = gram(gridCodes(Tables.embeddings(s, d)), pairs = true)
+      val m = momentsOf(g)
       val ssdLit = array(m.ssd.toIndexedSeq.map(lit(_)): _*)
-      val nd = m.mu.length
-      val cxs = transform(col("xs"),
-        (x, i) => x - element_at(muLit, (i + 1).cast("int")))
-      val pairs = codes
-        .select(explode(flatten(transform(cxs, (x, i) =>
-          transform(slice(cxs, i + lit(2), lit(nd)), (y, j) =>
-            struct(i.cast("int").as("di"), (i + 1 + j).cast("int").as("dj"),
-              (x * y).as("p")))))).as("pr"))
-        .select(col("pr.di"), col("pr.dj"), col("pr.p"))
-        .groupBy(col("di"), col("dj"))
-        .agg(sum(col("p")).as("sxy"))
+      val rows = centeredPairs(g, m.mu).map { case (i, j, sxy) =>
+        org.apache.spark.sql.Row(i, j, sxy)
+      }
+      val pairs = s.createDataFrame(java.util.Arrays.asList(rows: _*),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "di INT, dj INT, sxy BIGINT"))
       val den = greatest(
         sqrt(element_at(ssdLit, col("di") + 1).cast("double") *
              element_at(ssdLit, col("dj") + 1).cast("double")),

@@ -336,4 +336,37 @@ class PlanShapeSpec extends SparkSpec {
     assert(windows >= 3, s"expected >=3 window operators:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cartesian:\n$plan")
   }
+
+  test("q262 scans embeddings in one job and explodes nothing (fused Gram moments)") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { plans.add(qe); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = { plans.add(qe); () }
+    }
+    // listener events arrive asynchronously; a last marker action's
+    // arrival means every earlier one has been delivered
+    val marker = "q262-shape-marker"
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("q262_dim_correlation")(spark, sf).collect()
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!plans.asScala.exists(_.executedPlan.toString.contains(marker)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val q262 = plans.asScala.toSeq.map(_.executedPlan)
+      .filterNot(_.toString.contains(marker))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val generates = q262.flatMap(p => helper.collect(p) { case g: GenerateExec => g })
+    assert(generates.isEmpty, s"q262 explodes rows:\n${q262.mkString("\n")}")
+    val scanning = q262.filter(p => helper.collect(p) {
+      case sc: FileSourceScanExec => sc.relation.location.rootPaths
+    }.flatten.exists(_.getName.startsWith("embeddings")))
+    assert(scanning.size == 1,
+      s"${scanning.size} jobs scan embeddings:\n${q262.mkString("\n")}")
+  }
 }

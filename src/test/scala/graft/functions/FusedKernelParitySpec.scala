@@ -170,4 +170,95 @@ class FusedKernelParitySpec extends SparkSpec {
     assert(exp.length == got.length && exp.length > 0)
     exp.zip(got).foreach { case (a, b) => assert(a == b) }
   }
+
+  test("gram_moments matches the posexplode/explode → groupBy compositions") {
+    import graft.operators.VectorQueries
+    val codes = VectorQueries.gridCodes(Tables.embeddings(spark, sf))
+    // the diagonal composition gaussianMoments ran before the kernel
+    val st = codes.select(posexplode(col("xs")).as(Seq("d", "x")))
+      .groupBy(col("d"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
+        sum(col("x") * col("x")).as("qx"))
+      .orderBy(col("d")).collect()
+    val pg = VectorQueries.gram(codes, pairs = true)
+    val dg = VectorQueries.gram(codes, pairs = false)
+    assert(st.length == 64 && pg.sx.length == 64 && dg.sxy == null)
+    for (g <- Seq(pg, dg)) {
+      assert(st.forall(_.getLong(1) == g.n))
+      assert(st.map(_.getLong(2)).sameElements(g.sx))
+      assert(st.map(_.getLong(3)).sameElements(g.qx))
+    }
+    // q262's centered pair sums against the nested-transform explode
+    // → groupBy(di, dj) composition it ran before the kernel
+    val m = VectorQueries.gaussianMoments(codes)
+    val muLit = array(m.mu.toIndexedSeq.map(lit(_)): _*)
+    val cxs = transform(col("xs"),
+      (x, i) => x - element_at(muLit, (i + 1).cast("int")))
+    val exp = codes
+      .select(explode(flatten(transform(cxs, (x, i) =>
+        transform(slice(cxs, i + lit(2), lit(64)), (y, j) =>
+          struct(i.cast("int").as("di"), (i + 1 + j).cast("int").as("dj"),
+            (x * y).as("p")))))).as("pr"))
+      .groupBy(col("pr.di").as("di"), col("pr.dj").as("dj"))
+      .agg(sum(col("pr.p")).as("sxy"))
+      .orderBy(col("di"), col("dj")).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+    val got = VectorQueries.centeredPairs(pg, m.mu)
+    assert(exp.length == 64 * 63 / 2 && exp.sameElements(got))
+    val pm = VectorQueries.momentsOf(pg)
+    assert(pm.n == m.n && pm.mu.sameElements(m.mu) &&
+      pm.vr.sameElements(m.vr) && pm.ssd.sameElements(m.ssd))
+  }
+
+  test("gram_moments contract: skips null rows, fails loudly otherwise") {
+    import graft.operators.VectorQueries
+    val s2 = spark; import s2.implicits._
+    def gramOf(rows: Seq[Seq[Long]], pairs: Boolean) =
+      VectorQueries.gram(rows.toDF("xs"), pairs)
+    def failsWith[T <: Throwable](msg: String)(f: => Any)(
+        implicit ct: scala.reflect.ClassTag[T]): Unit = {
+      val t = intercept[Throwable](f)
+      val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => ct.runtimeClass.isInstance(c) &&
+        String.valueOf(c.getMessage).contains(msg)), s"got $t")
+    }
+
+    // a null array row is skipped, as posexplode skips it
+    val g = gramOf(Seq(Seq(1L, 2L), null, Seq(3L, 4L)), pairs = true)
+    assert(g.n == 2 && g.sx.sameElements(Seq(4L, 6L)) &&
+      g.qx.sameElements(Seq(10L, 20L)) && g.sxy.sameElements(Seq(14L)))
+
+    // ragged width: across partitions (merge) and inside one (update)
+    val ragged = Seq(Seq(1L, 2L), Seq(1L, 2L, 3L)).toDF("xs")
+    failsWith[IllegalArgumentException]("width")(
+      VectorQueries.gram(ragged, pairs = false))
+    failsWith[IllegalArgumentException]("width")(
+      VectorQueries.gram(ragged.coalesce(1), pairs = false))
+
+    // width caps: 65,536 dims diagonal, 512 with pairs
+    failsWith[IllegalArgumentException]("exceeds the 65536-dimension cap")(
+      gramOf(Seq(Seq.fill(65537)(1L)), pairs = false))
+    failsWith[IllegalArgumentException]("exceeds the 512-dimension cap")(
+      gramOf(Seq(Seq.fill(513)(1L)), pairs = true))
+    assert(gramOf(Seq(Seq.fill(513)(1L)), pairs = false).n == 1)
+
+    // a null element throws
+    failsWith[IllegalArgumentException]("null element")(
+      VectorQueries.gram(Seq(Seq(Some(1L), None)).toDF("xs"), pairs = false))
+
+    // overflow throws instead of wrapping: a square, a pair product,
+    // and a sum across rows
+    failsWith[ArithmeticException]("overflow")(
+      gramOf(Seq(Seq(1L << 32)), pairs = false))
+    failsWith[ArithmeticException]("overflow")(
+      gramOf(Seq(Seq(1L << 31, 1L << 31), Seq(1L << 31, 1L << 31)), pairs = true))
+    failsWith[ArithmeticException]("overflow")(
+      gramOf(Seq.fill(3)(Seq(3000000000L)), pairs = false))
+
+    // empty input (no rows, or only null rows) fails by name
+    failsWith[IllegalArgumentException]("empty input")(
+      VectorQueries.gaussianMoments(Seq.empty[Seq[Long]].toDF("xs")))
+    failsWith[IllegalArgumentException]("empty input")(
+      VectorQueries.gaussianMoments(Seq(null: Seq[Long]).toDF("xs")))
+  }
 }
