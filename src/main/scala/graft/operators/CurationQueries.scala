@@ -481,35 +481,23 @@ object CurationQueries extends QuerySet {
     "q218_stream_surprisal" -> ((s, d) => {
       import graft.streaming.Replay
       val base = Scratch.dir("surpstream")
-      val docs = Tables.documents(s, d)
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val half = maxId / 2
-      val (c1, c2) = (half + (maxId - half) / 3, half + 2 * ((maxId - half) / 3))
-      val cnt = docs.filter(col("doc_id") < half)
+      val (corpus, ep) =
+        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
+      val cnt = corpus
         .select(explode(toks(col("text"))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("c"))
         .cache()
       val nTot = cnt.agg(sum(col("c"))).head().getLong(0)
-      val chunks = Seq(
-        col("doc_id") >= half && col("doc_id") < c1,
-        col("doc_id") >= c1 && col("doc_id") < c2,
-        col("doc_id") >= c2)
-      val (inDir, schema) =
-        Replay.fileEpochs(docs.filter(col("doc_id") >= half), chunks, base.toString)
       val out = s"$base/out"
-      val q = Replay.streamDf(s, inDir, schema).writeStream
-        .option("checkpointLocation", s"$base/ck")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.select(col("doc_id"), explode(toks(col("text"))).as("term"))
-            .join(broadcast(cnt), Seq("term"), "left")
-            .withColumn("surp",
-              blog2(expr(s"$nTot div (coalesce(c, 0L) + 1L)")))
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_tok"), sum(col("surp")).as("surprisal"))
-            .write.mode("append").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+        b.select(col("doc_id"), explode(toks(col("text"))).as("term"))
+          .join(broadcast(cnt), Seq("term"), "left")
+          .withColumn("surp",
+            blog2(expr(s"$nTot div (coalesce(c, 0L) + 1L)")))
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("n_tok"), sum(col("surp")).as("surprisal"))
+          .write.mode("append").parquet(out)
+      }
       cnt.unpersist()
       s.read.parquet(out).orderBy(col("doc_id"))
     }),
@@ -696,24 +684,17 @@ object CurationQueries extends QuerySet {
       val test = docs.filter(col("split") === "test")
         .select(col("doc_id"), col("text"))
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val (c1, c2) = (maxId / 3, 2 * maxId / 3)
-      val chunks = Seq(col("doc_id") < c1,
-        col("doc_id") >= c1 && col("doc_id") < c2, col("doc_id") >= c2)
-      val (inDir, schema) = Replay.fileEpochs(test, chunks, base.toString)
+      val ep = Replay.idThirds(test, "doc_id", 0L, maxId, base.toString)
       val out = s"$base/out"
-      val q = Replay.streamDf(s, inDir, schema).writeStream
-        .option("checkpointLocation", s"$base/ck")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.select(col("doc_id"),
-              explode(TextQueries.shingles4(col("text"))).as("sh"))
-            .distinct()
-            .join(train, "sh")
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_shared"))
-            .write.mode("append").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+        b.select(col("doc_id"),
+            explode(TextQueries.shingles4(col("text"))).as("sh"))
+          .distinct()
+          .join(train, "sh")
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("n_shared"))
+          .write.mode("append").parquet(out)
+      }
       train.unpersist()
       s.read.parquet(out).orderBy(col("doc_id"))
     }),
@@ -1480,38 +1461,26 @@ object CurationQueries extends QuerySet {
               lit(1048576L)).cast("long"))))
           .drop("__keys")
       }
-      val docs = Tables.documents(s, d)
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val half = maxId / 2
-      val (c1, c2) = (half + (maxId - half) / 3, half + 2 * ((maxId - half) / 3))
+      val (corpus, ep) =
+        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
       // explode_OUTER on purpose: plain explode triggers
       // InferFiltersFromGenerate, which pushes a `size(fps) > 0`
       // filter to the scan with the WHOLE fingerprint expression
       // inlined — the O(n²·w) re-evaluation the __keys column split
       // exists to avoid (measured 100 s vs 4 s at sf0.1). The arrays
       // are never empty (≥1 window always), so outer ≡ inner here.
-      val corpusFps = withFps(docs.filter(col("doc_id") < half))
+      val corpusFps = withFps(corpus)
         .select(explode_outer(col("__fps")).as("fh")).distinct().cache()
-      val chunks = Seq(
-        col("doc_id") >= half && col("doc_id") < c1,
-        col("doc_id") >= c1 && col("doc_id") < c2,
-        col("doc_id") >= c2)
-      val (inDir, schema) =
-        Replay.fileEpochs(docs.filter(col("doc_id") >= half), chunks, base.toString)
       val out = s"$base/out"
-      val q = Replay.streamDf(s, inDir, schema).writeStream
-        .option("checkpointLocation", s"$base/ck")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val hits = withFps(b)
-            .select(col("doc_id"), explode_outer(col("__fps")).as("fh"))
-            .join(corpusFps, Seq("fh"))
-            .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
-          b.select(col("doc_id")).join(hits, Seq("doc_id"), "left")
-            .select(col("doc_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-            .write.mode("append").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+        val hits = withFps(b)
+          .select(col("doc_id"), explode_outer(col("__fps")).as("fh"))
+          .join(corpusFps, Seq("fh"))
+          .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
+        b.select(col("doc_id")).join(hits, Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
+          .write.mode("append").parquet(out)
+      }
       corpusFps.unpersist()
       s.read.parquet(out)
         .withColumn("flagged", col("n_hits") >= 2)

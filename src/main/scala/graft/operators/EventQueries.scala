@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
-import StreamParityQueries.runAppend
+import graft.streaming.Replay.runAppend
 
 /** Time-windowing + temporal operators over the events table — the
   * batch analogs of the reference's streaming operators (SURVEY §2.2,
@@ -293,33 +293,8 @@ object EventQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay}
       val base = Scratch.dir("winstream")
-      val real = Tables.events(s, d).as[Event]
-      // chunk bounds from the DATA's own span (two bounded scalars) so
-      // the replay is genuinely multi-batch at every scale factor
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      // TWO flush epochs past the data: the first advances the
-      // watermark beyond every real window; the second triggers the
-      // batch in which those newly-closed windows actually EMIT
-      // (append mode emits a window in the batch AFTER the watermark
-      // passes it — one flush would close the last window but leave
-      // it sitting in state at termination).
-      def flush(id: Long, offDays: Long) = Event(id,
-        tsOf(hiUs + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(flush(-1L, 1), flush(-2L, 2)).toDS())
-      val fcol = col("event_type") === "flush"
-      val chunks = Seq(
-        col("ts") < cut(1) && !fcol,
-        col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-        col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-        col("ts") >= cut(3) && !fcol,
-        col("event_id") === -1L && fcol,
-        col("event_id") === -2L && fcol)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        Replay.flushes(1, 2))
       // NO flush filter anywhere inside the streaming plan: a filter
       // on event_type — even placed above the aggregate — is
       // predicate-pushed through the Aggregate (grouping column) and
@@ -331,7 +306,7 @@ object EventQueries extends QuerySet {
       // filtered from the SINK OUTPUT instead — and in practice never
       // emit anyway, because their own windows have no later batch to
       // close them.
-      val agg = Replay.stream(s, inDir, schema)
+      val agg = ep.stream(s)
         .withWatermark("ts", "1 minute")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), sumCents.as("cents_v"))
@@ -355,31 +330,14 @@ object EventQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay}
       val base = Scratch.dir("winall")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      def flush(id: Long, offDays: Long) = Event(id,
-        tsOf(hiUs + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(flush(-1L, 1), flush(-2L, 2)).toDS())
-      val fcol = col("event_type") === "flush"
-      val chunks = Seq(
-        col("ts") < cut(1) && !fcol,
-        col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-        col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-        col("ts") >= cut(3) && !fcol,
-        col("event_id") === -1L && fcol,
-        col("event_id") === -2L && fcol)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
-      val agg = Replay.stream(s, inDir, schema)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        Replay.flushes(1, 2))
+      val agg = ep.stream(s)
         .withWatermark("ts", "1 minute")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n"), sumCents.as("cents_v"))
         .select(col("w.start").as("w_start"), col("n"), col("cents_v"))
-      runAppend(agg, base.toString, s).filter(col("w_start") <= lit(tsOf(hiUs)))
+      runAppend(agg, base.toString, s).filter(col("w_start") <= lit(Replay.tsOf(ep.hi)))
         .orderBy(col("w_start"))
     }),
 
@@ -420,26 +378,9 @@ object EventQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay}
       val base = Scratch.dir("sessstream")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      def flush(id: Long, offDays: Long) = Event(id,
-        tsOf(hiUs + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(flush(-1L, 1), flush(-2L, 2)).toDS())
-      val fcol = col("event_type") === "flush"
-      val chunks = Seq(
-        col("ts") < cut(1) && !fcol,
-        col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-        col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-        col("ts") >= cut(3) && !fcol,
-        col("event_id") === -1L && fcol,
-        col("event_id") === -2L && fcol)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
-      val sess = Replay.stream(s, inDir, schema)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        Replay.flushes(1, 2))
+      val sess = ep.stream(s)
         .withWatermark("ts", "1 minute")
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
         .agg(count(lit(1)).as("n_events"),
@@ -468,21 +409,9 @@ object EventQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay, StatefulOps}
       val base = Scratch.dir("dedupstream")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      val chunks = Seq(
-        col("ts") < cut(1),
-        col("ts") >= cut(1) && col("ts") < cut(2),
-        col("ts") >= cut(2) && col("ts") < cut(3),
-        col("ts") >= cut(3))
-      val (inDir, schema) = Replay.fileEpochs(real, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val deduped = StatefulOps
-        .dedupFirstWithTtl(Replay.stream(s, inDir, schema), Long.MaxValue / 2)
+        .dedupFirstWithTtl(ep.stream(s), Long.MaxValue / 2)
         .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
       runAppend(deduped, base.toString, s).orderBy(col("user_id"), col("event_type"))
     }),
@@ -499,21 +428,9 @@ object EventQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay, StreamJoins}
       val base = Scratch.dir("ivstream")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      val chunks = Seq(
-        col("ts") < cut(1),
-        col("ts") >= cut(1) && col("ts") < cut(2),
-        col("ts") >= cut(2) && col("ts") < cut(3),
-        col("ts") >= cut(3))
-      val (inDir, schema) = Replay.fileEpochs(real, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       def side(tpe: String, outCol: String) =
-        Replay.stream(s, inDir, schema).toDF()
+        ep.stream(s).toDF()
           .filter(col("event_type") === tpe)
           .select(col("user_id"), col("ts"), col("event_id").as(outCol))
       val joined = StreamJoins.intervalJoin(
@@ -538,26 +455,11 @@ object EventQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, EventTimeOps, Replay}
       val base = Scratch.dir("asofstream")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      def drain(id: Long, offDays: Long) = Event(id,
-        tsOf(hiUs + offDays * 86400L * 1000000L), -1L, "view", 0.0, "{}")
-      val ev = real.union(Seq(drain(-1L, 1), drain(-2L, 2)).toDS())
-      val chunks = Seq(
-        col("ts") < cut(1),
-        col("ts") >= cut(1) && col("ts") < cut(2),
-        col("ts") >= cut(2) && col("ts") < cut(3),
-        col("ts") >= cut(3) && col("user_id") >= 0,
-        col("event_id") === -1L,
-        col("event_id") === -2L)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        (_, hi) => Seq(1L, 2L).map(k =>
+          Replay.sentinel(-k, hi + k * Replay.DayUs, "view")))
       val joined = EventTimeOps.asOfJoinBuffered(
-          Replay.stream(s, inDir, schema), "view", "purchase", "1 minute")
+          ep.stream(s), "view", "purchase", "1 minute")
       runAppend(joined.toDF(), base.toString, s).filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("purchase_id"))
     }),
@@ -574,21 +476,9 @@ object EventQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay, StatefulOps}
       val base = Scratch.dir("overstream")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      val chunks = Seq(
-        col("ts") < cut(1),
-        col("ts") >= cut(1) && col("ts") < cut(2),
-        col("ts") >= cut(2) && col("ts") < cut(3),
-        col("ts") >= cut(3))
-      val (inDir, schema) = Replay.fileEpochs(real, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val over = StatefulOps.boundedRowsOver(
-          Replay.stream(s, inDir, schema)
+          ep.stream(s)
             .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
           n = 5)
       runAppend(over.toDF()

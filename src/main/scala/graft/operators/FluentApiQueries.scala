@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Scratch, Tables}
 import graft.streaming.FluentTable
-import StreamParityQueries.runAppend
+import graft.streaming.Replay.runAppend
 
 /** Oracle bindings for the fluent Table-API string-expression facade
   * (graft.streaming.TableApi / FluentTable — reference Table.java:104
@@ -147,29 +147,12 @@ object FluentApiQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay}
       import graft.streaming.GroupWindows.Tumble
-      import org.apache.spark.sql.functions.{col, lit, min, max}
+      import org.apache.spark.sql.functions.col
       val base = Scratch.dir("fluentstream")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      def flush(id: Long, offDays: Long) = Event(id,
-        tsOf(hiUs + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(flush(-1L, 1), flush(-2L, 2)).toDS())
-      val fcol = col("event_type") === "flush"
-      val chunks = Seq(
-        col("ts") < cut(1) && !fcol,
-        col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-        col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-        col("ts") >= cut(3) && !fcol,
-        col("event_id") === -1L && fcol,
-        col("event_id") === -2L && fcol)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        Replay.flushes(1, 2))
       val agg = new FluentTable(
-          Replay.stream(s, inDir, schema).toDF()
+          ep.stream(s).toDF()
             .withWatermark("ts", "1 minute"))
         .select("ts, event_type, (value * 100).round(0).cast(LONG) as cents")
         .window(Tumble.over("1.hours").on("ts").as("w"))
@@ -195,29 +178,12 @@ object FluentApiQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay}
       import graft.streaming.GroupWindows.Session
-      import org.apache.spark.sql.functions.{col, lit, min, max}
+      import org.apache.spark.sql.functions.col
       val base = Scratch.dir("fluentsess")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      def flush(id: Long, offDays: Long) = Event(id,
-        tsOf(hiUs + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(flush(-1L, 1), flush(-2L, 2)).toDS())
-      val fcol = col("event_type") === "flush"
-      val chunks = Seq(
-        col("ts") < cut(1) && !fcol,
-        col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-        col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-        col("ts") >= cut(3) && !fcol,
-        col("event_id") === -1L && fcol,
-        col("event_id") === -2L && fcol)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        Replay.flushes(1, 2))
       val agg = new FluentTable(
-          Replay.stream(s, inDir, schema).toDF()
+          ep.stream(s).toDF()
             .withWatermark("ts", "1 minute"))
         .select("ts, user_id, (value * 100).round(0).cast(LONG) as cents")
         .window(Session.withGap("30.minutes").on("ts").as("w"))

@@ -171,11 +171,8 @@ object FormatQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay}
       val base = Scratch.dir("csvsink")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = StreamParityQueries.spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real,
-        StreamParityQueries.quarterChunks(lo, hi), base.toString)
-      val proj = Replay.stream(s, inDir, schema).toDF()
+      val proj = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+        .stream(s).toDF()
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("cast(round(value*100) as bigint)").as("cents"))
       val (out, ck) = (s"$base/out", s"$base/ck")
@@ -245,11 +242,10 @@ object FormatQueries extends QuerySet {
     "q253_stream_avro_sink" -> ((s, d) => {
       import graft.streaming.{Event, Replay}
       val base = Scratch.dir("avsink")
-      val real = Tables.events(s, d).as(org.apache.spark.sql.Encoders.product[Event])
-      val (lo, hi) = StreamParityQueries.spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real,
-        StreamParityQueries.quarterChunks(lo, hi), base.toString)
-      val proj = Replay.stream(s, inDir, schema).toDF()
+      val proj = Replay.quarters(
+          Tables.events(s, d).as(org.apache.spark.sql.Encoders.product[Event]),
+          base.toString)
+        .stream(s).toDF()
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("cast(round(value*100) as bigint)").as("cents"))
       val (out, ck) = (s"$base/out", s"$base/ck")
@@ -291,14 +287,11 @@ object FormatQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.{Event, Replay, TxnSink}
       val base = Scratch.dir("txnrec")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = StreamParityQueries.spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real,
-        StreamParityQueries.quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val url = s"jdbc:derby:$base/db;create=true"
       TxnSink.init(url, "SUNK")
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def start() = Replay.streamDf(s, inDir, schema)
+      def start() = ep.streamDf(s)
         .select(col("event_id").as("id"),
           expr("cast(round(value*100) as bigint)").as("v"))
         .writeStream
@@ -359,7 +352,7 @@ object FormatQueries extends QuerySet {
       import graft.streaming.{Cdc, Event, Replay}
       val base = Scratch.dir("cdcstream")
       val real = Tables.events(s, d)
-      val (lo, hi) = StreamParityQueries.spanOf(real.as[Event])
+      val (lo, hi) = Replay.spanOf(real.as[Event])
       // checkpoint the wire BEFORE the replay prep: fileEpochs writes
       // each chunk through coalesce(1), which would otherwise run the
       // whole 1-task-serial JSON encode once PER chunk — materialized
@@ -367,7 +360,7 @@ object FormatQueries extends QuerySet {
       // pure IO
       val wire = Cdc.envelope(real).localCheckpoint()
       val (inDir, schema) = Replay.fileEpochs(wire,
-        StreamParityQueries.quarterChunks(lo, hi), base.toString)
+        Replay.quarterChunks(lo, hi), base.toString)
       val url = s"jdbc:derby:$base/db;create=true"
       Cdc.initStateTable(url)
       val w = org.apache.spark.sql.expressions.Window
@@ -381,17 +374,12 @@ object FormatQueries extends QuerySet {
       // shrunken split size (ADVICE r10)
       val ss = s.newSession()
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      val q = Cdc.parse(Replay.streamDf(ss, inDir, schema), col("json"))
-        .writeStream
-        .option("checkpointLocation", s"$base/ck")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          Cdc.mergeBatch(
-            b.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") === 1).drop("__rn"), url)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.runBatches(Cdc.parse(Replay.streamDf(ss, inDir, schema), col("json")),
+          s"$base/ck") { (b, _) =>
+        Cdc.mergeBatch(
+          b.withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1).drop("__rn"), url)
+      }
       s.read.format("jdbc").option("url", url)
         .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
         .option("dbtable", "CDC_STATE").load()
@@ -522,10 +510,10 @@ object FormatQueries extends QuerySet {
       import graft.streaming.{Cdc, Event, Replay}
       val base = Scratch.dir("cdccompact")
       val real = Tables.events(s, d)
-      val (lo, hi) = StreamParityQueries.spanOf(real.as[Event])
+      val (lo, hi) = Replay.spanOf(real.as[Event])
       val wire = Cdc.envelope(real).localCheckpoint()
       val (inDir, schema) = Replay.fileEpochs(wire,
-        StreamParityQueries.quarterChunks(lo, hi), base.toString)
+        Replay.quarterChunks(lo, hi), base.toString)
       val url = s"jdbc:derby:$base/db;create=true"
       Cdc.initStateTable(url)
       val w = org.apache.spark.sql.expressions.Window
@@ -533,20 +521,14 @@ object FormatQueries extends QuerySet {
         .orderBy(col("ts_us").desc, col("pos").desc)
       val ss = s.newSession()
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      val q = Cdc.parse(Replay.streamDf(ss, inDir, schema), col("json"))
-        .writeStream
-        .option("checkpointLocation", s"$base/ck")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          Cdc.mergeBatch(
-            b.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") === 1).drop("__rn"), url)
-          val wm = b.agg(min(col("ts_us"))).head()
-          if (!wm.isNullAt(0)) Cdc.compactTombstones(url, wm.getLong(0))
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.runBatches(Cdc.parse(Replay.streamDf(ss, inDir, schema), col("json")),
+          s"$base/ck") { (b, _) =>
+        Cdc.mergeBatch(
+          b.withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1).drop("__rn"), url)
+        val wm = b.agg(min(col("ts_us"))).head()
+        if (!wm.isNullAt(0)) Cdc.compactTombstones(url, wm.getLong(0))
+      }
       s.read.format("jdbc").option("url", url)
         .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
         .option("dbtable", "CDC_STATE").load()
@@ -575,21 +557,14 @@ object FormatQueries extends QuerySet {
     val wire = Cdc.envelope(real).localCheckpoint()
     val chunks =
       if (timeOrdered) {
-        val (lo, hi) = StreamParityQueries.spanOf(Tables.events(s, d).as[Event])
-        StreamParityQueries.quarterChunks(lo, hi)
+        val (lo, hi) = Replay.spanOf(Tables.events(s, d).as[Event])
+        Replay.quarterChunks(lo, hi)
       } else (0 until 4).map(i => pmod(col("event_id"), lit(4)) === i)
     val (inDir, schema) = Replay.fileEpochs(wire, chunks, base.toString)
     val url = s"jdbc:derby:$base/db;create=true"
     Cdc.initScd2Table(url)
-    val q = Cdc.parse(Replay.streamDf(s, inDir, schema), col("json"))
-      .writeStream
-      .option("checkpointLocation", s"$base/ck")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        Cdc.scd2Batch(b, url)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.runBatches(Cdc.parse(Replay.streamDf(s, inDir, schema), col("json")),
+        s"$base/ck")((b, _) => Cdc.scd2Batch(b, url))
     val hist = s.read.format("jdbc").option("url", url)
       .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       .option("dbtable", "SCD2_HIST").load()

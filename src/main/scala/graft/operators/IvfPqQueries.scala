@@ -129,13 +129,10 @@ object IvfPqQueries extends QuerySet {
     // read-back breaks the hash.
     "q297_ivfpq_stream_ingest" -> ((s, d) => {
       import graft.streaming.Replay
-      import org.apache.spark.sql.streaming.Trigger
       val base = Scratch.dir("ivfingest")
       val idx = s"$base/index"
       val e = Tables.embeddings(s, d)
-      val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
-      val half = maxId / 2
-      val trained = e.filter(col("vec_id") < half)
+      val (trained, ep) = Replay.snapshotSplit(e, "vec_id", base.toString)
       val model = IvfPq.fit(trained, "embedding", kCoarse = 8,
         lloydIters = 2, numSub = 8, codesPerSub = 16)
       // cluster-clustered write: without it every encode task writes a
@@ -145,21 +142,10 @@ object IvfPqQueries extends QuerySet {
       IvfPq.index(trained, "embedding", model)
         .repartition(col("cluster"))
         .write.partitionBy("cluster").parquet(idx)
-      val (c1, c2) = (half + (maxId - half) / 3, half + 2 * ((maxId - half) / 3))
-      val chunks = Seq(
-        col("vec_id") >= half && col("vec_id") < c1,
-        col("vec_id") >= c1 && col("vec_id") < c2,
-        col("vec_id") >= c2)
-      val (inDir, schema) = Replay.fileEpochs(
-        e.filter(col("vec_id") >= half), chunks, base.toString)
-      val q = Replay.streamDf(s, inDir, schema).writeStream
-        .option("checkpointLocation", s"$base/ck")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          IvfPq.index(b, "embedding", model)
-            .write.mode("append").partitionBy("cluster").parquet(idx)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+        IvfPq.index(b, "embedding", model)
+          .write.mode("append").partitionBy("cluster").parquet(idx)
+      }
       val indexed = s.read.parquet(idx)
       IvfPq.search(indexed, e.filter(col("vec_id") <= 20), "embedding",
         model, k = 5, nprobe = 8)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
+import graft.streaming.Replay
 
 /** Frequency-sketch operators: Count-Min heavy hitters over the corpus
   * token stream (Cormode & Muthukrishnan 2005 — the streaming-frequency
@@ -107,9 +108,8 @@ object SketchQueries extends QuerySet {
       val base = Scratch.dir("cmsstream")
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
-      val (inDir, schema) = graft.streaming.Replay
-        .fileEpochs(docs, chunks, base.toString)
-      val liveCells = graft.streaming.Replay.streamDf(s, inDir, schema)
+      val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
+      val liveCells = Replay.streamDf(s, inDir, schema)
         // the replay contract is ONE file per epoch, so each
         // micro-batch's scan gets at most a handful of byte-range
         // splits (~3 here, conc 2.4 even at the 10x soak) while the
@@ -126,9 +126,9 @@ object SketchQueries extends QuerySet {
         .select(explode(cellArr(col("term"))).as("rb"))
         .groupBy(col("rb.r").as("r"), col("rb.b").as("b"))
         .agg(count(lit(1)).as("cnt"))
-      val cells = StreamParityQueries.latestPerKey(
-        StreamParityQueries.runUpdate(liveCells, base.toString, s,
-          StreamParityQueries.boundedStatePartitions(depth * width)),
+      val cells = Replay.latestPerKey(
+        Replay.runUpdate(liveCells, base.toString, s,
+          Replay.boundedStatePartitions(depth * width)),
         col("r"), col("b"))
       val tok = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("term"))
@@ -225,9 +225,8 @@ object SketchQueries extends QuerySet {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
-      val (inDir, schema) = graft.streaming.Replay
-        .fileEpochs(docs, chunks, base.toString)
-      val live = graft.streaming.Replay.streamDf(s, inDir, schema)
+      val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
+      val live = Replay.streamDf(s, inDir, schema)
         .groupBy(col("source"))
         .agg(kllAgg(col("n_chars").cast("double")).as("sk"))
         .withColumn("st", statsUdf(col("sk")))
@@ -235,9 +234,9 @@ object SketchQueries extends QuerySet {
           col("st.min_v").as("min_d"), col("st.max_v").as("max_d"),
           col("st.q25").as("q25"), col("st.q50").as("q50"),
           col("st.q75").as("q75"))
-      val fin = StreamParityQueries.latestPerKey(
-        StreamParityQueries.runUpdate(live, base.toString, s,
-          StreamParityQueries.boundedStatePartitions(64)), col("source"))
+      val fin = Replay.latestPerKey(
+        Replay.runUpdate(live, base.toString, s,
+          Replay.boundedStatePartitions(64)), col("source"))
       val hist = docs
         .select(col("source"), col("n_chars").cast("double").as("v"))
         .groupBy(col("source"), col("v")).agg(count(lit(1)).as("c"))
@@ -336,16 +335,15 @@ object SketchQueries extends QuerySet {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("text"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
-      val (inDir, schema) = graft.streaming.Replay
-        .fileEpochs(docs, chunks, base.toString)
-      val agg = graft.streaming.Replay.streamDf(s, inDir, schema)
+      val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
+      val agg = Replay.streamDf(s, inDir, schema)
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("source"))
         .agg(thetaAgg(xxhash64(col("w"))).as("sk"))
-      val fin = StreamParityQueries.latestPerKey(
-        StreamParityQueries.runUpdate(agg, base.toString, s,
-          StreamParityQueries.boundedStatePartitions(64)), col("source"))
+      val fin = Replay.latestPerKey(
+        Replay.runUpdate(agg, base.toString, s,
+          Replay.boundedStatePartitions(64)), col("source"))
       val skRows = fin.collect() // one row per source — dimension-bounded
       require(skRows.length <= 64,
         s"source dimension blew up: ${skRows.length}")
@@ -450,17 +448,16 @@ object SketchQueries extends QuerySet {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("text"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
-      val (inDir, schema) = graft.streaming.Replay
-        .fileEpochs(docs, chunks, base.toString)
-      val agg = graft.streaming.Replay.streamDf(s, inDir, schema)
+      val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
+      val agg = Replay.streamDf(s, inDir, schema)
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("source"))
         .agg(expr("hll_sketch_agg(w)").as("sk"))
         .select(col("source"), expr("hll_sketch_estimate(sk)").as("est"))
-      val fin = StreamParityQueries.latestPerKey(
-        StreamParityQueries.runUpdate(agg, base.toString, s,
-          StreamParityQueries.boundedStatePartitions(64)), col("source"))
+      val fin = Replay.latestPerKey(
+        Replay.runUpdate(agg, base.toString, s,
+          Replay.boundedStatePartitions(64)), col("source"))
       val exact = docs
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Scratch, Tables}
-import graft.streaming.{FlinkDdl, FlinkSql, FlinkSqlJoins, GroupWindowSql}
+import graft.streaming.{FlinkDdl, FlinkSql, FlinkSqlJoins, GroupWindowSql, Replay}
 import org.apache.spark.sql.Row
 
 /** SQL-text front-end catalog — queries a reference user would paste
@@ -69,30 +69,10 @@ object SqlFrontendQueries extends QuerySet {
     "q241_flinksql_session_stream" -> ((s, d) => {
       import s.implicits._
       import org.apache.spark.sql.functions.col
-      import graft.streaming.{Event, Replay}
+      import graft.streaming.Event
       val base = Scratch.dir("sesssql")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(org.apache.spark.sql.functions.min(col("ts")),
-          org.apache.spark.sql.functions.max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => org.apache.spark.sql.functions.lit(
-        tsOf(loUs + (hiUs - loUs) * q / 4))
-      def flush(id: Long, offDays: Long) = Event(id,
-        tsOf(hiUs + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(flush(-1L, 2), flush(-2L, 4)).toDS())
-      val fcol = col("event_type") === "flush"
-      val chunks = Seq(
-        col("ts") < cut(1) && !fcol,
-        col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-        col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-        col("ts") >= cut(3) && !fcol,
-        col("event_id") === -1L && fcol,
-        col("event_id") === -2L && fcol)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
-      Replay.stream(s, inDir, schema)
+      Replay.quarters(Tables.events(s, d).as[Event], base.toString, Replay.flushes(2, 4))
+        .stream(s)
         .withWatermark("ts", "1 minute")
         .createOrReplaceTempView("events_stream_q241")
       val agg = GroupWindowSql.run(s,
@@ -103,7 +83,7 @@ object SqlFrontendQueries extends QuerySet {
           |       SUM(CAST(ROUND(value*100) AS BIGINT)) AS cents
           |FROM events_stream_q241
           |GROUP BY user_id, SESSION(ts, INTERVAL '30' MINUTE)""".stripMargin)
-      StreamParityQueries.runAppend(agg, base.toString, s)
+      Replay.runAppend(agg, base.toString, s)
         .filter(col("grp") =!= "-1")
         .orderBy(col("grp"), col("ws"))
     }),
@@ -325,7 +305,7 @@ object SqlFrontendQueries extends QuerySet {
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_v"))
         .select(col("window.start").as("ws"), col("event_type"),
           col("n"), col("cents_v"))
-      StreamParityQueries.runAppend(agg, base.toString, s)
+      Replay.runAppend(agg, base.toString, s)
         .filter(col("event_type") =!= "__flush")
         .orderBy(col("ws"), col("event_type"))
     }),
@@ -382,7 +362,7 @@ object SqlFrontendQueries extends QuerySet {
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_v"))
         .select(col("window.start").as("ws"), col("event_type"),
           col("n"), col("cents_v"))
-      StreamParityQueries.runAppend(agg, base.toString, s)
+      Replay.runAppend(agg, base.toString, s)
         .filter(col("event_type") =!= "__flush")
         .orderBy(col("ws"), col("event_type"))
     }),

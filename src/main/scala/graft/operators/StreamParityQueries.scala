@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.{Scratch, Tables}
 import graft.streaming.{Event, Replay, Retract, SemiAntiJoin, StatefulOps}
+import graft.streaming.Replay.{latestPerKey, runAppend, runUpdate}
 
 /** Round-5 streaming↔batch parity pack: the remaining spec-only
   * stateful streaming operators, each driven through the file-stream
@@ -38,92 +37,14 @@ object StreamParityQueries extends QuerySet {
     """WITH ev AS (SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts,
       |            user_id, event_type, value, props FROM events)""".stripMargin
 
-  private[operators] def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-
-  /** (min ts µs, max ts µs) of the dataset — two bounded scalars. */
-  private[operators] def spanOf(real: Dataset[Event]): (Long, Long) = {
-    val r = real.agg(min(col("ts")), max(col("ts"))).head()
-    (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-  }
-
-  /** Four data-derived time-quarter chunk conditions — a partition of
-    * the range, so the replay is genuinely multi-batch at every scale
-    * factor and keyed state provably carries across micro-batches. */
-  private[operators] def quarterChunks(loUs: Long, hiUs: Long): Seq[Column] = {
-    val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-    Seq(
-      col("ts") < cut(1),
-      col("ts") >= cut(1) && col("ts") < cut(2),
-      col("ts") >= cut(2) && col("ts") < cut(3),
-      col("ts") >= cut(3))
-  }
-
-  /** Run an append-mode streaming frame to parquet, read it back. */
-  private[operators] def runAppend(df: DataFrame, base: String, s: SparkSession): DataFrame = {
-    val (out, ck) = (s"$base/out", s"$base/ck")
-    val q = df.writeStream.option("checkpointLocation", ck)
-      .outputMode("append").format("parquet").option("path", out)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.read.parquet(out)
-  }
-
-  /** State-partition count for streams whose keyed state is BOUNDED BY
-    * CONSTRUCTION (sketch cells: ≤2 K CMS cells, HLL/KLL/theta grain
-    * cells) — r12: every micro-batch pays per-partition state-store
-    * open/commit + task overhead, and with the session default (cores)
-    * the 4-epoch sketch replays spent ~2 s/run on 32-way state traffic
-    * for a few-KB state. A small count is the SCALE-CORRECT choice
-    * here precisely because the state does not grow with the corpus
-    * (the map side still tokenizes at full parallelism and partial
-    * aggregation collapses each task to ≤cells rows before the
-    * exchange); streams whose state grows with the data (per-user,
-    * per-doc keys) keep the session default.
-    *
-    * r13 (VERDICT r12 item 7): DERIVED from the caller's state-cell
-    * bound instead of one shared constant — one state partition per
-    * 512 bounded cells, clamped to [1, 4]. The r12 controlled
-    * experiment (q313, 2048 CMS cells: 32 partitions 6.4-7.6 s → 4
-    * partitions 4.5-4.6 s) pins the top of the clamp; the
-    * per-512-cells rule keeps a future larger-but-bounded state from
-    * silently inheriting a too-small count, and drops the
-    * source-grained sketches (≤64 cells) to one partition. */
-  private[operators] def boundedStatePartitions(stateCells: Long): Option[Int] =
-    Some(math.max(1L, math.min(4L, (stateCells + 511) / 512)).toInt)
-
-  /** Run an UPDATE-mode streaming frame via foreachBatch (parquet has
-    * no update sink): every per-batch refresh is appended tagged with
-    * its batchId; the caller reduces to newest-emission-per-key.
-    * `statePartitions` pins spark.sql.shuffle.partitions for THIS
-    * stream only (the checkpoint pins it for every batch; the session
-    * value is restored after the run) — pass it only when the keyed
-    * state is bounded by construction. */
-  private[operators] def runUpdate(df: DataFrame, base: String, s: SparkSession,
-      statePartitions: Option[Int] = None): DataFrame = {
-    val (out, ck) = (s"$base/out", s"$base/ck")
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(p =>
-      s.conf.set("spark.sql.shuffle.partitions", p.toString))
-    try {
-      val q = df.writeStream.option("checkpointLocation", ck)
-        .outputMode("update")
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.withColumn("batch_id", lit(id)).write.mode("append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      if (statePartitions.isDefined)
-        s.conf.set("spark.sql.shuffle.partitions", prev)
+  /** Sentinels of the outer interval joins (q145, q156, q170): far-
+    * future purchase/error pairs for user -1, one day apart so they
+    * cannot join each other, pushing the two-source watermark past
+    * every pending row. */
+  private[operators] def outerDrains(lo: Long, hi: Long): Seq[Event] =
+    Seq("purchase", "error", "purchase", "error").zipWithIndex.map { case (t, i) =>
+      Replay.sentinel(-(i + 1L), hi + (i + 1) * Replay.DayUs, t, 100.0)
     }
-    s.read.parquet(out)
-  }
-
-  /** Newest emission per key group = the operator's final state. */
-  private[operators] def latestPerKey(hist: DataFrame, keys: Column*): DataFrame =
-    hist.withColumn("__rn", row_number().over(
-        Window.partitionBy(keys: _*).orderBy(col("batch_id").desc)))
-      .filter(col("__rn") === 1).drop("__rn", "batch_id")
 
   val queries: Map[String, Q] = Map(
 
@@ -137,11 +58,9 @@ object StreamParityQueries extends QuerySet {
     "q135_topn_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("topnstream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val top = StatefulOps.topNPerKey(
-        Replay.stream(s, inDir, schema)
+        ep.stream(s)
           .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
         n = 3)
       latestPerKey(runUpdate(top.toDF(), base.toString, s),
@@ -161,10 +80,8 @@ object StreamParityQueries extends QuerySet {
     "q136_dedup_last_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("keylaststream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
-      val ded = StatefulOps.dedupKeepLast(Replay.stream(s, inDir, schema))
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ded = StatefulOps.dedupKeepLast(ep.stream(s))
       latestPerKey(runUpdate(ded.toDF(), base.toString, s),
           col("user_id"), col("event_type"))
         .select(col("user_id"), col("event_type"), col("event_id"),
@@ -184,12 +101,10 @@ object StreamParityQueries extends QuerySet {
     "q137_semi_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("semistream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
-      val left = Replay.stream(s, inDir, schema)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val left = ep.stream(s)
         .filter(col("event_type") === "purchase")
-      val right = Replay.stream(s, inDir, schema)
+      val right = ep.stream(s)
         .filter(col("event_type") === "error" && col("value") > 95)
       val out = SemiAntiJoin.semiJoin(left, right,
         delay = "1 minute", retentionMs = Long.MaxValue / 4)
@@ -209,25 +124,13 @@ object StreamParityQueries extends QuerySet {
     "q138_anti_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("antistream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val spanMs = (hi - lo) / 1000
-      def drain(id: Long, offDays: Long) = Event(id,
-        tsOf(hi + spanMs * 1000 + offDays * 86400L * 1000000L),
-        -1L, "error", 100.0, "{}")
-      val ev = real.union(Seq(drain(-1L, 1), drain(-2L, 2)).toDS())
-      val cut = (q: Long) => lit(tsOf(lo + (hi - lo) * q / 4))
-      val chunks = Seq(
-        col("ts") < cut(1),
-        col("ts") >= cut(1) && col("ts") < cut(2),
-        col("ts") >= cut(2) && col("ts") < cut(3),
-        col("ts") >= cut(3) && col("user_id") >= 0,
-        col("event_id") === -1L,
-        col("event_id") === -2L)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
-      val left = Replay.stream(s, inDir, schema)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        (lo, hi) => Seq(1L, 2L).map(k => Replay.sentinel(-k,
+          hi + (hi - lo) / 1000 * 1000 + k * Replay.DayUs, "error", 100.0)))
+      val spanMs = (ep.hi - ep.lo) / 1000
+      val left = ep.stream(s)
         .filter(col("event_type") === "purchase")
-      val right = Replay.stream(s, inDir, schema)
+      val right = ep.stream(s)
         .filter(col("event_type") === "error" && col("value") > 95)
       val out = SemiAntiJoin.antiJoin(left, right,
         delay = "1 minute", gapMs = spanMs, retentionMs = Long.MaxValue / 4)
@@ -246,11 +149,9 @@ object StreamParityQueries extends QuerySet {
     "q139_countwin_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("cntwinstream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val wins = StatefulOps.countTumbleWindow(
-        Replay.stream(s, inDir, schema)
+        ep.stream(s)
           .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
         size = 10)
       runAppend(wins.toDF()
@@ -268,11 +169,9 @@ object StreamParityQueries extends QuerySet {
     "q142_countslide_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("cntslidestream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val wins = StatefulOps.countSlideWindow(
-        Replay.stream(s, inDir, schema)
+        ep.stream(s)
           .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
         size = 10, slide = 5)
       runAppend(wins.toDF()
@@ -291,11 +190,9 @@ object StreamParityQueries extends QuerySet {
     "q143_rangeover_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("rangestream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val over = StatefulOps.boundedRangeOver(
-        Replay.stream(s, inDir, schema)
+        ep.stream(s)
           .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
         rangeMs = 1800000L)
       runAppend(over.toDF()
@@ -314,11 +211,9 @@ object StreamParityQueries extends QuerySet {
     "q144_sortlimit_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("sortlimitstream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val top = StatefulOps.sortLimitGlobal(
-        Replay.stream(s, inDir, schema)
+        ep.stream(s)
           .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
         k = 20)
       latestPerKey(runUpdate(top.toDF(), base.toString, s), col("rank"))
@@ -341,24 +236,10 @@ object StreamParityQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.StreamJoins
       val base = Scratch.dir("outerivstream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      def drain(id: Long, typ: String, offDays: Long) = Event(id,
-        tsOf(hi + offDays * 86400L * 1000000L), -1L, typ, 100.0, "{}")
-      val ev = real.union(Seq(
-        drain(-1L, "purchase", 1), drain(-2L, "error", 2),
-        drain(-3L, "purchase", 3), drain(-4L, "error", 4)).toDS())
-      val cut = (q: Long) => lit(tsOf(lo + (hi - lo) * q / 4))
-      val chunks = Seq(
-        col("ts") < cut(1),
-        col("ts") >= cut(1) && col("ts") < cut(2),
-        col("ts") >= cut(2) && col("ts") < cut(3),
-        col("ts") >= cut(3) && col("user_id") >= 0,
-        col("event_id") === -1L, col("event_id") === -2L,
-        col("event_id") === -3L, col("event_id") === -4L)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        outerDrains)
       def side(tpe: String, outCol: String) =
-        Replay.stream(s, inDir, schema).toDF()
+        ep.stream(s).toDF()
           .filter(col("event_type") === tpe)
           .select(col("user_id"), col("ts"), col("event_id").as(outCol))
       val joined = StreamJoins.intervalJoin(
@@ -388,28 +269,15 @@ object StreamParityQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.WindowedAggs
       val base = Scratch.dir("dynsessstream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      def flush(id: Long, offDays: Long) = Event(id,
-        tsOf(hi + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(flush(-1L, 1), flush(-2L, 2)).toDS())
-      val cut = (q: Long) => lit(tsOf(lo + (hi - lo) * q / 4))
-      val fcol = col("event_type") === "flush"
-      val chunks = Seq(
-        col("ts") < cut(1) && !fcol,
-        col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-        col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-        col("ts") >= cut(3) && !fcol,
-        col("event_id") === -1L && fcol,
-        col("event_id") === -2L && fcol)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        Replay.flushes(1, 2))
       // session_window's dynamic gap must be CalendarIntervalType
       // (ANSI INTERVAL literals parse as DayTimeIntervalType)
       def mins(m: Int) =
         lit(new org.apache.spark.unsafe.types.CalendarInterval(0, 0, m * 60000000L))
       val gap = when(col("event_type") === "error", mins(5)).otherwise(mins(20))
       val sess = WindowedAggs.sessionDynamic(
-        Replay.stream(s, inDir, schema).toDF()
+        ep.stream(s).toDF()
           .withColumn("cents", expr("cast(round(value*100) as bigint)")),
         "ts", gap, "1 minute", Seq(col("user_id")),
         Seq(count(lit(1)).as("n"), sum(col("cents")).as("cents_v")))
@@ -429,14 +297,12 @@ object StreamParityQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.StreamJoins
       val base = Scratch.dir("lookupstream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val nmap = Tables.load(s, d, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       val joined = StreamJoins.lookupJoin(
-        Replay.stream(s, inDir, schema).toDF().select("event_id", "user_id"),
+        ep.stream(s).toDF().select("event_id", "user_id"),
         "user_id", () => (k: Long) => nmap.get(k % 25), "n_name")
       runAppend(joined, base.toString, s).orderBy(col("event_id"))
     }),
@@ -449,14 +315,12 @@ object StreamParityQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.StreamJoins
       val base = Scratch.dir("alookupstream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val nmap = Tables.load(s, d, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       val joined = StreamJoins.lookupJoinAsync(
-        Replay.stream(s, inDir, schema).toDF().select("event_id", "user_id"),
+        ep.stream(s).toDF().select("event_id", "user_id"),
         "user_id",
         () => (k: Long) => scala.concurrent.Future.successful(nmap.get(k % 25)),
         "n_name")
@@ -475,14 +339,10 @@ object StreamParityQueries extends QuerySet {
       import graft.streaming.WindowedAggs
       val base = Scratch.dir("latestream")
       val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val cut = (q: Long) => lit(tsOf(lo + (hi - lo) * q / 4))
-      val chunks = Seq( // quarter 2 arrives FIRST; quarter 1 is late
-        col("ts") >= cut(1) && col("ts") < cut(2),
-        col("ts") < cut(1),
-        col("ts") >= cut(2) && col("ts") < cut(3),
-        col("ts") >= cut(3))
-      val (inDir, schema) = Replay.fileEpochs(real, chunks, base.toString)
+      val (lo, hi) = Replay.spanOf(real)
+      val Seq(q1, q2, q3, q4) = Replay.quarterChunks(lo, hi)
+      // quarter 2 arrives FIRST; quarter 1 is late
+      val (inDir, schema) = Replay.fileEpochs(real, Seq(q2, q1, q3, q4), base.toString)
       val tagged = WindowedAggs.tagLate(Replay.stream(s, inDir, schema), 600000L)
       runAppend(tagged.toDF()
           .select(col("_1.event_id").as("event_id"), col("_2").as("is_late")),
@@ -498,19 +358,9 @@ object StreamParityQueries extends QuerySet {
     "q154_dedup_corpus_stream" -> ((s, d) => {
       import graft.streaming.StreamDedup
       val base = Scratch.dir("dedupstream")
-      val docs = Tables.documents(s, d)
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val half = maxId / 2
-      val (c1, c2) = (half + (maxId - half) / 3, half + 2 * ((maxId - half) / 3))
-      val corpus = docs.filter(col("doc_id") < half)
-      val chunks = Seq(
-        col("doc_id") >= half && col("doc_id") < c1,
-        col("doc_id") >= c1 && col("doc_id") < c2,
-        col("doc_id") >= c2)
-      val (inDir, schema) =
-        Replay.fileEpochs(docs.filter(col("doc_id") >= half), chunks, base.toString)
-      val out = StreamDedup.dropSeenExact(
-        Replay.streamDf(s, inDir, schema), corpus).select("doc_id")
+      val (corpus, ep) =
+        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
+      val out = StreamDedup.dropSeenExact(ep.streamDf(s), corpus).select("doc_id")
       runAppend(out, base.toString, s).orderBy(col("doc_id"))
     }),
 
@@ -523,19 +373,9 @@ object StreamParityQueries extends QuerySet {
     "q155_neardup_corpus_stream" -> ((s, d) => {
       import graft.streaming.StreamDedup
       val base = Scratch.dir("neardupstream")
-      val docs = Tables.documents(s, d)
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val half = maxId / 2
-      val (c1, c2) = (half + (maxId - half) / 3, half + 2 * ((maxId - half) / 3))
-      val corpus = docs.filter(col("doc_id") < half)
-      val chunks = Seq(
-        col("doc_id") >= half && col("doc_id") < c1,
-        col("doc_id") >= c1 && col("doc_id") < c2,
-        col("doc_id") >= c2)
-      val (inDir, schema) =
-        Replay.fileEpochs(docs.filter(col("doc_id") >= half), chunks, base.toString)
-      val out = StreamDedup.flagNearDups(
-        Replay.streamDf(s, inDir, schema), StreamDedup.corpusBands(corpus))
+      val (corpus, ep) =
+        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
+      val out = StreamDedup.flagNearDups(ep.streamDf(s), StreamDedup.corpusBands(corpus))
       runAppend(out, base.toString, s).orderBy(col("doc_id"))
     }),
 
@@ -546,24 +386,10 @@ object StreamParityQueries extends QuerySet {
       import s.implicits._
       import graft.streaming.StreamJoins
       val base = Scratch.dir("fouterivstream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      def drain(id: Long, typ: String, offDays: Long) = Event(id,
-        tsOf(hi + offDays * 86400L * 1000000L), -1L, typ, 100.0, "{}")
-      val ev = real.union(Seq(
-        drain(-1L, "purchase", 1), drain(-2L, "error", 2),
-        drain(-3L, "purchase", 3), drain(-4L, "error", 4)).toDS())
-      val cut = (q: Long) => lit(tsOf(lo + (hi - lo) * q / 4))
-      val chunks = Seq(
-        col("ts") < cut(1),
-        col("ts") >= cut(1) && col("ts") < cut(2),
-        col("ts") >= cut(2) && col("ts") < cut(3),
-        col("ts") >= cut(3) && col("user_id") >= 0,
-        col("event_id") === -1L, col("event_id") === -2L,
-        col("event_id") === -3L, col("event_id") === -4L)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        outerDrains)
       def side(tpe: String, outCol: String) =
-        Replay.stream(s, inDir, schema).toDF()
+        ep.stream(s).toDF()
           .filter(col("event_type") === tpe)
           .select(col("user_id"), col("ts"), col("event_id").as(outCol))
       val joined = StreamJoins.intervalJoin(
@@ -620,18 +446,11 @@ object StreamParityQueries extends QuerySet {
     "q140_retract_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("retractstream")
-      val (out, ck) = (s"$base/out", s"$base/ck")
       val url = s"jdbc:derby:$base/db;create=true"
       initRankTable(url)
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
-      val ranks = Retract.topUsersByCount(Replay.stream(s, inDir, schema), n = 10)
-      val q = ranks.toDF().writeStream.option("checkpointLocation", ck)
-        .outputMode("append")
-        .foreachBatch { (b: DataFrame, _: Long) => mergeRanks(b, url) }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ranks = Retract.topUsersByCount(ep.stream(s), n = 10)
+      Replay.runBatches(ranks.toDF(), s"$base/ck")((b, _) => mergeRanks(b, url))
       s.read.format("jdbc").option("url", url)
         .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
         .option("dbtable", "RANKS").load()

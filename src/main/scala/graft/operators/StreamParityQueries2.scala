@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.{Scratch, Tables}
 import graft.streaming.{Event, EventTimeOps, Replay, StreamDedup, StreamIterate, WindowOps}
-import StreamParityQueries.{evCte, quarterChunks, runAppend, spanOf, tsOf}
+import graft.streaming.Replay.runAppend
+import StreamParityQueries.evCte
 
 /** Round-5 parity pack, part 2: the window-machinery TRIGGERS and
   * EVICTORS, streaming event-time sort, the stream-feedback iteration,
@@ -34,38 +35,19 @@ import StreamParityQueries.{evCte, quarterChunks, runAppend, spanOf, tsOf}
   */
 object StreamParityQueries2 extends QuerySet {
 
-  /** Real events + two far-future flush sentinels (user_id = -1),
-    * chunked into the four time quarters + one batch per sentinel.
-    * The sentinels advance the watermark so final windows/buffers
-    * emit; they MUST NOT be filtered inside the streaming plan (the
-    * q129 pushdown trap) — callers drop user_id < 0 at sink read. */
-  private def flushedReplay(s: SparkSession, d: String, base: String)
-      : (String, org.apache.spark.sql.types.StructType) = {
+  /** The quarter replay plus two flush sentinels (user_id = -1) that
+    * advance the watermark so final windows/buffers emit; callers drop
+    * user_id < 0 at sink read. */
+  private def flushedReplay(s: SparkSession, d: String, base: String): Replay.Epochs = {
     import s.implicits._
-    val real = Tables.events(s, d).as[Event]
-    val (lo, hi) = spanOf(real)
-    def flush(id: Long, offDays: Long) = Event(id,
-      tsOf(hi + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-    val ev = real.union(Seq(flush(-1L, 1), flush(-2L, 2)).toDS())
-    val cut = (q: Long) => lit(tsOf(lo + (hi - lo) * q / 4))
-    val fcol = col("event_type") === "flush"
-    val chunks = Seq(
-      col("ts") < cut(1) && !fcol,
-      col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-      col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-      col("ts") >= cut(3) && !fcol,
-      col("event_id") === -1L && fcol,
-      col("event_id") === -2L && fcol)
-    Replay.fileEpochs(ev, chunks, base)
+    Replay.quarters(Tables.events(s, d).as[Event], base, Replay.flushes(1, 2))
   }
 
   /** Whole-cent prescale (the q134 trick): ranking/sums stay exact
     * integers on both sides of the compare. */
-  private def centsStream(s: SparkSession, inDir: String,
-                          schema: org.apache.spark.sql.types.StructType) = {
+  private def centsStream(s: SparkSession, ep: Replay.Epochs) = {
     import s.implicits._
-    Replay.stream(s, inDir, schema)
-      .map(e => e.copy(value = math.round(e.value * 100).toDouble))
+    ep.stream(s).map(e => e.copy(value = math.round(e.value * 100).toDouble))
   }
 
   private val weekMs = 604800000L // 7-day tumble ≈ 17 events/user-window
@@ -76,8 +58,7 @@ object StreamParityQueries2 extends QuerySet {
                     trigger: WindowOps.Trigger,
                     evictor: WindowOps.Evictor): DataFrame = {
     val base = Scratch.dir(tag)
-    val (inDir, schema) = flushedReplay(s, d, base.toString)
-    val out = WindowOps.tumble(centsStream(s, inDir, schema),
+    val out = WindowOps.tumble(centsStream(s, flushedReplay(s, d, base.toString)),
       sizeMs = weekMs, delay = "1 minute", trigger = trigger,
       evictor = evictor)
     runAppend(out.toDF(), base.toString, s)
@@ -122,7 +103,7 @@ object StreamParityQueries2 extends QuerySet {
     "q157_sort_delta_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("sortstream")
-      val (inDir, schema) = flushedReplay(s, d, base.toString)
+      val ep = flushedReplay(s, d, base.toString)
       // The sort RELEASES rows as the watermark passes them, so by
       // construction its output is at-watermark — Spark's global-
       // watermark check flags any stateful consumer of it as a late-row
@@ -134,7 +115,7 @@ object StreamParityQueries2 extends QuerySet {
       s.conf.set(ckKey, "false")
       try {
       val sorted = EventTimeOps.eventTimeSorted(
-        centsStream(s, inDir, schema), "1 minute")
+        centsStream(s, ep), "1 minute")
       val deltas = sorted.groupByKey(_.user_id)
         .flatMapGroupsWithState[Long, (Long, Long)](
           OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -191,27 +172,14 @@ object StreamParityQueries2 extends QuerySet {
     // (foreachBatch), the documented scale shape for it.
     "q159_neardrop_corpus_stream" -> ((s, d) => {
       val base = Scratch.dir("neardropstream")
-      val docs = Tables.documents(s, d)
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val half = maxId / 2
-      val (c1, c2) = (half + (maxId - half) / 3, half + 2 * ((maxId - half) / 3))
-      val bands = StreamDedup.corpusBands(docs.filter(col("doc_id") < half))
-        .localCheckpoint()
-      val chunks = Seq(
-        col("doc_id") >= half && col("doc_id") < c1,
-        col("doc_id") >= c1 && col("doc_id") < c2,
-        col("doc_id") >= c2)
-      val (inDir, schema) =
-        Replay.fileEpochs(docs.filter(col("doc_id") >= half), chunks, base.toString)
-      val (out, ck) = (s"$base/out", s"$base/ck")
-      val q = Replay.streamDf(s, inDir, schema).writeStream
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          StreamDedup.dropNearDups(b, bands).select("doc_id")
-            .write.mode("append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val (corpus, ep) =
+        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
+      val bands = StreamDedup.corpusBands(corpus).localCheckpoint()
+      val out = s"$base/out"
+      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+        StreamDedup.dropNearDups(b, bands).select("doc_id")
+          .write.mode("append").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("doc_id"))
     }),
 
@@ -251,24 +219,10 @@ object StreamParityQueries2 extends QuerySet {
       import s.implicits._
       import graft.streaming.StreamJoins
       val base = Scratch.dir("routerivstream")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      def drain(id: Long, typ: String, offDays: Long) = Event(id,
-        tsOf(hi + offDays * 86400L * 1000000L), -1L, typ, 100.0, "{}")
-      val ev = real.union(Seq(
-        drain(-1L, "purchase", 1), drain(-2L, "error", 2),
-        drain(-3L, "purchase", 3), drain(-4L, "error", 4)).toDS())
-      val cut = (q: Long) => lit(tsOf(lo + (hi - lo) * q / 4))
-      val chunks = Seq(
-        col("ts") < cut(1),
-        col("ts") >= cut(1) && col("ts") < cut(2),
-        col("ts") >= cut(2) && col("ts") < cut(3),
-        col("ts") >= cut(3) && col("user_id") >= 0,
-        col("event_id") === -1L, col("event_id") === -2L,
-        col("event_id") === -3L, col("event_id") === -4L)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        StreamParityQueries.outerDrains)
       def side(tpe: String, outCol: String) =
-        Replay.stream(s, inDir, schema).toDF()
+        ep.stream(s).toDF()
           .filter(col("event_type") === tpe)
           .select(col("user_id"), col("ts"), col("event_id").as(outCol))
       val joined = StreamJoins.intervalJoin(
@@ -279,7 +233,7 @@ object StreamParityQueries2 extends QuerySet {
           coalesce(col("p_id"), lit(-1L)).as("p_id"), col("e_id"),
           coalesce(unix_micros(expr("r.ts")) - unix_micros(expr("l.ts")), lit(0L))
             .as("delta_us"))
-      StreamParityQueries.runAppend(joined, base.toString, s)
+      runAppend(joined, base.toString, s)
         .filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("p_id"), col("e_id"))
     }),
@@ -291,11 +245,10 @@ object StreamParityQueries2 extends QuerySet {
     // while the query runs. Its FINAL content faces the one-shot SQL.
     "q171_queryable_state" -> ((s, d) => {
       val base = Scratch.dir("qstate")
-      val real = { import s.implicits._; Tables.events(s, d).as[Event] }
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(
+        { import s.implicits._; Tables.events(s, d).as[Event] }, base.toString)
       s.catalog.dropTempView("graft_qstate")
-      val counts = Replay.stream(s, inDir, schema).toDF()
+      val counts = ep.stream(s).toDF()
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"),
           sum(expr("cast(round(value*100) as bigint)")).as("cents_v"))
@@ -315,18 +268,13 @@ object StreamParityQueries2 extends QuerySet {
     "q172_state_read" -> ((s, d) => {
       import graft.streaming.StateInspect
       val base = Scratch.dir("stateread")
-      val real = { import s.implicits._; Tables.events(s, d).as[Event] }
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(
+        { import s.implicits._; Tables.events(s, d).as[Event] }, base.toString)
       val ck = s"$base/ck"
-      val counts = Replay.stream(s, inDir, schema).toDF()
+      val counts = ep.stream(s).toDF()
         .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-      val q = counts.writeStream.option("checkpointLocation", ck)
-        .outputMode("update")
-        // the batch must still EXECUTE for the state stores to commit
-        .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      // the batch must still EXECUTE for the state stores to commit
+      Replay.runBatches(counts, ck, "update") { (b, _) => b.count(); () }
       val st = StateInspect.readState(s, ck)
       val valField = st.select(col("value.*")).columns.head
       st.select(col("key.user_id").as("user_id"),

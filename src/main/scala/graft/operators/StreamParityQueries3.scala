@@ -1,11 +1,11 @@
 package graft.operators
 
-import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.{Scratch, Tables}
 import graft.streaming.{BroadcastState, Cep, CepDsl, Event, MatchRecognize, Replay, StateBootstrap, StateV2, StatefulOps, WindowOps}
-import StreamParityQueries.{evCte, latestPerKey, quarterChunks, runAppend, runUpdate, spanOf, tsOf}
+import graft.streaming.Replay.{latestPerKey, runAppend, runUpdate, spanOf, tsOf}
+import StreamParityQueries.evCte
 
 /** Round-5 parity pack, part 3: the state BOOTSTRAP (write) path —
   * the last partial row of SURVEY §2.8 — oracle-bound.
@@ -93,23 +93,11 @@ object StreamParityQueries3 extends QuerySet {
       val base = Scratch.dir("cet")
       val real = Tables.events(s, d).as[Event]
         .map(e => e.copy(value = math.round(e.value * 100).toDouble))
-      val (lo, hi) = spanOf(real)
-      val cut = (k: Long) => lit(tsOf(lo + (hi - lo) * k / 4))
-      val endMs = 2_000_000_000_000L // window = [1e12, 2e12) ms
-      def sent(id: Long, ms: Long) =
-        Event(id, new Timestamp(ms), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(
-        sent(-1L, endMs + 120000L),            // closes the real window
-        sent(-2L, endMs + 86400000L)).toDS())  // runs the closing batch
-      val chunks = Seq(
-        col("user_id") >= 0 && col("ts") < cut(1),
-        col("user_id") >= 0 && col("ts") >= cut(1) && col("ts") < cut(2),
-        col("user_id") >= 0 && col("ts") >= cut(2) && col("ts") < cut(3),
-        col("user_id") >= 0 && col("ts") >= cut(3),
-        col("event_id") === -1L,
-        col("event_id") === -2L)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
-      val fires = WindowOps.tumble(Replay.stream(s, inDir, schema),
+      val endUs = 2_000_000_000_000_000L // window = [1e12, 2e12) ms
+      val ep = Replay.quarters(real, base.toString, (_, _) => Seq(
+        Replay.sentinel(-1L, endUs + 120_000_000L),       // closes the real window
+        Replay.sentinel(-2L, endUs + Replay.DayUs)))      // runs the closing batch
+      val fires = WindowOps.tumble(ep.stream(s),
         sizeMs = 1_000_000_000_000L, delay = "1 minute",
         trigger = WindowOps.ContinuousEventTimeTrigger(1L))
       runAppend(fires.toDF(), base.toString, s)
@@ -133,11 +121,9 @@ object StreamParityQueries3 extends QuerySet {
     "q177_broadcast_state_stream" -> ((s, d) => {
       val base = Scratch.dir("bstate")
       import s.implicits._
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       BroadcastState.run(
-          Replay.streamDf(s, inDir, schema),
+          ep.streamDf(s),
           StructType(Seq(StructField("user_id", LongType))), base.toString)(
         extractRules = b => b
           .filter(col("event_type") === "error" && col("value") > 90)
@@ -158,11 +144,9 @@ object StreamParityQueries3 extends QuerySet {
     "q178_statev2_dedup_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("statev2")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       StateV2.withRocksDb(s) {
-        val ded = StateV2.dedupKeepLastV2(Replay.stream(s, inDir, schema))
+        val ded = StateV2.dedupKeepLastV2(ep.stream(s))
         latestPerKey(runUpdate(ded.toDF(), base.toString, s),
             col("user_id"), col("event_type"))
           .select(col("user_id"), col("event_type"), col("event_id"),
@@ -212,12 +196,10 @@ object StreamParityQueries3 extends QuerySet {
     "q180_statev2_liststate" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("statev2l")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       StateV2.withRocksDb(s) {
         val over = StateV2.boundedRowsOverV2(
-          Replay.stream(s, inDir, schema)
+          ep.stream(s)
             .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
           n = 5)
         runAppend(over.toDF()
@@ -239,11 +221,9 @@ object StreamParityQueries3 extends QuerySet {
     "q181_statev2_mapstate" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("statev2m")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       StateV2.withRocksDb(s) {
-        val cnts = StateV2.typeCountsV2(Replay.stream(s, inDir, schema))
+        val cnts = StateV2.typeCountsV2(ep.stream(s))
         latestPerKey(runUpdate(cnts.toDF(), base.toString, s),
             col("user_id"), col("event_type"))
           .select(col("user_id"), col("event_type"), col("cnt"))
@@ -340,11 +320,9 @@ object StreamParityQueries3 extends QuerySet {
     "q190_ttl_dedup_stream" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("ttl")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val ded = StatefulOps.dedupFirstEventTtl(
-        Replay.stream(s, inDir, schema), ttlUs = 172_800_000_000L) // 48 h
+        ep.stream(s), ttlUs = 172_800_000_000L) // 48 h
       runAppend(ded.toDF(), base.toString, s)
         .select(col("user_id"), col("event_type"), col("event_id"))
         .orderBy(col("user_id"), col("event_type"), col("event_id"))
@@ -361,11 +339,9 @@ object StreamParityQueries3 extends QuerySet {
     "q200_statev2_reducing" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("statev2r")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       StateV2.withRocksDb(s) {
-        val mx = StateV2.runningMaxV2(Replay.stream(s, inDir, schema))
+        val mx = StateV2.runningMaxV2(ep.stream(s))
         latestPerKey(runUpdate(mx.toDF(), base.toString, s), col("user_id"))
           .select(col("user_id"), col("event_id"),
             round(col("value"), 2).as("value"))
@@ -387,22 +363,16 @@ object StreamParityQueries3 extends QuerySet {
     "q182_queryable_history" -> ((s, d) => {
       import s.implicits._
       val base = Scratch.dir("qhist")
-      val real = Tables.events(s, d).as[Event]
-      val (lo, hi) = spanOf(real)
-      val (inDir, schema) = Replay.fileEpochs(real, quarterChunks(lo, hi), base.toString)
-      val counts = Replay.stream(s, inDir, schema).toDF()
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val counts = ep.stream(s).toDF()
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"),
           sum(expr("cast(round(value*100) as bigint)")).as("cents_v"))
       val snapDir = s"$base/snap"
-      val q = counts.writeStream.option("checkpointLocation", s"$base/ck")
-        .outputMode("complete")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          // the point-lookup surface at this boundary = the full table
-          b.withColumn("q", lit(id + 1)).write.mode("append").parquet(snapDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Replay.runBatches(counts, s"$base/ck", "complete") { (b, id) =>
+        // the point-lookup surface at this boundary = the full table
+        b.withColumn("q", lit(id + 1)).write.mode("append").parquet(snapDir)
+      }
       s.read.parquet(snapDir)
         .select(col("q"), col("user_id"), col("n"), col("cents_v"))
         .orderBy(col("q"), col("user_id"))

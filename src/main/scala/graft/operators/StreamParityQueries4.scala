@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
 import graft.streaming.{QuotaSampler, Replay}
-import StreamParityQueries.runAppend
+import graft.streaming.Replay.{runAppend, runUpdate}
 
 /** Round-7 parity pack: streaming corpus-curation additions. */
 object StreamParityQueries4 extends QuerySet {
@@ -23,15 +23,10 @@ object StreamParityQueries4 extends QuerySet {
       val base = Scratch.dir("quota")
       val docs = Tables.documents(s, d)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val (c1, c2) = (maxId / 3, 2 * maxId / 3)
-      val keyed = docs.select(col("doc_id"), col("lang").as("k"))
-      val (inDir, schema) = Replay.fileEpochs(keyed,
-        Seq(col("doc_id") < c1,
-          col("doc_id") >= c1 && col("doc_id") < c2,
-          col("doc_id") >= c2),
-        base.toString)
+      val ep = Replay.idThirds(docs.select(col("doc_id"), col("lang").as("k")),
+        "doc_id", 0L, maxId, base.toString)
       val admitted = QuotaSampler.admitFirstN(
-        Replay.streamDf(s, inDir, schema).as[QuotaSampler.DocKey], 40)
+        ep.streamDf(s).as[QuotaSampler.DocKey], 40)
       runAppend(admitted.toDF(), base.toString, s)
         .select(col("doc_id"), col("k").as("lang"))
         .orderBy(col("doc_id"))
@@ -45,28 +40,11 @@ object StreamParityQueries4 extends QuerySet {
     // aligned window algebra of q208's HOP branch.
     "q239_hop_window_stream" -> ((s, d) => {
       import s.implicits._
-      import graft.streaming.{Event, Replay}
+      import graft.streaming.Event
       val base = Scratch.dir("hopstream")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      def flush(id: Long, offDays: Long) = Event(id,
-        tsOf(hiUs + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(flush(-1L, 2), flush(-2L, 4)).toDS())
-      val fcol = col("event_type") === "flush"
-      val chunks = Seq(
-        col("ts") < cut(1) && !fcol,
-        col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-        col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-        col("ts") >= cut(3) && !fcol,
-        col("event_id") === -1L && fcol,
-        col("event_id") === -2L && fcol)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
-      val agg = Replay.stream(s, inDir, schema)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        Replay.flushes(2, 4))
+      val agg = ep.stream(s)
         .withWatermark("ts", "1 minute")
         .groupBy(window(col("ts"), "1 day", "6 hours").as("w"),
           col("event_type"))
@@ -88,28 +66,11 @@ object StreamParityQueries4 extends QuerySet {
     // window struct on the watermarked column is among the keys.
     "q238_distinct_window_stream" -> ((s, d) => {
       import s.implicits._
-      import graft.streaming.{Event, Replay}
+      import graft.streaming.Event
       val base = Scratch.dir("distinctwin")
-      val real = Tables.events(s, d).as[Event]
-      val (loUs, hiUs) = {
-        val r = real.agg(min(col("ts")), max(col("ts"))).head()
-        (Event.micros(r.getTimestamp(0)), Event.micros(r.getTimestamp(1)))
-      }
-      def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
-      val cut = (q: Long) => lit(tsOf(loUs + (hiUs - loUs) * q / 4))
-      def flush(id: Long, offDays: Long) = Event(id,
-        tsOf(hiUs + offDays * 86400L * 1000000L), -1L, "flush", 0.0, "{}")
-      val ev = real.union(Seq(flush(-1L, 2), flush(-2L, 4)).toDS())
-      val fcol = col("event_type") === "flush"
-      val chunks = Seq(
-        col("ts") < cut(1) && !fcol,
-        col("ts") >= cut(1) && col("ts") < cut(2) && !fcol,
-        col("ts") >= cut(2) && col("ts") < cut(3) && !fcol,
-        col("ts") >= cut(3) && !fcol,
-        col("event_id") === -1L && fcol,
-        col("event_id") === -2L && fcol)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
-      val ded = Replay.stream(s, inDir, schema)
+      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+        Replay.flushes(2, 4))
+      val ded = ep.stream(s)
         .withWatermark("ts", "1 minute")
         .select(window(col("ts"), "1 day").as("w"), col("event_type"),
           col("user_id"))
@@ -151,7 +112,7 @@ object StreamParityQueries4 extends QuerySet {
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_v"))
         .select(col("window.start").as("ws"), col("event_type"),
           col("n"), col("cents_v"))
-      StreamParityQueries.runUpdate(agg, base.toString, s)
+      runUpdate(agg, base.toString, s)
         .orderBy(col("ws"), col("event_type"), col("batch_id"))
     }),
 
@@ -168,26 +129,17 @@ object StreamParityQueries4 extends QuerySet {
     // by cluster id so a micro-batch touches only its clusters'
     // members — never the whole corpus.
     "q213_semdedup_stream" -> ((s, d) => {
-      import graft.streaming.Replay
       val base = Scratch.dir("semdedupstream")
-      val e = Tables.embeddings(s, d)
-      val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
-      val half = maxId / 2
-      val (c1, c2) = (half + (maxId - half) / 3, half + 2 * ((maxId - half) / 3))
-      val corpusQ = VectorQueries.quantI8(e.filter(col("vec_id") < half), "vec_id")
+      val (lower, ep) =
+        Replay.snapshotSplit(Tables.embeddings(s, d), "vec_id", base.toString)
+      val corpusQ = VectorQueries.quantI8(lower, "vec_id")
       val seeds = corpusQ.orderBy(col("vec_id")).limit(32).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
       val corpus = corpusQ.withColumn("cluster",
           VectorQueries.clusterOfI8(col("qv"), col("nrm"), seeds))
         .select(col("vec_id").as("cid"), col("qv").as("cqv"),
           col("nrm").as("cnrm"), col("cluster"))
-      val chunks = Seq(
-        col("vec_id") >= half && col("vec_id") < c1,
-        col("vec_id") >= c1 && col("vec_id") < c2,
-        col("vec_id") >= c2)
-      val (inDir, schema) =
-        Replay.fileEpochs(e.filter(col("vec_id") >= half), chunks, base.toString)
-      val sq = VectorQueries.quantI8(Replay.streamDf(s, inDir, schema), "vec_id")
+      val sq = VectorQueries.quantI8(ep.streamDf(s), "vec_id")
         .withColumn("cluster",
           VectorQueries.clusterOfI8(col("qv"), col("nrm"), seeds))
       val dotI = aggregate(zip_with(col("qv"), col("cqv"), (x, y) => x * y),
@@ -214,12 +166,10 @@ object StreamParityQueries4 extends QuerySet {
     // frozen moments drift between batches, the gate is recomputed
     // per-batch, or a batch boundary splits a score.
     "q263_gaussian_gate_stream" -> ((s, d) => {
-      import graft.streaming.Replay
       val base = Scratch.dir("gaussgate")
-      val e = Tables.embeddings(s, d)
-      val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
-      val half = maxId / 2
-      val corpusCodes = VectorQueries.gridCodes(e.filter(col("vec_id") < half))
+      val (lower, ep) =
+        Replay.snapshotSplit(Tables.embeddings(s, d), "vec_id", base.toString)
+      val corpusCodes = VectorQueries.gridCodes(lower)
       val m = VectorQueries.gaussianMoments(corpusCodes)
       val k = math.min(math.max(m.n / 10, 1L), Int.MaxValue.toLong).toInt
       val gate = corpusCodes
@@ -227,14 +177,7 @@ object StreamParityQueries4 extends QuerySet {
           VectorQueries.mahalanobis(col("xs"), m).as("score"))
         .orderBy(col("score").desc, col("vec_id")).limit(k)
         .agg(min(col("score"))).head().getLong(0)
-      val (c1, c2) = (half + (maxId - half) / 3, half + 2 * ((maxId - half) / 3))
-      val chunks = Seq(
-        col("vec_id") >= half && col("vec_id") < c1,
-        col("vec_id") >= c1 && col("vec_id") < c2,
-        col("vec_id") >= c2)
-      val (inDir, schema) =
-        Replay.fileEpochs(e.filter(col("vec_id") >= half), chunks, base.toString)
-      val scored = VectorQueries.gridCodes(Replay.streamDf(s, inDir, schema))
+      val scored = VectorQueries.gridCodes(ep.streamDf(s))
         .withColumn("score", VectorQueries.mahalanobis(col("xs"), m))
         .filter(col("score") > gate)
         .select(col("vec_id"), col("label"), col("score"))

@@ -1,0 +1,125 @@
+package graft.streaming
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import graft.{Scratch, SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** The epoch-replay harness: how a finite table becomes epochs (one
+  * file per epoch, in modification-time order) and how a stream over
+  * them runs — one micro-batch per epoch. */
+class ReplaySpec extends SparkSpec {
+
+  private def events = {
+    val spark2 = spark; import spark2.implicits._
+    Tables.events(spark, sf).as[Event]
+  }
+
+  /** The epoch files of a replay, oldest modification time first. */
+  private def epochFiles(in: String): Seq[Path] = {
+    val ls = Files.list(Paths.get(in))
+    try ls.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+      .sortBy(p => Files.getLastModifiedTime(p).toMillis)
+    finally ls.close()
+  }
+
+  private def read(p: Path): DataFrame = spark.read.parquet(p.toString)
+
+  private def sameRows(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.count() == b.count())
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  }
+
+  test("the quarter epochs partition the input rows exactly") {
+    val real = events
+    val ep = Replay.quarters(real, Scratch.dir("rq").toString)
+    val files = epochFiles(ep.in)
+    assert(files.map(_.getFileName.toString) ==
+      (0 until 4).map(i => f"chunk_$i%02d.parquet"))
+    Replay.quarterChunks(ep.lo, ep.hi).zip(files).foreach { case (cond, f) =>
+      sameRows(read(f), real.toDF().filter(cond))
+    }
+    sameRows(spark.read.parquet(ep.in), real.toDF())
+  }
+
+  test("each epoch is one file; an empty epoch is an empty file and a 0-row batch") {
+    val real = events.toDF()
+    val base = Scratch.dir("rempty").toString
+    val conds = Seq(col("event_id") % 2 === 0, col("user_id") < 0, col("event_id") % 2 === 1)
+    val (in, schema) = Replay.fileEpochs(real, conds, base)
+    val files = epochFiles(in)
+    assert(files.map(_.getFileName.toString) ==
+      (0 until 3).map(i => f"chunk_$i%02d.parquet"))
+    conds.zip(files).foreach { case (cond, f) => sameRows(read(f), real.filter(cond)) }
+    assert(read(files(1)).isEmpty)
+    val q = Replay.runBatches(Replay.streamDf(spark, in, schema), s"$base/ck") { (b, _) =>
+      b.count(); ()
+    }
+    assert(q.recentProgress.map(_.numInputRows).toSeq == files.map(read(_).count()))
+  }
+
+  test("sentinel epochs follow the quarters in modification-time order") {
+    val real = events
+    val ep = Replay.quarters(real, Scratch.dir("rsent").toString, Replay.flushes(1, 2))
+    val files = epochFiles(ep.in)
+    assert(files.map(_.getFileName.toString) ==
+      (0 until 6).map(i => f"chunk_$i%02d.parquet"))
+    val mtimes = files.map(Files.getLastModifiedTime(_).toMillis)
+    assert(mtimes == mtimes.distinct.sorted)
+    val ids = files.drop(4).map(f =>
+      read(f).select("event_id", "user_id", "event_type").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq)
+    assert(ids == Seq(Seq((-1L, -1L, "flush")), Seq((-2L, -1L, "flush"))))
+    sameRows(files.take(4).map(read).reduce(_ union _), real.toDF())
+    val ts = files.drop(4).map(read(_).head().getTimestamp(1))
+    assert(ts == Seq(1L, 2L).map(k => Replay.tsOf(ep.hi + k * Replay.DayUs)))
+  }
+
+  test("a replay of N epochs runs as exactly N micro-batches") {
+    val real = events
+    val base = Scratch.dir("rbatches").toString
+    val ep = Replay.quarters(real, base, Replay.flushes(1, 2))
+    val expected = epochFiles(ep.in).map(read(_).count())
+    assert(expected.size == 6 && expected.drop(4) == Seq(1L, 1L))
+    val seen = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    val q = Replay.runBatches(ep.streamDf(spark), s"$base/ck") { (b, id) =>
+      seen += ((id, b.count()))
+    }
+    assert(seen.toSeq == expected.indices.map(_.toLong).zip(expected))
+    assert(q.recentProgress.map(_.numInputRows).toSeq == expected)
+  }
+
+  test("the id split gives snapshot ∪ streamed = input, with no overlap") {
+    val docs = Tables.documents(spark, sf)
+    val (snap, ep) = Replay.snapshotSplit(docs, "doc_id", Scratch.dir("rsplit").toString)
+    val streamed = spark.read.parquet(ep.in)
+    assert(epochFiles(ep.in).size == 3)
+    assert(snap.join(streamed, "doc_id").isEmpty)
+    sameRows(snap.unionByName(streamed), docs)
+    val maxId = docs.agg(max("doc_id")).head().getLong(0)
+    assert((ep.lo, ep.hi) == (maxId / 2, maxId))
+    assert(snap.agg(max("doc_id")).head().getLong(0) < ep.lo)
+  }
+
+  test("the returned schema equals the schema read back from the epochs") {
+    val spark2 = spark; import spark2.implicits._
+    val ev = Tables.events(spark, sf)
+    val cases: Seq[(String, org.apache.spark.sql.Dataset[_])] = Seq(
+      "events" -> events,
+      "cents-mapped events" -> events.map(e => e.copy(value = math.round(e.value * 100).toDouble)),
+      "documents" -> Tables.documents(spark, sf),
+      "embeddings" -> Tables.embeddings(spark, sf),
+      "q233 projection" -> ev.select(col("event_type"),
+        expr("cast(round(value*100) as bigint)").as("cents"), col("ts")),
+      "q244 projection" -> ev.select(col("event_id"), col("user_id"),
+        col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"),
+        unix_micros(col("ts")).as("ts_us")))
+    cases.foreach { case (name, ds) =>
+      val (in, schema) = Replay.fileEpochs(ds, Seq(lit(true)), Scratch.dir("rschema").toString)
+      assert(schema == spark.read.parquet(in).schema, name)
+    }
+    val ep = Replay.quarters(events, Scratch.dir("rschema").toString, Replay.flushes(1, 2))
+    assert(ep.schema == spark.read.parquet(ep.in).schema, "quarters with sentinels")
+  }
+}
