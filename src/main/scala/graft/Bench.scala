@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints one JSON metrics line.
   *
@@ -10,10 +8,8 @@ import org.apache.spark.sql.SparkSession
   * warm-up pass compiles 1,480 generated classes, which only fit because
   * `GraftSession` sizes the codegen cache above that (Spark's default
   * holds 100); the sidecar's `codegen_compiles` counts what each timed
-  * query still compiled. Results are materialized through the
-  * noop datasource — count() would let Catalyst prune the projections
-  * and under-report; noop executes the full plan including result
-  * serialization.
+  * query still compiled. Results are materialized through the noop
+  * sink ([[Harness.noop]]).
   */
 object Bench {
 
@@ -104,69 +100,29 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = GraftSession.builder(cpus, "graft-bench").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench")
 
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    // Parallel-efficiency capture: at sf0.1 every query sits at the
+    // per-job overhead floor, so wall-clock scaling across core counts
+    // cannot show whether the operators parallelize, but Σ executor task
+    // run time / wall CAN. The job log collects (finishTime,
+    // executorRunTime) per task; each query's "task_sec" sums the tasks
+    // that finished inside its min-wall run, in the SIDECAR json (never
+    // the stdout metrics line, which stays format-identical). Cost in the
+    // timed path: one buffer append per task.
+    val log = Harness.jobLog(spark)
 
-    // Parallel-efficiency capture (r13, VERDICT r12 item 6): at sf0.1
-    // every query sits at the per-job overhead floor, so wall-clock
-    // scaling across core counts cannot show whether the operators
-    // parallelize — but Σ executor task run time / wall CAN. A listener
-    // collects (finishTime, executorRunTime) per task; afterwards each
-    // task is bucketed into the timed interval it finished in, and the
-    // SIDECAR json (never the driver-parsed stdout line, which stays
-    // format-identical) gains "task_sec" per query for the pass that
-    // produced the reported min. Cost in the timed path: one queue
-    // append per task.
-    val taskEvents = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          if (e.taskMetrics != null && e.taskInfo != null)
-            taskEvents.add((e.taskInfo.finishTime, e.taskMetrics.executorRunTime))
-          ()
-        }
-      })
-    val intervals = new scala.collection.mutable.ArrayBuffer[(String, Long, Long, Double, Long)]()
-
-    // SPARK_GRAFT_BENCH_SKIP: comma-separated names to exclude (used
-    // by the soak run, whose generated dir has no embeddings table).
-    val skipped = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").toSet).getOrElse(Set.empty[String])
     // SPARK_GRAFT_QUERIES=all → the COMPLETE catalog (full-catalog
     // soak sweeps); default = the headline set (driver contract).
     val base =
       if (sys.env.get("SPARK_GRAFT_QUERIES").contains("all"))
         SparkEntry.queries.keys.toSeq.sorted
       else headline
-    val names = base.filter(SparkEntry.queries.contains).filterNot(skipped)
-    names.foreach(run) // warm-up pass (untimed)
-    // Codegen compilations so far in this JVM (the driver and the local
-    // executors share one codegen cache).
-    def compiles: Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def timed(name: String): Double = {
-      val w0 = System.currentTimeMillis(); val c0 = compiles
-      val t0 = System.nanoTime(); run(name)
-      val sec = (System.nanoTime() - t0) / 1e9
-      intervals += ((name, w0, System.currentTimeMillis(), sec, compiles - c0))
-      sec
-    }
+    val names = base.filter(SparkEntry.queries.contains)
     // Timed passes (SPARK_GRAFT_RUNS, default 3), min per query.
-    // Passes are interleaved (all queries, then all again) so a
-    // multi-second host stall window cannot cover every measurement of
-    // the same query — the host shows bursty multi-minute load windows
-    // (see env notes).
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val passes = (1 to nRuns).map(_ => names.map(timed))
-    val results = names.zipWithIndex
-      .map { case (n, i) => n -> passes.map(_(i)).min }
+    val best = Harness.minOfPasses(names, nRuns)(Harness.noop(spark, _, sfDir))
+    val results = best.map(t => t.name -> t.sec)
     // ms precision everywhere the line is concerned: r9's full-double
     // 51-query line outgrew the driver's tail-capture window and the
     // official artifact parsed null — the emitted line must stay SHORT
@@ -176,8 +132,8 @@ object Bench {
     // exact artifact-parse failure class this line was rewritten for.
     def ms(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def qJson(f: Double => String): String = results
-      .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+    def perQuery(v: Harness.Timing => String): String = best
+      .map(t => "\"" + t.name + "\":" + v(t)).mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // regression self-report: quiet-baseline budgets scaled by the
     // measured median catalog drift (host load), so BENCH_rN carries
@@ -197,32 +153,19 @@ object Bench {
     def breachJson(f: Double => String): String = breaches.map { case (n, t, b) =>
       s"""{"query":"$n","sec":${f(t)},"budget":${f(b)}}""" }.mkString("[", ",", "]")
     def lineOf(f: Double => String): String =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":${qJson(f)},"budget_breaches":${breachJson(f)},"drift_scale":${f(drift)},"drift_raw":${f(driftRaw)},"drift_warn":$driftWarn,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":${perQuery(t => f(t.sec))},"budget_breaches":${breachJson(f)},"drift_scale":${f(drift)},"drift_raw":${f(driftRaw)},"drift_warn":$driftWarn,"sf":"$sfDir"}"""
     val line = lineOf(ms)
-    // Σ executor task seconds within the interval of each query's
-    // min-wall pass (listener bus drained first); task_sec / wall is
-    // the query's average executor concurrency.
-    Thread.sleep(800)
-    val events = {
-      import scala.jdk.CollectionConverters._
-      taskEvents.iterator().asScala.toArray.sortBy(_._1)
-    }
-    val best = results.flatMap { case (n, _) =>
-      intervals.filter(_._1 == n).minByOption(_._4).map(n -> _) }.toMap
-    val taskSec: Map[String, Double] = best.map { case (n, (_, w0, w1, _, _)) =>
-      n -> events.iterator.filter(e => e._1 >= w0 && e._1 <= w1)
-        .map(_._2).sum / 1000.0
-    }
-    def perQuery(v: String => String): String = results
-      .map { case (k, _) => "\"" + k + "\":" + v(k) }.mkString("{", ",", "}")
-    // Full-precision sidecar for local tooling / round-over-round diffs.
+    // Full-precision sidecar for local tooling / round-over-round diffs;
+    // task_sec / wall is a query's average executor concurrency. A drain
+    // timeout costs the sidecar, never the stdout line.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json")
     try {
+      Harness.drain(spark)
       val p = java.nio.file.Paths.get(out)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       val sidecar = lineOf(_.toString).stripSuffix("}") +
-        s""","task_sec":${perQuery(k => taskSec.getOrElse(k, 0.0).toString)}""" +
-        s""","codegen_compiles":${perQuery(k => best.get(k).fold(0L)(_._5).toString)}}"""
+        s""","task_sec":${perQuery(t => log.taskSec(t.startMs, t.endMs).toString)}""" +
+        s""","codegen_compiles":${perQuery(_.compiles.toString)}}"""
       java.nio.file.Files.writeString(p, sidecar + "\n")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")

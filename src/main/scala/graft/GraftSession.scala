@@ -47,10 +47,4 @@ object GraftSession {
       // loader for it; the cache and the JIT then start over per stream.
       // graft adds no session artifacts, so isolation protects nothing.
       .config("spark.sql.artifact.isolation.enabled", "false")
-
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = builder(cores).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

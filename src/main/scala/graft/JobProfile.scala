@@ -1,80 +1,52 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-
-/** Per-job wall-time profile of one catalog query (guide §1: decide
-  * where the time goes before changing anything; the UI is disabled in
-  * this environment, so a listener stands in for the Jobs page).
+/** Per-rep wall time and per-job profile of one catalog query (decide
+  * where the time goes before changing anything; `GraftSession` turns
+  * the Spark UI off, so [[Harness.JobLog]] stands in for its Jobs page).
   *
-  * Usage: tools/run.sh graft.JobProfile <name> [sfDir]
-  * Prints one line per Spark job: start offset, duration, #tasks and
-  * the callsite/description — plus the gaps BETWEEN jobs (driver-side
-  * planning/collect time), which job rows alone would hide.
+  * Usage: tools/run.sh graft.JobProfile <name> [sfDir] [reps]
+  * Runs the query `reps` times (default 2) and prints each rep's wall
+  * time, then profiles the last rep: one line per Spark job with start
+  * offset, duration, #tasks and the description/callsite, plus the gaps
+  * BETWEEN jobs (driver-side planning/collect time), which job rows
+  * alone would hide.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus, "graft-jobprofile").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val reps = if (args.length > 2) args(2).toInt else 2
+    val spark = Harness.session("graft-jobprofile")
+    val log = Harness.jobLog(spark)
 
-    case class Job(id: Int, t0: Long, var t1: Long = 0L,
-                   var nTasks: Int = 0, desc: String)
-    val jobs = new scala.collection.mutable.ArrayBuffer[Job]
-    val taskCounts = new scala.collection.mutable.HashMap[Int, Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.synchronized {
-          val d = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .orElse(Option(e.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short"))))
-            .getOrElse("")
-          jobs += Job(e.jobId, e.time, desc = d)
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.synchronized {
-          jobs.find(_.id == e.jobId).foreach(_.t1 = e.time)
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        jobs.synchronized {
-          // attribute the stage's tasks to the job that owns it (best
-          // effort: the most recent unfinished job)
-          taskCounts(e.stageInfo.stageId) = e.stageInfo.numTasks
-          jobs.lastOption.foreach(j => j.nTasks += e.stageInfo.numTasks)
-        }
-    }
-
-    def run(): Double = {
+    var lastStart = 0L
+    var wall = 0.0
+    (1 to reps).foreach { i =>
+      lastStart = System.currentTimeMillis()
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      Harness.noop(spark, name, sfDir)
+      wall = (System.nanoTime() - t0) / 1e9
+      println(f"[profile] $name rep$i: $wall%.2f s")
     }
-    run() // warm-up, unprofiled
-    spark.sparkContext.addSparkListener(listener)
-    val wall = run()
-    spark.sparkContext.removeSparkListener(listener)
-    Thread.sleep(300) // let the listener bus drain
+    Harness.drain(spark)
 
-    val snap = jobs.synchronized(jobs.toList).sortBy(_.t0)
-    val origin = snap.headOption.map(_.t0).getOrElse(0L)
+    val jobs = log.jobs(since = lastStart)
+    val origin = jobs.headOption.map(_.start).getOrElse(0L)
     var prevEnd = origin
     var gapTotal = 0L
-    println(f"[profile] $name wall=${wall}%.2f s, ${snap.size} jobs")
-    snap.foreach { j =>
-      val gap = j.t0 - prevEnd
+    println(f"[profile] $name rep$reps wall=$wall%.2f s, ${jobs.size} jobs")
+    jobs.foreach { j =>
+      val gap = j.start - prevEnd
       if (gap > 30) println(f"[profile]   -- gap ${gap / 1000.0}%6.2f s (driver)")
       gapTotal += math.max(gap, 0)
-      val dur = (j.t1 - j.t0) / 1000.0
-      println(f"[profile]   job ${j.id}%3d @${(j.t0 - origin) / 1000.0}%7.2f s  " +
-        f"dur ${dur}%6.2f s  tasks ${j.nTasks}%4d  ${j.desc.take(100)}")
-      prevEnd = math.max(prevEnd, j.t1)
+      val dur = (j.end - j.start) / 1000.0
+      println(f"[profile]   job ${j.id}%3d @${(j.start - origin) / 1000.0}%7.2f s  " +
+        f"dur $dur%6.2f s  tasks ${j.tasks}%4d  ${j.desc.take(100)}")
+      prevEnd = math.max(prevEnd, j.end)
     }
-    val jobTotal = snap.map(j => j.t1 - j.t0).sum / 1000.0
-    println(f"[profile] job time ${jobTotal}%.2f s, driver gaps ${gapTotal / 1000.0}%.2f s " +
-      f"(wall ${wall}%.2f s)")
+    val jobTotal = jobs.map(j => j.end - j.start).sum / 1000.0
+    println(f"[profile] job time $jobTotal%.2f s, driver gaps ${gapTotal / 1000.0}%.2f s " +
+      f"(wall $wall%.2f s)")
     spark.stop()
   }
 }

@@ -1,12 +1,17 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Scale-audit tool: print the plan-shape markers that decide whether
-  * a query survives a data-scale decade — run at two SF dirs and diff.
+/** Plan audit: write the formatted physical plans of catalog queries to
+  * a markdown file (PLANS.md: the scan pushdown / broadcast / codegen
+  * evidence behind the bench results) and print the plan-shape
+  * markers that decide whether a query survives a data-scale decade —
+  * run at two SF dirs and diff.
   *
-  *   tools/run.sh graft.PlanAudit <sfDir> <name> [<name> …]
+  *   tools/run.sh graft.PlanAudit <sfDir> <plans.md> [<name> …]
   *
+  * Without names it audits the headline set (`Bench.headline`).
   * Markers per query: cartesian products (never), broadcast joins,
   * single-partition windows (empty partitionBy — the global-sort
   * smell), ntile, exchange count, scan count. The SCALING.md soak
@@ -29,17 +34,21 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus, "graft-planaudit").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (sfDir, out) = (args(0), args(1))
+    val names = if (args.length > 2) args.drop(2).toSeq else Bench.headline
+    val spark = Harness.session("graft-planaudit")
+    val md = new StringBuilder
+    md.append(s"# Physical plans ($sfDir)\n\n")
+    md.append("Generated by `graft.PlanAudit`. Things to check: `PushedFilters`\n")
+    md.append("on scans, `ReadSchema` column pruning, `BroadcastHashJoin` for\n")
+    md.append("dimension joins, two `HashAggregate`s (partial+final) per agg,\n")
+    md.append("`WindowGroupLimit` under top-n.\n")
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val plan = SparkEntry.queries(n)(spark, sfDir)
+        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+      md.append(s"\n## $n\n\n```\n$plan```\n")
       val lines = plan.linesIterator.toSeq
       def count(m: String) = lines.count(_.contains(m))
-      val globalWindow = lines.exists(PlanAudit.hasGlobalWindow)
       println(Seq(
         s"query=$n",
         s"cartesian=${count("CartesianProduct")}",
@@ -49,8 +58,10 @@ object PlanAudit {
         s"exchanges=${lines.count(l => l.matches("""^\(\d+\) Exchange\s*"""))}",
         s"scans=${lines.count(l => l.matches("""^\(\d+\) Scan parquet\s*"""))}",
         s"ntile=${count("ntile")}",
-        s"globalWindow=$globalWindow").mkString(" "))
+        s"globalWindow=${lines.exists(hasGlobalWindow)}").mkString(" "))
     }
+    Files.writeString(Paths.get(out), md.toString)
+    println(s"[planaudit] wrote $out")
     spark.stop()
   }
 }

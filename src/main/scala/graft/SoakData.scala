@@ -44,9 +44,7 @@ object SoakData {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/graft-soak"
     val reps = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus, "graft-soak").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-soak")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     // Big (replicated) tables are written as 32 files: the source SF

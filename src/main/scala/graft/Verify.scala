@@ -11,9 +11,7 @@ object Verify {
       if (args.length > 2) { val ps = args(2).split(",").toSeq
                              n => ps.exists(n.startsWith) }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder(cpus, "graft-verify").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A thrown query must be loud in the ARTIFACT, not just a log line:
     // write a per-query _ERROR.json marker where the parquet would be,

@@ -5,8 +5,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into private[sql] Column↔Expression conversion for custom
   * Catalyst expressions exposed as user-facing Columns,
-  * LogicalPlan→DataFrame construction for custom logical operators, and
-  * Spark's private[spark] exit-time directory deleter. */
+  * LogicalPlan→DataFrame construction for custom logical operators,
+  * Spark's private[spark] exit-time directory deleter, and its listener
+  * bus drain. */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -24,4 +25,9 @@ object GraftSqlBridge {
 
   def isDeletedOnShutdown(dir: java.io.File): Boolean =
     org.apache.spark.util.ShutdownHookManager.hasShutdownDeleteDir(dir)
+
+  /** Block until every event posted so far has been delivered to the
+    * listeners (Spark's own timeout: 10 s). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -68,23 +68,15 @@ class BenchGateSpec extends SparkSpec {
     assume(benchSpark.sparkContext.defaultParallelism >= 16,
       "another suite's small session is active; run BenchGateSpec alone")
     val sfDir = "/root/testdata/sf0.1"
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(benchSpark, sfDir)
-        .write.format("noop").mode("overwrite").save()
     val names = Bench.headline.filter(BenchBudgets.sf01QuietMin.contains)
-    names.foreach(run) // warm-up
-    def timed(n: String): Double = {
-      val t0 = System.nanoTime(); run(n); (System.nanoTime() - t0) / 1e9
-    }
-    val passes = (1 to 2).map(_ => names.map(timed))
     // the sbt-test JVM runs ~1.3-1.4x slower than the bare runner the
     // budgets were measured in (tools/run.sh: tuned -Xmx, /dev/shm
     // spark.local.dir, no sbt layer) — discount before comparing, so
     // the SPEC threshold is budget*1.4 while Bench's own self-report
     // (which runs in the measured environment) stays at the tight
     // budget
-    val results = names.zipWithIndex.map { case (n, i) =>
-      n -> passes.map(_(i)).min / 1.4 }
+    val results = Harness.minOfPasses(names, 2)(Harness.noop(benchSpark, _, sfDir))
+      .map(t => t.name -> t.sec / 1.4)
     val breaches = BenchBudgets.breaches(sfDir, results)
     assert(breaches.isEmpty, breaches.map { case (n, t, b) =>
       f"$n: $t%.2f s > budget $b%.2f s" }.mkString("; "))
