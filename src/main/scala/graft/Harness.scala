@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** The runner under graft's mains (Bench, Verify, JobProfile, PlanAudit,
   * SoakData): one way to build their session, run a catalog query, time
@@ -65,8 +66,11 @@ object Harness {
   def drain(spark: SparkSession): Unit = GraftSqlBridge.drainListenerBus(spark)
 
   /** A Spark job as the log saw it: its own stage ids, the tasks of
-    * those stages, and its description (or call site). */
-  final case class Job(id: Int, start: Long, desc: String, stageIds: Seq[Int]) {
+    * those stages, its description (or call site), and the SQL execution
+    * it ran under, if any (an RDD job such as parquet schema inference
+    * runs under none). */
+  final case class Job(id: Int, start: Long, desc: String, stageIds: Seq[Int],
+                       sqlId: Option[Long]) {
     @volatile var end: Long = 0L
     @volatile var tasks: Int = 0
   }
@@ -85,15 +89,27 @@ object Harness {
     private val jobList = scala.collection.mutable.ArrayBuffer.empty[Job]
     private val byStage = scala.collection.mutable.HashMap.empty[Int, Job]
     private val taskList = scala.collection.mutable.ArrayBuffer.empty[TaskEnd]
+    // running SQL executions: id -> description
+    private val sqlDesc = scala.collection.mutable.HashMap.empty[Long, String]
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized(sqlDesc(s.executionId) = s.description)
+      case s: SparkListenerSQLExecutionEnd => synchronized(sqlDesc -= s.executionId)
+      case _ =>
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      // no description: the result stage's name, which is the action's
-      // call site ("parquet at Tables.scala:31")
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
+      // no description: that of the job's SQL execution ("save at
+      // Harness.scala"; AQE runs each query stage as a job from its own
+      // thread, so the stage's name there is a CompletableFuture frame),
+      // else the result stage's name, the action's call site
+      val props = Option(e.properties)
+      val sqlId = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
+      val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+        .orElse(sqlId.flatMap(sqlDesc.get))
         .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
         .getOrElse("")
-      val job = Job(e.jobId, e.time, desc, e.stageIds)
+      val job = Job(e.jobId, e.time, desc, e.stageIds, sqlId)
       jobList += job
       e.stageIds.foreach(s => if (!byStage.contains(s)) byStage(s) = job)
     }

@@ -7,7 +7,9 @@ package graft
   * Usage: tools/run.sh graft.JobProfile <name> [sfDir] [reps]
   * Runs the query `reps` times (default 2) and prints each rep's wall
   * time, then profiles the last rep: one line per Spark job with start
-  * offset, duration, #tasks and the description/callsite, plus the gaps
+  * offset, duration, #tasks, its SQL execution id (`-` for a job outside
+  * any, such as a parquet schema-inference job) and the
+  * description/callsite, plus the gaps
   * BETWEEN jobs (driver-side planning/collect time), which job rows
   * alone would hide.
   */
@@ -41,7 +43,8 @@ object JobProfile {
       gapTotal += math.max(gap, 0)
       val dur = (j.end - j.start) / 1000.0
       println(f"[profile]   job ${j.id}%3d @${(j.start - origin) / 1000.0}%7.2f s  " +
-        f"dur $dur%6.2f s  tasks ${j.tasks}%4d  ${j.desc.take(100)}")
+        f"dur $dur%6.2f s  tasks ${j.tasks}%4d  sql ${j.sqlId.fold("-")(_.toString)}%4s  " +
+        j.desc.take(100))
       prevEnd = math.max(prevEnd, j.end)
     }
     val jobTotal = jobs.map(j => j.end - j.start).sum / 1000.0

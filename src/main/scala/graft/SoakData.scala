@@ -46,7 +46,7 @@ object SoakData {
     val reps = if (args.length > 2) args(2).toInt else 10
     val spark = Harness.session("graft-soak")
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = Tables.read(spark, s"$src/$t.parquet")
     // Big (replicated) tables are written as 32 files: the source SF
     // is a single small parquet file, so without the repartition the
     // replica inherits its 1-3-partition layout and EVERY full-table

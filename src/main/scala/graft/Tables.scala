@@ -1,12 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
-/** Loaders for the driver-provided parquet tables (TESTDATA.md).
+/** Loaders for the driver-provided parquet tables (TESTDATA.md), and
+  * [[read]], graft's one plain parquet reader.
   *
-  * All scans go through `spark.read.parquet`, so Catalyst's vectorized
-  * reader, predicate pushdown and column pruning apply — at 100 TB the
-  * same code reads a partitioned table directory unchanged.
+  * Every scan is a parquet file scan, so Catalyst's vectorized reader,
+  * predicate pushdown and column pruning apply — at 100 TB the same code
+  * reads a partitioned table directory unchanged. Its schema is read
+  * from one file footer on the driver, not inferred by a Spark job.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -27,8 +34,55 @@ object Tables {
   private val workHeavyTables =
     Set("documents", "embeddings", "lineitem", "orders", "events")
 
+  /** `spark.read.parquet(paths: _*)` without its schema-inference job.
+    * Spark infers a parquet schema from the footer of the first data
+    * file in path order, and reads that footer in a one-task job. This
+    * reads the same footer on the driver, converts it the way Spark does
+    * and hands the schema to the reader. The footer is read on every
+    * call, so a rewritten table never gets a stale schema. When no data
+    * file is visible, Spark infers, and its own error stands. */
+  def read(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    firstDataFile(paths, conf) match {
+      case Some(f) =>
+        val schema = footer(f, conf)(m => GraftSqlBridge.parquetSchema(spark, new Footer(f, m)))
+        spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
+
+  /** Open `file`'s parquet footer on the driver and apply `f` to it. */
+  def footer[A](file: Path, conf: Configuration)(f: ParquetMetadata => A): A = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try f(r.getFooter) finally r.close()
+  }
+
+  /** The file Spark's inference would read: the first, by path string,
+    * of the files named in `paths` and the visible files below the
+    * directories named there (Spark's listing hides names starting with
+    * `.`, or `_` without a `=`). None when there is none, or a path
+    * cannot be listed. */
+  private def firstDataFile(paths: Seq[String], conf: Configuration): Option[Path] = {
+    def visible(n: String) =
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    def leaves(fs: FileSystem, st: FileStatus): Iterator[Path] =
+      if (!st.isDirectory) Iterator(st.getPath)
+      else fs.listStatus(st.getPath).iterator
+        .filter(c => visible(c.getPath.getName)).flatMap(leaves(fs, _))
+    try paths.iterator.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      leaves(fs, fs.getFileStatus(path))
+    }.minByOption(_.toString)
+    catch { case _: java.io.IOException => None }
+  }
+
+  /** Table `name`'s file scan, unspread: one task per file split. */
+  def scan(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, s"$dir/$name.parquet")
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = scan(spark, dir, name)
     val target = spark.sparkContext.defaultParallelism
     if (workHeavyTables(name) && df.inputFiles.length < target / 2)
       df.repartition(target)

@@ -499,7 +499,7 @@ object CurationQueries extends QuerySet {
           .write.mode("append").parquet(out)
       }
       cnt.unpersist()
-      s.read.parquet(out).orderBy(col("doc_id"))
+      Tables.read(s, out).orderBy(col("doc_id"))
     }),
 
     // Per-language quality-quantile gate: integer type-token ratio
@@ -696,7 +696,7 @@ object CurationQueries extends QuerySet {
           .write.mode("append").parquet(out)
       }
       train.unpersist()
-      s.read.parquet(out).orderBy(col("doc_id"))
+      Tables.read(s, out).orderBy(col("doc_id"))
     }),
 
     // Maximal duplicated spans (the excision unit of exact substring
@@ -1482,7 +1482,7 @@ object CurationQueries extends QuerySet {
           .write.mode("append").parquet(out)
       }
       corpusFps.unpersist()
-      s.read.parquet(out)
+      Tables.read(s, out)
         .withColumn("flagged", col("n_hits") >= 2)
         .orderBy(col("doc_id"))
     })

@@ -146,7 +146,7 @@ object IvfPqQueries extends QuerySet {
         IvfPq.index(b, "embedding", model)
           .write.mode("append").partitionBy("cluster").parquet(idx)
       }
-      val indexed = s.read.parquet(idx)
+      val indexed = Tables.read(s, idx)
       IvfPq.search(indexed, e.filter(col("vec_id") <= 20), "embedding",
         model, k = 5, nprobe = 8)
         .orderBy(col("pid"), col("rk"))
@@ -186,10 +186,10 @@ object IvfPqQueries extends QuerySet {
         () => e.filter(pmod(col("vec_id"), lit(7)) === 3)
           .select(col("vec_id"))
           .write.mode("overwrite").parquet(s"$base/tombstones"))
-      val tomb = s.read.parquet(s"$base/tombstones")
+      val tomb = Tables.read(s, s"$base/tombstones")
       // tombstone ratio per inverted list (vector-level, so the M
       // code rows per vector cancel out of the ratio)
-      val idxDf = s.read.parquet(idx)
+      val idxDf = Tables.read(s, idx)
       val perList = idxDf.join(tomb, idxDf("cid") === tomb("vec_id"),
           "left_outer")
         .groupBy(col("cluster"))
@@ -230,7 +230,7 @@ object IvfPqQueries extends QuerySet {
       }
       // search = anti-join the (remaining) tombstones, then the
       // standard cluster-pruned ADC scan
-      val reRead = s.read.parquet(idx)
+      val reRead = Tables.read(s, idx)
       val live = reRead.join(tomb, reRead("cid") === tomb("vec_id"),
         "left_anti")
       IvfPq.search(live, e.filter(col("vec_id") <= 20), "embedding",
@@ -267,7 +267,7 @@ object IvfPqQueries extends QuerySet {
         .write.partitionBy("cluster").parquet(idx)
       val model2 = splitHotList(s, idx, e, "embedding", model,
         s"$base/stage")
-      IvfPq.search(s.read.parquet(idx), e.filter(col("vec_id") <= 20),
+      IvfPq.search(Tables.read(s, idx), e.filter(col("vec_id") <= 20),
         "embedding", model2, k = 5, nprobe = model2.kCoarse)
         .orderBy(col("pid"), col("rk"))
     }),
@@ -303,7 +303,7 @@ object IvfPqQueries extends QuerySet {
   private[operators] def splitHotList(s: SparkSession, idx: String,
       corpus: DataFrame, embCol: String, model: IvfPq.Model,
       staging: String): IvfPq.Model = {
-    val idxDf = s.read.parquet(idx)
+    val idxDf = Tables.read(s, idx)
     val sizes = idxDf.groupBy(col("cluster"))
       .agg(countDistinct(col("cid")).as("n")).collect()
       .map(r => r.getAs[Number]("cluster").intValue() ->

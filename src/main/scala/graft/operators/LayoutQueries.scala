@@ -153,7 +153,7 @@ object LayoutQueries extends QuerySet {
   private[operators] def probeRect(s: org.apache.spark.sql.SparkSession,
       path: String, name: String,
       plo: Long, phi: Long, slo: Long, shi: Long): DataFrame =
-    probeRectDf(s.read.parquet(path), name, plo, phi, slo, shi)
+    probeRectDf(Tables.read(s, path), name, plo, phi, slo, shi)
 
   val queries: Map[String, Q] = Map(
 

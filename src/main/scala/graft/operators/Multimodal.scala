@@ -35,7 +35,7 @@ object Multimodal {
 
   /** Build a deterministic synthetic media table from the documents
     * table (bytes = text bytes; metadata derived from doc fields) —
-    * stands in for `spark.read.parquet(<multimodal table>)`. */
+    * stands in for a parquet scan of a multimodal table. */
   def syntheticMedia(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
     graft.Tables.documents(spark, dir).select(

@@ -106,7 +106,10 @@ object SketchQueries extends QuerySet {
     // heavy-hitter audit bit-for-bit — same oracle.
     "q313_cms_stream" -> ((s, d) => {
       val base = Scratch.dir("cmsstream")
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      // epochs come from the unspread scan: each is one coalesce(1)
+      // write, so Tables.load's repartition would only add a shuffle
+      // (and a job) per epoch; q308, q323 and q332 do the same
+      val docs = Tables.scan(s, d, "documents").select(col("doc_id"), col("text"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
       val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
       val liveCells = Replay.streamDf(s, inDir, schema)
@@ -222,7 +225,7 @@ object SketchQueries extends QuerySet {
       val base = Scratch.dir("kllstream")
       val kllAgg = udaf(new Kll.Agg)
       val statsUdf = udf((b: Array[Byte]) => Kll.stats(b))
-      val docs = Tables.documents(s, d)
+      val docs = Tables.scan(s, d, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
       val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
@@ -332,7 +335,7 @@ object SketchQueries extends QuerySet {
       import graft.functions.Theta
       val base = Scratch.dir("thstream")
       val thetaAgg = udaf(new Theta.Agg)
-      val docs = Tables.documents(s, d)
+      val docs = Tables.scan(s, d, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
       val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
@@ -445,7 +448,7 @@ object SketchQueries extends QuerySet {
     // re-scanning: the q307 cube's cells maintained incrementally.
     "q308_hll_stream" -> ((s, d) => {
       val base = Scratch.dir("hllstream")
-      val docs = Tables.documents(s, d)
+      val docs = Tables.scan(s, d, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
       val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)

@@ -180,7 +180,7 @@ object StreamParityQueries2 extends QuerySet {
         StreamDedup.dropNearDups(b, bands).select("doc_id")
           .write.mode("append").parquet(out)
       }
-      s.read.parquet(out).orderBy(col("doc_id"))
+      Tables.read(s, out).orderBy(col("doc_id"))
     }),
 
     // CountTrigger oracle-bound: fire every 4th buffered row (early,

@@ -373,7 +373,7 @@ object StreamParityQueries3 extends QuerySet {
         // the point-lookup surface at this boundary = the full table
         b.withColumn("q", lit(id + 1)).write.mode("append").parquet(snapDir)
       }
-      s.read.parquet(snapDir)
+      Tables.read(s, snapDir)
         .select(col("q"), col("user_id"), col("n"), col("cents_v"))
         .orderBy(col("q"), col("user_id"))
     }))

@@ -345,9 +345,9 @@ object ManifestTable {
     statCol match {
       case None => Map.empty
       case Some(c) =>
-        statsFromFooters(table, names, c).getOrElse {
+        statsFromFooters(s, table, names, c).getOrElse {
           import org.apache.spark.sql.functions.{input_file_name, max, min}
-          s.read.parquet(names.map(n => s"$table/$n"): _*)
+          graft.Tables.read(s, names.map(n => s"$table/$n"): _*)
             .groupBy(input_file_name().as("f"))
             .agg(min(col(c)).cast("long").as("lo"),
               max(col(c)).cast("long").as("hi"))
@@ -363,18 +363,15 @@ object ManifestTable {
     * any file's stats are missing or the column isn't a plain integer
     * (the caller then runs the exact scan); a 0-row file is skipped,
     * matching the scan path (absent from the map ⇒ never pruned). */
-  private def statsFromFooters(table: String, names: Seq[String],
+  private def statsFromFooters(s: SparkSession, table: String, names: Seq[String],
                                c: String): Option[Map[String, (Long, Long)]] =
     try {
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = s.sparkContext.hadoopConfiguration
       val out = Map.newBuilder[String, (Long, Long)]
       names.foreach { n =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$table/$n"), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
+        graft.Tables.footer(new org.apache.hadoop.fs.Path(s"$table/$n"), conf) { footer =>
           var lo = Long.MaxValue; var hi = Long.MinValue; var seen = false
-          r.getFooter.getBlocks.forEach { bl =>
+          footer.getBlocks.forEach { bl =>
             bl.getColumns.forEach { cc =>
               if (cc.getPath.toDotString == c) {
                 val st = cc.getStatistics
@@ -393,12 +390,12 @@ object ManifestTable {
               }
             }
           }
-          if (!r.getFooter.getBlocks.isEmpty) {
+          if (!footer.getBlocks.isEmpty) {
             if (!seen) throw new IllegalStateException(
               s"column $c not found in $n")
             out += n -> (lo, hi)
           }
-        } finally r.close()
+        }
       }
       Some(out.result())
     } catch { case _: Exception => None }
@@ -457,7 +454,7 @@ object ManifestTable {
   // -------------------------------------------------------------- reads
   private def readParquet(s: SparkSession, table: String,
                           names: Seq[String]): DataFrame =
-    s.read.parquet(names.sorted.map(n => s"$table/$n"): _*)
+    graft.Tables.read(s, names.sorted.map(n => s"$table/$n"): _*)
 
   /** Anti-join `df` against snapshot `v`'s live tombstones (broadcast
     * — tombstone files are small by construction). No-op when none. */

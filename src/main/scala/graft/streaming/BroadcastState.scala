@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.Tables
+
 /** DYNAMIC broadcast state — the reference's broadcast-state pattern
   * with a live control stream, not just a static dimension:
   * `DataStream.broadcast(MapStateDescriptor)` (`DataStream.java:430`)
@@ -58,11 +60,11 @@ object BroadcastState {
         // 1. processBroadcastElement: merge this batch's rules
         extractRules(b).write.mode("append").parquet(rulesDir)
         // 2. processElement: data rows see the accumulated state
-        val rules = broadcast(s.read.parquet(rulesDir).distinct())
+        val rules = broadcast(Tables.read(s, rulesDir).distinct())
         applyRules(b, rules).write.mode("append").parquet(outDir)
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    spark.read.parquet(outDir)
+    Tables.read(spark, outDir)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, max, min, row_number}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-import graft.Par
+import graft.{Par, Tables}
 
 /** Epoch replay: turns a finite table into a multi-epoch file stream
   * and runs a stream over it to completion — the harness behind every
@@ -196,7 +196,7 @@ object Replay {
       .outputMode("append").format("parquet").option("path", out)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    s.read.parquet(out)
+    Tables.read(s, out)
   }
 
   /** Run `df` to termination under Trigger.AvailableNow, handing every
@@ -252,7 +252,7 @@ object Replay {
       if (statePartitions.isDefined)
         s.conf.set("spark.sql.shuffle.partitions", prev)
     }
-    s.read.parquet(out)
+    Tables.read(s, out)
   }
 
   /** Newest emission per key group = the operator's final state. */

@@ -2,12 +2,13 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into private[sql] Column↔Expression conversion for custom
   * Catalyst expressions exposed as user-facing Columns,
   * LogicalPlan→DataFrame construction for custom logical operators,
-  * Spark's private[spark] exit-time directory deleter, and its listener
-  * bus drain. */
+  * Spark's private[spark] exit-time directory deleter, its listener
+  * bus drain, and its parquet footer-to-schema conversion. */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -30,4 +31,15 @@ object GraftSqlBridge {
     * listeners (Spark's own timeout: 10 s). */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The schema Spark's parquet inference takes from one file's footer:
+    * the Spark schema the writer stored in the footer's key-value
+    * metadata, else the parquet schema converted under the session's
+    * SQL conf (binary-as-string, INT96, TIMESTAMP_NTZ, nanos-as-long). */
+  def parquetSchema(spark: SparkSession,
+                    footer: org.apache.parquet.hadoop.Footer): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(conf))
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
 /** The harness's job log: each job keeps its own stages' tasks when jobs
-  * overlap, and the listener-bus drain leaves no task end behind. */
+  * overlap, the listener-bus drain leaves no task end behind, and a job
+  * without a description is labelled by its SQL execution. */
 class HarnessSpec extends SparkSpec {
 
   private def withLog(body: Harness.JobLog => Unit): Unit = {
@@ -51,6 +52,19 @@ class HarnessSpec extends SparkSpec {
       assert(ends.size == 200)
       assert(ends.forall(t => t.finishMs >= job.start && t.finishMs <= job.end))
       assert(log.taskSec(job.start, job.end) == ends.map(_.runMs).sum / 1000.0)
+    }
+  }
+
+  test("AQE stage jobs carry their SQL execution's label") {
+    withLog { log =>
+      val since = System.currentTimeMillis()
+      Harness.noop(spark, "q262_dim_correlation", sf)
+      Harness.drain(spark)
+      val jobs = log.jobs(since)
+      assert(jobs.nonEmpty)
+      assert(!jobs.exists(_.desc.contains("CompletableFuture.java")), jobs.map(_.desc))
+      assert(jobs.exists(j => j.sqlId.isDefined && j.desc.startsWith("save at Harness.scala")),
+        jobs.map(_.desc))
     }
   }
 }
