@@ -102,13 +102,16 @@ object Harness {
       // no description: that of the job's SQL execution ("save at
       // Harness.scala"; AQE runs each query stage as a job from its own
       // thread, so the stage's name there is a CompletableFuture frame),
-      // else the result stage's name, the action's call site
+      // else the result stage's name, the action's call site. A
+      // multi-line description (a micro-batch's "<queryName>\nid = …
+      // \nbatch = N", whose first line is empty for an unnamed query)
+      // becomes one line of its non-empty lines
       val props = Option(e.properties)
       val sqlId = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
       val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
         .orElse(sqlId.flatMap(sqlDesc.get))
         .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
-        .getOrElse("")
+        .getOrElse("").linesIterator.map(_.trim).filter(_.nonEmpty).mkString(" / ")
       val job = Job(e.jobId, e.time, desc, e.stageIds, sqlId)
       jobList += job
       e.stageIds.foreach(s => if (!byStage.contains(s)) byStage(s) = job)

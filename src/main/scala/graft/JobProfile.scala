@@ -44,7 +44,7 @@ object JobProfile {
       val dur = (j.end - j.start) / 1000.0
       println(f"[profile]   job ${j.id}%3d @${(j.start - origin) / 1000.0}%7.2f s  " +
         f"dur $dur%6.2f s  tasks ${j.tasks}%4d  sql ${j.sqlId.fold("-")(_.toString)}%4s  " +
-        j.desc.take(100))
+        j.desc.take(120)) // a micro-batch label ends in its batch id at ~100 chars
       prevEnd = math.max(prevEnd, j.end)
     }
     val jobTotal = jobs.map(j => j.end - j.start).sum / 1000.0

@@ -36,10 +36,6 @@ import graft.{Scratch, Tables}
   */
 object CapstoneQueries extends QuerySet {
 
-  private def toks(c: org.apache.spark.sql.Column) = split(c, " ")
-  private def md5i(c: org.apache.spark.sql.Column) =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
   /** 13-gram hashes of (doc_id, text) — the q283 decontamination unit
     * (every doc has ≥1 gram: short docs hash their whole text window). */
   private def gramHashes(df: DataFrame): DataFrame = {

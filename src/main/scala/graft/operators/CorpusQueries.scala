@@ -22,26 +22,6 @@ import graft.Tables
   */
 object CorpusQueries extends QuerySet {
 
-  /** 32-bit integer hash of a string column: first 8 hex chars of md5. */
-  private def md5i(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def md5iSql(e: String): String =
-    s"('0x'||substr(md5($e),1,8))::BIGINT"
-
-  private def toks(c: Column) = split(c, " ")
-
-  /** Overlapping 2-word shingles of the space-tokenized text. */
-  private def bigrams(t: Column): Column = {
-    val w = toks(t)
-    transform(sequence(lit(1), greatest(size(w) - 1, lit(1))),
-      i => concat_ws(" ", slice(w, i, lit(2))))
-  }
-
-  private val bigramsSql =
-    """list_transform(range(1, greatest(len(string_split(text,' ')), 2)),
-      |      i -> array_to_string(string_split(text,' ')[i:i+1], ' '))""".stripMargin
-
   private val langQuota = 60 // q204: per-language cap
   private val chunkW = 10 // q205: words per dedup chunk
   private val winW = 64   // q267: tokens per context window

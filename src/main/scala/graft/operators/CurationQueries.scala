@@ -31,16 +31,6 @@ import graft.{Scratch, Tables}
   */
 object CurationQueries extends QuerySet {
 
-  /** 32-bit integer hash of a string column: first 8 hex chars of md5
-    * (same family as CorpusQueries/TextQueries — one md5 per value). */
-  private def md5i(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def md5iSql(e: String): String =
-    s"('0x'||substr(md5($e),1,8))::BIGINT"
-
-  private def toks(c: Column) = split(c, " ")
-
   // ---- shared BPE machinery (q286 trainer / q290 encoder) ------------
 
   /** A word as its character-token array. */
@@ -343,18 +333,6 @@ object CurationQueries extends QuerySet {
     (length(bin(k)) - 1).cast("long")
 
   private def blog2Sql(e: String): String = s"(length(bin($e)) - 1)"
-
-  /** Overlapping 2-word shingles (same construction as CorpusQueries:
-    * a 1-token text yields its single word). */
-  private def bigrams(t: Column): Column = {
-    val w = toks(t)
-    transform(sequence(lit(1), greatest(size(w) - 1, lit(1))),
-      i => concat_ws(" ", slice(w, i, lit(2))))
-  }
-
-  private val bigramsSql =
-    """list_transform(range(1, greatest(len(string_split(text,' ')), 2)),
-      |      i -> array_to_string(string_split(text,' ')[i:i+1], ' '))""".stripMargin
 
   private val nBuckets = 1024 // q215: hashed feature space
   private val chunkW = 10 // q216: words per boilerplate chunk (q205's width)

@@ -494,7 +494,7 @@ object LayoutQueries extends QuerySet {
               .as("cents"))
           .select(lit(name).as("phase"), col("n_rows"), col("key_sum"),
             col("cents"),
-            lit(ManifestTable.tombstones(table, v)._1.nonEmpty)
+            lit(ManifestTable.snapshot(table, v).tombstones.nonEmpty)
               .as("mor_tombstones"))
       phase("p1_pre_delete", 0)
         .unionAll(phase("p2_post_delete", 1))

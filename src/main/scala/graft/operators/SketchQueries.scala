@@ -26,13 +26,6 @@ import graft.streaming.Replay
   */
 object SketchQueries extends QuerySet {
 
-  /** 32-bit integer hash of a string column: first 8 hex chars of md5. */
-  private def md5i(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def md5iSql(e: String): String =
-    s"('0x'||substr(md5($e),1,8))::BIGINT"
-
   private val depth = 4   // independent hash rows (error prob 2^-4)
   private val width = 512 // buckets per row (overcount ≤ 2N/512 w.h.p.)
 

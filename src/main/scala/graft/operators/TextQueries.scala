@@ -24,16 +24,6 @@ import graft.Tables
   */
 object TextQueries extends QuerySet {
 
-  /** Tokens of `text` split on single spaces. */
-  private def toks(c: Column) = split(c, " ")
-
-  /** 32-bit integer hash of a string column: first 8 hex chars of md5. */
-  private def md5i(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private[operators] def md5iSql(e: String): String =
-    s"('0x'||substr(md5($e),1,8))::BIGINT"
-
   private[graft] val nSig = 8 // minhash signature length
   private val nBits = 64 // simhash bits (production width: 4×16-bit bands)
   private[operators] val dfCap = 50 // q66: drop shingles in more than dfCap docs

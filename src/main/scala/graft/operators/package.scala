@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 package object operators {
   /** A catalog query: (session, sf-dir) => result. Matches the driver
@@ -18,4 +19,31 @@ package object operators {
     * spark.sql with the same table names the DuckDB oracle sees. */
   def withTables(s: SparkSession, dir: String, names: String*): Unit =
     names.foreach(n => Tables.load(s, dir, n).createOrReplaceTempView(n))
+
+  // ---- corpus text helpers, shared by the text, corpus, curation,
+  // sketch and capstone queries and their DuckDB oracles
+
+  /** 32-bit integer hash of a string column: first 8 hex chars of md5. */
+  private[operators] def md5i(c: Column): Column =
+    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
+
+  /** [[md5i]] as DuckDB SQL over the expression `e`. */
+  private[operators] def md5iSql(e: String): String =
+    s"('0x'||substr(md5($e),1,8))::BIGINT"
+
+  /** Tokens of a text column split on single spaces. */
+  private[operators] def toks(c: Column): Column = split(c, " ")
+
+  /** Overlapping 2-word shingles of the space-tokenized text (a 1-token
+    * text yields its single word). */
+  private[operators] def bigrams(t: Column): Column = {
+    val w = toks(t)
+    transform(sequence(lit(1), greatest(size(w) - 1, lit(1))),
+      i => concat_ws(" ", slice(w, i, lit(2))))
+  }
+
+  /** [[bigrams]] of the `text` column as DuckDB SQL. */
+  private[operators] val bigramsSql =
+    """list_transform(range(1, greatest(len(string_split(text,' ')), 2)),
+      |      i -> array_to_string(string_split(text,' ')[i:i+1], ' '))""".stripMargin
 }

@@ -1,9 +1,14 @@
 package graft.sources
 
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.DeserializationFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** A minimal MANIFEST-committed table format — the atomicity layer the
   * r10 judge asked for on top of the incremental z-order OPTIMIZE
@@ -76,12 +81,54 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
   *    flink-streaming-java/.../sink/filesystem/StreamingFileSink
   *    .java:98, expressed as manifest commits).
   *
-  * Back-compat is LOUD, not silent (ADVICE r11): [[readChanges]]
-  * refuses any window version whose manifest lacks the `added` field
-  * instead of treating it as an empty append — a legacy commit must
-  * fail the incremental reader, not silently contribute zero rows.
+  * The on-disk format is [[Snapshot]] and [[Shard]], read and written
+  * as JSON in one place each; parsing is strict, so a manifest missing
+  * a field fails loudly instead of reading as empty.
   */
 object ManifestTable {
+
+  /** One data file's clustering-column (min, max). An object, not a
+    * `Seq[Long]`: erasure would read a generic numeric collection back
+    * as Integers. */
+  final case class FileStat(file: String, lo: Long, hi: Long)
+
+  /** One immutable metadata shard: a set of data files + their
+    * clustering-column stats, written once by the commit that added
+    * (or re-grouped) them and never modified. Files committed without
+    * stats have no [[FileStat]] and are never pruned. */
+  final case class Shard(files: Seq[String], stats: Seq[FileStat])
+
+  /** One committed snapshot, the whole content of `manifest-N.json`.
+    *  - `kind`: "append" (create/append — every row change is in
+    *    `added`), "rewrite" (OPTIMIZE — rows unchanged), "merge" (rows
+    *    upserted) or "delete" (key tombstone committed);
+    *  - `batch`: high-water streaming micro-batch id (−1 if the table
+    *    never saw [[appendBatch]]);
+    *  - `added`: the files carrying NEW rows in this commit, the
+    *    changelog unit [[readChanges]] resolves through;
+    *  - `tombstones`/`tkey`: live key-tombstone files (merge-on-read
+    *    deletes not yet materialized) and the key column they suppress;
+    *  - `cdcPre`/`cdcPost`: this commit's (−) pre- and (+) post-image
+    *    files;
+    *  - `shards`: the shard names resolving the snapshot's data files. */
+  final case class Snapshot(version: Long, kind: String, batch: Long,
+                            added: Seq[String], tombstones: Seq[String],
+                            tkey: Option[String], cdcPre: Seq[String],
+                            cdcPost: Seq[String], shards: Seq[String]) {
+    /** The next version's starting point: table state (tombstones,
+      * tkey, batch, shards) carries over, per-commit change records
+      * (added, cdcPre, cdcPost) reset. */
+    def next(kind: String): Snapshot =
+      copy(version = version + 1, kind = kind, added = Seq.empty,
+        cdcPre = Seq.empty, cdcPost = Seq.empty)
+  }
+
+  /** The parent of snapshot 0. */
+  private val genesis =
+    Snapshot(-1L, "append", -1L, Nil, Nil, None, Nil, Nil, Nil)
+
+  private lazy val json = JsonMapper.builder().addModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES).build()
 
   private def manifestDir(table: String): Path =
     Paths.get(table, "_manifests")
@@ -89,19 +136,23 @@ object ManifestTable {
   private def manifestPath(table: String, v: Long): Path =
     manifestDir(table).resolve(f"manifest-$v%09d.json")
 
+  private def uuid(n: Int): String =
+    java.util.UUID.randomUUID().toString.take(n)
+
+  /** The entries of `dir`; empty when it is not a directory. */
+  private def list(dir: Path): List[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val l = Files.list(dir)
+      try l.iterator().asScala.toList finally l.close()
+    }
+
   /** Versions present, ascending. */
-  def versions(table: String): Seq[Long] = {
-    val dir = manifestDir(table)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val l = Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      l.iterator().asScala.toSeq.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("manifest-") && s.endsWith(".json") =>
-          s.stripPrefix("manifest-").stripSuffix(".json").toLong }
-        .sorted
-    } finally l.close()
-  }
+  def versions(table: String): Seq[Long] =
+    list(manifestDir(table)).map(_.getFileName.toString)
+      .collect { case s if s.startsWith("manifest-") && s.endsWith(".json") =>
+        s.stripPrefix("manifest-").stripSuffix(".json").toLong }
+      .sorted
 
   def currentVersion(table: String): Long = {
     val vs = versions(table)
@@ -109,176 +160,80 @@ object ManifestTable {
     vs.last
   }
 
-  // ---------------------------------------------------------------- JSON
-  // strict reader for our own writer's format: plain part-file names,
-  // no escapes — extract the array that follows `"<field>":[`
-  private def jsonArray(txt: String, field: String): Seq[String] = {
-    val anchor = s""""$field":["""
-    val at = txt.indexOf(anchor)
-    if (at < 0) return Seq.empty
-    val start = at + anchor.length
-    val body = txt.substring(start, txt.indexOf(']', start))
-    if (body.trim.isEmpty) Seq.empty
-    else body.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-  }
-
-  private def jsonHasField(txt: String, field: String): Boolean =
-    txt.contains(s""""$field":""")
-
-  private def jsonString(txt: String, field: String): Option[String] = {
-    val anchor = s""""$field":""""
-    val at = txt.indexOf(anchor)
-    if (at < 0) None
-    else Some(txt.substring(at + anchor.length,
-      txt.indexOf('"', at + anchor.length)))
-  }
-
-  private def jsonLong(txt: String, field: String): Option[Long] = {
-    val anchor = s""""$field":"""
-    val at = txt.indexOf(anchor)
-    if (at < 0) None
-    else {
-      val start = at + anchor.length
-      val end = txt.indexWhere(c => c != '-' && !c.isDigit, start)
-      Some(txt.substring(start, if (end < 0) txt.length else end).toLong)
+  /** Snapshot `v`, parsed once. A manifest that is not exactly a
+    * [[Snapshot]] (a missing or unknown field) is refused. */
+  def snapshot(table: String, v: Long): Snapshot =
+    try json.readValue(manifestPath(table, v).toFile, classOf[Snapshot])
+    catch {
+      case e: JacksonException => throw new IllegalArgumentException(
+        s"unreadable manifest version $v of $table: ${e.getOriginalMessage}", e)
     }
-  }
 
-  private def jarr(xs: Seq[String]): String =
-    xs.sorted.map("\"" + _ + "\"").mkString(",")
-
-  private def manifestTxt(table: String, v: Long): String =
-    Files.readString(manifestPath(table, v))
+  private def current(table: String): Snapshot =
+    snapshot(table, currentVersion(table))
 
   // -------------------------------------------------------------- shards
-  /** One immutable metadata shard: a set of data files + their
-    * clustering-column (min, max) stats, written once by the commit
-    * that added (or re-grouped) them and never modified. */
-  private def shardPath(table: String, name: String): Path =
-    manifestDir(table).resolve(name)
+  private def shard(table: String, name: String): Shard =
+    json.readValue(manifestDir(table).resolve(name).toFile, classOf[Shard])
 
-  private def writeShard(table: String, fileNames: Seq[String],
-                         fileStats: Map[String, (Long, Long)]): String = {
-    val name = s"shard-${java.util.UUID.randomUUID().toString.take(12)}.json"
-    val statsJson = fileStats.toSeq.sortBy(_._1)
-      .map { case (n, (lo, hi)) => s""""$n:$lo:$hi"""" }.mkString(",")
+  private def writeShard(table: String, sh: Shard): String = {
+    val name = s"shard-${uuid(12)}.json"
     Files.createDirectories(manifestDir(table))
-    Files.writeString(shardPath(table, name),
-      s"""{"files":[${jarr(fileNames)}],"stats":[$statsJson]}""")
+    json.writeValue(manifestDir(table).resolve(name).toFile, sh)
     name
   }
 
-  private def shardTxt(table: String, shard: String): String =
-    Files.readString(shardPath(table, shard))
+  /** `shards` minus the files in `gone`: untouched shards are carried
+    * by name, a shard that lost files is replaced by a survivor shard
+    * (stats carried over), an emptied one is dropped. */
+  private def without(table: String, shards: Seq[String],
+                      gone: String => Boolean): Seq[String] =
+    shards.flatMap { name =>
+      val sh = shard(table, name)
+      val keep = sh.files.filterNot(gone)
+      if (keep.size == sh.files.size) Some(name)
+      else if (keep.isEmpty) None
+      else Some(writeShard(table,
+        Shard(keep, sh.stats.filterNot(s => gone(s.file)))))
+    }
 
-  private def shardFiles(table: String, shard: String): Seq[String] =
-    jsonArray(shardTxt(table, shard), "files")
-
-  private def shardStats(table: String, shard: String)
-      : Map[String, (Long, Long)] =
-    jsonArray(shardTxt(table, shard), "stats").map { s =>
-      val Array(n, lo, hi) = s.split(":")
-      n -> (lo.toLong, hi.toLong)
-    }.toMap
-
-  /** The shard names of snapshot `v` (empty for a legacy inline-file
-    * manifest). */
-  private[sources] def shards(table: String, v: Long): Seq[String] =
-    jsonArray(manifestTxt(table, v), "shards")
+  private def filesOf(table: String, snap: Snapshot): Seq[String] =
+    snap.shards.flatMap(shard(table, _).files)
 
   // ------------------------------------------------------------ snapshot
-  /** The data file names (relative to the table dir) of snapshot `v` —
-    * resolved through its shards (legacy manifests with an inline
-    * `files` array still read). Tombstone-suppressed rows are a READ
+  /** The data file names (relative to the table dir) of snapshot `v`,
+    * resolved through its shards. Tombstone-suppressed rows are a READ
     * concern ([[readVersion]]); the file set is the physical layout. */
-  def files(table: String, v: Long): Seq[String] = {
-    val txt = manifestTxt(table, v)
-    val sh = jsonArray(txt, "shards")
-    if (sh.nonEmpty || jsonHasField(txt, "shards"))
-      sh.flatMap(shardFiles(table, _))
-    else jsonArray(txt, "files")
-  }
-
-  /** The files that carry NEW rows in commit `v` (empty for a pure
-    * rewrite like OPTIMIZE) — the changelog unit [[readChanges]]
-    * resolves through. */
-  def added(table: String, v: Long): Seq[String] =
-    jsonArray(manifestTxt(table, v), "added")
+  def files(table: String, v: Long): Seq[String] =
+    filesOf(table, snapshot(table, v))
 
   /** Per-file clustering-column (min, max) stats of snapshot `v`,
     * unioned over its shards — the manifest-level scan-planning
     * metadata ([[readRange]] prunes with it before any parquet footer
     * is opened). Files committed without stats are absent and never
     * pruned. */
-  def stats(table: String, v: Long): Map[String, (Long, Long)] = {
-    val txt = manifestTxt(table, v)
-    val sh = jsonArray(txt, "shards")
-    if (sh.nonEmpty) sh.flatMap(shardStats(table, _)).toMap
-    else jsonArray(txt, "stats").map { s =>
-      val Array(n, lo, hi) = s.split(":")
-      n -> (lo.toLong, hi.toLong)
-    }.toMap
-  }
+  def stats(table: String, v: Long): Map[String, (Long, Long)] =
+    snapshot(table, v).shards.flatMap(shard(table, _).stats)
+      .map(s => s.file -> (s.lo, s.hi)).toMap
 
-  /** The commit kind of version `v`: "append" (create/append — every
-    * snapshot row change is in `added`), "rewrite" (OPTIMIZE — rows
-    * unchanged), "merge" (rows upserted), or "delete" (key tombstone
-    * committed). Manifests written before the field existed read as
-    * "append". */
-  def kind(table: String, v: Long): String =
-    jsonString(manifestTxt(table, v), "kind").getOrElse("append")
-
-  /** Live key-tombstone files of snapshot `v` (merge-on-read deletes
-    * not yet materialized), with the key column they suppress. */
-  def tombstones(table: String, v: Long): (Seq[String], Option[String]) = {
-    val txt = manifestTxt(table, v)
-    (jsonArray(txt, "tombstones"), jsonString(txt, "tkey"))
-  }
-
-  /** CDC row-image files of commit `v` (merge/delete): (−) pre-images
-    * and (+) post-images. Empty for commits that captured none. */
-  def cdcImages(table: String, v: Long): (Seq[String], Seq[String]) = {
-    val txt = manifestTxt(table, v)
-    (jsonArray(txt, "cdcPre"), jsonArray(txt, "cdcPost"))
-  }
-
-  /** High-water streaming micro-batch id committed up to snapshot `v`
-    * (−1 if the table never saw [[appendBatch]]). */
-  def lastBatch(table: String, v: Long): Long =
-    jsonLong(manifestTxt(table, v), "batch").getOrElse(-1L)
-
-  /** Write snapshot `expected + 1` atomically. The temp manifest is
-    * fully written first, then HARD-LINKED onto the final name —
-    * creation is atomic and fails if the version exists, so a racing
-    * committer loses LOUDLY (never silently replaces) and can rebase
-    * on the new current version and retry. */
-  private def commitSnapshot(table: String, expected: Long,
-      shardNames: Seq[String], addedFiles: Seq[String], kindTag: String,
-      tombFiles: Seq[String], tkey: Option[String],
-      cdcPre: Seq[String], cdcPost: Seq[String], batch: Long): Long = {
-    val next = expected + 1
+  /** Write snapshot `next` atomically. The temp manifest is fully
+    * written first, then HARD-LINKED onto the final name — creation is
+    * atomic and fails if the version exists, so a racing committer
+    * loses LOUDLY (never silently replaces) and can rebase on the new
+    * current version and retry. */
+  private def commit(table: String, next: Snapshot): Long = {
     val dir = manifestDir(table)
     Files.createDirectories(dir)
-    val target = manifestPath(table, next)
-    val tmp = dir.resolve(s"manifest-$next.json.tmp-${
-      java.util.UUID.randomUUID().toString.take(8)}")
-    val tkeyJson = tkey.map(k => s""","tkey":"$k"""").getOrElse("")
-    Files.writeString(tmp,
-      s"""{"version":$next,"kind":"$kindTag","batch":$batch,""" +
-        s""""added":[${jarr(addedFiles)}],""" +
-        s""""tombstones":[${jarr(tombFiles)}]$tkeyJson,""" +
-        s""""cdcPre":[${jarr(cdcPre)}],"cdcPost":[${jarr(cdcPost)}],""" +
-        s""""shards":[${jarr(shardNames)}]}""")
-    try Files.createLink(target, tmp)
+    val tmp = dir.resolve(s"manifest-${next.version}.json.tmp-${uuid(8)}")
+    json.writeValue(tmp.toFile, next)
+    try Files.createLink(manifestPath(table, next.version), tmp)
     catch {
       case _: FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
         throw new IllegalArgumentException(
-          s"concurrent commit: version $next already exists in $table" +
-            " — rebase on the current version and retry")
-    }
-    Files.deleteIfExists(tmp)
-    next
+          s"concurrent commit: version ${next.version} already exists in " +
+            s"$table — rebase on the current version and retry")
+    } finally Files.deleteIfExists(tmp)
+    next.version
   }
 
   /** Commit snapshot `expected + 1` with the given WHOLE-TABLE file
@@ -290,117 +245,81 @@ object ManifestTable {
   def commit(table: String, fileList: Seq[String], expected: Long,
              added: Seq[String] = Seq.empty,
              kindTag: String = "append",
-             fileStats: Map[String, (Long, Long)] = Map.empty): Long = {
-    val shard = writeShard(table, fileList, fileStats)
-    val (tf, tk) =
-      if (expected >= 0) tombstones(table, expected) else (Seq.empty, None)
-    commitSnapshot(table, expected, Seq(shard), added, kindTag,
-      tf, tk, Seq.empty, Seq.empty,
-      if (expected >= 0) lastBatch(table, expected) else -1L)
-  }
+             fileStats: Map[String, (Long, Long)] = Map.empty): Long =
+    commit(table, (if (expected >= 0) snapshot(table, expected) else genesis)
+      .next(kindTag).copy(added = added, shards = Seq(writeShard(table,
+        Shard(fileList, fileStats.map { case (f, (lo, hi)) => FileStat(f, lo, hi) }.toSeq)))))
 
   // ------------------------------------------------------------- staging
-  private def listParts(p: Path): Seq[String] = {
-    val l = Files.list(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      l.iterator().asScala.toSeq
-        .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-    } finally l.close()
-  }
+  private def listParts(p: Path): Seq[String] =
+    list(p).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
 
   /** Write `df`'s part files UNCOMMITTED into the table directory:
     * stage dir → move each in under a globally-unique prefixed name.
     * Returns the new (invisible until committed) file names. */
   private def stageIn(df: DataFrame, table: String,
                       prefix: String = "part"): Seq[String] = {
-    val stage = Paths.get(table,
-      s"_stage-${java.util.UUID.randomUUID().toString.take(8)}")
+    val stage = Paths.get(table, s"_stage-${uuid(8)}")
     df.write.parquet(stage.toString)
-    val token = java.util.UUID.randomUUID().toString.take(8)
+    val token = uuid(8)
     val names = listParts(stage).sorted.zipWithIndex.map { case (n, i) =>
       val dst = f"$prefix-$token-$i%05d.parquet"
       Files.move(stage.resolve(n), Paths.get(table, dst))
       dst
     }
     // best-effort stage-dir cleanup (only _SUCCESS etc. remain)
-    val rest = Files.list(stage)
-    try rest.forEach(p => Files.deleteIfExists(p)) finally rest.close()
+    list(stage).foreach(Files.deleteIfExists)
     Files.deleteIfExists(stage)
     names
   }
 
   /** Per-file (min, max) of `statCol` over freshly staged files — the
     * manifest-level scan-planning stats, lifted straight from the
-    * parquet FOOTERS the write just produced (r13, guide §5: the
-    * read-back was one whole Spark job of driver latency per commit —
-    * the q340 pipeline alone paid it five times; footers are a few
-    * driver-local reads of files this process just wrote). Falls back
-    * to the one-job narrow scan for column shapes the footer path
-    * doesn't cover; both paths produce the identical (min, max) map —
-    * parquet INT32/INT64 statistics are exact, never truncated. */
-  private def statsFor(s: SparkSession, table: String,
-                       names: Seq[String],
-                       statCol: Option[String]): Map[String, (Long, Long)] =
-    statCol match {
-      case None => Map.empty
-      case Some(c) =>
-        statsFromFooters(s, table, names, c).getOrElse {
-          import org.apache.spark.sql.functions.{input_file_name, max, min}
-          graft.Tables.read(s, names.map(n => s"$table/$n"): _*)
-            .groupBy(input_file_name().as("f"))
-            .agg(min(col(c)).cast("long").as("lo"),
-              max(col(c)).cast("long").as("hi"))
-            .collect() // ≤ names.size rows — manifest-bounded
-            .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath)
-              .getFileName.toString -> (r.getLong(1), r.getLong(2)))
-            .toMap
-        }
-    }
-
-  /** Footer fast path: min/max of a top-level INT32/INT64 column from
-    * each staged file's row-group statistics — no Spark job. None when
-    * any file's stats are missing or the column isn't a plain integer
-    * (the caller then runs the exact scan); a 0-row file is skipped,
-    * matching the scan path (absent from the map ⇒ never pruned). */
-  private def statsFromFooters(s: SparkSession, table: String, names: Seq[String],
-                               c: String): Option[Map[String, (Long, Long)]] =
-    try {
+    * parquet FOOTERS the write just produced (a few driver-local reads
+    * of files this process just wrote, no Spark job; parquet
+    * INT32/INT64 statistics are exact, never truncated). A 0-row file
+    * has no row group and gets no stat (never pruned). A column without
+    * such statistics (not a top-level integer, or all null) is refused
+    * before anything is committed. */
+  private def statsFor(s: SparkSession, table: String, names: Seq[String],
+                       statCol: Option[String]): Seq[FileStat] =
+    statCol.toSeq.flatMap { c =>
       val conf = s.sparkContext.hadoopConfiguration
-      val out = Map.newBuilder[String, (Long, Long)]
-      names.foreach { n =>
+      def refuse(n: String) = throw new IllegalArgumentException(
+        s"statCol $c has no INT32/INT64 footer statistics in $table/$n")
+      names.flatMap { n =>
         graft.Tables.footer(new org.apache.hadoop.fs.Path(s"$table/$n"), conf) { footer =>
-          var lo = Long.MaxValue; var hi = Long.MinValue; var seen = false
-          footer.getBlocks.forEach { bl =>
-            bl.getColumns.forEach { cc =>
-              if (cc.getPath.toDotString == c) {
-                val st = cc.getStatistics
-                val (mn, mx) = st match {
-                  case ls: org.apache.parquet.column.statistics.LongStatistics
-                      if !ls.isEmpty && ls.hasNonNullValue =>
-                    (ls.getMin, ls.getMax)
-                  case is: org.apache.parquet.column.statistics.IntStatistics
-                      if !is.isEmpty && is.hasNonNullValue =>
-                    (is.getMin.toLong, is.getMax.toLong)
-                  case _ => throw new IllegalStateException(
-                    s"no usable stats for $c in $n")
-                }
-                seen = true
-                lo = math.min(lo, mn); hi = math.max(hi, mx)
-              }
+          val ranges = footer.getBlocks.asScala.toSeq.map { bl =>
+            bl.getColumns.asScala.find(_.getPath.toDotString == c)
+              .getOrElse(refuse(n)).getStatistics match {
+              case ls: org.apache.parquet.column.statistics.LongStatistics
+                  if !ls.isEmpty && ls.hasNonNullValue => (ls.getMin, ls.getMax)
+              case is: org.apache.parquet.column.statistics.IntStatistics
+                  if !is.isEmpty && is.hasNonNullValue =>
+                (is.getMin.toLong, is.getMax.toLong)
+              case _ => refuse(n)
             }
           }
-          if (!footer.getBlocks.isEmpty) {
-            if (!seen) throw new IllegalStateException(
-              s"column $c not found in $n")
-            out += n -> (lo, hi)
-          }
+          if (ranges.isEmpty) None
+          else Some(FileStat(n, ranges.map(_._1).min, ranges.map(_._2).max))
         }
       }
-      Some(out.result())
-    } catch { case _: Exception => None }
+    }
 
   // ------------------------------------------------------------- writes
+  /** Stage `df` and commit it on top of `prev` as an append tagged with
+    * micro-batch `batch`. Metadata written = ONE shard for the new
+    * files + a snapshot listing shard NAMES — O(new files), never
+    * O(table) (prior shards are carried by name). */
+  private def appendTo(df: DataFrame, table: String, prev: Snapshot,
+                       batch: Long, statCol: Option[String]): Long = {
+    val names = stageIn(df, table)
+    val sh = writeShard(table,
+      Shard(names, statsFor(df.sparkSession, table, names, statCol)))
+    commit(table, prev.next("append")
+      .copy(batch = batch, added = names, shards = prev.shards :+ sh))
+  }
+
   /** Create the table as snapshot 0 from `df` (caller shapes the
     * layout: repartition + sortWithinPartitions before the call).
     * With `statCol`, each file's (min, max) of that column rides the
@@ -409,25 +328,14 @@ object ManifestTable {
              statCol: Option[String] = None): Long = {
     Files.createDirectories(Paths.get(table))
     require(versions(table).isEmpty, s"$table already has manifests")
-    val names = stageIn(df, table)
-    val shard = writeShard(table, names,
-      statsFor(df.sparkSession, table, names, statCol))
-    commitSnapshot(table, -1L, Seq(shard), names, "append",
-      Seq.empty, None, Seq.empty, Seq.empty, batch = -1L)
+    appendTo(df, table, genesis, genesis.batch, statCol)
   }
 
-  /** Append `df` as a new snapshot. Metadata written = ONE shard for
-    * the new files + a snapshot listing shard NAMES — O(new files),
-    * never O(table) (prior shards are carried by name). */
+  /** Append `df` as a new snapshot. */
   def append(df: DataFrame, table: String,
              statCol: Option[String] = None): Long = {
-    val v = currentVersion(table)
-    val names = stageIn(df, table)
-    val shard = writeShard(table, names,
-      statsFor(df.sparkSession, table, names, statCol))
-    val (tf, tk) = tombstones(table, v)
-    commitSnapshot(table, v, shards(table, v) :+ shard, names, "append",
-      tf, tk, Seq.empty, Seq.empty, lastBatch(table, v))
+    val prev = current(table)
+    appendTo(df, table, prev, prev.batch, statCol)
   }
 
   /** Streaming append, idempotent per micro-batch (the foreachBatch
@@ -441,14 +349,9 @@ object ManifestTable {
     * concurrent-commit refusal, not silent loss. */
   def appendBatch(df: DataFrame, table: String, batchId: Long,
                   statCol: Option[String] = None): Option[Long] = {
-    val v = currentVersion(table)
-    if (lastBatch(table, v) >= batchId) return None // replayed batch
-    val names = stageIn(df, table)
-    val shard = writeShard(table, names,
-      statsFor(df.sparkSession, table, names, statCol))
-    val (tf, tk) = tombstones(table, v)
-    Some(commitSnapshot(table, v, shards(table, v) :+ shard, names,
-      "append", tf, tk, Seq.empty, Seq.empty, batchId))
+    val prev = current(table)
+    if (prev.batch >= batchId) None // replayed batch
+    else Some(appendTo(df, table, prev, batchId, statCol))
   }
 
   // -------------------------------------------------------------- reads
@@ -456,28 +359,30 @@ object ManifestTable {
                           names: Seq[String]): DataFrame =
     graft.Tables.read(s, names.sorted.map(n => s"$table/$n"): _*)
 
-  /** Anti-join `df` against snapshot `v`'s live tombstones (broadcast
-    * — tombstone files are small by construction). No-op when none. */
-  private def minusTombstones(s: SparkSession, table: String, v: Long,
-                              df: DataFrame): DataFrame = {
-    val (tf, tk) = tombstones(table, v)
-    if (tf.isEmpty) df
-    else df.join(broadcast(readParquet(s, table, tf)), Seq(tk.get),
-      "left_anti")
+  /** Anti-join `df` against `snap`'s live tombstones (broadcast —
+    * tombstone files are small by construction). No-op when none. */
+  private def minusTombstones(s: SparkSession, table: String, snap: Snapshot,
+                              df: DataFrame): DataFrame =
+    if (snap.tombstones.isEmpty) df
+    else df.join(broadcast(readParquet(s, table, snap.tombstones)),
+      Seq(snap.tkey.get), "left_anti")
+
+  private def readSnapshot(s: SparkSession, table: String,
+                           snap: Snapshot): DataFrame = {
+    val fs = filesOf(table, snap)
+    require(fs.nonEmpty, s"snapshot ${snap.version} of $table lists no files")
+    minusTombstones(s, table, snap, readParquet(s, table, fs))
   }
 
   /** Read the current snapshot. */
   def read(s: SparkSession, table: String): DataFrame =
-    readVersion(s, table, currentVersion(table))
+    readSnapshot(s, table, current(table))
 
   /** Time-travel read of snapshot `v` — valid until [[vacuum]] ages
     * the manifest out. Live key tombstones (merge-on-read deletes)
     * are applied as a broadcast anti-join. */
-  def readVersion(s: SparkSession, table: String, v: Long): DataFrame = {
-    val fs = files(table, v)
-    require(fs.nonEmpty, s"snapshot $v of $table lists no files")
-    minusTombstones(s, table, v, readParquet(s, table, fs))
-  }
+  def readVersion(s: SparkSession, table: String, v: Long): DataFrame =
+    readSnapshot(s, table, snapshot(table, v))
 
   /** Incremental OPTIMIZE: rewrite ONLY `rewrite` (e.g. the unsorted
     * delta appends) into `numFiles` files clustered on `sortKey`; all
@@ -497,11 +402,11 @@ object ManifestTable {
                sortKey: Column, numFiles: Int,
                crashBeforeCommit: Boolean = false,
                statCol: Option[String] = None): Long = {
-    val v = currentVersion(table)
-    val cur = files(table, v)
-    require(rewrite.subsetOf(cur.toSet),
-      s"rewrite set not in snapshot $v: ${rewrite -- cur.toSet}")
-    val compacted = minusTombstones(s, table, v,
+    val prev = current(table)
+    val cur = filesOf(table, prev).toSet
+    require(rewrite.subsetOf(cur),
+      s"rewrite set not in snapshot ${prev.version}: ${rewrite -- cur}")
+    val compacted = minusTombstones(s, table, prev,
         readParquet(s, table, rewrite.toSeq))
       .repartitionByRange(numFiles, sortKey)
       .sortWithinPartitions(sortKey)
@@ -509,32 +414,18 @@ object ManifestTable {
     if (crashBeforeCommit)
       throw new IllegalStateException(
         "injected crash: OPTIMIZE output staged, manifest not committed")
-    val newShard = writeShard(table, staged,
-      statsFor(s, table, staged, statCol))
-    // shard compaction: carry untouched shards by name; shards that
-    // lost files get a survivor replacement (stats carried over)
-    val keptShards = shards(table, v).flatMap { sh =>
-      val fs = shardFiles(table, sh)
-      if (fs.forall(f => !rewrite(f))) Some(sh)
-      else {
-        val keep = fs.filterNot(rewrite)
-        if (keep.isEmpty) None
-        else Some(writeShard(table, keep,
-          shardStats(table, sh).view.filterKeys(keep.toSet).toMap))
-      }
-    }
-    val fullCoverage = rewrite == cur.toSet
-    val (tf, tk) = tombstones(table, v)
-    commitSnapshot(table, v, keptShards :+ newShard, Seq.empty, "rewrite",
-      if (fullCoverage) Seq.empty else tf,
-      if (fullCoverage) None else tk,
-      Seq.empty, Seq.empty, lastBatch(table, v))
+    val newShard = writeShard(table,
+      Shard(staged, statsFor(s, table, staged, statCol)))
+    val next = prev.next("rewrite")
+      .copy(shards = without(table, prev.shards, rewrite) :+ newShard)
+    commit(table,
+      if (rewrite == cur) next.copy(tombstones = Nil, tkey = None) else next)
   }
 
-  /** Manifest-pruned range read: of snapshot `v`'s files, open ONLY
-    * those whose committed (min, max) stats overlap [lo, hi] — scan
-    * planning from the manifest alone, before any parquet footer is
-    * touched (the Iceberg min/max file-pruning contract; at 100 TB
+  /** Manifest-pruned range read: of the current snapshot's files, open
+    * ONLY those whose committed (min, max) stats overlap [lo, hi] —
+    * scan planning from the manifest alone, before any parquet footer
+    * is touched (the Iceberg min/max file-pruning contract; at 100 TB
     * the planner reads one manifest instead of listing and
     * footer-probing every file). Files committed without stats are
     * always read (never wrongly pruned). Returns (frame of the
@@ -542,15 +433,14 @@ object ManifestTable {
     * applies the row-level predicate — stats prune FILES, not rows. */
   def readRange(s: SparkSession, table: String, lo: Long, hi: Long)
       : (DataFrame, Int, Int) = {
-    val v = currentVersion(table)
-    val all = files(table, v)
-    val st = stats(table, v)
-    val keep = all.filter { n =>
-      st.get(n).forall { case (flo, fhi) => fhi >= lo && flo <= hi }
-    }
+    val snap = current(table)
+    val shs = snap.shards.map(shard(table, _))
+    val all = shs.flatMap(_.files)
+    val st = shs.flatMap(_.stats).map(f => f.file -> f).toMap
+    val keep = all.filter(n => st.get(n).forall(f => f.hi >= lo && f.lo <= hi))
     val df =
-      if (keep.isEmpty) readVersion(s, table, v).limit(0)
-      else minusTombstones(s, table, v, readParquet(s, table, keep))
+      if (keep.isEmpty) readSnapshot(s, table, snap).limit(0)
+      else minusTombstones(s, table, snap, readParquet(s, table, keep))
     (df, keep.size, all.size)
   }
 
@@ -563,24 +453,17 @@ object ManifestTable {
     * at 100 TB each poll reads only the new files, never the table.
     * Refuses windows containing a `merge` or `delete` commit (rows
     * changed in place — use [[readChangesCdc]] for the row-image
-    * read) and — ADVICE r11 — any manifest that predates the `added`
-    * field (a legacy commit must fail the incremental reader loudly,
-    * not silently contribute zero change rows). */
+    * read). */
   def readChanges(s: SparkSession, table: String,
                   fromV: Long, toV: Long): DataFrame = {
     require(fromV <= toV, s"bad window ($fromV, $toV]")
-    val vs = (fromV + 1) to toV
-    val legacy = vs.filterNot(v => jsonHasField(manifestTxt(table, v), "added"))
-    require(legacy.isEmpty,
-      s"window ($fromV, $toV] contains pre-changelog manifest(s) " +
-        s"${legacy.mkString(",")} without an `added` field — cannot " +
-        "resolve their change rows; re-commit or read snapshots")
-    val rowLevel = vs.filter(v => Set("merge", "delete")(kind(table, v)))
+    val snaps = ((fromV + 1) to toV).map(snapshot(table, _))
+    val rowLevel = snaps.filter(sn => Set("merge", "delete")(sn.kind))
     require(rowLevel.isEmpty,
       s"window ($fromV, $toV] contains merge/delete commit(s) " +
-        s"${rowLevel.mkString(",")} — rows changed in place; use " +
-        "readChangesCdc for the row-image read")
-    val names = vs.flatMap(added(table, _))
+        s"${rowLevel.map(_.version).mkString(",")} — rows changed in " +
+        "place; use readChangesCdc for the row-image read")
+    val names = snaps.flatMap(_.added)
     if (names.isEmpty) readVersion(s, table, toV).limit(0)
     else readParquet(s, table, names)
   }
@@ -601,28 +484,22 @@ object ManifestTable {
                      fromV: Long, toV: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
     require(fromV <= toV, s"bad window ($fromV, $toV]")
-    val vs = (fromV + 1) to toV
-    val parts = vs.flatMap { v =>
-      val k = kind(table, v)
-      val (pre, post) = cdcImages(table, v)
-      k match {
-        case "append" =>
-          val names = added(table, v)
-          if (names.isEmpty) Seq.empty
-          else Seq(readParquet(s, table, names).withColumn("op", lit("+")))
+    def images(names: Seq[String], op: String): Seq[DataFrame] =
+      if (names.isEmpty) Seq.empty
+      else Seq(readParquet(s, table, names).withColumn("op", lit(op)))
+    val parts = ((fromV + 1) to toV).map(snapshot(table, _)).flatMap { sn =>
+      sn.kind match {
+        case "append" => images(sn.added, "+")
         case "rewrite" => Seq.empty
-        case "merge" | "delete" =>
-          require(pre.nonEmpty || post.nonEmpty,
-            s"$k commit $v captured no CDC row images — window " +
+        case k @ ("merge" | "delete") =>
+          require(sn.cdcPre.nonEmpty || sn.cdcPost.nonEmpty,
+            s"$k commit ${sn.version} captured no CDC row images — window " +
               s"($fromV, $toV] cannot be read incrementally; " +
               "re-run the op with image capture or read snapshots")
-          (if (pre.isEmpty) Seq.empty
-           else Seq(readParquet(s, table, pre).withColumn("op", lit("-")))) ++
-          (if (post.isEmpty) Seq.empty
-           else Seq(readParquet(s, table, post).withColumn("op", lit("+"))))
+          images(sn.cdcPre, "-") ++ images(sn.cdcPost, "+")
         case other =>
           throw new IllegalArgumentException(
-            s"unknown commit kind '$other' at version $v")
+            s"unknown commit kind '$other' at version ${sn.version}")
       }
     }
     if (parts.isEmpty)
@@ -654,9 +531,9 @@ object ManifestTable {
             key: String, numInsertFiles: Int = 1,
             captureImages: Boolean = true): Long = {
     import org.apache.spark.sql.functions.input_file_name
-    val v = currentVersion(table)
-    val cur = files(table, v)
-    val target = readVersion(s, table, v)
+    val prev = current(table)
+    val cur = filesOf(table, prev)
+    val target = readSnapshot(s, table, prev)
     val src = source.select(target.columns.map(col).toSeq: _*)
       .localCheckpoint() // one source evaluation feeds all consumers
     val srcKeys = src.select(col(key)).distinct()
@@ -672,18 +549,17 @@ object ManifestTable {
       .collect().map(r => Paths.get(
         new java.net.URI(r.getString(0)).getPath).getFileName.toString)
       .toSet
-    require(touched.subsetOf(cur.toSet),
-      s"merge resolved files outside snapshot $v: ${touched -- cur.toSet}")
+    require(touched.subsetOf(cur.toSet), s"merge resolved files outside " +
+      s"snapshot ${prev.version}: ${touched -- cur.toSet}")
     val touchedDf =
       if (touched.isEmpty) target.limit(0)
-      else minusTombstones(s, table, v,
+      else minusTombstones(s, table, prev,
         readParquet(s, table, touched.toSeq))
     // survivors of the touched files + ALL source rows (replacements
     // and inserts alike) — exactly-once per key by construction
     val rewritten = touchedDf.join(srcKeys, Seq(key), "left_anti")
       .unionByName(src)
       .repartition(math.max(math.max(touched.size, numInsertFiles), 1))
-    val (tf, tk) = tombstones(table, v)
     // the survivor rewrite, both CDC image captures and the tombstone
     // scrub are INDEPENDENT jobs over already-materialized inputs (the
     // checkpointed source + the touched files) — run them concurrently
@@ -702,6 +578,7 @@ object ManifestTable {
       if (!captureImages) Seq.empty[String]
       else stageIn(src.coalesce(1), table, prefix = "cdcpost")
     // scrub source keys from live tombstones (upsert owns the key)
+    val (tf, tk) = (prev.tombstones, prev.tkey)
     val scrubTombs = () =>
       if (tf.isEmpty) (tf, tk)
       else {
@@ -716,25 +593,14 @@ object ManifestTable {
       () => stageData(), () => stagePre(), () => stagePost(),
       () => scrubTombs()))
     val staged = results(0).asInstanceOf[Seq[String]]
-    val cdcPre = results(1).asInstanceOf[Seq[String]]
-    val cdcPost = results(2).asInstanceOf[Seq[String]]
     val (tf2, tk2) = results(3).asInstanceOf[(Seq[String], Option[String])]
-    // untouched files keep their shards (and stats); shards that lost
-    // files get survivor replacements; rewritten files carry no stats
-    // (safe: statless files are never pruned)
-    val keptShards = shards(table, v).flatMap { sh =>
-      val fs = shardFiles(table, sh)
-      if (fs.forall(f => !touched(f))) Some(sh)
-      else {
-        val keep = fs.filterNot(touched)
-        if (keep.isEmpty) None
-        else Some(writeShard(table, keep,
-          shardStats(table, sh).view.filterKeys(keep.toSet).toMap))
-      }
-    }
-    val newShard = writeShard(table, staged, Map.empty)
-    commitSnapshot(table, v, keptShards :+ newShard, Seq.empty, "merge",
-      tf2, tk2, cdcPre, cdcPost, lastBatch(table, v))
+    // untouched files keep their shards (and stats); rewritten files
+    // carry no stats (safe: statless files are never pruned)
+    commit(table, prev.next("merge").copy(tombstones = tf2, tkey = tk2,
+      cdcPre = results(1).asInstanceOf[Seq[String]],
+      cdcPost = results(2).asInstanceOf[Seq[String]],
+      shards = without(table, prev.shards, touched) :+
+        writeShard(table, Shard(staged, Nil))))
   }
 
   /** Merge-on-read DELETE: commit a small KEY-TOMBSTONE file instead
@@ -753,10 +619,9 @@ object ManifestTable {
     * Returns the new version. */
   def delete(s: SparkSession, table: String, keys: DataFrame,
              key: String, capturePreImages: Boolean = true): Long = {
-    val v = currentVersion(table)
-    val (tf, tk) = tombstones(table, v)
-    require(tk.forall(_ == key),
-      s"delete key $key differs from live tombstone key ${tk.get}")
+    val prev = current(table)
+    require(prev.tkey.forall(_ == key),
+      s"delete key $key differs from live tombstone key ${prev.tkey.get}")
     val keyDf = keys.select(col(key)).distinct().localCheckpoint()
     // tombstone write ∥ pre-image capture: independent jobs over the
     // checkpointed key set (guide §2.6 — see merge)
@@ -767,12 +632,13 @@ object ManifestTable {
         else {
           // repartition(1): keep the table scan + semi join parallel,
           // single-file only at the write (see merge's image capture)
-          val preRows = readVersion(s, table, v)
+          val preRows = readSnapshot(s, table, prev)
             .join(keyDf.hint("broadcast"), Seq(key), "left_semi")
           stageIn(preRows.repartition(1), table, prefix = "cdcpre")
         })
-    commitSnapshot(table, v, shards(table, v), Seq.empty, "delete",
-      tf ++ tombFiles, Some(key), cdcPre, Seq.empty, lastBatch(table, v))
+    commit(table, prev.next("delete").copy(
+      tombstones = prev.tombstones ++ tombFiles, tkey = Some(key),
+      cdcPre = cdcPre))
   }
 
   // -------------------------------------------------------------- vacuum
@@ -792,45 +658,28 @@ object ManifestTable {
     def aged(p: Path): Boolean =
       Files.getLastModifiedTime(p).toMillis <= cutoff
     val vs = versions(table)
-    val kept = vs.takeRight(math.max(keepVersions, 1))
-    val referenced = kept.flatMap { v =>
-      val (tf, _) = tombstones(table, v)
-      val (pre, post) = cdcImages(table, v)
-      files(table, v) ++ tf ++ pre ++ post
-    }.toSet
+    val kept = vs.takeRight(math.max(keepVersions, 1)).map(snapshot(table, _))
+    val referenced = kept.flatMap(sn =>
+      filesOf(table, sn) ++ sn.tombstones ++ sn.cdcPre ++ sn.cdcPost).toSet
     listParts(Paths.get(table)).filterNot(referenced)
       .map(n => Paths.get(table, n)).filter(aged)
       .foreach(Files.delete)
     // crashed writers' stage residue, same age rule
-    val rootList = Files.list(Paths.get(table))
-    val stale =
-      try {
-        import scala.jdk.CollectionConverters._
-        rootList.iterator().asScala.toList.filter(p =>
-          p.getFileName.toString.startsWith("_stage-") && aged(p))
-      } finally rootList.close()
-    stale.foreach { dir =>
-      val w = Files.walk(dir)
-      try w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally w.close()
-    }
+    list(Paths.get(table))
+      .filter(p => p.getFileName.toString.startsWith("_stage-") && aged(p))
+      .foreach { dir =>
+        val w = Files.walk(dir)
+        try w.sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => Files.deleteIfExists(p))
+        finally w.close()
+      }
     vs.dropRight(math.max(keepVersions, 1))
       .foreach(v => Files.delete(manifestPath(table, v)))
     // shards referenced by no kept manifest (aged-out or replaced)
-    val liveShards = kept.flatMap(shards(table, _)).toSet
-    val mdir = manifestDir(table)
-    if (Files.isDirectory(mdir)) {
-      val l = Files.list(mdir)
-      val orphans =
-        try {
-          import scala.jdk.CollectionConverters._
-          l.iterator().asScala.toList.filter { p =>
-            val n = p.getFileName.toString
-            n.startsWith("shard-") && !liveShards(n) && aged(p)
-          }
-        } finally l.close()
-      orphans.foreach(Files.delete)
-    }
+    val liveShards = kept.flatMap(_.shards).toSet
+    list(manifestDir(table)).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("shard-") && !liveShards(n) && aged(p)
+    }.foreach(Files.delete)
   }
 }

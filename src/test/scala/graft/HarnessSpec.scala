@@ -2,7 +2,8 @@ package graft
 
 /** The harness's job log: each job keeps its own stages' tasks when jobs
   * overlap, the listener-bus drain leaves no task end behind, and a job
-  * without a description is labelled by its SQL execution. */
+  * without a description is labelled by its SQL execution, and a
+  * micro-batch job by a one-line form of its batch description. */
 class HarnessSpec extends SparkSpec {
 
   private def withLog(body: Harness.JobLog => Unit): Unit = {
@@ -64,6 +65,25 @@ class HarnessSpec extends SparkSpec {
       assert(jobs.nonEmpty)
       assert(!jobs.exists(_.desc.contains("CompletableFuture.java")), jobs.map(_.desc))
       assert(jobs.exists(j => j.sqlId.isDefined && j.desc.startsWith("save at Harness.scala")),
+        jobs.map(_.desc))
+    }
+  }
+
+  test("micro-batch jobs carry a one-line label naming their batch") {
+    import org.apache.spark.sql.functions.col
+    val base = Scratch.dir("hbatch").toString
+    val (in, schema) = streaming.Replay.fileEpochs(Tables.events(spark, sf),
+      Seq(col("event_id") % 2 === 0, col("event_id") % 2 === 1), base)
+    withLog { log =>
+      val since = System.currentTimeMillis()
+      streaming.Replay.runBatches(streaming.Replay.streamDf(spark, in, schema),
+        s"$base/ck") { (b, _) => b.count(); () }
+      Harness.drain(spark)
+      val jobs = log.jobs(since)
+      assert(jobs.nonEmpty)
+      assert(jobs.forall(j => j.desc.nonEmpty && !j.desc.contains("\n")), jobs.map(_.desc))
+      val batches = jobs.map(_.desc).filter(_.contains("batch = "))
+      assert(batches.exists(_.endsWith("batch = 0")) && batches.exists(_.endsWith("batch = 1")),
         jobs.map(_.desc))
     }
   }

@@ -86,12 +86,12 @@ class ManifestSpec extends SparkSpec {
     val (table, _, _, _, _) = freshTable()
     val delta = graft.operators.LayoutQueries.deltaFilesOf(table)
     // create + append record their files as `added`; OPTIMIZE none
-    assert(ManifestTable.added(table, 0).toSet ==
+    assert(ManifestTable.snapshot(table, 0).added.toSet ==
       ManifestTable.files(table, 0).toSet)
-    assert(ManifestTable.added(table, 1).toSet == delta)
+    assert(ManifestTable.snapshot(table, 1).added.toSet == delta)
     val v2 = ManifestTable.optimize(spark, table, delta, col("zkey"), 4)
-    assert(ManifestTable.kind(table, v2) == "rewrite")
-    assert(ManifestTable.added(table, v2).isEmpty)
+    assert(ManifestTable.snapshot(table, v2).kind == "rewrite")
+    assert(ManifestTable.snapshot(table, v2).added.isEmpty)
     // the OPTIMIZE window reads zero change rows; the append window
     // reads exactly the delta rows, through the rewrite
     assert(ManifestTable.readChanges(spark, table, 1, 2).count() == 0)
@@ -107,7 +107,7 @@ class ManifestSpec extends SparkSpec {
       .withColumn("l_extendedprice", col("l_extendedprice") * 2)
       .localCheckpoint()
     val v3 = ManifestTable.merge(spark, table, src, "l_orderkey")
-    assert(ManifestTable.kind(table, v3) == "merge")
+    assert(ManifestTable.snapshot(table, v3).kind == "merge")
     val e = intercept[IllegalArgumentException] {
       ManifestTable.readChanges(spark, table, 0, v3)
     }
@@ -343,12 +343,12 @@ class ManifestSpec extends SparkSpec {
     // an OPTIMIZE of ONLY the delta files replaces the delta shard and
     // carries the 64-file shard BY NAME — untouched shards are reused,
     // not rewritten (shard compaction mirrors data compaction)
-    val bigShardsBefore = ManifestTable.shards(big, 1).toSet
+    val bigShardsBefore = ManifestTable.snapshot(big, 1).shards.toSet
     val deltaFiles = ManifestTable.files(big, 1).toSet --
       ManifestTable.files(big, 0).toSet
     ManifestTable.optimize(spark, big, deltaFiles, c("o_orderkey"), 1,
       statCol = Some("o_orderkey"))
-    val bigShardsAfter = ManifestTable.shards(big, 2).toSet
+    val bigShardsAfter = ManifestTable.snapshot(big, 2).shards.toSet
     assert((bigShardsBefore intersect bigShardsAfter).nonEmpty,
       "untouched shards must be carried by name across OPTIMIZE")
   }
@@ -369,10 +369,11 @@ class ManifestSpec extends SparkSpec {
     val nVictimRows = victims.count()
     // the delete commits a tombstone — ZERO data files move
     val v1 = ManifestTable.delete(spark, table, victims, "o_orderkey")
-    assert(ManifestTable.kind(table, v1) == "delete")
+    assert(ManifestTable.snapshot(table, v1).kind == "delete")
     assert(ManifestTable.files(table, v1).toSet == preFiles,
       "a merge-on-read delete must not rewrite any data file")
-    val (tf, tk) = ManifestTable.tombstones(table, v1)
+    val snap1 = ManifestTable.snapshot(table, v1)
+    val (tf, tk) = (snap1.tombstones, snap1.tkey)
     assert(tf.nonEmpty && tk.contains("o_orderkey"))
     // reads suppress the keys; time travel to v0 still sees them
     assert(ManifestTable.read(spark, table).count() == total - nVictimRows)
@@ -393,7 +394,7 @@ class ManifestSpec extends SparkSpec {
     val v3 = ManifestTable.currentVersion(table)
     val v4 = ManifestTable.optimize(spark, table,
       ManifestTable.files(table, v3).toSet, c("o_orderkey"), 4)
-    assert(ManifestTable.tombstones(table, v4)._1.isEmpty,
+    assert(ManifestTable.snapshot(table, v4).tombstones.isEmpty,
       "a full rewrite must clear the tombstones")
     assert(ManifestTable.read(spark, table).count() == total - nVictimRows)
     assert(ManifestTable.read(spark, table)
@@ -402,7 +403,7 @@ class ManifestSpec extends SparkSpec {
     // tombstones — the key becomes visible with the source's row
     val v5 = ManifestTable.delete(spark, table,
       o.filter(c("o_orderkey") % 11 === l(1)), "o_orderkey")
-    assert(ManifestTable.tombstones(table, v5)._1.nonEmpty)
+    assert(ManifestTable.snapshot(table, v5).tombstones.nonEmpty)
     val resurrect = o.filter(c("o_orderkey") % 11 === l(1))
       .dropDuplicates("o_orderkey")
       .withColumn("o_totalprice", l(42.0))
@@ -484,12 +485,48 @@ class ManifestSpec extends SparkSpec {
     assert(ManifestTable.appendBatch(chunk(1), table, batchId = 1).isEmpty,
       "a replayed batch id must be skipped")
     assert(ManifestTable.appendBatch(chunk(2), table, batchId = 2).nonEmpty)
-    assert(ManifestTable.lastBatch(table,
-      ManifestTable.currentVersion(table)) == 2)
+    assert(ManifestTable.snapshot(table,
+      ManifestTable.currentVersion(table)).batch == 2)
     assert(ManifestTable.read(spark, table).count() == o.count(),
       "exactly-once: no row lost, none duplicated")
     // each batch window reads exactly its own rows
     val w1 = ManifestTable.readChanges(spark, table, 1, 2)
     assert(w1.count() == chunk(1).count())
+  }
+
+  test("a statCol without integer footer statistics is refused before any commit") {
+    val table = s"${Scratch.dir("mstatcol")}/table"
+    val o = graft.Tables.orders(spark, sf)
+      .select(col("o_orderkey"), col("o_orderstatus"))
+    val e = intercept[IllegalArgumentException] {
+      ManifestTable.create(o.repartition(2), table,
+        statCol = Some("o_orderstatus"))
+    }
+    assert(e.getMessage.contains("o_orderstatus") &&
+      e.getMessage.contains(".parquet"), e.getMessage)
+    assert(ManifestTable.versions(table).isEmpty,
+      "a refused create must commit nothing")
+  }
+
+  test("strict manifest parse: a missing field or the inline-files shape is refused") {
+    val shapes = Seq(
+      // every field but `added`
+      """{"version":1,"kind":"append","batch":-1,"tombstones":[],""" +
+        """"tkey":null,"cdcPre":[],"cdcPost":[],"shards":[]}""",
+      // file names inline in the manifest, no shards
+      """{"version":1,"files":["part-00000.parquet"]}""")
+    shapes.foreach { txt =>
+      val dir = java.nio.file.Paths.get(Scratch.dir("mstrict").toString, "_manifests")
+      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.writeString(dir.resolve("manifest-000000001.json"), txt)
+      val table = dir.getParent.toString
+      val reads = Seq[() => Any](
+        () => ManifestTable.read(spark, table),
+        () => ManifestTable.readChanges(spark, table, 0, 1))
+      reads.foreach { r =>
+        val e = intercept[IllegalArgumentException](r())
+        assert(e.getMessage.contains("version 1 "), e.getMessage)
+      }
+    }
   }
 }
