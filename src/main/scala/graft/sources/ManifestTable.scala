@@ -127,7 +127,7 @@ object ManifestTable {
   private val genesis =
     Snapshot(-1L, "append", -1L, Nil, Nil, None, Nil, Nil, Nil)
 
-  private lazy val json = JsonMapper.builder().addModule(DefaultScalaModule)
+  private val json = JsonMapper.builder().addModule(DefaultScalaModule)
     .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES).build()
 
   private def manifestDir(table: String): Path =
