@@ -1,14 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** bpe_apply_merges(toks) — apply a RANKED list of BPE merges to a
   * token array with the exact index-scan greedy fusion, fused into one
-  * native loop (r13).
+  * loop (r13).
   *
   * Replaces `merges.foldLeft(df)((d, m) => d.withColumn("toks",
   * bpeFuse(...)))` — R nested `aggregate(...)` higher-order functions,
@@ -25,28 +24,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * output. Null elements never match and pass through; a null array
   * is null. Values are strings — no numeric contract to replicate. */
 case class BpeApplyMerges(child: Expression, merges: Array[(String, String)])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
+  override def inputTypes = Seq(Kernel.Strings)
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bpe_apply_merges needs an array<string>, got ${other.simpleString}")
-    }
 
   @transient private lazy val table: Array[(UTF8String, UTF8String, UTF8String)] =
     merges.map { case (a, b) =>
       (UTF8String.fromString(a), UTF8String.fromString(b),
         UTF8String.fromString(a + b)) }
 
-  /** Public so generated code can call back into this instance. */
-  def compute(v: ArrayData): ArrayData = {
+  def compute(v: ArrayData): Any = {
     var cur = new Array[UTF8String](v.numElements())
     var i = 0
     while (i < cur.length) {
@@ -72,15 +60,6 @@ case class BpeApplyMerges(child: Expression, merges: Array[(String, String)])
     }
     new GenericArrayData(cur.asInstanceOf[Array[Any]])
   }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val self = ctx.addReferenceObj("bpeApplyMerges", this,
-        classOf[BpeApplyMerges].getName)
-      s"${ev.value} = $self.compute($a);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): BpeApplyMerges =
     copy(child = newChild)

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** Fused coarse-quantizer kernels (r12 optimization round).
   *
@@ -17,36 +16,26 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * double[][] instead, so the plan node is one leaf.
   *
   * Numeric contract — bit-identical to the composition each replaces:
-  * per-centroid similarity accumulates dot/na/nb in index order and
-  * divides dot / (√na·√nb) (CosineSimilarity's exact arithmetic); a
-  * zero-norm/length-mismatch similarity is "null" and loses to every
-  * real one (struct-ordering null-first semantics); ties break to the
-  * LOWEST centroid index (the negIdx trick's order).
+  * per-centroid similarity is [[Loops.cosine]] (CosineSimilarity's
+  * exact arithmetic); a zero-norm/length-mismatch similarity is "null"
+  * and loses to every real one (struct-ordering null-first semantics);
+  * ties break to the LOWEST centroid index (the negIdx trick's order).
   */
-private[functions] object CentroidKernel {
-  /** (similarity or NegativeInfinity-for-null) per centroid. Real
-    * cosines are ≥ −1 > −∞, so −∞ reproduces null-loses ordering. */
-  def sims(a: ArrayData, isFloat: Boolean,
-           cents: Array[Array[Double]]): Array[Double] = {
-    val n = a.numElements()
-    val out = new Array[Double](cents.length)
+private[functions] trait CentroidKernel extends UnaryKernel {
+  def cents: Array[Array[Double]]
+
+  @transient private lazy val centData: Array[ArrayData] =
+    cents.map(c => UnsafeArrayData.fromPrimitiveArray(c): ArrayData)
+
+  override def inputTypes = Seq(Kernel.Vec)
+
+  /** The cosine of `a` and each centroid, −∞ where undefined. */
+  protected def sims(a: ArrayData): Array[Double] = {
+    val af = floatAt(0)
+    val out = new Array[Double](centData.length)
     var j = 0
-    while (j < cents.length) {
-      val c = cents(j)
-      if (c.length != n || n == 0) out(j) = Double.NegativeInfinity
-      else {
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < n) {
-          val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
-          val y = c(i)
-          dot += x * y; na += x * x; nb += y * y
-          i += 1
-        }
-        out(j) =
-          if (na == 0.0 || nb == 0.0) Double.NegativeInfinity
-          else dot / (math.sqrt(na) * math.sqrt(nb))
-      }
+    while (j < out.length) {
+      out(j) = Loops.cosine(a, af, centData(j), false)
       j += 1
     }
     out
@@ -56,7 +45,7 @@ private[functions] object CentroidKernel {
 /** nearest_centroid(vec) → the argmax-cosine centroid index (ties →
   * lowest index) — replaces `-array_max(array(struct(cos, -i)…)).negIdx`. */
 case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
-    extends UnaryExpression {
+    extends CentroidKernel {
 
   // Pure function, marked non-deterministic ON PURPOSE (optimization
   // guide §4.4): downstream joins on the cluster column made
@@ -66,24 +55,9 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
   override lazy val deterministic: Boolean = false
 
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_centroid needs a float/double array, got ${other.simpleString}")
-    }
-
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  /** Public so generated code can call back into this instance. */
-  def compute(v: ArrayData): Int = {
-    val s = CentroidKernel.sims(v, elemIsFloat, cents)
+  def compute(v: ArrayData): Any = {
+    val s = sims(v)
     var best = Double.NegativeInfinity; var bestJ = 0
     var j = 0
     while (j < s.length) {
@@ -92,15 +66,6 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
     }
     bestJ
   }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val self = ctx.addReferenceObj("nearestCentroid", this,
-        classOf[NearestCentroid].getName)
-      s"${ev.value} = $self.compute($a);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)
@@ -112,7 +77,7 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
   * `transform(reverse(array_sort(array(struct(cos, -i)…))), -negIdx)`;
   * callers slice the first nprobe. */
 case class RankedCentroids(child: Expression, cents: Array[Array[Double]])
-    extends UnaryExpression {
+    extends CentroidKernel {
 
   // Pure function, marked non-deterministic ON PURPOSE (optimization
   // guide §4.4) — same rationale as NearestCentroid/PqEncode: the
@@ -121,23 +86,9 @@ case class RankedCentroids(child: Expression, cents: Array[Array[Double]])
   override lazy val deterministic: Boolean = false
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ranked_centroids needs a float/double array, got ${other.simpleString}")
-    }
-
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  def compute(v: ArrayData): ArrayData = {
-    val s = CentroidKernel.sims(v, elemIsFloat, cents)
+  def compute(v: ArrayData): Any = {
+    val s = sims(v)
     val idx = Array.range(0, s.length)
     // insertion sort by (sim desc, idx asc) — K is a coarse-quantizer
     // constant (≤256, guarded upstream)
@@ -154,15 +105,6 @@ case class RankedCentroids(child: Expression, cents: Array[Array[Double]])
     }
     new GenericArrayData(idx)
   }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val self = ctx.addReferenceObj("rankedCentroids", this,
-        classOf[RankedCentroids].getName)
-      s"${ev.value} = $self.compute($a);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): RankedCentroids =
     copy(child = newChild)

@@ -1,18 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** cosine_similarity(a, b) over two float/double arrays as a native
-  * codegen'd Catalyst expression.
+/** cosine_similarity(a, b) over two float/double arrays as one fused
+  * kernel ([[Loops.cosine]]).
   *
   * The interpreted composition `aggregate(zip_with(a,b,_*_),0d,_+_)`
   * allocates an intermediate array and evaluates three lambdas per
-  * element per pair; this expression is a single fused primitive loop
-  * inside whole-stage codegen — the hot path for kNN / ANN / near-dup
-  * over millions of candidate pairs.
+  * element per pair; this expression is a single primitive loop — the
+  * hot path for kNN / ANN / near-dup over millions of candidate pairs.
   *
   * Numeric contract: accumulates dot and both norms as doubles in
   * index order (left fold), identical to the composition it replaces
@@ -23,70 +21,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `desc` and silently corrupt top-k results.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
+  override def inputTypes = Seq(Kernel.Vec, Kernel.Vec)
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // null on malformed/zero-norm input
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"cosine_similarity needs two float/double arrays, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
+
+  def compute(a: ArrayData, b: ArrayData): Any = {
+    val s = Loops.cosine(a, floatAt(0), b, floatAt(1))
+    if (s == Double.NegativeInfinity) null else s
   }
 
-  private def elemIsFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n == 0 || b.numElements() != n) return null
-    val af = elemIsFloat(left); val bf = elemIsFloat(right)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (af) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (bf) b.getFloat(i).toDouble else b.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) null
-    else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val getA = if (elemIsFloat(left)) s"(double)$a.getFloat($i)" else s"$a.getDouble($i)"
-      val getB = if (elemIsFloat(right)) s"(double)$b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |if ($n == 0 || $b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = $getA; double $y = $getB;
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if ($na == 0.0 || $nb == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |  }
-         |}
-       """.stripMargin
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Scalar functions the reference ships that Spark lacks as built-ins
   * (SURVEY §2.5). Composed from Catalyst built-ins where possible so
-  * they stay codegen'd; `hash_code` is a native Expression.
+  * they stay codegen'd; `hash_code` is a native Expression, and the
+  * vector and text kernels are fused Scala loops on one shared wiring
+  * ([[Kernel]]).
   *
   * Reference registry: `flink-table-planner-blink/.../functions/sql/
   * FlinkSqlOperatorTable.java` — SPLIT_INDEX:365, IS_DECIMAL:276,
@@ -29,8 +31,8 @@ object GraftFunctions {
   /** IS_ALPHA(str) — all characters letters, non-empty. */
   def is_alpha(s: Column): Column = s.isNotNull && s.rlike("^[A-Za-z]+$")
 
-  /** cosine_similarity(a, b) — native codegen expression (hot path for
-    * kNN/ANN/near-dup; bit-identical to the HOF composition). */
+  /** cosine_similarity(a, b) — fused kernel, one primitive loop (hot
+    * path for kNN/ANN/near-dup; bit-identical to the HOF composition). */
   def cosine_similarity(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(CosineSimilarity(
       org.apache.spark.sql.GraftSqlBridge.expression(a),
@@ -49,14 +51,14 @@ object GraftFunctions {
       org.apache.spark.sql.GraftSqlBridge.expression(v), cents))
 
   /** pq_encode(vec) — fused PQ encoding against a fixed codebook
-    * (M×K×dsub), the IVF+PQ hot path as one native primitive loop
+    * (M×K×dsub), the IVF+PQ hot path as one fused primitive loop
     * (bit-identical to the aggregate(zip_with) composition). */
   def pq_encode(v: Column, codebook: Array[Array[Array[Double]]]): Column =
     org.apache.spark.sql.GraftSqlBridge.column(PqEncode(
       org.apache.spark.sql.GraftSqlBridge.expression(v), codebook))
 
   /** pq_lut(pe) — per-(subspace, codeword) raw dots + codeword norm
-    * terms as one native loop (the probe-side ADC LUT; pass
+    * terms as one fused loop (the probe-side ADC LUT; pass
     * cbNorm = null when the caller has no norm term). */
   def pq_lut(v: Column, codebook: Array[Array[Array[Double]]],
              cbNorm: Array[Array[Long]]): Column =
@@ -95,7 +97,7 @@ object GraftFunctions {
       org.apache.spark.sql.GraftSqlBridge.expression(a)))
 
   /** bpe_apply_merges(toks) — ranked BPE merge list applied with the
-    * exact index-scan greedy fusion, one native loop (replaces nested
+    * exact index-scan greedy fusion, one fused loop (replaces nested
     * interpreted aggregate() folds in the q286/q290 tokenizer family). */
   def bpe_apply_merges(toks: Column, merges: Array[(String, String)]): Column =
     org.apache.spark.sql.GraftSqlBridge.column(BpeApplyMerges(

@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** pq_encode(vec) — product-quantization encoding of one vector against
   * a fixed codebook (M subspaces × K codewords × dsub dims), as ONE
-  * fused native expression returning the M codes as array<int>.
+  * fused kernel returning the M codes as array<int>.
   *
   * Why an Expression and not column combinators (r12 optimization
   * round): the encode is the IVF+PQ hot path — M·K L2 distances per
@@ -17,9 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * element_at/× /+ chains it becomes a several-thousand-node expression
   * whose generated method blows past the JVM's JIT limits and runs as
   * interpreted BYTECODE (measured 15-40× slower than the HOF form).
-  * A fused primitive loop with the codebook as a referenced
-  * double[][][] is the shape the JIT compiles well — the
-  * CosineSimilarity precedent.
+  * A primitive loop ([[Loops.pqCodes]]) with the codebook as a
+  * referenced double[][][] is the shape the JIT compiles well.
   *
   * Numeric contract (bit-identical to the composition it replaces, so
   * the q211/q268-family oracle binds hold):
@@ -36,7 +34,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   *    where a silent code 0 would not.
   */
 case class PqEncode(child: Expression, codebook: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   // Pure function, marked non-deterministic ON PURPOSE (optimization
   // guide §4.4): the posexplode over this array makes the optimizer
@@ -46,94 +44,10 @@ case class PqEncode(child: Expression, codebook: Array[Array[Array[Double]]])
   // on the materialized column instead; values are identical either way.
   override lazy val deterministic: Boolean = false
 
+  override def inputTypes = Seq(Kernel.Vec)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_encode needs a float/double array, got ${other.simpleString}")
-    }
-
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  @transient private lazy val dsub = codebook(0)(0).length
-
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val m = codebook.length
-    if (a.numElements() < m * dsub) return null
-    val af = elemIsFloat
-    val codes = new Array[Int](m)
-    var mi = 0
-    while (mi < m) {
-      val cbm = codebook(mi)
-      val off = mi * dsub
-      var bestD = 0.0; var bestK = 0
-      var k = 0
-      while (k < cbm.length) {
-        val cw = cbm(k)
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val x = if (af) a.getFloat(off + i).toDouble else a.getDouble(off + i)
-          val d = x - cw(i)
-          acc += d * d
-          i += 1
-        }
-        if (k == 0 || java.lang.Double.compare(acc, bestD) < 0) {
-          bestD = acc; bestK = k
-        }
-        k += 1
-      }
-      codes(mi) = bestK
-      mi += 1
-    }
-    new GenericArrayData(codes)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cb = ctx.addReferenceObj("pqCodebook", codebook, "double[][][]")
-      val codes = ctx.freshName("codes")
-      val m = ctx.freshName("m"); val k = ctx.freshName("k")
-      val i = ctx.freshName("i"); val off = ctx.freshName("off")
-      val cbm = ctx.freshName("cbm"); val cw = ctx.freshName("cw")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      val bestD = ctx.freshName("bestD"); val bestK = ctx.freshName("bestK")
-      val get = if (elemIsFloat) s"(double)$a.getFloat($off + $i)"
-                else s"$a.getDouble($off + $i)"
-      s"""
-         |if ($a.numElements() < ${codebook.length * dsub}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $codes = new int[${codebook.length}];
-         |  for (int $m = 0; $m < ${codebook.length}; $m++) {
-         |    double[][] $cbm = $cb[$m];
-         |    int $off = $m * $dsub;
-         |    double $bestD = 0.0; int $bestK = 0;
-         |    for (int $k = 0; $k < $cbm.length; $k++) {
-         |      double[] $cw = $cbm[$k];
-         |      double $acc = 0.0;
-         |      for (int $i = 0; $i < $dsub; $i++) {
-         |        double $d = $get - $cw[$i];
-         |        $acc += $d * $d;
-         |      }
-         |      if ($k == 0 || java.lang.Double.compare($acc, $bestD) < 0) {
-         |        $bestD = $acc; $bestK = $k;
-         |      }
-         |    }
-         |    $codes[$m] = $bestK;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-         |}
-       """.stripMargin
-    })
+  def compute(a: ArrayData): Any = Loops.pqCodes(a, floatAt(0), codebook, null)
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
     copy(child = newChild)

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** pq_encode_residual(vec, cluster) — PQ encoding of the RESIDUAL
   * `vec − centroid(cluster)` against a fixed codebook, fused into one
@@ -18,13 +17,14 @@ import org.apache.spark.sql.types._
   * Numeric contract (bit-identical to that composition): the residual
   * element is the double subtraction `x_i − c_i` (zip_with order), and
   * the encode accumulates `((0.0 + (r₁−w₁)²) + (r₂−w₂)²) + …` with
-  * argmin ties → lowest k — PqEncode's exact rules. Null vec or null
-  * cluster → null; a vec shorter than M·dsub or mismatching the
-  * centroid width → null (unreachable on fixed-width tables). */
+  * argmin ties → lowest k — PqEncode's exact rules ([[Loops.pqCodes]]).
+  * Null vec or null cluster → null; a cluster outside [0, K) → null; a
+  * vec shorter than M·dsub or mismatching the centroid width → null
+  * (unreachable on fixed-width tables). */
 case class PqEncodeResidual(left: Expression, right: Expression,
                             cents: Array[Array[Double]],
                             codebook: Array[Array[Array[Double]]])
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   // Pure function, marked non-deterministic ON PURPOSE (optimization
   // guide §4.4) — same rationale as PqEncode: stops the posexplode's
@@ -32,72 +32,16 @@ case class PqEncodeResidual(left: Expression, right: Expression,
   // the scan. Values are identical either way.
   override lazy val deterministic: Boolean = false
 
+  override def inputTypes = Seq(Kernel.Vec, Kernel.Int)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_encode_residual needs (float/double array, int), got $other")
-    }
-
-  private def elemIsFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  @transient private lazy val dsub = codebook(0)(0).length
-
-  /** Public so generated code can call back into this instance. */
-  def compute(v: ArrayData, cluster: Int): ArrayData = {
-    val m = codebook.length
-    if (cluster < 0 || cluster >= cents.length) return null
-    val c = cents(cluster)
-    if (v.numElements() < m * dsub || c.length != v.numElements()) return null
-    val af = elemIsFloat
-    val codes = new Array[Int](m)
-    var mi = 0
-    while (mi < m) {
-      val cbm = codebook(mi)
-      val off = mi * dsub
-      var bestD = 0.0; var bestK = 0
-      var k = 0
-      while (k < cbm.length) {
-        val cw = cbm(k)
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val x = if (af) v.getFloat(off + i).toDouble
-                  else v.getDouble(off + i)
-          val d = (x - c(off + i)) - cw(i)
-          acc += d * d
-          i += 1
-        }
-        if (k == 0 || java.lang.Double.compare(acc, bestD) < 0) {
-          bestD = acc; bestK = k
-        }
-        k += 1
-      }
-      codes(mi) = bestK
-      mi += 1
-    }
-    new GenericArrayData(codes)
-  }
+  def compute(v: ArrayData, cluster: Int): Any =
+    if (cluster < 0 || cluster >= cents.length ||
+        cents(cluster).length != v.numElements()) null
+    else Loops.pqCodes(v, floatAt(0), codebook, cents(cluster))
 
   override def nullSafeEval(v: Any, cl: Any): Any =
     compute(v.asInstanceOf[ArrayData], cl.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, c) => {
-      val self = ctx.addReferenceObj("pqEncodeResidual", this,
-        classOf[PqEncodeResidual].getName)
-      s"""
-         |${ev.value} = $self.compute($a, $c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqEncodeResidual =

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * literals that the optimizer re-folds on each of the 30-40 driver
   * actions an index-maintenance query runs. These expressions hold the
   * codebook/centroids as referenced objects and run the dots as one
-  * primitive loop.
+  * primitive loop ([[Loops.dot]]).
   *
   * Numeric contract: each dot accumulates `acc = (0.0 + x₁·y₁) + x₂·y₂
   * + …` in index order — exactly `aggregate(zip_with(a, b, ×), 0.0, +)`.
@@ -28,14 +28,15 @@ import org.apache.spark.sql.types._
   */
 
 /** pq_lut(pe) → array<struct<m:int, k:int, dot:double, cn:long>> — one
-  * entry per (subspace, codeword): the raw subvector·codeword dot plus
-  * the precomputed codeword norm term (0 when the caller supplies
-  * none). Null when the probe vector is shorter than M·dsub (the
-  * literal composition would produce nulls mid-expression; unreachable
-  * on the fixed-width embedding tables). */
+  * entry per (subspace, codeword): the raw subvector·codeword dot
+  * ([[Loops.dot]]) plus the precomputed codeword norm term (0 when the
+  * caller supplies none). Null when the probe vector is shorter than
+  * M·dsub (the literal composition would produce nulls mid-expression;
+  * unreachable on the fixed-width embedding tables); a longer vector
+  * gives the LUT of its first M·dsub elements. */
 case class PqLut(child: Expression, codebook: Array[Array[Array[Double]]],
                  cbNorm: Array[Array[Long]])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   private val structType = StructType(Seq(
     StructField("m", IntegerType, nullable = false),
@@ -43,47 +44,24 @@ case class PqLut(child: Expression, codebook: Array[Array[Array[Double]]],
     StructField("dot", DoubleType, nullable = false),
     StructField("cn", LongType, nullable = false)))
 
+  override def inputTypes = Seq(Kernel.Vec)
   override def dataType: DataType = ArrayType(structType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_lut needs a float/double array, got ${other.simpleString}")
-    }
-
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   @transient private lazy val dsub = codebook(0)(0).length
 
-  /** Public so generated code can call back into this instance. */
-  def compute(a: ArrayData): ArrayData = {
+  def compute(a: ArrayData): Any = {
     val m = codebook.length
     val kk = codebook(0).length
     if (a.numElements() < m * dsub) return null
-    val af = elemIsFloat
+    val af = floatAt(0)
     val rows = new Array[Any](m * kk)
     var mi = 0
     while (mi < m) {
-      val cbm = codebook(mi)
-      val off = mi * dsub
       var k = 0
       while (k < kk) {
-        val cw = cbm(k)
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val x = if (af) a.getFloat(off + i).toDouble else a.getDouble(off + i)
-          acc += x * cw(i)
-          i += 1
-        }
         val cn = if (cbNorm == null) 0L else cbNorm(mi)(k)
-        rows(mi * kk + k) = InternalRow(mi, k, acc, cn)
+        rows(mi * kk + k) =
+          InternalRow(mi, k, Loops.dot(a, af, mi * dsub, codebook(mi)(k)), cn)
         k += 1
       }
       mi += 1
@@ -91,79 +69,36 @@ case class PqLut(child: Expression, codebook: Array[Array[Array[Double]]],
     new GenericArrayData(rows)
   }
 
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val self = ctx.addReferenceObj("pqLut", this, classOf[PqLut].getName)
-      s"""
-         |${ev.value} = $self.compute($a);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
   override protected def withNewChildInternal(newChild: Expression): PqLut =
     copy(child = newChild)
   override def prettyName: String = "pq_lut"
 }
 
-/** centroid_dots(pe) → array<double> of the raw pe·centroid dots, one
-  * per coarse centroid (index order) — replaces the per-row
-  * `aggregate(zip_with(pe, element_at(<K×dim literal>, cluster+1), ×))`
-  * of the residual search's p·c term; callers element_at by cluster.
-  * A centroid whose length differs from pe yields NaN (the HOF
-  * composition would yield null — both unreachable on fixed-width
-  * tables, and NaN survives the round/cast pipeline loudly). */
+/** centroid_dots(pe) → array<double> of the raw pe·centroid dots
+  * ([[Loops.dot]]), one per coarse centroid (index order) — replaces
+  * the per-row `aggregate(zip_with(pe, element_at(<K×dim literal>,
+  * cluster+1), ×))` of the residual search's p·c term; callers
+  * element_at by cluster. A centroid whose length differs from pe
+  * yields NaN (the HOF composition would yield null — both unreachable
+  * on fixed-width tables, and NaN survives the round/cast pipeline
+  * loudly). */
 case class CentroidDots(child: Expression, cents: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
+  override def inputTypes = Seq(Kernel.Vec)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"centroid_dots needs a float/double array, got ${other.simpleString}")
-    }
-
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  def compute(a: ArrayData): ArrayData = {
+  def compute(a: ArrayData): Any = {
     val n = a.numElements()
-    val af = elemIsFloat
+    val af = floatAt(0)
     val out = new Array[Double](cents.length)
     var j = 0
     while (j < cents.length) {
-      val c = cents(j)
-      if (c.length != n) out(j) = Double.NaN
-      else {
-        var acc = 0.0
-        var i = 0
-        while (i < n) {
-          val x = if (af) a.getFloat(i).toDouble else a.getDouble(i)
-          acc += x * c(i)
-          i += 1
-        }
-        out(j) = acc
-      }
+      out(j) = if (cents(j).length != n) Double.NaN else Loops.dot(a, af, 0, cents(j))
       j += 1
     }
     new GenericArrayData(out)
   }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val self = ctx.addReferenceObj("centroidDots", this,
-        classOf[CentroidDots].getName)
-      s"${ev.value} = $self.compute($a);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): CentroidDots =
     copy(child = newChild)

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * only, and the fused form returns (0, 0) for it — the join-key
   * semantics differ only for rows that cannot occur there.
   */
-case class SymbolEntropy(child: Expression) extends UnaryExpression {
+case class SymbolEntropy(child: Expression) extends UnaryKernel {
 
   // Pure function, marked non-deterministic ON PURPOSE (optimization
   // guide §4.4): q299 filters on fields of this struct, and predicate
@@ -44,23 +43,12 @@ case class SymbolEntropy(child: Expression) extends UnaryExpression {
   // pushdown; evaluation is value-identical either way.
   override lazy val deterministic: Boolean = false
 
+  override def inputTypes = Seq(Kernel.Strings)
   override def dataType: DataType = StructType(Seq(
     StructField("h_micro", LongType, nullable = false),
     StructField("n_distinct", LongType, nullable = false)))
-  override def nullable: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"symbol_entropy needs an array<string>, got ${other.simpleString}")
-    }
-
-  /** Public so generated code can call back into this instance. */
-  def compute(a: ArrayData): InternalRow = {
+  def compute(a: ArrayData): Any = {
     val n = a.numElements()
     val counts = new java.util.HashMap[UTF8String, java.lang.Long](
       math.min(math.max(n * 2, 16), 1 << 16))
@@ -87,15 +75,6 @@ case class SymbolEntropy(child: Expression) extends UnaryExpression {
     }
     InternalRow(h, counts.size().toLong)
   }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val self = ctx.addReferenceObj("symbolEntropy", this,
-        classOf[SymbolEntropy].getName)
-      s"${ev.value} = $self.compute($a);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): SymbolEntropy =
     copy(child = newChild)

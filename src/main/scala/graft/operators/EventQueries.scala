@@ -38,11 +38,6 @@ object EventQueries extends QuerySet {
   private def sumCents =
     expr("sum(cast(round(value * 100) as bigint))")
 
-  // Oracle-side CTE: same ns→µs truncation the Spark loader applies.
-  private val evCte =
-    """WITH ev AS (SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts,
-      |            user_id, event_type, value, props FROM events)""".stripMargin
-
   val queries: Map[String, Q] = Map(
     // Tumbling event-time window (TumblingEventTimeWindows:46).
     // All value sums here go through exact integer cents

@@ -11,20 +11,6 @@ import graft.Tables
   */
 object ExtraQueries extends QuerySet {
 
-  // Exact revenue: l_extendedprice (2 decimals) × (1-l_discount)
-  // (2 decimals) has exactly 4 decimals → ×10⁴ is integral, and an
-  // integer sum is partial-agg-order independent (see EventQueries).
-  // Kept as an e4-scaled BIGINT on BOTH sides: a DECIMAL output column
-  // materializes as float64 from DuckDB but object Decimal from Spark
-  // parquet, and the driver's repr-sensitive hash rejects `194.5` vs
-  // `194.50` even when values are exact (r2 reds q27/q28/q85; see
-  // oracle-parity-rules). Ordering by e4 is order-equivalent.
-  private def revenueE4 =
-    expr("sum(cast(round(l_extendedprice * (1 - l_discount) * 10000) as bigint))")
-  private val revenueE4Sql =
-    """CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000)
-      |         AS BIGINT)) AS BIGINT)""".stripMargin
-
   val queries: Map[String, Q] = Map(
     // Second string battery: overlay / substring_index / chr /
     // levenshtein / btrim / printf-style formatting / encode+hex.
@@ -328,10 +314,6 @@ object ExtraQueries extends QuerySet {
           col("l_returnflag"), col("l_linestatus"))
     })
   )
-
-  private val evCte =
-    """WITH ev AS (SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts,
-      |            user_id, event_type, value, props FROM events)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q24_fn_string2" ->

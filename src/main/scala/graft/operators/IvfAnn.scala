@@ -23,10 +23,6 @@ object IvfAnn {
 
   case class Model(centroids: Array[Array[Double]])
 
-  // array-level Cast (codegen'd) instead of a per-element lambda
-  // (interpreted) — same values, float→double widening is exact
-  private def toD(a: Column): Column = a.cast("array<double>")
-
   /** argmax cosine against the centroid matrix (ties → lowest index).
     * r12: a fused expression holding the matrix as a referenced object
     * (functions/Centroids.scala) — the previous array_max over K
@@ -59,14 +55,14 @@ object IvfAnn {
   def fit(vectors: DataFrame, embCol: String, k: Int, lloydIters: Int = 2): Model = {
     requireCoarseK(k)
     val first = vectors.orderBy(col("vec_id")).limit(k)
-      .select(toD(col(embCol)).as("e")).collect()
+      .select(asD(col(embCol)).as("e")).collect()
       .map(_.getSeq[Double](0).toArray)
     var cents = first
     val dims = first.headOption.map(_.length).getOrElse(0)
     // empty corpus / zero-width vectors: nothing to refine — return
     // the seed model instead of aggs.head throwing (ADVICE r12)
     for (_ <- 1 to lloydIters if dims > 0) {
-      val assigned = vectors.select(toD(col(embCol)).as("e"))
+      val assigned = vectors.select(asD(col(embCol)).as("e"))
         .withColumn("c", nearestCentroid(col("e"), cents))
       // per-dimension means as `dims` plain avg aggregates over the
       // cluster key: ONE shuffle of K×dims partial sums (r12 — the old
@@ -95,7 +91,7 @@ object IvfAnn {
     * coarse quantizers). */
   def assign(vectors: DataFrame, embCol: String, model: Model): DataFrame = {
     requireCoarseK(model.centroids.length)
-    vectors.withColumn("cluster", nearestCentroid(toD(col(embCol)), model.centroids))
+    vectors.withColumn("cluster", nearestCentroid(asD(col(embCol)), model.centroids))
   }
 
   /** Large-K assignment: centroids as a broadcast DataFrame, argmax by
@@ -107,7 +103,7 @@ object IvfAnn {
     import spark.implicits._
     val cdf = model.centroids.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq) }.toDF("cluster", "cent")
-    val best = vectors.select(col("vec_id"), toD(col(embCol)).as("__e"))
+    val best = vectors.select(col("vec_id"), asD(col(embCol)).as("__e"))
       .crossJoin(broadcast(cdf))
       .withColumn("__sim", cosine_similarity(col("__e"), col("cent")))
       .groupBy(col("vec_id"))

@@ -48,11 +48,6 @@ object IvfPq {
       math.round(cw.foldLeft(0.0)((a, x) => a + x * x) * 1e6)))
   }
 
-  // Cast, not transform(_.cast): an array-level Cast is whole-stage
-  // codegen'd; the per-element lambda form is interpreted (r12 guide §4
-  // pass — same values, float→double widening is exact either way).
-  private def asD(a: Column): Column = a.cast("array<double>")
-
   /** Fit = coarse k-means (IvfAnn's Lloyd loop; lloydIters=0 keeps the
     * deterministic first-K_c seed centroids — the SQL-expressible
     * setting q269's oracle replicates) + PQ codebook from the first K

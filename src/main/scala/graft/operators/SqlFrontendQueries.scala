@@ -511,10 +511,6 @@ object SqlFrontendQueries extends QuerySet {
     })
   )
 
-  private val evCte =
-    """WITH ev AS (SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts,
-      |            user_id, event_type, value, props FROM events)""".stripMargin
-
   val oracle: Map[String, String] = Map(
     // Tumble = day-trunc; hop = the 4 slide-aligned windows covering
     // each event (slide 6h = 21_600_000_000 µs, size 1d); session =

@@ -31,12 +31,6 @@ import graft.streaming.Replay.{latestPerKey, runAppend, runUpdate}
   */
 object StreamParityQueries extends QuerySet {
 
-  // Oracle-side CTE: same ns→µs truncation the Spark loader applies
-  // (see EventQueries.evCte).
-  private[operators] val evCte =
-    """WITH ev AS (SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts,
-      |            user_id, event_type, value, props FROM events)""".stripMargin
-
   /** Sentinels of the outer interval joins (q145, q156, q170): far-
     * future purchase/error pairs for user -1, one day apart so they
     * cannot join each other, pushing the two-source watermark past

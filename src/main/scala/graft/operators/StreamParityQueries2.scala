@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.{Scratch, Tables}
 import graft.streaming.{Event, EventTimeOps, Replay, StreamDedup, StreamIterate, WindowOps}
 import graft.streaming.Replay.runAppend
-import StreamParityQueries.evCte
 
 /** Round-5 parity pack, part 2: the window-machinery TRIGGERS and
   * EVICTORS, streaming event-time sort, the stream-feedback iteration,

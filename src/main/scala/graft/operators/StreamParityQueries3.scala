@@ -5,7 +5,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.{Scratch, Tables}
 import graft.streaming.{BroadcastState, Cep, CepDsl, Event, MatchRecognize, Replay, StateBootstrap, StateV2, StatefulOps, WindowOps}
 import graft.streaming.Replay.{latestPerKey, runAppend, runUpdate, spanOf, tsOf}
-import StreamParityQueries.evCte
 
 /** Round-5 parity pack, part 3: the state BOOTSTRAP (write) path —
   * the last partial row of SURVEY §2.8 — oracle-bound.

@@ -9,10 +9,6 @@ import graft.{Scratch, Tables}
   * times/oneOrMore — and its SQL `PATTERN ((A B){2})` form). */
 object StreamParityQueries5 extends QuerySet {
 
-  private val evCte =
-    """WITH ev AS (SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts,
-      |            user_id, event_type, value, props FROM events)""".stripMargin
-
   val queries: Map[String, Q] = Map(
     "q273_multi_catalog" -> multiCatalogQuery,
 

@@ -25,12 +25,6 @@ import graft.Tables
   */
 object TpchQueries extends QuerySet {
 
-  private def revenueE4 =
-    expr("sum(cast(round(l_extendedprice * (1 - l_discount) * 10000) as bigint))")
-  private val revenueE4Sql =
-    """CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000)
-      |         AS BIGINT)) AS BIGINT)""".stripMargin
-
   val queries: Map[String, Q] = Map(
     // TPC-H Q4 shape (order priority checking): EXISTS-decorrelated
     // semi join with a non-equi component (late shipment = shipped

@@ -36,10 +36,6 @@ object VectorQueries extends QuerySet {
       if ((md(0) & 1) == 1) 1.0 else -1.0
     }
 
-  /** Array-level double-cast — codegen'd Cast, not a per-element
-    * lambda (interpreted); float→double widening is exact either way. */
-  private def asD(a: Column): Column = a.cast("array<double>")
-
   /** Left-fold dot product of two double arrays (deterministic order). */
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
@@ -47,8 +43,8 @@ object VectorQueries extends QuerySet {
   private def dotConst(a: Column, cs: Array[Double]): Column =
     dot(a, array(cs.toIndexedSeq.map(lit(_)): _*))
 
-  /** Native codegen'd cosine (graft.functions.CosineSimilarity) — a
-    * fused primitive loop; bit-identical to the HOF composition
+  /** Fused cosine kernel (graft.functions.CosineSimilarity) — one
+    * primitive loop; bit-identical to the HOF composition
     * dot/(sqrt·sqrt) it replaced (same left-fold order). */
   private def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosine_similarity(a, b)

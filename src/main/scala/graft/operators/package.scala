@@ -20,6 +20,36 @@ package object operators {
   def withTables(s: SparkSession, dir: String, names: String*): Unit =
     names.foreach(n => Tables.load(s, dir, n).createOrReplaceTempView(n))
 
+  // ---- helpers shared across query sets and their DuckDB oracles
+
+  /** DuckDB CTE `ev` over `events` with the same ns→µs `ts` truncation
+    * `Tables.events` applies. */
+  private[operators] val evCte =
+    """WITH ev AS (SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts,
+      |            user_id, event_type, value, props FROM events)""".stripMargin
+
+  /** Exact revenue Σ l_extendedprice·(1 − l_discount) ×10⁴ as a BIGINT:
+    * each product of two 2-decimal values has exactly 4 decimals, so
+    * ×10⁴ is integral, and an integer sum is partial-agg-order
+    * independent (see EventQueries). Kept e4-scaled on BOTH sides: a
+    * DECIMAL output column materializes as float64 from DuckDB but
+    * object Decimal from Spark parquet, and the driver's repr-sensitive
+    * hash rejects `194.5` vs `194.50` even when values are exact (r2
+    * reds q27/q28/q85; see oracle-parity-rules). Ordering by e4 is
+    * order-equivalent. */
+  private[operators] def revenueE4: Column =
+    expr("sum(cast(round(l_extendedprice * (1 - l_discount) * 10000) as bigint))")
+
+  /** [[revenueE4]] as DuckDB SQL. */
+  private[operators] val revenueE4Sql =
+    """CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000)
+      |         AS BIGINT)) AS BIGINT)""".stripMargin
+
+  /** Array-level double cast of a vector column: a codegen'd Cast, not
+    * a per-element `transform(_.cast)` lambda (interpreted); float→double
+    * widening is exact either way. */
+  private[operators] def asD(a: Column): Column = a.cast("array<double>")
+
   // ---- corpus text helpers, shared by the text, corpus, curation,
   // sketch and capstone queries and their DuckDB oracles
 

@@ -337,10 +337,11 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), s"cartesian:\n$plan")
   }
 
-  test("q262 scans embeddings in one job and explodes nothing (fused Gram moments)") {
+  /** The executed plan of every SQL execution that running catalog query
+    * `name` to completion starts. */
+  private def executedPlans(name: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
@@ -349,24 +350,57 @@ class PlanShapeSpec extends SparkSpec {
     }
     // listener events arrive asynchronously; a last marker action's
     // arrival means every earlier one has been delivered
-    val marker = "q262-shape-marker"
+    val marker = s"$name-shape-marker"
     spark.listenerManager.register(listener)
     try {
-      SparkEntry.queries("q262_dim_correlation")(spark, sf).collect()
+      SparkEntry.queries(name)(spark, sf).collect()
       spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
       val deadline = System.nanoTime() + 60L * 1000000000L
       while (!plans.asScala.exists(_.executedPlan.toString.contains(marker)) &&
           System.nanoTime() < deadline) Thread.sleep(20)
     } finally spark.listenerManager.unregister(listener)
-    val q262 = plans.asScala.toSeq.map(_.executedPlan)
-      .filterNot(_.toString.contains(marker))
-    val helper = new AdaptiveSparkPlanHelper {}
-    val generates = q262.flatMap(p => helper.collect(p) { case g: GenerateExec => g })
+    plans.asScala.toSeq.map(_.executedPlan).filterNot(_.toString.contains(marker))
+  }
+
+  private val planHelper =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  test("q262 scans embeddings in one job and explodes nothing (fused Gram moments)") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    val q262 = executedPlans("q262_dim_correlation")
+    val generates = q262.flatMap(p => planHelper.collect(p) { case g: GenerateExec => g })
     assert(generates.isEmpty, s"q262 explodes rows:\n${q262.mkString("\n")}")
-    val scanning = q262.filter(p => helper.collect(p) {
+    val scanning = q262.filter(p => planHelper.collect(p) {
       case sc: FileSourceScanExec => sc.relation.location.rootPaths
     }.flatten.exists(_.getName.startsWith("embeddings")))
     assert(scanning.size == 1,
       s"${scanning.size} jobs scan embeddings:\n${q262.mkString("\n")}")
+  }
+
+  test("q211/q277 run no corpus-side kernel in a Filter below the spread exchange") {
+    // pq_encode, pq_encode_residual and nearest_centroid are marked
+    // nondeterministic so the optimizer cannot copy the filters it
+    // infers from them (size(..) > 0, isnotnull(..)) down into the scan,
+    // where each corpus row would run the kernel a second time, serially
+    // below the repartition that spreads the single-file scan
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.functions.{NearestCentroid, PqEncode, PqEncodeResidual}
+    for (q <- Seq("q211_pq_ann", "q277_ivfadc_residual")) {
+      val plans = executedPlans(q)
+      val spreads = plans.flatMap(p => planHelper.collect(p) {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+      })
+      assert(spreads.nonEmpty, s"$q: no spread exchange:\n${plans.mkString("\n")}")
+      val scanSide = spreads.flatMap(e => planHelper.collect(e.child) {
+        case f: FilterExec if f.condition.find {
+          case _: PqEncode | _: PqEncodeResidual | _: NearestCentroid => true
+          case _ => false
+        }.isDefined => f
+      })
+      assert(scanSide.isEmpty, s"$q: kernel filter below the spread:\n${scanSide.mkString("\n")}")
+    }
   }
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Bit-exactness pins for the r13 fused kernels: each fused expression
+/** Bit-exactness pins for the fused kernels: each fused expression
   * is compared row-for-row against the exact column composition it
   * replaced, over the REAL test corpus (not synthetic rows), so the
   * accumulation order, StrictMath.log, HALF_UP rounding and argmin tie
@@ -13,6 +13,23 @@ import org.apache.spark.sql.functions._
 class FusedKernelParitySpec extends SparkSpec {
 
   private def docs = Tables.documents(spark, sf)
+  private def emb = Tables.embeddings(spark, sf)
+  private def asD(a: Column) = a.cast("array<double>")
+  private def vecLit(v: Array[Double]) = array(v.toIndexedSeq.map(lit(_)): _*)
+  private def hofDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
+  /** The first `n` embeddings by id, widened to double. */
+  private def firstVecs(n: Int): Array[Array[Double]] =
+    emb.orderBy(col("vec_id")).limit(n).select(asD(col("embedding")))
+      .collect().map(_.getSeq[Double](0).toArray)
+
+  /** `exp` and `got` hold the same non-empty rows in the same order. */
+  private def sameRows(exp: DataFrame, got: DataFrame): Unit = {
+    val e = exp.collect(); val g = got.collect()
+    assert(e.length == g.length && e.length > 0)
+    e.zip(g).foreach { case (a, b) => assert(a == b) }
+  }
 
   test("symbol_entropy matches the explode→groupBy→window composition") {
     def composed(sym: Column) = {
@@ -55,7 +72,6 @@ class FusedKernelParitySpec extends SparkSpec {
   test("pq_lut + column round matches the literal aggregate(zip_with) LUT") {
     val M = 8; val dsub = 8; val K = 16
     val e = Tables.embeddings(spark, sf)
-    def asD(a: Column) = a.cast("array<double>")
     val seeds = e.orderBy(col("vec_id")).limit(K)
       .select(asD(col("embedding")).as("de")).collect()
       .map(_.getSeq[Double](0).toArray)
@@ -63,13 +79,11 @@ class FusedKernelParitySpec extends SparkSpec {
       seeds(k).slice(m * dsub, (m + 1) * dsub))
     val cbNorm = Array.tabulate(M, K)((m, k) =>
       math.round(cb(m)(k).foldLeft(0.0)((a, x) => a + x * x) * 1e6))
-    def dot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
     def subCol(v: Column, m: Int) = slice(v, m * dsub + 1, dsub)
     def cwLit(m: Int, k: Int) = array(cb(m)(k).toIndexedSeq.map(lit(_)): _*)
     val lutRows = for (m <- 0 until M; k <- 0 until K) yield
       struct(lit(m).as("m"), lit(k).as("k"),
-        round(dot(subCol(col("pe"), m), cwLit(m, k)) * 1e6)
+        round(hofDot(subCol(col("pe"), m), cwLit(m, k)) * 1e6)
           .cast("long").as("pdot"),
         lit(cbNorm(m)(k)).as("cn"))
     val base = e.select(col("vec_id").as("pid"), asD(col("embedding")).as("pe"))
@@ -88,7 +102,6 @@ class FusedKernelParitySpec extends SparkSpec {
   test("pq_encode_residual matches pq_encode over the zip_with residual") {
     val M = 8; val dsub = 8; val K = 16
     val e = Tables.embeddings(spark, sf)
-    def asD(a: Column) = a.cast("array<double>")
     val seeds = e.orderBy(col("vec_id")).limit(K)
       .select(asD(col("embedding")).as("de")).collect()
       .map(_.getSeq[Double](0).toArray)
@@ -149,18 +162,15 @@ class FusedKernelParitySpec extends SparkSpec {
 
   test("centroid_dots matches the per-centroid aggregate(zip_with) dot") {
     val e = Tables.embeddings(spark, sf)
-    def asD(a: Column) = a.cast("array<double>")
     val cents = e.orderBy(col("vec_id")).limit(8)
       .select(asD(col("embedding")).as("de")).collect()
       .map(_.getSeq[Double](0).toArray)
     val centsLit = array(cents.toIndexedSeq.map(c =>
       array(c.toIndexedSeq.map(lit(_)): _*)): _*)
-    def dot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
     val base = e.select(col("vec_id"), asD(col("embedding")).as("pe"))
       .crossJoin(spark.range(8).select(col("id").cast("int").as("j")))
     val exp = base.select(col("vec_id"), col("j"),
-        round(dot(col("pe"), element_at(centsLit, col("j") + 1)) * 1e6)
+        round(hofDot(col("pe"), element_at(centsLit, col("j") + 1)) * 1e6)
           .cast("long").as("d"))
       .orderBy(col("vec_id"), col("j")).collect()
     val got = base.select(col("vec_id"), col("j"),
@@ -260,5 +270,68 @@ class FusedKernelParitySpec extends SparkSpec {
       VectorQueries.gaussianMoments(Seq.empty[Seq[Long]].toDF("xs")))
     failsWith[IllegalArgumentException]("empty input")(
       VectorQueries.gaussianMoments(Seq(null: Seq[Long]).toDF("xs")))
+  }
+
+  // ---- the r12 kernels (pq_encode, cosine_similarity, nearest_centroid,
+  // ranked_centroids) against the compositions they replaced
+
+  test("pq_encode matches the aggregate(zip_with) L2 argmin over struct(d, k)") {
+    val M = 8; val dsub = 8; val K = 16
+    val seeds = firstVecs(K)
+    val cb = Array.tabulate(M, K)((m, k) =>
+      seeds(k).slice(m * dsub, (m + 1) * dsub))
+    def l2(sub: Column, cw: Array[Double]): Column =
+      aggregate(zip_with(sub, vecLit(cw), (x, y) => (x - y) * (x - y)),
+        lit(0.0), (acc, x) => acc + x)
+    val composed = array((0 until M).map(m =>
+      array_min(array((0 until K).map(k =>
+        struct(l2(slice(col("de"), m * dsub + 1, dsub), cb(m)(k)).as("d"),
+          lit(k).as("k"))): _*)).getField("k")): _*)
+    val base = emb.select(col("vec_id"), col("embedding"),
+      asD(col("embedding")).as("de"))
+    val exp = base.select(col("vec_id"), composed.as("codes"))
+      .orderBy(col("vec_id"))
+    // the float input and its double widening encode alike
+    for (v <- Seq(col("embedding"), col("de")))
+      sameRows(exp, base.select(col("vec_id"),
+        GraftFunctions.pq_encode(v, cb).as("codes")).orderBy(col("vec_id")))
+  }
+
+  test("cosine_similarity matches the aggregate(zip_with) dot over the norms") {
+    val pairs = emb.filter(col("vec_id") <= 20)
+      .select(col("vec_id").as("pid"), col("embedding").as("pe"))
+      .crossJoin(emb.select(col("vec_id").as("cid"), col("embedding").as("ce")))
+    val (pd, cd) = (asD(col("pe")), asD(col("ce")))
+    def sims(s: Column) =
+      pairs.select(col("pid"), col("cid"), s.as("s"))
+        .orderBy(col("pid"), col("cid"))
+    val exp = sims(hofDot(pd, cd) / (sqrt(hofDot(pd, pd)) * sqrt(hofDot(cd, cd))))
+    for ((a, b) <- Seq((col("pe"), col("ce")), (pd, cd)))
+      sameRows(exp, sims(GraftFunctions.cosine_similarity(a, b)))
+  }
+
+  /** The struct-literal form the coarse quantizer used: (cosine against
+    * centroid i, −i) per centroid. */
+  private def scored(v: Column, cents: Array[Array[Double]]): Column =
+    array(cents.toIndexedSeq.zipWithIndex.map { case (c, i) =>
+      struct(GraftFunctions.cosine_similarity(v, vecLit(c)).as("sim"),
+        lit(-i).as("negIdx"))
+    }: _*)
+
+  test("nearest_centroid matches -array_max(struct(cosine, -i)).negIdx") {
+    val cents = firstVecs(8)
+    def of(c: Column) =
+      emb.select(col("vec_id"), c.as("c")).orderBy(col("vec_id"))
+    sameRows(of(-array_max(scored(col("embedding"), cents)).getField("negIdx")),
+      of(GraftFunctions.nearest_centroid(col("embedding"), cents)))
+  }
+
+  test("ranked_centroids matches reverse(array_sort(struct(cosine, -i)))") {
+    val cents = firstVecs(8)
+    def of(c: Column) =
+      emb.select(col("vec_id"), c.as("r")).orderBy(col("vec_id"))
+    sameRows(of(transform(reverse(array_sort(scored(col("embedding"), cents))),
+        s => -s.getField("negIdx"))),
+      of(GraftFunctions.ranked_centroids(col("embedding"), cents)))
   }
 }
