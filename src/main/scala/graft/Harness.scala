@@ -65,6 +65,46 @@ object Harness {
   /** Block until every event posted so far has reached the listeners. */
   def drain(spark: SparkSession): Unit = GraftSqlBridge.drainListenerBus(spark)
 
+  /** Child processes this JVM starts, counted by command name (`chmod`,
+    * `readlink`, ...) from JFR's `jdk.ProcessStart` events, read in
+    * process through a `RecordingStream`. JFR delivers events in flushes
+    * about once a second; [[ProcessLog.started]] first waits for a marker
+    * event committed after everything it should count. */
+  final class ProcessLog extends AutoCloseable {
+    private val stream = new jdk.jfr.consumer.RecordingStream()
+    private val byCommand = scala.collection.mutable.Map.empty[String, Int]
+    private val marks = new java.util.concurrent.Semaphore(0)
+    stream.enable("jdk.ProcessStart").withoutStackTrace()
+    stream.enable(classOf[ProcessLog.Mark])
+    stream.onEvent("jdk.ProcessStart", e => {
+      val cmd = e.getString("command").takeWhile(_ != ' ').split('/').last
+      byCommand.synchronized(byCommand(cmd) = byCommand.getOrElse(cmd, 0) + 1)
+    })
+    stream.onEvent(classOf[ProcessLog.Mark].getName, _ => marks.release())
+    stream.startAsync()
+
+    /** Processes started since the previous call (the first call: since
+      * the log opened), by command. */
+    def started(): Map[String, Int] = {
+      new ProcessLog.Mark().commit()
+      if (!marks.tryAcquire(30, java.util.concurrent.TimeUnit.SECONDS))
+        throw new IllegalStateException("JFR delivered no events for 30 s")
+      byCommand.synchronized { val c = byCommand.toMap; byCommand.clear(); c }
+    }
+
+    override def close(): Unit = stream.close()
+  }
+
+  object ProcessLog {
+    final class Mark extends jdk.jfr.Event
+
+    /** `n (a chmod, b readlink)`: a count and its commands, largest first. */
+    def show(c: Map[String, Int]): String =
+      if (c.isEmpty) "0"
+      else s"${c.values.sum} (" + c.toSeq.sortBy(-_._2)
+        .map { case (cmd, n) => s"$n $cmd" }.mkString(", ") + ")"
+  }
+
   /** A Spark job as the log saw it: its own stage ids, the tasks of
     * those stages, its description (or call site), and the SQL execution
     * it ran under, if any (an RDD job such as parquet schema inference

@@ -6,10 +6,11 @@ package graft
   *
   * Usage: tools/run.sh graft.JobProfile <name> [sfDir] [reps]
   * Runs the query `reps` times (default 2) and prints each rep's wall
-  * time, then profiles the last rep: one line per Spark job with start
-  * offset, duration, #tasks, its SQL execution id (`-` for a job outside
-  * any, such as a parquet schema-inference job) and the
-  * description/callsite, plus the gaps
+  * time and the child processes it started, by command (a Hadoop shell
+  * fork per file operation shows here), then profiles the last rep: one
+  * line per Spark job with start offset, duration, #tasks, its SQL
+  * execution id (`-` for a job outside any, such as a parquet
+  * schema-inference job) and the description/callsite, plus the gaps
   * BETWEEN jobs (driver-side planning/collect time), which job rows
   * alone would hide.
   */
@@ -20,16 +21,20 @@ object JobProfile {
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = Harness.session("graft-jobprofile")
     val log = Harness.jobLog(spark)
+    val forks = new Harness.ProcessLog
 
     var lastStart = 0L
     var wall = 0.0
     (1 to reps).foreach { i =>
+      forks.started()
       lastStart = System.currentTimeMillis()
       val t0 = System.nanoTime()
       Harness.noop(spark, name, sfDir)
       wall = (System.nanoTime() - t0) / 1e9
-      println(f"[profile] $name rep$i: $wall%.2f s")
+      println(f"[profile] $name rep$i: $wall%.2f s, " +
+        s"child processes ${Harness.ProcessLog.show(forks.started())}")
     }
+    forks.close()
     Harness.drain(spark)
 
     val jobs = log.jobs(since = lastStart)

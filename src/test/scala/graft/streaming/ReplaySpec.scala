@@ -1,10 +1,14 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import graft.{Scratch, SparkSpec, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path => HPath}
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, OffsetSeqLog}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 /** The epoch-replay harness: how a finite table becomes epochs (one
   * file per epoch, in modification-time order) and how a stream over
@@ -121,5 +125,45 @@ class ReplaySpec extends SparkSpec {
     }
     val ep = Replay.quarters(events, Scratch.dir("rschema").toString, Replay.flushes(1, 2))
     assert(ep.schema == spark.read.parquet(ep.in).schema, "quarters with sentinels")
+  }
+
+  test("a replay stopped after its second batch resumes at batch 2 on its checkpoint") {
+    val base = Scratch.dir("rresume").toString
+    val counts = Replay.quarters(events, base).streamDf(spark).groupBy("event_type").count()
+    type Batches = ArrayBuffer[(Long, Map[String, Long])]
+    def run(ck: String, seen: Batches, stopAt: Long = -1L): Unit =
+      Replay.runBatches(counts, s"$base/$ck", "update") { (b, id) =>
+        if (id == stopAt) throw new IllegalStateException(s"stopped at batch $id")
+        seen += id -> b.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+    // update mode emits the changed counts; the last emission per key wins
+    def cells(bs: Batches) = bs.map(_._2).foldLeft(Map.empty[String, Long])(_ ++ _)
+    val whole, first, rest = new Batches
+    run("ck_whole", whole)
+    intercept[StreamingQueryException](run("ck", first, stopAt = 2))
+    run("ck", rest)
+    assert(whole.map(_._1) == Seq(0L, 1L, 2L, 3L))
+    assert(first.map(_._1) == Seq(0L, 1L))
+    assert(rest.map(_._1) == Seq(2L, 3L))
+    assert(cells(first ++ rest) == cells(whole))
+    assert(cells(whole) == events.groupBy("event_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap)
+  }
+
+  test("a second offsets/N write for an existing batch is refused") {
+    val ep = Replay.quarters(events, Scratch.dir("roffsets").toString)
+    val ck = Scratch.dir("roffsets-ck").toString
+    Replay.runBatches(ep.streamDf(spark), ck) { (b, _) => b.count(); () }
+    val file = Paths.get(ck, "offsets", "1")
+    val written = Files.readAllBytes(file)
+    assert(Files.exists(file.resolveSibling(".1.crc")))
+    val log = new OffsetSeqLog(spark, s"$ck/offsets")
+    assert(!log.add(1L, log.get(1L).get))
+    val fm = CheckpointFileManager.create(new HPath(s"$ck/offsets"),
+      spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf())
+    val out = fm.createAtomic(new HPath(file.toUri), overwriteIfPossible = false)
+    out.write("v1\n{}".getBytes("UTF-8"))
+    intercept[FileAlreadyExistsException](out.close())
+    assert(Files.readAllBytes(file).sameElements(written))
   }
 }

@@ -17,8 +17,11 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# Default heap: half of this host's RAM, clamped to [2, 8] GB.
+HALF_RAM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  /proc/meminfo 2>/dev/null || echo 2g)"
 mkdir -p /dev/shm/spark-local
-exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-48g} \
+exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-$HALF_RAM} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Dspark.local.dir=/dev/shm/spark-local \
   -cp "$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources:$SPARK_HOME/jars/*" \
