@@ -38,11 +38,4 @@ object Par {
     val r = run(Seq(() => a().asInstanceOf[Any], () => b().asInstanceOf[Any]))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
   }
-
-  /** Three independent actions, typed. */
-  def run3[A, B, C](a: () => A, b: () => B, c: () => C): (A, B, C) = {
-    val r = run(Seq(() => a().asInstanceOf[Any], () => b().asInstanceOf[Any],
-      () => c().asInstanceOf[Any]))
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
-  }
 }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 private[functions] trait CentroidKernel extends UnaryKernel {
   def cents: Array[Array[Double]]
 
-  @transient private lazy val centData: Array[ArrayData] =
+  @transient protected lazy val centData: Array[ArrayData] =
     cents.map(c => UnsafeArrayData.fromPrimitiveArray(c): ArrayData)
 
   override def inputTypes = Seq(Kernel.Vec)
@@ -56,16 +56,7 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
 
   override def dataType: DataType = IntegerType
 
-  def compute(v: ArrayData): Any = {
-    val s = sims(v)
-    var best = Double.NegativeInfinity; var bestJ = 0
-    var j = 0
-    while (j < s.length) {
-      if (java.lang.Double.compare(s(j), best) > 0) { best = s(j); bestJ = j }
-      j += 1
-    }
-    bestJ
-  }
+  def compute(v: ArrayData): Any = Loops.nearest(v, floatAt(0), centData)
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   *    compositions they replace;
   *  - a float vector is read widened to double (exact).
   */
-private[functions] object Loops {
+private[graft] object Loops {
 
   /** Element `i` of vector `a`, float (`f`) or double, as a double. */
   @inline def at(a: ArrayData, f: Boolean, i: Int): Double =
@@ -37,6 +37,20 @@ private[functions] object Loops {
     }
     if (na == 0.0 || nb == 0.0) Double.NegativeInfinity
     else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** The index of the centroid with the largest [[cosine]] to `a`.
+    * Ties go to the lowest index, and an undefined cosine (−∞) loses to
+    * every real one; index 0 when none is defined. */
+  def nearest(a: ArrayData, af: Boolean, cents: Array[ArrayData]): Int = {
+    var best = Double.NegativeInfinity; var bestJ = 0
+    var j = 0
+    while (j < cents.length) {
+      val s = cosine(a, af, cents(j), false)
+      if (java.lang.Double.compare(s, best) > 0) { best = s; bestJ = j }
+      j += 1
+    }
+    bestJ
   }
 
   /** Σ a(off + i)·w(i) over the indices of `w`. */

@@ -1,5 +1,7 @@
 package graft.ml
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -112,6 +114,22 @@ object Pipeline {
     classOf[OpqIvfPqModel].getName            -> (() => new OpqIvfPqModel()),
     classOf[PcaEstimator].getName             -> (() => new PcaEstimator()),
     classOf[PcaModel].getName                 -> (() => new PcaModel()))
+}
+
+/** The string form of a numeric param; `decode` inverts `encode`
+  * (Double.toString round-trips exactly). */
+private[ml] final case class ParamCodec[A](encode: A => String, decode: String => A) {
+  /** Arrays of A, joined by `sep`: one more level of nesting. */
+  def nest(sep: Char)(implicit ct: ClassTag[A]): ParamCodec[Array[A]] =
+    ParamCodec(_.map(encode).mkString(sep.toString), _.split(sep).map(decode))
+}
+
+private[ml] object ParamCodec {
+  /** A vector's values joined by ","; matrix rows by ";"; codebook
+    * subspaces by "|". */
+  val vector = ParamCodec[Array[Double]](_.mkString(","), _.split(',').map(_.toDouble))
+  val matrix: ParamCodec[Array[Array[Double]]] = vector.nest(';')
+  val codebook: ParamCodec[Array[Array[Array[Double]]]] = matrix.nest('|')
 }
 
 /** Reference `Pipeline`: Estimator + Transformer + Model in one. */
@@ -289,8 +307,8 @@ final class OutlierFilter extends Pipeline.Transformer {
 /** Estimator: k-means coarse quantizer over `embCol` (q146's IvfAnn
   * fit — Lloyd iterations with only centroids through the driver);
   * the model appends the `cluster` column via the zero-shuffle
-  * literal-argmax projection. Fitted centroids persist, so a reloaded
-  * pipeline assigns identically. */
+  * `nearest_centroid` projection. Fitted centroids persist, so a
+  * reloaded pipeline assigns identically. */
 final class IvfClusterEstimator(embCol: String, k: Int, lloydIters: Int)
     extends Pipeline.Estimator {
   def this() = this("embedding", 8, 2)
@@ -340,14 +358,12 @@ final class IvfPqModel(embCol: String, val model: graft.operators.IvfPq.Model)
     graft.operators.IvfPq.search(indexed, probes, embCol, model, k, nprobe)
   def params: Map[String, String] = Map(
     "embCol" -> embCol,
-    "centroids" -> model.centroids.map(_.mkString(",")).mkString(";"),
-    "codebook" -> model.codebook
-      .map(_.map(_.mkString(",")).mkString(";")).mkString("|"))
+    "centroids" -> ParamCodec.matrix.encode(model.centroids),
+    "codebook" -> ParamCodec.codebook.encode(model.codebook))
   def withParams(p: Map[String, String]): Pipeline.PipelineStage =
     new IvfPqModel(p("embCol"), graft.operators.IvfPq.Model(
-      p("centroids").split(';').map(_.split(',').map(_.toDouble)),
-      p("codebook").split('|')
-        .map(_.split(';').map(_.split(',').map(_.toDouble)))))
+      ParamCodec.matrix.decode(p("centroids")),
+      ParamCodec.codebook.decode(p("codebook"))))
 }
 
 /** Estimator: OPQ-rotated IVF+PQ — learns an orthogonal rotation
@@ -401,21 +417,20 @@ final class OpqIvfPqModel(embCol: String, val rotation: Array[Array[Double]],
       model, k, nprobe)
   def params: Map[String, String] = Map(
     "embCol" -> embCol,
-    "rotation" -> rotation.map(_.mkString(",")).mkString(";"),
-    "centroids" -> model.centroids.map(_.mkString(",")).mkString(";"),
-    "codebook" -> model.codebook
-      .map(_.map(_.mkString(",")).mkString(";")).mkString("|"))
+    "rotation" -> ParamCodec.matrix.encode(rotation),
+    "centroids" -> ParamCodec.matrix.encode(model.centroids),
+    "codebook" -> ParamCodec.codebook.encode(model.codebook))
   def withParams(p: Map[String, String]): Pipeline.PipelineStage =
     new OpqIvfPqModel(p("embCol"),
-      p("rotation").split(';').map(_.split(',').map(_.toDouble)),
+      ParamCodec.matrix.decode(p("rotation")),
       graft.operators.IvfPq.Model(
-        p("centroids").split(';').map(_.split(',').map(_.toDouble)),
-        p("codebook").split('|')
-          .map(_.split(';').map(_.split(',').map(_.toDouble)))))
+        ParamCodec.matrix.decode(p("centroids")),
+        ParamCodec.codebook.decode(p("codebook"))))
 }
 
-/** Fitted coarse quantizer: literal-argmax cluster assignment (pure
-  * projection; the centroids ride the closure). */
+/** Fitted coarse quantizer: argmax-cosine cluster assignment through
+  * the fused `nearest_centroid` kernel (a pure projection; the kernel
+  * holds the centroid matrix). */
 final class IvfClusterModel(embCol: String,
                             centroids: Array[Array[Double]])
     extends Pipeline.Model {
@@ -425,10 +440,9 @@ final class IvfClusterModel(embCol: String,
       graft.operators.IvfAnn.Model(centroids))
   def params: Map[String, String] = Map(
     "embCol" -> embCol,
-    "centroids" -> centroids.map(_.mkString(",")).mkString(";"))
+    "centroids" -> ParamCodec.matrix.encode(centroids))
   def withParams(p: Map[String, String]): Pipeline.PipelineStage =
-    new IvfClusterModel(p("embCol"),
-      p("centroids").split(';').map(_.split(',').map(_.toDouble)))
+    new IvfClusterModel(p("embCol"), ParamCodec.matrix.decode(p("centroids")))
 }
 
 /** Estimator: PCA basis over `embCol` (Pca.fit — distributed moments,
@@ -457,12 +471,12 @@ final class PcaModel(embCol: String, mu: Array[Double],
     graft.operators.Pca.transform(df, model, embCol, "pca")
   def params: Map[String, String] = Map(
     "embCol" -> embCol,
-    "mu" -> mu.mkString(","),
-    "comps" -> comps.map(_.mkString(",")).mkString(";"),
-    "eigs" -> eigs.mkString(","))
+    "mu" -> ParamCodec.vector.encode(mu),
+    "comps" -> ParamCodec.matrix.encode(comps),
+    "eigs" -> ParamCodec.vector.encode(eigs))
   def withParams(p: Map[String, String]): Pipeline.PipelineStage =
     new PcaModel(p("embCol"),
-      p("mu").split(',').map(_.toDouble),
-      p("comps").split(';').map(_.split(',').map(_.toDouble)),
-      p("eigs").split(',').map(_.toDouble))
+      ParamCodec.vector.decode(p("mu")),
+      ParamCodec.matrix.decode(p("comps")),
+      ParamCodec.vector.decode(p("eigs")))
 }

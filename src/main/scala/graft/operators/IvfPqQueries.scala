@@ -390,147 +390,40 @@ object IvfPqQueries extends QuerySet {
     // full corpus — the model does not refit on delete): q211's
     // oracle with the tombstoned ids (vec_id % 7 = 3) filtered from
     // the encoded corpus side; probes keep all ids ≤ 20.
-    "q312_ivfpq_delete" ->
-      s"""WITH de AS (
-         |  SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv
-         |  FROM embeddings),
-         |ms AS (SELECT unnest(range(0, 8)) AS m),
-         |seeds AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS k, dv AS sv
-         |  FROM de ORDER BY vec_id LIMIT 16),
-         |cb AS (
-         |  SELECT seeds.k, ms.m,
-         |    list_transform(range(1, 9), i -> sv[ms.m*8 + i]) AS cw
-         |  FROM seeds, ms),
-         |cbn AS (
-         |  SELECT k, m, cw,
-         |    CAST(round(list_reduce(list_transform(range(1, 9),
-         |      i -> cw[i]*cw[i]), (x,y) -> x+y) * 1e6) AS BIGINT) AS cn
-         |  FROM cb),
-         |subs AS (
-         |  SELECT vec_id, ms.m,
-         |    list_transform(range(1, 9), i -> dv[ms.m*8 + i]) AS sub
-         |  FROM de, ms),
-         |enc AS (
-         |  SELECT vec_id AS cid, m, k AS code FROM (
-         |    SELECT s.vec_id, s.m, c.k,
-         |      row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-         |        list_reduce(list_transform(range(1, 9),
-         |          i -> (s.sub[i]-c.cw[i])*(s.sub[i]-c.cw[i])),
-         |          (x,y) -> x+y), c.k) AS rn
-         |    FROM subs s JOIN cbn c ON s.m = c.m)
-         |  WHERE rn = 1 AND vec_id % 7 <> 3),
-         |lut AS (
-         |  SELECT s.vec_id AS pid, s.m, c.k,
-         |    CAST(round(list_reduce(list_transform(range(1, 9),
-         |      i -> s.sub[i]*c.cw[i]), (x,y) -> x+y) * 1e6) AS BIGINT)
-         |      AS pdot,
-         |    c.cn
-         |  FROM subs s JOIN cbn c ON s.m = c.m WHERE s.vec_id <= 20),
-         |sc AS (
-         |  SELECT l.pid, e.cid, sum(l.pdot) AS idot, sum(l.cn) AS rn
-         |  FROM enc e JOIN lut l ON e.m = l.m AND e.code = l.k
-         |  WHERE e.cid <> l.pid
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT pid, cid,
-         |    CAST(idot AS DOUBLE) /
-         |      greatest(sqrt(CAST(rn AS DOUBLE)), 1e-30) AS score,
-         |    row_number() OVER (PARTITION BY pid
-         |                       ORDER BY CAST(idot AS DOUBLE) /
-         |      greatest(sqrt(CAST(rn AS DOUBLE)), 1e-30) DESC, cid) AS rk
-         |  FROM sc)
-         |SELECT pid, rk, cid, round(score, 6) AS score6
-         |FROM ranked WHERE rk <= 5 ORDER BY pid, rk""".stripMargin,
+    "q312_ivfpq_delete" -> VectorQueries.flatAdcSql(VectorQueries.plainDeCte,
+      "\n  WHERE rn = 1 AND vec_id % 7 <> 3"),
 
     // OPQ at the deterministic setting: q211's flat-ADC oracle body
     // over the signed-permutation-rotated vectors (rotation preserves
     // dots/norms exactly; nprobe=K collapses IVF pruning).
-    "q278_opq_ann" ->
-      s"""WITH raw AS (
-         |  SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS rv
-         |  FROM embeddings),
-         |de AS (
-         |  SELECT vec_id, list_transform(range(0, 64), j ->
-         |    (CASE WHEN j % 3 = 0 THEN -1 ELSE 1 END) *
-         |      rv[((29*j) % 64) + 1]) AS dv
-         |  FROM raw),
-         |ms AS (SELECT unnest(range(0, 8)) AS m),
-         |seeds AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS k, dv AS sv
-         |  FROM de ORDER BY vec_id LIMIT 16),
-         |cb AS (
-         |  SELECT seeds.k, ms.m,
-         |    list_transform(range(1, 9), i -> sv[ms.m*8 + i]) AS cw
-         |  FROM seeds, ms),
-         |cbn AS (
-         |  SELECT k, m, cw,
-         |    CAST(round(list_reduce(list_transform(range(1, 9),
-         |      i -> cw[i]*cw[i]), (x,y) -> x+y) * 1e6) AS BIGINT) AS cn
-         |  FROM cb),
-         |subs AS (
-         |  SELECT vec_id, ms.m,
-         |    list_transform(range(1, 9), i -> dv[ms.m*8 + i]) AS sub
-         |  FROM de, ms),
-         |enc AS (
-         |  SELECT vec_id AS cid, m, k AS code FROM (
-         |    SELECT s.vec_id, s.m, c.k,
-         |      row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-         |        list_reduce(list_transform(range(1, 9),
-         |          i -> (s.sub[i]-c.cw[i])*(s.sub[i]-c.cw[i])),
-         |          (x,y) -> x+y), c.k) AS rn
-         |    FROM subs s JOIN cbn c ON s.m = c.m) WHERE rn = 1),
-         |lut AS (
-         |  SELECT s.vec_id AS pid, s.m, c.k,
-         |    CAST(round(list_reduce(list_transform(range(1, 9),
-         |      i -> s.sub[i]*c.cw[i]), (x,y) -> x+y) * 1e6) AS BIGINT)
-         |      AS pdot,
-         |    c.cn
-         |  FROM subs s JOIN cbn c ON s.m = c.m WHERE s.vec_id <= 20),
-         |sc AS (
-         |  SELECT l.pid, e.cid, sum(l.pdot) AS idot, sum(l.cn) AS rn
-         |  FROM enc e JOIN lut l ON e.m = l.m AND e.code = l.k
-         |  WHERE e.cid <> l.pid
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT pid, cid,
-         |    CAST(idot AS DOUBLE) /
-         |      greatest(sqrt(CAST(rn AS DOUBLE)), 1e-30) AS score,
-         |    row_number() OVER (PARTITION BY pid
-         |                       ORDER BY CAST(idot AS DOUBLE) /
-         |      greatest(sqrt(CAST(rn AS DOUBLE)), 1e-30) DESC, cid) AS rk
-         |  FROM sc)
-         |SELECT pid, rk, cid, round(score, 6) AS score6
-         |FROM ranked WHERE rk <= 5 ORDER BY pid, rk""".stripMargin,
+    "q278_opq_ann" -> VectorQueries.flatAdcSql(rotatedDeCte, " WHERE rn = 1"),
 
     // residual IVFADC replicated relationally: q269's coarse fragments
     // plus residual vectors, residual-seed codebook, per-(cluster,m,k)
     // cross/norm integer terms, per-(probe,cluster) p·c terms, and the
     // decomposed score.
-    "q277_ivfadc_residual" -> ivfadcSql(
-      """de AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv
-        |  FROM embeddings)""".stripMargin),
+    "q277_ivfadc_residual" -> ivfadcSql(VectorQueries.plainDeCte),
 
     // q277's full relational replication over the signed-permutation-
     // rotated vectors — the OPQ∘IVFADC composition (rotation preserves
     // every dot/norm the residual decomposition uses).
-    "q285_opq_ivfadc" -> ivfadcSql(
-      """raw AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS rv
-        |  FROM embeddings),
-        |de AS (
-        |  SELECT vec_id, list_transform(range(0, 64), j ->
-        |    (CASE WHEN j % 3 = 0 THEN -1 ELSE 1 END) *
-        |      rv[((29*j) % 64) + 1]) AS dv
-        |  FROM raw)""".stripMargin),
+    "q285_opq_ivfadc" -> ivfadcSql(rotatedDeCte),
 
     "q269_ivfpq_recall" -> q269RecallSql
   )
+
+  /** The `de` CTE (vec_id, dv) of the signed-permutation-rotated
+    * vectors: dv_j = ±x[29j mod 64] (Opq.signedPerm(64)). */
+  private def rotatedDeCte: String =
+    """raw AS (
+      |  SELECT vec_id,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS rv
+      |  FROM embeddings),
+      |de AS (
+      |  SELECT vec_id, list_transform(range(0, 64), j ->
+      |    (CASE WHEN j % 3 = 0 THEN -1 ELSE 1 END) *
+      |      rv[((29*j) % 64) + 1]) AS dv
+      |  FROM raw)""".stripMargin
 
   /** The residual-IVFADC relational oracle, parameterized by the
     * source CTE producing (vec_id, dv) — q277 feeds raw doubles, q285
@@ -643,10 +536,7 @@ object IvfPqQueries extends QuerySet {
   // def, not val: `oracle` above initializes first and would capture
   // null from a later val (the round-8 init-order gotcha)
   private def q269RecallSql: String =
-      s"""WITH de AS (
-         |  SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv
-         |  FROM embeddings),
+      s"""WITH ${VectorQueries.plainDeCte},
          |cents AS (
          |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j, dv AS cv
          |  FROM de ORDER BY vec_id LIMIT 8),

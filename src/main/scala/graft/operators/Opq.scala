@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import graft.functions.Loops
 
 /** OPQ — Optimized Product Quantization: learn an orthogonal rotation
   * R so that product-quantizing `R·x` loses less than quantizing `x`
@@ -34,7 +38,7 @@ object Opq {
 
   /** d×d rotation literals ride ONE codegen'd projection; past ~128
     * dims the literal matrix (d² doubles) stops being plan-friendly —
-    * loud valve, like IvfAnn's literal-argmax cap. */
+    * loud valve, like IvfAnn's centroid cap. */
   private val MaxRotationDims = 128
 
   private def requireDims(d: Int): Unit =
@@ -57,11 +61,6 @@ object Opq {
     for (j <- 0 until dims)
       r(j)((29 * j) % dims) = if (j % 3 == 0) -1.0 else 1.0
     r
-  }
-
-  def identityRotation(dims: Int): Array[Array[Double]] = {
-    requireDims(dims)
-    Array.tabulate(dims, dims)((i, j) => if (i == j) 1.0 else 0.0)
   }
 
   /** y = R·x as one Catalyst projection: each output dim expands to an
@@ -108,27 +107,10 @@ object Opq {
     y
   }
 
-  /** argmin-L2 code per subspace, tie → lowest k (the house PQ rule). */
-  private def encodeLocal(y: Array[Double], cb: Array[Array[Array[Double]]],
-                          dsub: Int): Array[Int] = {
-    val m = cb.length
-    val codes = new Array[Int](m)
-    var mi = 0
-    while (mi < m) {
-      var best = 0; var bestD = Double.MaxValue
-      var k = 0
-      while (k < cb(mi).length) {
-        var dd = 0.0; var i = 0
-        while (i < dsub) {
-          val diff = y(mi * dsub + i) - cb(mi)(k)(i); dd += diff * diff; i += 1
-        }
-        if (dd < bestD) { bestD = dd; best = k }
-        k += 1
-      }
-      codes(mi) = best; mi += 1
-    }
-    codes
-  }
+  /** The PQ codes of `y` under `cb`: the encode kernels' own loop
+    * (argmin L2 per subspace, ties → lowest k). */
+  private def codesOf(y: Array[Double], cb: Array[Array[Array[Double]]]): ArrayData =
+    Loops.pqCodes(UnsafeArrayData.fromPrimitiveArray(y), false, cb, null)
 
   /** Exact orthogonal Procrustes: argmax_{R orthogonal} tr(R·B) =
     * V·Uᵀ for B = U·Σ·Vᵀ. SVD via Jacobi eigen of BᵀB (V, Σ²), then
@@ -206,9 +188,7 @@ object Opq {
     require(iters >= 0 && iters <= 64, s"Opq: iters=$iters outside [0, 64]")
     if (iters == 0) return (init, Nil)
     val dsub = d / numSub
-    val seeds = corpus.orderBy(col("vec_id")).limit(codesPerSub)
-      .select(col(embCol).cast("array<double>").as("e"))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val seeds = IvfAnn.firstVectors(corpus, embCol, codesPerSub)
     require(seeds.length == codesPerSub,
       s"Opq: corpus has only ${seeds.length} vectors for " +
         s"$codesPerSub codewords")
@@ -218,8 +198,7 @@ object Opq {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       var r = init
-      var cb = Array.tabulate(numSub, codesPerSub)((m, k) =>
-        rotateLocal(r, seeds(k)).slice(m * dsub, (m + 1) * dsub))
+      var cb = IvfPq.sliceCodebook(seeds.map(rotateLocal(r, _)), numSub)
       val history = Vector.newBuilder[Double]
       for (_ <- 1 to iters) {
         val (rr, ccb) = (r, cb) // stable closure captures
@@ -229,10 +208,10 @@ object Opq {
             Array.ofDim[Long](numSub, codesPerSub)))(
           seqOp = { case ((s, c), x) =>
             val y = rotateLocal(rr, x)
-            val codes = encodeLocal(y, ccb, dsub)
+            val codes = codesOf(y, ccb)
             var m = 0
             while (m < numSub) {
-              val k = codes(m); var i = 0
+              val k = codes.getInt(m); var i = 0
               while (i < dsub) { s(m)(k)(i) += y(m * dsub + i); i += 1 }
               c(m)(k) += 1; m += 1
             }
@@ -254,11 +233,11 @@ object Opq {
           (Array.ofDim[Double](d, d), 0.0))(
           seqOp = { case ((bm, e), x) =>
             val y = rotateLocal(rr, x)
-            val codes = encodeLocal(y, cbNew, dsub)
+            val codes = codesOf(y, cbNew)
             var e2 = e
             var m = 0
             while (m < numSub) {
-              val cw = cbNew(m)(codes(m)); var i = 0
+              val cw = cbNew(m)(codes.getInt(m)); var i = 0
               while (i < dsub) {
                 val q = cw(i)
                 val diff = y(m * dsub + i) - q
@@ -298,10 +277,10 @@ object Opq {
       .treeAggregate(0.0)(
         seqOp = { (e, x) =>
           val y = rotateLocal(r, x)
-          val codes = encodeLocal(y, cb, dsub)
+          val codes = codesOf(y, cb)
           var e2 = e; var m = 0
           while (m < cb.length) {
-            val cw = cb(m)(codes(m)); var i = 0
+            val cw = cb(m)(codes.getInt(m)); var i = 0
             while (i < dsub) {
               val diff = y(m * dsub + i) - cw(i); e2 += diff * diff; i += 1
             }

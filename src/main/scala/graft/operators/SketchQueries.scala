@@ -124,7 +124,7 @@ object SketchQueries extends QuerySet {
         .agg(count(lit(1)).as("cnt"))
       val cells = Replay.latestPerKey(
         Replay.runUpdate(liveCells, base.toString, s,
-          Replay.boundedStatePartitions(depth * width)),
+          Replay.boundedStateConf(depth * width)),
         col("r"), col("b"))
       val tok = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("term"))
@@ -232,7 +232,7 @@ object SketchQueries extends QuerySet {
           col("st.q75").as("q75"))
       val fin = Replay.latestPerKey(
         Replay.runUpdate(live, base.toString, s,
-          Replay.boundedStatePartitions(64)), col("source"))
+          Replay.boundedStateConf(64)), col("source"))
       val hist = docs
         .select(col("source"), col("n_chars").cast("double").as("v"))
         .groupBy(col("source"), col("v")).agg(count(lit(1)).as("c"))
@@ -339,7 +339,7 @@ object SketchQueries extends QuerySet {
         .agg(thetaAgg(xxhash64(col("w"))).as("sk"))
       val fin = Replay.latestPerKey(
         Replay.runUpdate(agg, base.toString, s,
-          Replay.boundedStatePartitions(64)), col("source"))
+          Replay.boundedStateConf(64)), col("source"))
       val skRows = fin.collect() // one row per source — dimension-bounded
       require(skRows.length <= 64,
         s"source dimension blew up: ${skRows.length}")
@@ -453,7 +453,7 @@ object SketchQueries extends QuerySet {
         .select(col("source"), expr("hll_sketch_estimate(sk)").as("est"))
       val fin = Replay.latestPerKey(
         Replay.runUpdate(agg, base.toString, s,
-          Replay.boundedStatePartitions(64)), col("source"))
+          Replay.boundedStateConf(64)), col("source"))
       val exact = docs
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)

@@ -108,11 +108,7 @@ object StreamParityQueries2 extends QuerySet {
       // watermark check flags any stateful consumer of it as a late-row
       // risk. The consumer here is order-driven (no event-time state,
       // NoTimeout), which is exactly the Flink chained-operator shape;
-      // scope the check off for this query only.
-      val ckKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-      val ckPrev = s.conf.get(ckKey, "true")
-      s.conf.set(ckKey, "false")
-      try {
+      // scope the check off for this stream only.
       val sorted = EventTimeOps.eventTimeSorted(
         centsStream(s, ep), "1 minute")
       val deltas = sorted.groupByKey(_.user_id)
@@ -131,10 +127,10 @@ object StreamParityQueries2 extends QuerySet {
             st.update(prev)
             out.iterator
         }
-      runAppend(deltas.toDF("event_id", "delta_cents"), base.toString, s)
+      runAppend(deltas.toDF("event_id", "delta_cents"), base.toString, s,
+          Map("spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false"))
         .filter(col("event_id") >= 0)
         .orderBy(col("event_id"))
-      } finally s.conf.set(ckKey, ckPrev)
     }),
 
     // STREAM FEEDBACK ITERATION oracle-bound (IterativeStream): every

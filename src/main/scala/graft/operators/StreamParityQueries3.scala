@@ -144,15 +144,12 @@ object StreamParityQueries3 extends QuerySet {
       import s.implicits._
       val base = Scratch.dir("statev2")
       val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      StateV2.withRocksDb(s) {
-        val ded = StateV2.dedupKeepLastV2(ep.stream(s))
-        latestPerKey(runUpdate(ded.toDF(), base.toString, s),
-            col("user_id"), col("event_type"))
-          .select(col("user_id"), col("event_type"), col("event_id"),
-            round(col("value"), 2).as("value"))
-          .orderBy(col("user_id"), col("event_type"))
-          .localCheckpoint() // materialize before the provider resets
-      }
+      val ded = StateV2.dedupKeepLastV2(ep.stream(s))
+      latestPerKey(runUpdate(ded.toDF(), base.toString, s, StateV2.rocksDb),
+          col("user_id"), col("event_type"))
+        .select(col("user_id"), col("event_type"), col("event_id"),
+          round(col("value"), 2).as("value"))
+        .orderBy(col("user_id"), col("event_type"))
     }),
 
     // MATCH_RECOGNIZE pattern ALTERNATION oracle-bound (reference
@@ -196,18 +193,15 @@ object StreamParityQueries3 extends QuerySet {
       import s.implicits._
       val base = Scratch.dir("statev2l")
       val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      StateV2.withRocksDb(s) {
-        val over = StateV2.boundedRowsOverV2(
-          ep.stream(s)
-            .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
-          n = 5)
-        runAppend(over.toDF()
-            .select(col("user_id"), col("event_id"),
-              expr("cast(sum_prev as bigint)").as("cents_prev"), col("cnt_prev")),
-            base.toString, s)
-          .orderBy(col("user_id"), col("event_id"))
-          .localCheckpoint() // materialize before the provider resets
-      }
+      val over = StateV2.boundedRowsOverV2(
+        ep.stream(s)
+          .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
+        n = 5)
+      runAppend(over.toDF()
+          .select(col("user_id"), col("event_id"),
+            expr("cast(sum_prev as bigint)").as("cents_prev"), col("cnt_prev")),
+          base.toString, s, StateV2.rocksDb)
+        .orderBy(col("user_id"), col("event_id"))
     }),
 
     // Named MapState on the v2 surface oracle-bound (the reference's
@@ -221,14 +215,11 @@ object StreamParityQueries3 extends QuerySet {
       import s.implicits._
       val base = Scratch.dir("statev2m")
       val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      StateV2.withRocksDb(s) {
-        val cnts = StateV2.typeCountsV2(ep.stream(s))
-        latestPerKey(runUpdate(cnts.toDF(), base.toString, s),
-            col("user_id"), col("event_type"))
-          .select(col("user_id"), col("event_type"), col("cnt"))
-          .orderBy(col("user_id"), col("event_type"))
-          .localCheckpoint() // materialize before the provider resets
-      }
+      val cnts = StateV2.typeCountsV2(ep.stream(s))
+      latestPerKey(runUpdate(cnts.toDF(), base.toString, s, StateV2.rocksDb),
+          col("user_id"), col("event_type"))
+        .select(col("user_id"), col("event_type"), col("cnt"))
+        .orderBy(col("user_id"), col("event_type"))
     }),
 
     // MATCH_RECOGNIZE zero-or-more (`*`) oracle-bound — the last
@@ -339,14 +330,12 @@ object StreamParityQueries3 extends QuerySet {
       import s.implicits._
       val base = Scratch.dir("statev2r")
       val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      StateV2.withRocksDb(s) {
-        val mx = StateV2.runningMaxV2(ep.stream(s))
-        latestPerKey(runUpdate(mx.toDF(), base.toString, s), col("user_id"))
-          .select(col("user_id"), col("event_id"),
-            round(col("value"), 2).as("value"))
-          .orderBy(col("user_id"))
-          .localCheckpoint() // materialize before the provider resets
-      }
+      val mx = StateV2.runningMaxV2(ep.stream(s))
+      latestPerKey(runUpdate(mx.toDF(), base.toString, s, StateV2.rocksDb),
+          col("user_id"))
+        .select(col("user_id"), col("event_id"),
+          round(col("value"), 2).as("value"))
+        .orderBy(col("user_id"))
     }),
 
     // QUERYABLE STATE point-lookup HISTORY oracle-bound — hardens

@@ -35,8 +35,6 @@ import graft.Tables
 object TpchQueries2 extends QuerySet {
 
   private def centsE(e: String) = expr(s"sum(cast(round($e * 100) as bigint))")
-  private def centsESql(e: String) =
-    s"CAST(sum(CAST(round($e * 100) AS BIGINT)) AS BIGINT)"
 
   val queries: Map[String, Q] = Map(
     // TPC-H Q2 shape (minimum cost supplier): per (part, supplier) the

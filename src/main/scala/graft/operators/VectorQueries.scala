@@ -563,46 +563,16 @@ object VectorQueries extends QuerySet {
     // once at 4 bytes/vector + one bounded (pid,cid) aggregation; no
     // full-precision vector ever shuffles.
     "q211_pq_ann" -> ((s, d) => {
-      val M = 8; val dsub = 8; val K = 16
       val e = Tables.embeddings(s, d)
-      val seeds: Array[Array[Double]] = e.orderBy(col("vec_id")).limit(K)
-        .select(asD(col("embedding")).as("de")).collect()
-        .map(_.getSeq[Double](0).toArray)
-      val cb = Array.tabulate(M, K)((m, k) => seeds(k).slice(m * dsub, (m + 1) * dsub))
-      // scaled int codeword norm²: same left-fold + round the oracle does
-      val cbNorm = Array.tabulate(M, K)((m, k) =>
-        math.round(cb(m)(k).foldLeft(0.0)((a, x) => a + x * x) * 1e6))
+      val cb = IvfPq.sliceCodebook(IvfAnn.firstVectors(e, "embedding", 16), 8)
       // the corpus-side M·K L2 encode as ONE fused native loop per
       // vector (functions/PqEncode.scala, r12 — the aggregate(zip_with)
       // composition was M·K interpreted HOF calls per row)
-      val enc = e.select(col("vec_id").as("cid"),
-          graft.functions.GraftFunctions.pq_encode(
-            asD(col("embedding")), cb).as("codes"))
-        .select(col("cid"), posexplode(col("codes")))
-        .select(col("cid"), col("pos").as("m"), col("col").as("code"))
-      // r13: the M×K LUT dots run as one fused kernel (functions/
-      // PqLut.scala) — the literal struct rows carried interpreted
-      // aggregate(zip_with) dots and bloated the plan; ×1e6 + round
-      // stay column ops, so the scaled integers are unchanged
-      val lut = e.filter(col("vec_id") <= 20)
+      val codes = IvfPq.codeRows(e, Nil,
+        graft.functions.GraftFunctions.pq_encode(asD(col("embedding")), cb))
+      val probes = e.filter(col("vec_id") <= 20)
         .select(col("vec_id").as("pid"), asD(col("embedding")).as("pe"))
-        .select(col("pid"), explode(graft.functions.GraftFunctions
-          .pq_lut(col("pe"), cb, cbNorm)).as("x"))
-        .select(col("pid"), col("x.m").as("m"), col("x.k").as("k"),
-          round(col("x.dot") * 1e6).cast("long").as("pdot"),
-          col("x.cn").as("cn"))
-      val score = col("idot").cast("double") /
-        greatest(sqrt(col("rn").cast("double")), lit(1e-30))
-      val w = Window.partitionBy(col("pid")).orderBy(col("score").desc, col("cid"))
-      enc.join(broadcast(lut),
-          enc("m") === lut("m") && enc("code") === lut("k"))
-        .filter(col("cid") =!= col("pid"))
-        .groupBy(col("pid"), col("cid"))
-        .agg(sum(col("pdot")).as("idot"), sum(col("cn")).as("rn"))
-        .withColumn("score", score)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("pid"), col("rk"), col("cid"), round(col("score"), 6).as("score6"))
+      IvfPq.adc(codes, probes, Nil, cb, k = 5)
         .orderBy(col("pid"), col("rk"))
     }),
 
@@ -862,62 +832,8 @@ object VectorQueries extends QuerySet {
          |FROM m LEFT JOIN dups d ON m.vec_id = d.vec_id
          |ORDER BY m.vec_id""".stripMargin,
 
-    // PQ from first principles in SQL: codebook = subvectors of the
-    // first 16 vectors; encode = argmin L2² per subspace (tie lowest
-    // code); score = Σ scaled-int LUT dots / sqrt(Σ scaled-int
-    // codeword norms). Same left-fold arithmetic as the Spark side.
-    "q211_pq_ann" ->
-      s"""WITH de AS (
-         |  SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv
-         |  FROM embeddings),
-         |ms AS (SELECT unnest(range(0, 8)) AS m),
-         |seeds AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS k, dv AS sv
-         |  FROM de ORDER BY vec_id LIMIT 16),
-         |cb AS (
-         |  SELECT seeds.k, ms.m,
-         |    list_transform(range(1, 9), i -> sv[ms.m*8 + i]) AS cw
-         |  FROM seeds, ms),
-         |cbn AS (
-         |  SELECT k, m, cw,
-         |    CAST(round(list_reduce(list_transform(range(1, 9),
-         |      i -> cw[i]*cw[i]), (x,y) -> x+y) * 1e6) AS BIGINT) AS cn
-         |  FROM cb),
-         |subs AS (
-         |  SELECT vec_id, ms.m,
-         |    list_transform(range(1, 9), i -> dv[ms.m*8 + i]) AS sub
-         |  FROM de, ms),
-         |enc AS (
-         |  SELECT vec_id AS cid, m, k AS code FROM (
-         |    SELECT s.vec_id, s.m, c.k,
-         |      row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-         |        list_reduce(list_transform(range(1, 9),
-         |          i -> (s.sub[i]-c.cw[i])*(s.sub[i]-c.cw[i])),
-         |          (x,y) -> x+y), c.k) AS rn
-         |    FROM subs s JOIN cbn c ON s.m = c.m) WHERE rn = 1),
-         |lut AS (
-         |  SELECT s.vec_id AS pid, s.m, c.k,
-         |    CAST(round(list_reduce(list_transform(range(1, 9),
-         |      i -> s.sub[i]*c.cw[i]), (x,y) -> x+y) * 1e6) AS BIGINT)
-         |      AS pdot,
-         |    c.cn
-         |  FROM subs s JOIN cbn c ON s.m = c.m WHERE s.vec_id <= 20),
-         |sc AS (
-         |  SELECT l.pid, e.cid, sum(l.pdot) AS idot, sum(l.cn) AS rn
-         |  FROM enc e JOIN lut l ON e.m = l.m AND e.code = l.k
-         |  WHERE e.cid <> l.pid
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT pid, cid,
-         |    CAST(idot AS DOUBLE) /
-         |      greatest(sqrt(CAST(rn AS DOUBLE)), 1e-30) AS score,
-         |    row_number() OVER (PARTITION BY pid
-         |                       ORDER BY CAST(idot AS DOUBLE) /
-         |      greatest(sqrt(CAST(rn AS DOUBLE)), 1e-30) DESC, cid) AS rk
-         |  FROM sc)
-         |SELECT pid, rk, cid, round(score, 6) AS score6
-         |FROM ranked WHERE rk <= 5 ORDER BY pid, rk""".stripMargin,
+    // the flat ADC scan over every vector (see flatAdcSql)
+    "q211_pq_ann" -> flatAdcSql(plainDeCte, " WHERE rn = 1"),
 
     // nprobe=K ≡ brute force: the oracle is exactly q70's.
     "q146_ivf_exact" ->
@@ -1075,4 +991,69 @@ object VectorQueries extends QuerySet {
         |SELECT di, dj, round(corr, 6) AS corr6 FROM r
         |ORDER BY abs(corr) DESC, di, dj LIMIT 15""".stripMargin
   )
+
+  /** The DuckDB source CTE `de` (vec_id, dv) of the PQ oracles: each
+    * embedding as doubles. */
+  private[operators] def plainDeCte: String =
+    """de AS (
+      |  SELECT vec_id,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv
+      |  FROM embeddings)""".stripMargin
+
+  /** PQ from first principles in SQL, the oracle of every flat ADC
+    * scan: codebook = subvectors of the first 16 vectors of `de`;
+    * encode = argmin L2² per subspace (tie lowest code), kept where
+    * `encWhere` holds; score = Σ scaled-int LUT dots / sqrt(Σ
+    * scaled-int codeword norms). Same left-fold arithmetic as the
+    * Spark side. `deCte` defines `de` (vec_id, dv), possibly after
+    * helper CTEs. */
+  private[operators] def flatAdcSql(deCte: String, encWhere: String): String =
+      s"""WITH $deCte,
+         |ms AS (SELECT unnest(range(0, 8)) AS m),
+         |seeds AS (
+         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS k, dv AS sv
+         |  FROM de ORDER BY vec_id LIMIT 16),
+         |cb AS (
+         |  SELECT seeds.k, ms.m,
+         |    list_transform(range(1, 9), i -> sv[ms.m*8 + i]) AS cw
+         |  FROM seeds, ms),
+         |cbn AS (
+         |  SELECT k, m, cw,
+         |    CAST(round(list_reduce(list_transform(range(1, 9),
+         |      i -> cw[i]*cw[i]), (x,y) -> x+y) * 1e6) AS BIGINT) AS cn
+         |  FROM cb),
+         |subs AS (
+         |  SELECT vec_id, ms.m,
+         |    list_transform(range(1, 9), i -> dv[ms.m*8 + i]) AS sub
+         |  FROM de, ms),
+         |enc AS (
+         |  SELECT vec_id AS cid, m, k AS code FROM (
+         |    SELECT s.vec_id, s.m, c.k,
+         |      row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
+         |        list_reduce(list_transform(range(1, 9),
+         |          i -> (s.sub[i]-c.cw[i])*(s.sub[i]-c.cw[i])),
+         |          (x,y) -> x+y), c.k) AS rn
+         |    FROM subs s JOIN cbn c ON s.m = c.m)$encWhere),
+         |lut AS (
+         |  SELECT s.vec_id AS pid, s.m, c.k,
+         |    CAST(round(list_reduce(list_transform(range(1, 9),
+         |      i -> s.sub[i]*c.cw[i]), (x,y) -> x+y) * 1e6) AS BIGINT)
+         |      AS pdot,
+         |    c.cn
+         |  FROM subs s JOIN cbn c ON s.m = c.m WHERE s.vec_id <= 20),
+         |sc AS (
+         |  SELECT l.pid, e.cid, sum(l.pdot) AS idot, sum(l.cn) AS rn
+         |  FROM enc e JOIN lut l ON e.m = l.m AND e.code = l.k
+         |  WHERE e.cid <> l.pid
+         |  GROUP BY 1, 2),
+         |ranked AS (
+         |  SELECT pid, cid,
+         |    CAST(idot AS DOUBLE) /
+         |      greatest(sqrt(CAST(rn AS DOUBLE)), 1e-30) AS score,
+         |    row_number() OVER (PARTITION BY pid
+         |                       ORDER BY CAST(idot AS DOUBLE) /
+         |      greatest(sqrt(CAST(rn AS DOUBLE)), 1e-30) DESC, cid) AS rk
+         |  FROM sc)
+         |SELECT pid, rk, cid, round(score, 6) AS score6
+         |FROM ranked WHERE rk <= 5 ORDER BY pid, rk""".stripMargin
 }

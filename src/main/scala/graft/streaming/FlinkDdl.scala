@@ -51,10 +51,7 @@ object FlinkDdl {
 
   final case class TableDef(name: String, schema: StructType,
       computed: Seq[(String, String)], watermark: Option[(String, String)],
-      partitionedBy: Seq[String], path: String, format: String) {
-    def readerColumns: Seq[String] =
-      schema.fieldNames.toSeq ++ computed.map(_._1)
-  }
+      partitionedBy: Seq[String], path: String, format: String)
 
   /** Parse a Flink SQL type name to a Spark type. */
   def sqlType(t: String): DataType = {

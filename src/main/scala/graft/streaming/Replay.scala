@@ -189,30 +189,57 @@ object Replay {
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
 
-  /** Run an append-mode streaming frame to parquet, read it back. */
-  def runAppend(df: DataFrame, base: String, s: SparkSession): DataFrame = {
+  /** Start a stream with `conf` set on the session for the call only.
+    * `start()` clones the session (StreamExecution's constructor calls
+    * `cloneSession()`), so the stream keeps these values for its whole
+    * run — planning, state stores and its micro-batch DataFrames —
+    * while the caller's session has its own values back as soon as
+    * `start()` returns. */
+  def started(s: SparkSession, conf: Map[String, String])(
+      start: => StreamingQuery): StreamingQuery = {
+    val prev = conf.keys.map(k => k -> s.conf.getOption(k))
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    try start
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
+  /** Run an append-mode streaming frame to parquet, read it back.
+    * `conf` applies to this stream only (see [[started]]). */
+  def runAppend(df: DataFrame, base: String, s: SparkSession,
+      conf: Map[String, String] = Map.empty): DataFrame = {
     val (out, ck) = (s"$base/out", s"$base/ck")
-    val q = df.writeStream.option("checkpointLocation", ck)
-      .outputMode("append").format("parquet").option("path", out)
-      .trigger(Trigger.AvailableNow()).start()
+    val q = started(s, conf) {
+      df.writeStream.option("checkpointLocation", ck)
+        .outputMode("append").format("parquet").option("path", out)
+        .trigger(Trigger.AvailableNow()).start()
+    }
     q.awaitTermination()
     Tables.read(s, out)
   }
 
   /** Run `df` to termination under Trigger.AvailableNow, handing every
     * micro-batch and its batch id to `f`; returns the finished query
-    * (its progress log). */
-  def runBatches(df: DataFrame, ck: String, outputMode: String = "append")(
+    * (its progress log). `conf` applies to this stream only (see
+    * [[started]]), not to the caller's session that `f` may use. */
+  def runBatches(df: DataFrame, ck: String, outputMode: String = "append",
+      conf: Map[String, String] = Map.empty)(
       f: (DataFrame, Long) => Unit): StreamingQuery = {
-    val q = df.writeStream.option("checkpointLocation", ck).outputMode(outputMode)
-      .foreachBatch(f).trigger(Trigger.AvailableNow()).start()
+    val q = started(df.sparkSession, conf) {
+      df.writeStream.option("checkpointLocation", ck).outputMode(outputMode)
+        .foreachBatch(f).trigger(Trigger.AvailableNow()).start()
+    }
     q.awaitTermination()
     q
   }
 
-  /** State-partition count for streams whose keyed state is BOUNDED BY
+  /** Per-stream conf for streams whose keyed state is BOUNDED BY
     * CONSTRUCTION (sketch cells: ≤2 K CMS cells, HLL/KLL/theta grain
-    * cells) — r12: every micro-batch pays per-partition state-store
+    * cells): the state-partition count (spark.sql.shuffle.partitions,
+    * which the checkpoint then pins for every batch) — r12: every
+    * micro-batch pays per-partition state-store
     * open/commit + task overhead, and with the session default (cores)
     * the 4-epoch sketch replays spent ~2 s/run on 32-way state traffic
     * for a few-KB state. A small count is the SCALE-CORRECT choice
@@ -230,27 +257,19 @@ object Replay {
     * per-512-cells rule keeps a future larger-but-bounded state from
     * silently inheriting a too-small count, and drops the
     * source-grained sketches (≤64 cells) to one partition. */
-  def boundedStatePartitions(stateCells: Long): Option[Int] =
-    Some(math.max(1L, math.min(4L, (stateCells + 511) / 512)).toInt)
+  def boundedStateConf(stateCells: Long): Map[String, String] =
+    Map("spark.sql.shuffle.partitions" ->
+      math.max(1L, math.min(4L, (stateCells + 511) / 512)).toString)
 
   /** Run an UPDATE-mode streaming frame via foreachBatch (parquet has
     * no update sink): every per-batch refresh is appended tagged with
     * its batchId; the caller reduces to newest-emission-per-key.
-    * `statePartitions` pins spark.sql.shuffle.partitions for THIS
-    * stream only (the checkpoint pins it for every batch; the session
-    * value is restored after the run) — pass it only when the keyed
-    * state is bounded by construction. */
+    * `conf` applies to this stream only (see [[started]]). */
   def runUpdate(df: DataFrame, base: String, s: SparkSession,
-      statePartitions: Option[Int] = None): DataFrame = {
+      conf: Map[String, String] = Map.empty): DataFrame = {
     val out = s"$base/out"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(p =>
-      s.conf.set("spark.sql.shuffle.partitions", p.toString))
-    try runBatches(df, s"$base/ck", "update") { (b, id) =>
+    runBatches(df, s"$base/ck", "update", conf) { (b, id) =>
       b.withColumn("batch_id", lit(id)).write.mode("append").parquet(out)
-    } finally {
-      if (statePartitions.isDefined)
-        s.conf.set("spark.sql.shuffle.partitions", prev)
     }
     Tables.read(s, out)
   }

@@ -46,7 +46,7 @@ object StateV2 {
   /** Keep-last dedup on the v2 surface (update-mode changelog —
     * result-identical to [[StatefulOps.dedupKeepLast]]). The caller
     * must run with the RocksDB state store provider (see
-    * [[withRocksDb]]). */
+    * [[rocksDb]]). */
   def dedupKeepLastV2(events: Dataset[Event]): Dataset[Event] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -91,7 +91,7 @@ object StateV2 {
   /** ROWS `n-1` PRECEDING running aggregate on the v2 ListState
     * surface (append-mode, result-identical to
     * [[StatefulOps.boundedRowsOver]]). RocksDB provider required
-    * (see [[withRocksDb]]). */
+    * (see [[rocksDb]]). */
   def boundedRowsOverV2(events: Dataset[Event], n: Int): Dataset[StatefulOps.OverRow] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -132,7 +132,7 @@ object StateV2 {
   }
 
   /** Per-(user, type) counts on the v2 MapState surface (update-mode
-    * changelog). RocksDB provider required (see [[withRocksDb]]). */
+    * changelog). RocksDB provider required (see [[rocksDb]]). */
   def typeCountsV2(events: Dataset[Event]): Dataset[TypeCount] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -182,7 +182,7 @@ object StateV2 {
 
   /** Rolling per-user maxBy on the v2 reducing-state surface
     * (update-mode changelog). RocksDB provider required (see
-    * [[withRocksDb]]). */
+    * [[rocksDb]]). */
   def runningMaxV2(events: Dataset[Event]): Dataset[MaxRow] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -191,19 +191,11 @@ object StateV2 {
         TimeMode.None(), OutputMode.Update())
   }
 
-  /** Run `body` with the RocksDB state store provider installed
-    * (transformWithState's requirement), restoring the previous
-    * provider afterwards — other queries in the session keep their
+  /** The per-stream conf that installs the RocksDB state store provider
+    * (transformWithState's requirement); pass it to a `Replay` runner
+    * or `Replay.started`, so other queries in the session keep their
     * HDFS-backed checkpoints. */
-  def withRocksDb[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
+  val rocksDb: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 }

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Generated code is compiled once per JVM, not once per invocation:
@@ -24,9 +25,11 @@ class CodegenReuseSpec extends SparkSpec {
     }
     // Cold, the pair compiles about 119 units; Spark's default cache
     // recompiles 80-100 of them on every later run. Once warm, a run
-    // still compiles 0-8 plan variants it had not met before, and earlier
-    // suites in this JVM may leave the first run partly warm (75 units),
-    // so the bound is a fifth of the first run rather than a tenth.
+    // still compiles 0-8 plan variants it had not met before, so the
+    // bound is a fifth of the first run rather than a tenth. Run 1 is
+    // cold whatever ran earlier in this JVM: the codegen cache starts
+    // empty.
+    CodegenReuseSpec.clearCodegenCache()
     val counts = Seq.fill(3)(run())
     info(s"compilations per run: $counts")
     assert(counts(2) <= counts(0) / 5, s"compilations per run: $counts")
@@ -60,4 +63,13 @@ class CodegenReuseSpec extends SparkSpec {
 object CodegenReuseSpec {
   val batchLoader = new AtomicReference[ClassLoader]()
   val streamLoader = new AtomicReference[ClassLoader]()
+
+  /** Empty Spark's JVM-wide generated-class cache (`CodeGenerator`'s
+    * private `cache`), so the next query compiles from scratch. */
+  def clearCodegenCache(): Unit = {
+    val get = CodeGenerator.getClass.getDeclaredMethod("cache")
+    get.setAccessible(true)
+    val cache = get.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+  }
 }

@@ -23,15 +23,6 @@ class IvfAnnSpec extends SparkSpec {
     assert(clusters.forall(c => c >= 0 && c < 8) && clusters.size > 1)
   }
 
-  test("assignViaJoin (large-K path) agrees with the literal argmax") {
-    val m = IvfAnn.fit(emb, "embedding", k = 8)
-    def toMap(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("vec_id"), col("cluster")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(toMap(IvfAnn.assignViaJoin(emb, "embedding", m)) ==
-           toMap(IvfAnn.assign(emb, "embedding", m)))
-  }
-
   test("search returns candidates only from probed lists, ranked by cosine") {
     val m = IvfAnn.fit(emb, "embedding", k = 8)
     val probes = emb.filter(col("vec_id") <= 5)
@@ -63,12 +54,28 @@ class IvfAnnSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       IvfAnn.fit(emb, "embedding", k = 1000000)
     }
-    assert(e.getMessage.contains("assignViaJoin"))
+    assert(e.getMessage.contains("ships inside every task's expression"))
     val e2 = intercept[IllegalArgumentException] {
       IvfAnn.assign(emb, "embedding",
         IvfAnn.Model(Array.fill(257)(Array(0.0))))
     }
     assert(e2.getMessage.contains("cap"))
+  }
+
+  test("search probes the lower list id of two identical centroids") {
+    // a duplicate of probe 1's own list, appended as list 8: assign
+    // puts every member in the lower id, so list 8 is empty and a
+    // probe that ranked it first would find nothing
+    val m = IvfAnn.fit(emb, "embedding", k = 8)
+    val probes = emb.filter(col("vec_id") === 1)
+    val own = IvfAnn.assign(probes, "embedding", m)
+      .select(col("cluster")).head().getInt(0)
+    val dup = IvfAnn.Model(m.centroids :+ m.centroids(own))
+    def hits(model: IvfAnn.Model) =
+      IvfAnn.search(emb, probes, "embedding", model, k = 3, nprobe = 1)
+        .orderBy(col("rk")).collect().map(_.toSeq).toSeq
+    assert(hits(m).nonEmpty)
+    assert(hits(dup) == hits(m), "the tie must go to the lower list id")
   }
 
   test("approximate setting (nprobe 2 of 8) keeps recall@5 above the floor") {

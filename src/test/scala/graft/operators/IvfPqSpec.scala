@@ -99,6 +99,30 @@ class IvfPqSpec extends SparkSpec {
       "residual candidates leaked in from unprobed lists")
   }
 
+  test("fitResidual puts each seed in the list IvfAnn.assign gives it, beside a zero-norm centroid") {
+    // vector 0 is all-zero, so with lloydIters = 0 list 0's centroid
+    // has no direction: its cosine is undefined and must lose every
+    // argmax, in the residual seeds as in assign
+    val spark2 = spark; import spark2.implicits._
+    val vecs = (0 until 12).map { i =>
+      i.toLong -> (if (i == 0) Array.fill(4)(0.0)
+                   else Array.tabulate(4)(j => ((i * 7 + j * 3) % 11 - 5).toDouble))
+    }
+    val corpus = vecs.toDF("vec_id", "embedding")
+    val rm = IvfPq.fitResidual(corpus, "embedding", kCoarse = 3,
+      lloydIters = 0, numSub = 2, codesPerSub = 6)
+    val lists = IvfAnn.assign(corpus, "embedding", IvfAnn.Model(rm.centroids))
+      .select(col("vec_id"), col("cluster")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    for (k <- 0 until 6) {
+      val x = vecs(k)._2
+      val c = rm.centroids(lists(k.toLong))
+      val residual = x.zip(c).map { case (a, b) => a - b }
+      assert(rm.codebook.flatMap(_(k)).toSeq == residual.toSeq,
+        s"seed $k is not the residual to its list ${lists(k.toLong)}")
+    }
+  }
+
   test("cluster-partitioned index persistence prunes unprobed lists at the scan") {
     // the 100 TB claim made concrete: the index written
     // partitionBy(cluster) must let a probe batch's list filter reach

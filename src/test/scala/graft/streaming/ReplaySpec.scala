@@ -127,6 +127,26 @@ class ReplaySpec extends SparkSpec {
     assert(ep.schema == spark.read.parquet(ep.in).schema, "quarters with sentinels")
   }
 
+  test("a per-stream conf reaches the stream's state, not the caller's session") {
+    val spark2 = spark; import spark2.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val own = spark.conf.get(key)
+    val requested = own.toInt + 1
+    val base = Scratch.dir("rconf").toString
+    val ep = Replay.quarters(events, base)
+    val counts = ep.stream(spark).groupBy($"user_id").count()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val q = Replay.runBatches(counts, s"$base/ck", "update",
+        Map(key -> requested.toString)) { (b, _) =>
+      seen.add(spark.conf.get(key))
+      b.count()
+    }
+    assert(!seen.isEmpty && seen.asScala.forall(_ == own),
+      s"foreachBatch saw $seen, the caller's value is $own")
+    assert(q.lastProgress.stateOperators.head.numShufflePartitions == requested)
+    assert(spark.conf.get(key) == own)
+  }
+
   test("a replay stopped after its second batch resumes at batch 2 on its checkpoint") {
     val base = Scratch.dir("rresume").toString
     val counts = Replay.quarters(events, base).streamDf(spark).groupBy("event_type").count()
