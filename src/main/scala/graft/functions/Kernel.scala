@@ -109,12 +109,49 @@ private[graft] object Loops {
   }
 }
 
+/** Value semantics for an expression whose constructor holds arrays (a
+  * codebook, centroids, a merge table): two instances are equal when
+  * their arguments are equal element by element, each argument's
+  * content hash is computed once per instance, and a plan string shows
+  * an array by its element type, shape and content hash
+  * (`double[8][256][4]{1f0c2a9e}`) rather than its JVM identity. */
+private[functions] trait ArrayArgs extends Expression {
+  @transient private lazy val argHashes: Array[Int] = productIterator.map {
+    case a: Array[_] => java.util.Arrays.deepHashCode(Array[AnyRef](a.asInstanceOf[AnyRef]))
+    case x => x.##
+  }.toArray
+
+  override def hashCode(): Int = java.util.Arrays.hashCode(argHashes)
+
+  override def equals(o: Any): Boolean = o match {
+    case that: ArrayArgs =>
+      (this eq that) || (that.getClass == getClass && that.hashCode == hashCode &&
+        productIterator.zip(that.productIterator).forall { case (a, b) =>
+          java.util.Objects.deepEquals(a.asInstanceOf[AnyRef], b.asInstanceOf[AnyRef])
+        })
+    case _ => false
+  }
+
+  override protected def stringArgs: Iterator[Any] =
+    productIterator.zip(argHashes.iterator).map {
+      case (a: Array[_], h) =>
+        def dims(x: Any): String = x match {
+          case xs: Array[_] => s"[${xs.length}]" + (if (xs.isEmpty) "" else dims(xs(0)))
+          case _ => ""
+        }
+        var elem: Class[_] = a.getClass
+        while (elem.isArray) elem = elem.getComponentType
+        f"${elem.getSimpleName}${dims(a)}{$h%08x}"
+      case (x, _) => x
+    }
+}
+
 /** The Catalyst wiring every fused kernel in this package shares. A
   * kernel is a `compute` over its evaluated, non-null children that
   * returns its value or null; interpreted evaluation calls it directly,
   * and the generated code calls it on the kernel instance (a referenced
   * object), so there is one implementation to keep true. */
-private[functions] sealed trait Kernel extends Expression {
+private[functions] sealed trait Kernel extends ArrayArgs {
   /** What each child must be, in child order. */
   def inputTypes: Seq[Kernel.Input]
 

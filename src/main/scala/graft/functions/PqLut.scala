@@ -113,7 +113,7 @@ case class CentroidDots(child: Expression, cents: Array[Array[Double]])
 case class CrossNormAt(first: Expression, second: Expression,
                        third: Expression,
                        table: Array[Array[Array[Long]]])
-    extends TernaryExpression {
+    extends TernaryExpression with ArrayArgs {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean =

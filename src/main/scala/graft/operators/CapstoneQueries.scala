@@ -36,16 +36,6 @@ import graft.{Scratch, Tables}
   */
 object CapstoneQueries extends QuerySet {
 
-  /** 13-gram hashes of (doc_id, text) — the q283 decontamination unit
-    * (every doc has ≥1 gram: short docs hash their whole text window). */
-  private def gramHashes(df: DataFrame): DataFrame = {
-    val w = toks(col("text"))
-    df.select(col("doc_id"), explode(transform(
-        sequence(lit(1), greatest(size(w) - 12, lit(1))),
-        i => concat_ws(" ", slice(w, i, lit(13))))).as("g"))
-      .select(col("doc_id"), md5i(col("g")).as("h"))
-  }
-
   val queries: Map[String, Q] = Map(
     "q340_curation_pipeline" -> ((s, d) => {
       import graft.sources.ManifestTable
@@ -119,10 +109,10 @@ object CapstoneQueries extends QuerySet {
       // ORIGINAL corpus; any survivor sharing a distinct gram hash
       // with it is removed (benchmark members remove themselves).
       val bench = Tables.documents(s, d)
-        .filter(pmod(md5i(col("text")), lit(100)) >= 97)
+        .filter(splitBucket >= 97)
         .select(col("doc_id"), col("text"))
-      val bg = gramHashes(bench).select(col("h")).distinct()
-      val dirty = gramHashes(spread(s2r)).join(bg, "h")
+      val bg = CurationQueries.gramHashes(bench).select(col("h")).distinct()
+      val dirty = CurationQueries.gramHashes(spread(s2r)).join(bg, "h")
         .select(col("doc_id")).distinct()
       val s3 = s2r.join(dirty, Seq("doc_id"), "left_anti")
       commitStage(s3, "s3")
@@ -188,8 +178,7 @@ object CapstoneQueries extends QuerySet {
     // the whole pipeline replayed in SQL: gates → shingle-postings
     // pairs → recursive transitive closure → 13-gram decontamination
     // → histogram budget select → prefix-sum packing
-    "q340_curation_pipeline" ->
-      """WITH RECURSIVE
+    "q340_curation_pipeline" -> ("""WITH RECURSIVE
         |d0 AS (
         |  SELECT doc_id, text, len(string_split(text,' '))::BIGINT AS n_tok
         |  FROM documents),
@@ -203,30 +192,11 @@ object CapstoneQueries extends QuerySet {
         |    FROM d0)
         |  WHERE n_tok >= 20 AND ttr <= 900
         |    AND vowel_ppm BETWEEN 260000 AND 320000),
-        |sh0 AS (
-        |  SELECT DISTINCT doc_id, sh FROM (
-        |    SELECT doc_id, unnest(
-        |      list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 2)),
-        |      i -> array_to_string(string_split(text,' ')[i:i+3], ' '))) AS sh
-        |    FROM s1)),
-        |sh AS (
-        |  SELECT doc_id, sh FROM sh0
-        |  QUALIFY count(*) OVER (PARTITION BY sh) <= 50),
-        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |co AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS co
-        |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |e AS (
-        |  SELECT id_a AS a, id_b AS b FROM co
-        |  JOIN sizes na ON na.doc_id = id_a
-        |  JOIN sizes nb ON nb.doc_id = id_b
-        |  WHERE co * 1000000 // (na.n_sh + nb.n_sh - co) >= 100000),
-        |und AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM und
-        |  UNION
-        |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+        |""".stripMargin + TextQueries.dedupReachCtes(
+        s"""    SELECT doc_id, unnest(
+           |      ${TextQueries.shinglesSql}) AS sh
+           |    FROM s1""".stripMargin) +
+      """,
         |lab AS (
         |  SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
         |s2 AS (
@@ -292,5 +262,5 @@ object CapstoneQueries extends QuerySet {
         |UNION ALL
         |SELECT 's5_packed', count(DISTINCT seq_id)::BIGINT,
         |  sum(n_tok)::BIGINT, sum(seq_id)::BIGINT FROM packed
-        |ORDER BY stage""".stripMargin)
+        |ORDER BY stage""".stripMargin))
 }

@@ -23,7 +23,6 @@ import graft.Tables
 object CorpusQueries extends QuerySet {
 
   private val langQuota = 60 // q204: per-language cap
-  private val chunkW = 10 // q205: words per dedup chunk
   private val winW = 64   // q267: tokens per context window
   private val strideW = 48 // q267: window stride (16-token overlap)
 
@@ -89,14 +88,11 @@ object CorpusQueries extends QuerySet {
     // (md5 of text), not the id, so byte-identical duplicates can
     // never straddle train and test — the standard decontamination-
     // aware split. Pure per-row projection, no shuffle.
-    "q203_split_assign" -> ((s, d) => {
-      val bucket = pmod(md5i(col("text")), lit(100))
+    "q203_split_assign" -> ((s, d) =>
       Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), bucket.as("bucket"),
-          when(bucket < 80, "train").when(bucket < 90, "val")
-            .otherwise("test").as("split"))
-        .orderBy(col("doc_id"))
-    }),
+        .select(col("doc_id"), col("source"), splitBucket.as("bucket"),
+          contentSplit.as("split"))
+        .orderBy(col("doc_id"))),
 
     // Language rebalancing: deterministic per-language downsampling to
     // a fixed quota, ranked by content hash (uniform, reproducible)
@@ -148,30 +144,13 @@ object CorpusQueries extends QuerySet {
         .orderBy(col("doc_id"), col("chunk_id"))
     }),
 
-    "q205_chunk_dedup" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val w0 = toks(col("text"))
-      val nChunks = (((size(w0) - 1) / chunkW).cast("int") + 1)
-      val chunks = docs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), nChunks - 1),
-          i => concat_ws(" ", slice(w0, i * chunkW + 1, lit(chunkW))))))
-        .toDF("doc_id", "idx", "chunk")
-      val w = Window.partitionBy(col("chunk"))
-        .orderBy(col("doc_id"), col("idx"))
-      val kept = chunks.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-      val rebuilt = kept.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_kept"),
-          concat_ws(" ", transform(
-            array_sort(collect_list(struct(col("idx"), col("chunk")))),
-            s0 => s0.getField("chunk"))).as("cleaned"))
-      docs.select(col("doc_id"), nChunks.cast("long").as("n_chunks"))
-        .join(rebuilt, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chunks"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-          coalesce(col("cleaned"), lit("")).as("cleaned"))
-        .orderBy(col("doc_id"))
-    }),
+    "q205_chunk_dedup" -> ((s, d) =>
+      chunkClean(Tables.documents(s, d)) { chunks =>
+        val w = Window.partitionBy(col("chunk"))
+          .orderBy(col("doc_id"), col("idx"))
+        chunks.withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+      }),
 
     // Benchmark span EXCISION — decontamination that REMOVES the
     // contaminated spans instead of flagging whole documents (q96/
@@ -187,30 +166,14 @@ object CorpusQueries extends QuerySet {
       val bench = docs.filter(col("source") === "src2")
         .select(explode(TextQueries.shingles4(col("text"))).as("sh"))
         .distinct()
-      val corpus = docs.filter(col("source") =!= "src2")
-      val w0 = toks(col("text"))
-      val nChunks = (((size(w0) - 1) / chunkW).cast("int") + 1)
-      val chunks = corpus.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), nChunks - 1),
-          i => concat_ws(" ", slice(w0, i * chunkW + 1, lit(chunkW))))))
-        .toDF("doc_id", "idx", "chunk")
-      val contaminated = chunks
-        .select(col("doc_id"), col("idx"),
-          explode(TextQueries.shingles4(col("chunk"))).as("sh"))
-        .join(broadcast(bench), Seq("sh"))
-        .select(col("doc_id"), col("idx")).distinct()
-      val kept = chunks.join(contaminated, Seq("doc_id", "idx"), "left_anti")
-      val rebuilt = kept.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_kept"),
-          concat_ws(" ", transform(
-            array_sort(collect_list(struct(col("idx"), col("chunk")))),
-            s0 => s0.getField("chunk"))).as("cleaned"))
-      corpus.select(col("doc_id"), nChunks.cast("long").as("n_chunks"))
-        .join(rebuilt, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chunks"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-          coalesce(col("cleaned"), lit("")).as("cleaned"))
-        .orderBy(col("doc_id"))
+      chunkClean(docs.filter(col("source") =!= "src2")) { chunks =>
+        val contaminated = chunks
+          .select(col("doc_id"), col("idx"),
+            explode(TextQueries.shingles4(col("chunk"))).as("sh"))
+          .join(broadcast(bench), Seq("sh"))
+          .select(col("doc_id"), col("idx")).distinct()
+        chunks.join(contaminated, Seq("doc_id", "idx"), "left_anti")
+      }
     }),
 
     // Source-weighted corpus mixing: each source gets a deterministic
@@ -343,6 +306,34 @@ object CorpusQueries extends QuerySet {
     })
   )
 
+  /** q280's winnowing as DuckDB CTEs (no WITH), shared with q287's
+    * oracle: word 3-gram hashes, the packed window minima, the distinct
+    * fingerprints `fps`, and `p`, their df-capped postings. */
+  private[operators] val winnowPostingCtes =
+    """w AS (SELECT doc_id, string_split(text, ' ') AS ws
+      |           FROM documents),
+      |grams AS (
+      |  SELECT doc_id,
+      |    unnest(list_transform(range(1, greatest(len(ws) - 1, 2)),
+      |      i -> {'pos': i,
+      |            'h': ('0x'||substr(md5(
+      |                   array_to_string(ws[i:i+2], ' ')),1,8))::BIGINT}))
+      |      AS g
+      |  FROM w),
+      |keyed AS (SELECT doc_id, g.pos AS pos,
+      |                 g.h * 1048576 + (1048575 - g.pos) AS k
+      |          FROM grams),
+      |win AS (SELECT doc_id, pos,
+      |          min(k) OVER (PARTITION BY doc_id ORDER BY pos
+      |            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mk,
+      |          max(pos) OVER (PARTITION BY doc_id) AS ng
+      |        FROM keyed),
+      |fps AS (SELECT DISTINCT doc_id, mk // 1048576 AS fh
+      |        FROM win WHERE pos <= greatest(ng - 3, 1)),
+      |dfh AS (SELECT fh FROM fps GROUP BY fh
+      |        HAVING count(*) BETWEEN 2 AND 50),
+      |p AS (SELECT f.doc_id, f.fh FROM fps f JOIN dfh USING (fh))""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q279_bm25_topk" ->
       """WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term
@@ -375,33 +366,11 @@ object CorpusQueries extends QuerySet {
         |                           ORDER BY s DESC, doc_id) AS rk
         |      FROM sc)
         |WHERE rk <= 10 ORDER BY pid, rk""".stripMargin,
-    "q280_winnow_dedup" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |           FROM documents),
-        |grams AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, greatest(len(ws) - 1, 2)),
-        |      i -> {'pos': i,
-        |            'h': ('0x'||substr(md5(
-        |                   array_to_string(ws[i:i+2], ' ')),1,8))::BIGINT}))
-        |      AS g
-        |  FROM w),
-        |keyed AS (SELECT doc_id, g.pos AS pos,
-        |                 g.h * 1048576 + (1048575 - g.pos) AS k
-        |          FROM grams),
-        |win AS (SELECT doc_id, pos,
-        |          min(k) OVER (PARTITION BY doc_id ORDER BY pos
-        |            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mk,
-        |          max(pos) OVER (PARTITION BY doc_id) AS ng
-        |        FROM keyed),
-        |fps AS (SELECT DISTINCT doc_id, mk // 1048576 AS fh
-        |        FROM win WHERE pos <= greatest(ng - 3, 1)),
-        |dfh AS (SELECT fh FROM fps GROUP BY fh
-        |        HAVING count(*) BETWEEN 2 AND 50),
-        |p AS (SELECT f.doc_id, f.fh FROM fps f JOIN dfh USING (fh))
+    "q280_winnow_dedup" -> ("WITH " + winnowPostingCtes +
+      """
         |SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS n_shared
         |FROM p a JOIN p b ON a.fh = b.fh AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY a, b""".stripMargin,
+        |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY a, b""".stripMargin),
 
     "q201_tfidf_topterm" ->
       """WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term
@@ -454,72 +423,31 @@ object CorpusQueries extends QuerySet {
          |               chunk_id * $strideW + $winW), ' ')) AS chunk_md5
          |FROM s ORDER BY doc_id, chunk_id""".stripMargin,
 
-    "q205_chunk_dedup" ->
-      s"""WITH ix AS (
-         |  SELECT doc_id, text,
-         |    unnest(range(0, (len(string_split(text,' ')) + ${chunkW - 1})
-         |                    // $chunkW)) AS idx
-         |  FROM documents),
-         |ch AS (
-         |  SELECT doc_id, idx,
-         |    array_to_string(string_split(text,' ')
-         |      [idx*$chunkW+1:idx*$chunkW+$chunkW], ' ') AS chunk
-         |  FROM ix),
-         |kept AS (
-         |  SELECT doc_id, idx, chunk FROM ch
-         |  QUALIFY row_number() OVER (PARTITION BY chunk
-         |                             ORDER BY doc_id, idx) = 1),
-         |agg AS (
-         |  SELECT doc_id, count(*) AS n_kept,
-         |         string_agg(chunk, ' ' ORDER BY idx) AS cleaned
-         |  FROM kept GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  (len(string_split(d.text,' ')) + ${chunkW - 1}) // $chunkW
-         |    AS n_chunks,
-         |  coalesce(a.n_kept, 0) AS n_kept,
-         |  coalesce(a.cleaned, '') AS cleaned
-         |FROM documents d LEFT JOIN agg a USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q212_span_excise" ->
+    "q205_chunk_dedup" -> ("WITH " + chunkCleanSql("documents",
+      """kept AS (
+        |  SELECT doc_id, idx, chunk FROM ch
+        |  QUALIFY row_number() OVER (PARTITION BY chunk
+        |                             ORDER BY doc_id, idx) = 1)""".stripMargin)),
+    "q212_span_excise" -> (
       s"""WITH bench AS (
          |  SELECT DISTINCT sh FROM (
          |    SELECT unnest(${TextQueries.shinglesSql}) AS sh
          |    FROM documents WHERE source = 'src2')),
          |corpus AS (SELECT * FROM documents WHERE source <> 'src2'),
-         |ix AS (
-         |  SELECT doc_id, text,
-         |    unnest(range(0, (len(string_split(text,' ')) + ${chunkW - 1})
-         |                    // $chunkW)) AS idx
-         |  FROM corpus),
-         |ch AS (
-         |  SELECT doc_id, idx,
-         |    array_to_string(string_split(text,' ')
-         |      [idx*$chunkW+1:idx*$chunkW+$chunkW], ' ') AS chunk
-         |  FROM ix),
-         |contaminated AS (
-         |  SELECT DISTINCT doc_id, idx FROM (
-         |    SELECT doc_id, idx,
-         |      unnest(list_transform(range(1,
-         |          greatest(len(string_split(chunk,' ')) - 2, 2)),
-         |        i -> array_to_string(string_split(chunk,' ')[i:i+3], ' ')))
-         |        AS sh
-         |    FROM ch) cs
-         |  JOIN bench USING (sh)),
-         |kept AS (
-         |  SELECT ch.doc_id, ch.idx, ch.chunk
-         |  FROM ch ANTI JOIN contaminated c
-         |    ON ch.doc_id = c.doc_id AND ch.idx = c.idx),
-         |agg AS (
-         |  SELECT doc_id, count(*) AS n_kept,
-         |         string_agg(chunk, ' ' ORDER BY idx) AS cleaned
-         |  FROM kept GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  (len(string_split(d.text,' ')) + ${chunkW - 1}) // $chunkW
-         |    AS n_chunks,
-         |  coalesce(a.n_kept, 0) AS n_kept,
-         |  coalesce(a.cleaned, '') AS cleaned
-         |FROM corpus d LEFT JOIN agg a USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
+         |""".stripMargin + chunkCleanSql("corpus",
+      """contaminated AS (
+        |  SELECT DISTINCT doc_id, idx FROM (
+        |    SELECT doc_id, idx,
+        |      unnest(list_transform(range(1,
+        |          greatest(len(string_split(chunk,' ')) - 2, 2)),
+        |        i -> array_to_string(string_split(chunk,' ')[i:i+3], ' ')))
+        |        AS sh
+        |    FROM ch) cs
+        |  JOIN bench USING (sh)),
+        |kept AS (
+        |  SELECT ch.doc_id, ch.idx, ch.chunk
+        |  FROM ch ANTI JOIN contaminated c
+        |    ON ch.doc_id = c.doc_id AND ch.idx = c.idx)""".stripMargin)),
 
     "q206_source_mix" ->
       s"""SELECT source, ${md5iSql("source")} % 800 + 100 AS rate_permille,

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.{Scratch, Tables}
 
 /** Corpus-curation tier 3 — model-free quality scoring and corpus-
@@ -52,9 +53,8 @@ object CurationQueries extends QuerySet {
     * (step, lhs, rhs, pair_count, tokens_after) per round — the only
     * driver scalars are the 1-row argmax rule and one total per round
     * (metadata-sized, the q218 discipline). */
-  private def trainBpeMerges(s: org.apache.spark.sql.SparkSession, d: String,
+  private def trainBpeMerges(s: SparkSession, d: String,
                              rounds: Int): Seq[(Int, String, String, Long, Long)] = {
-    import org.apache.spark.sql.Row
     var words = Tables.documents(s, d)
       .select(explode(toks(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
@@ -78,13 +78,9 @@ object CurationQueries extends QuerySet {
     }
   }
 
-  /** floor(log2(k)) for a positive integer column, integer-exact in
-    * both engines: the bit width of k minus one. bin(0) = "0" in both,
-    * so k = 0 maps to 0 (used by the smoothed streaming scorer when a
-    * token outnumbers the corpus). */
   /** Corpus word-frequency table (w, freq) — the shared input of the
     * unigram-LM family (q294 segmentation, q304 EM training). */
-  private def wordFreqs(s: org.apache.spark.sql.SparkSession,
+  private def wordFreqs(s: SparkSession,
                         d: String): DataFrame =
     Tables.documents(s, d)
       .select(explode(toks(col("text"))).as("w"))
@@ -96,6 +92,8 @@ object CurationQueries extends QuerySet {
       // tokenize+count pass (r12)
       .localCheckpoint()
 
+  /** floor(log2(x)) of a positive long: the bit width of x minus one
+    * (the driver-side twin of [[blog2]]). */
   private def fl2(x: Long): Long =
     63L - java.lang.Long.numberOfLeadingZeros(x)
 
@@ -232,43 +230,71 @@ object CurationQueries extends QuerySet {
        |             ON d.w = f.w AND d.pos = len(f.w))""".stripMargin
   }
 
-  /** The q309/q318 EM+prune trainer: EM rounds alternate with pruning
-    * multi-char pieces to the round's top-K by usage (single chars
-    * always survive — character coverage). Returns the ≤16-char
-    * word-frequency table (checkpointed), the final pruned cost
-    * table, per-round corpus costs, and the last round's usage. */
-  private def emTrainPrune(s: org.apache.spark.sql.SparkSession, d: String,
+  /** The corpus cost Σ freq · cost(w) of a word table whose `dp`
+    * column holds [[emViterbiDp]]: each word's optimum is the packed
+    * value at position len(w). */
+  private def emCorpusCost(withDp: DataFrame): Long =
+    withDp.agg(sum(col("freq") *
+        shiftright(element_at(col("dp"), length(col("w")) + 1), 2)))
+      .head().getLong(0)
+
+  /** One unigram-EM round over the ≤16-char word table `wf16` under
+    * the piece costs `costs`: E-step = Viterbi-segment every word (the
+    * DP materialized once; corpus cost and usage both read it), usage =
+    * freq-weighted winning pieces (a guarded driver collect), M-step =
+    * cost flog2(totalUse) − flog2(cnt) + 1 for every piece of `costs`
+    * (unused ones keep a finite flog2(totalUse) + 2). Returns (the
+    * corpus cost, the usage, the re-estimated costs). */
+  private def emRound(wf16: DataFrame, costs: Map[String, Long])
+      : (Long, Map[String, Long], Map[String, Long]) = {
+    val withDp = wf16.withColumn("dp", emViterbiDp(typedLit(costs)))
+      .localCheckpoint()
+    val usage = withDp
+      .select(col("freq"), explode(emBacktrace()).as("piece"))
+      .groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
+    val corpusCost = emCorpusCost(withDp)
+    val used = usage.collect()
+    require(used.length <= 8192,
+      s"unigram EM: ${used.length} used pieces exceeds the " +
+        "vocabulary bound; refusing the driver collect")
+    val usedMap = used.map(r => r.getString(0) -> r.getLong(1)).toMap
+    val totUse = usedMap.values.sum
+    val reEst = costs.map { case (p, _) =>
+      p -> usedMap.get(p).map(c => fl2(totUse) - fl2(c) + 1L)
+        .getOrElse(fl2(totUse) + 2L)
+    }
+    (corpusCost, usedMap, reEst)
+  }
+
+  /** A driver-side table of `rows` under the DDL schema `ddl`. */
+  private def localTable(s: SparkSession, ddl: String, rows: Seq[Row]): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType.fromDDL(ddl))
+
+  /** The ≤16-char word table the unigram-EM trainers segment
+    * (checkpointed) and the seed piece costs. */
+  private def emSeed(s: SparkSession, d: String)
+      : (DataFrame, Map[String, Long]) = {
+    val wf = wordFreqs(s, d)
+    (wf.filter(length(col("w")).between(1, 16)).localCheckpoint(),
+      unigramSeedCosts(wf))
+  }
+
+  /** The q309/q318 EM+prune trainer: [[emRound]]s alternate with
+    * pruning multi-char pieces to the round's top-K by usage (single
+    * chars always survive — character coverage). Returns the ≤16-char
+    * word-frequency table (checkpointed), the final pruned cost table,
+    * per-round corpus costs, and the last round's usage. */
+  private def emTrainPrune(s: SparkSession, d: String,
                            keeps: Seq[Int])
       : (DataFrame, Map[String, Long], Seq[Long], Map[String, Long]) = {
-    val wf = wordFreqs(s, d)
-    val wf16 = wf.filter(length(col("w")).between(1, 16)).localCheckpoint()
-    var costs = unigramSeedCosts(wf)
+    val (wf16, seed) = emSeed(s, d)
+    var costs = seed
     var lastUsage: Map[String, Long] = Map.empty
     val roundCosts = keeps.map { keep =>
-      // the Viterbi DP is the round's expensive column — materialize it
-      // once; usage AND corpus-cost aggregate from the cache (r12)
-      val withDp = wf16.withColumn("dp", emViterbiDp(typedLit(costs)))
-        .localCheckpoint()
-      val usage = withDp
-        .select(col("freq"), explode(emBacktrace()).as("piece"))
-        .groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
-      val corpusCost = withDp
-        .agg(sum(col("freq") *
-          shiftright(element_at(col("dp"), length(col("w")) + 1), 2)))
-        .head().getLong(0)
-      val used = usage.collect()
-      require(used.length <= 8192,
-        s"unigram prune: ${used.length} used pieces exceeds the " +
-          "vocabulary bound; refusing the driver collect")
-      val usedMap = used.map(r => r.getString(0) -> r.getLong(1)).toMap
-      val totUse = usedMap.values.sum
-      // M-step over the current vocabulary, then prune: chars stay,
-      // multi-char pieces keep the top-`keep` by usage (ties by
-      // piece — same total order as the oracle's ORDER BY)
-      val reEst = costs.map { case (p, _) =>
-        p -> usedMap.get(p).map(c => fl2(totUse) - fl2(c) + 1L)
-          .getOrElse(fl2(totUse) + 2L)
-      }
+      val (corpusCost, usedMap, reEst) = emRound(wf16, costs)
+      // prune: chars stay, multi-char pieces keep the top-`keep` by
+      // usage (ties by piece — same total order as the oracle's
+      // ORDER BY)
       val keptMulti = usedMap.toSeq
         .filter { case (p, _) => p.codePointCount(0, p.length) >= 2 }
         .sortBy { case (p, c) => (-c, p) }.take(keep).map(_._1).toSet
@@ -279,6 +305,76 @@ object CurationQueries extends QuerySet {
     }
     (wf16, costs, roundCosts, lastUsage)
   }
+
+  /** 13-gram hashes (doc_id, h) of (doc_id, text) rows — the q283
+    * decontamination unit (every doc has ≥1 gram: a short doc hashes
+    * its whole text). */
+  private[operators] def gramHashes(df: DataFrame): DataFrame = {
+    val w = toks(col("text"))
+    df.select(col("doc_id"), explode(transform(
+        sequence(lit(1), greatest(size(w) - 12, lit(1))),
+        i => concat_ws(" ", slice(w, i, lit(13))))).as("g"))
+      .select(col("doc_id"), md5i(col("g")).as("h"))
+  }
+
+  /** The corpus side of a tokenizer encode (q290, q318): the encoded
+    * distinct-word table (w, n, enc) joins back onto the exploded corpus
+    * — per doc its word count, its token total (column `nTokens`) and
+    * its head word's encoding. */
+  private def encodeCorpus(docs: DataFrame, encoded: DataFrame,
+                           nTokens: String): DataFrame = {
+    val words = docs
+      .select(col("doc_id"), explode(toks(col("text"))).as("w"))
+      .filter(length(col("w")) > 0)
+    val perDoc = words.join(encoded, "w")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_words"),
+        sum(col("n")).cast("long").as(nTokens))
+    val head = docs
+      .select(col("doc_id"), element_at(toks(col("text")), 1).as("w"))
+      .join(encoded.select(col("w"), col("enc").as("head_enc")),
+        Seq("w"), "left")
+      .select(col("doc_id"), col("head_enc"))
+    perDoc.join(head, "doc_id")
+      .select(col("doc_id"), col("n_words"), col(nTokens), col("head_enc"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** The bigram LM's inputs (q315, q330): the even-doc_id training
+    * half, its bigram counts (prev, cur, cb), and the (doc_id, prev,
+    * cur) bigrams of the odd-doc_id held-out half. */
+  private def bigramLm(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val ws = toks(col("text"))
+    def pairs(df: DataFrame): DataFrame = df.select(col("doc_id"),
+      explode(when(size(ws) >= 2,
+        transform(sequence(lit(2), size(ws)),
+          i => struct(element_at(ws, i - 1).as("prev"),
+                      element_at(ws, i).as("cur"))))
+        .otherwise(array().cast("array<struct<prev:string,cur:string>>")))
+        .as("bg"))
+      .select(col("doc_id"), col("bg.prev").as("prev"),
+        col("bg.cur").as("cur"))
+    val train = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
+    val cb = pairs(train).groupBy(col("prev"), col("cur"))
+      .agg(count(lit(1)).as("cb"))
+    (train, cb, pairs(docs.filter(pmod(col("doc_id"), lit(2)) === 1)))
+  }
+
+  /** [[bigramLm]] as DuckDB: CTEs tr, hd and cb, the caller's `model`
+    * CTEs over them, hdbg (the held-out bigrams), then `score`. */
+  private def bigramLmSql(model: String, score: String): String =
+    s"""WITH tr AS (SELECT doc_id, string_split(text, ' ') AS ws
+       |            FROM documents WHERE doc_id % 2 = 0),
+       |hd AS (SELECT doc_id, string_split(text, ' ') AS ws
+       |       FROM documents WHERE doc_id % 2 = 1),
+       |cb AS (SELECT prev, cur, count(*)::BIGINT AS cb FROM (
+       |         SELECT ws[i-1] AS prev, ws[i] AS cur
+       |         FROM tr, LATERAL unnest(range(2, len(ws)+1)) AS t(i))
+       |       GROUP BY 1, 2),
+       |$model,
+       |hdbg AS (SELECT doc_id, ws[i-1] AS prev, ws[i] AS cur
+       |         FROM hd, LATERAL unnest(range(2, len(ws)+1)) AS t(i)),
+       |$score""".stripMargin
 
   /** One prune step of the q309/q318 oracles: chars always survive,
     * multi-char pieces keep round r's top-`keep` by usage. */
@@ -301,53 +397,50 @@ object CurationQueries extends QuerySet {
        |${emDpBlock(2, "vp1", "vp1")},
        |${emPruneCte(2, 64)}""".stripMargin
 
-  /** The shared seed-vocabulary CTE prefix of the unigram-EM oracles:
-    * word frequencies, 1–3-char substring counts, seed costs v0
-    * (every char + top-256 grams), and the ≤16-char word table. */
-  private val emSeedCtes: String =
-    """wf AS MATERIALIZED (SELECT w, count(*)::BIGINT AS freq
-      |       FROM (SELECT unnest(string_split(text,' ')) AS w
-      |             FROM documents)
-      |       WHERE len(w) > 0 GROUP BY w),
-      |sub AS MATERIALIZED (
-      |        SELECT substr(w, i, L) AS piece, sum(freq)::BIGINT AS cnt
-      |        FROM wf, LATERAL unnest(range(1, len(w)+1)) AS t(i),
-      |             (VALUES (1),(2),(3)) AS ll(L)
-      |        WHERE i + L - 1 <= len(w)
-      |        GROUP BY 1),
-      |sdtot AS MATERIALIZED (SELECT sum(cnt)::BIGINT AS t FROM sub),
-      |v0 AS MATERIALIZED (
-      |  SELECT piece,
-      |    (len(bin(sdtot.t)) - len(bin(s.cnt)) + 1)::BIGINT AS cost
-      |  FROM (
-      |    SELECT piece, cnt FROM sub WHERE len(piece) = 1
-      |    UNION ALL
-      |    SELECT piece, cnt FROM (
-      |      SELECT piece, cnt FROM sub WHERE len(piece) >= 2
-      |      ORDER BY cnt DESC, piece LIMIT 256)
-      |  ) s, sdtot),
-      |wf16 AS MATERIALIZED (
-      |  SELECT w, freq FROM wf WHERE len(w) BETWEEN 1 AND 16)""".stripMargin
+  /** [[unigramSeedCosts]] as DuckDB CTEs (no WITH): word frequencies
+    * wf, 1–3-char substring counts sub, their total `tot` and the seed
+    * cost table `vocab` (every char + top-256 grams). */
+  private def seedCostCtes(tot: String, vocab: String): String =
+    s"""wf AS MATERIALIZED (SELECT w, count(*)::BIGINT AS freq
+       |       FROM (SELECT unnest(string_split(text,' ')) AS w
+       |             FROM documents)
+       |       WHERE len(w) > 0 GROUP BY w),
+       |sub AS MATERIALIZED (
+       |        SELECT substr(w, i, L) AS piece, sum(freq)::BIGINT AS cnt
+       |        FROM wf, LATERAL unnest(range(1, len(w)+1)) AS t(i),
+       |             (VALUES (1),(2),(3)) AS ll(L)
+       |        WHERE i + L - 1 <= len(w)
+       |        GROUP BY 1),
+       |$tot AS MATERIALIZED (SELECT sum(cnt)::BIGINT AS t FROM sub),
+       |$vocab AS MATERIALIZED (
+       |  SELECT piece,
+       |    (len(bin($tot.t)) - len(bin(s.cnt)) + 1)::BIGINT AS cost
+       |  FROM (
+       |    SELECT piece, cnt FROM sub WHERE len(piece) = 1
+       |    UNION ALL
+       |    SELECT piece, cnt FROM (
+       |      SELECT piece, cnt FROM sub WHERE len(piece) >= 2
+       |      ORDER BY cnt DESC, piece LIMIT 256)
+       |  ) s, $tot)""".stripMargin
 
+  /** The shared seed-vocabulary CTE prefix of the unigram-EM oracles:
+    * the seed costs v0 and the ≤16-char word table wf16. */
+  private val emSeedCtes: String =
+    s"""${seedCostCtes("sdtot", "v0")},
+       |wf16 AS MATERIALIZED (
+       |  SELECT w, freq FROM wf WHERE len(w) BETWEEN 1 AND 16)""".stripMargin
+
+  /** floor(log2(k)) for a positive integer column, integer-exact in
+    * both engines: the bit width of k minus one. bin(0) = "0" in both,
+    * so k = 0 maps to 0 (used by the smoothed streaming scorer when a
+    * token outnumbers the corpus). */
   private def blog2(k: Column): Column =
     (length(bin(k)) - 1).cast("long")
 
   private def blog2Sql(e: String): String = s"(length(bin($e)) - 1)"
 
   private val nBuckets = 1024 // q215: hashed feature space
-  private val chunkW = 10 // q216: words per boilerplate chunk (q205's width)
   private val boilerDf = 2 // q216: chunk df threshold for removal
-
-  /** doc_id/idx/chunk rows: consecutive chunkW-word chunks (q205's
-    * chunking, shared shape). */
-  private def chunked(docs: DataFrame): DataFrame = {
-    val w0 = toks(col("text"))
-    val nChunks = (((size(w0) - 1) / chunkW).cast("int") + 1)
-    docs.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), nChunks - 1),
-        i => concat_ws(" ", slice(w0, i * chunkW + 1, lit(chunkW))))))
-      .toDF("doc_id", "idx", "chunk")
-  }
 
   val queries: Map[String, Q] = Map(
     // Unigram-LM surprisal score (CCNet-style quality filter with the
@@ -405,27 +498,13 @@ object CurationQueries extends QuerySet {
     // boilerplate set is aggregation-bounded (one row per distinct
     // repeated chunk); the anti join shuffles the chunks once on
     // chunk text, reassembly once on doc_id — q205's exact budget.
-    "q216_boilerplate_strip" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val chunks = chunked(docs)
-      val boiler = chunks.groupBy(col("chunk"))
-        .agg(countDistinct(col("doc_id")).as("nd"))
-        .filter(col("nd") >= boilerDf).select(col("chunk"))
-      val kept = chunks.join(boiler, Seq("chunk"), "left_anti")
-      val rebuilt = kept.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_kept"),
-          concat_ws(" ", transform(
-            array_sort(collect_list(struct(col("idx"), col("chunk")))),
-            s0 => s0.getField("chunk"))).as("cleaned"))
-      val w0 = toks(col("text"))
-      docs.select(col("doc_id"),
-        (((size(w0) - 1) / chunkW).cast("int") + 1).cast("long").as("n_chunks"))
-        .join(rebuilt, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chunks"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-          coalesce(col("cleaned"), lit("")).as("cleaned"))
-        .orderBy(col("doc_id"))
-    }),
+    "q216_boilerplate_strip" -> ((s, d) =>
+      chunkClean(Tables.documents(s, d)) { chunks =>
+        val boiler = chunks.groupBy(col("chunk"))
+          .agg(countDistinct(col("doc_id")).as("nd"))
+          .filter(col("nd") >= boilerDf).select(col("chunk"))
+        chunks.join(boiler, Seq("chunk"), "left_anti")
+      }),
 
     // First-seer novelty score: a doc's distinct 4-word shingles that
     // NO earlier doc (by doc_id) contains, as count + permille of its
@@ -624,11 +703,7 @@ object CurationQueries extends QuerySet {
     // leakage check before an eval split ships. One shingle-keyed
     // join; the train side carries each distinct shingle once.
     "q236_split_leakage" -> ((s, d) => {
-      val bucket = pmod(md5i(col("text")), lit(100))
-      val docs = Tables.documents(s, d)
-        .withColumn("split",
-          when(bucket < 80, "train").when(bucket < 90, "val")
-            .otherwise("test"))
+      val docs = Tables.documents(s, d).withColumn("split", contentSplit)
       val sh = docs.select(col("split"), col("doc_id"),
         explode(TextQueries.shingles4(col("text"))).as("sh")).distinct()
       val train = sh.filter(col("split") === "train")
@@ -650,11 +725,7 @@ object CurationQueries extends QuerySet {
     "q237_stream_leakage" -> ((s, d) => {
       import graft.streaming.Replay
       val base = Scratch.dir("leakstream")
-      val bucket = pmod(md5i(col("text")), lit(100))
-      val docs = Tables.documents(s, d)
-        .withColumn("split",
-          when(bucket < 80, "train").when(bucket < 90, "val")
-            .otherwise("test"))
+      val docs = Tables.documents(s, d).withColumn("split", contentSplit)
       val train = docs.filter(col("split") === "train")
         .select(explode(TextQueries.shingles4(col("text"))).as("sh"))
         .distinct().cache()
@@ -966,18 +1037,11 @@ object CurationQueries extends QuerySet {
     // the train set is distinct-collapsed (vocabulary-bounded) before
     // the join, so fan-out is 1 per test gram; no doc×doc pairing.
     "q283_contamination_13gram" -> ((s, d) => {
-      val bucket = pmod(md5i(col("text")), lit(100))
       val base = Tables.documents(s, d).select(col("doc_id"), col("text"),
-        when(bucket < 80, "train").when(bucket < 90, "val")
-          .otherwise("test").as("split"))
-      val w0 = toks(col("text"))
-      def grams(dfn: DataFrame) = dfn.select(col("doc_id"),
-        explode(transform(sequence(lit(1), greatest(size(w0) - 12, lit(1))),
-          i => concat_ws(" ", slice(w0, i, lit(13))))).as("g"))
-        .select(col("doc_id"), md5i(col("g")).as("h"))
-      val trainG = grams(base.filter(col("split") === "train"))
+        contentSplit.as("split"))
+      val trainG = gramHashes(base.filter(col("split") === "train"))
         .select(col("h")).distinct()
-      grams(base.filter(col("split") === "test"))
+      gramHashes(base.filter(col("split") === "test"))
         .join(trainG.withColumn("hit", lit(1)), Seq("h"), "left")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_grams"), count(col("hit")).as("n_dirty"))
@@ -1067,24 +1131,9 @@ object CurationQueries extends QuerySet {
           .bpe_apply_merges(col("toks"), merges.toArray))
         .select(col("w"), size(col("toks")).as("n"),
           concat_ws("|", col("toks")).as("enc"))
-        // encode each distinct word once; both joins below reuse it
+        // encode each distinct word once; both joins reuse it
         .localCheckpoint()
-      val words = docs
-        .select(col("doc_id"), explode(toks(col("text"))).as("w"))
-        .filter(length(col("w")) > 0)
-      val perDoc = words.join(encoded, "w")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_words"),
-          sum(col("n")).cast("long").as("n_tokens"))
-      val head = docs
-        .select(col("doc_id"), element_at(toks(col("text")), 1).as("w"))
-        .join(encoded.select(col("w"), col("enc").as("head_enc")),
-          Seq("w"), "left")
-        .select(col("doc_id"), col("head_enc"))
-      perDoc.join(head, "doc_id")
-        .select(col("doc_id"), col("n_words"), col("n_tokens"),
-          col("head_enc"))
-        .orderBy(col("doc_id"))
+      encodeCorpus(docs, encoded, "n_tokens")
     }),
 
     // Unigram-LM Viterbi segmentation (Kudo 2018 — the SentencePiece
@@ -1147,34 +1196,16 @@ object CurationQueries extends QuerySet {
     // vocabulary-bounded usage table (guarded) + two scalars. Oracle:
     // both rounds replayed as unrolled DP + backtrace-walk CTE chains.
     "q304_unigram_em" -> ((s, d) => {
-      val wf = wordFreqs(s, d)
-      val wf16 = wf.filter(length(col("w")).between(1, 16)).localCheckpoint()
-      var costs = unigramSeedCosts(wf)
+      val (wf16, seed) = emSeed(s, d)
+      var costs = seed
       val rounds = (1 to 2).map { step =>
-        // DP materialized once per round; usage + corpus cost read it
-        val withDp = wf16.withColumn("dp", emViterbiDp(typedLit(costs)))
-          .localCheckpoint()
-        val pieces = emBacktrace()
-        val usage = withDp
-          .select(col("freq"), explode(pieces).as("piece"))
-          .groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
-          .localCheckpoint() // consumed by the collect AND the output
-        val corpusCost = withDp
-          .agg(sum(col("freq") *
-            shiftright(element_at(col("dp"), length(col("w")) + 1), 2)))
-          .head().getLong(0)
-        val used = usage.collect()
-        require(used.length <= 8192,
-          s"unigram EM: ${used.length} used pieces exceeds the " +
-            "vocabulary bound; refusing the driver collect")
-        val usedMap = used.map(r => r.getString(0) -> r.getLong(1)).toMap
-        val totUse = usedMap.values.sum
-        costs = costs.map { case (p, _) =>
-          p -> usedMap.get(p).map(c => fl2(totUse) - fl2(c) + 1L)
-            .getOrElse(fl2(totUse) + 2L)
-        }
+        val (corpusCost, usage, reEst) = emRound(wf16, costs)
+        costs = reEst
+        // the round's rows come from the collected usage table
         val costLit = typedLit(costs)
-        usage.orderBy(col("cnt").desc, col("piece")).limit(40)
+        localTable(s, "piece STRING, cnt BIGINT",
+            usage.toSeq.map { case (p, c) => Row(p, c) })
+          .orderBy(col("cnt").desc, col("piece")).limit(40)
           .select(lit(step).as("step"), col("piece"), col("cnt"),
             element_at(costLit, col("piece")).as("new_cost"),
             lit(corpusCost).as("corpus_cost"))
@@ -1203,19 +1234,11 @@ object CurationQueries extends QuerySet {
       val (wf16, costs, roundCosts, lastUsage) =
         emTrainPrune(s, d, Seq(128, 64))
       // final evaluation pass under the surviving vocabulary
-      val finalCost = wf16
-        .withColumn("dp", emViterbiDp(typedLit(costs)))
-        .agg(sum(col("freq") *
-          shiftright(element_at(col("dp"), length(col("w")) + 1), 2)))
-        .head().getLong(0)
+      val finalCost =
+        emCorpusCost(wf16.withColumn("dp", emViterbiDp(typedLit(costs))))
       val usageLit = typedLit(lastUsage)
       val costLit = typedLit(costs)
-      wf16.sparkSession.createDataFrame(
-          java.util.Arrays.asList(costs.keys.toSeq.sorted.map(
-            org.apache.spark.sql.Row(_)): _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("piece",
-              org.apache.spark.sql.types.StringType, nullable = false))))
+      localTable(s, "piece STRING NOT NULL", costs.keys.toSeq.sorted.map(Row(_)))
         .select(col("piece"),
           length(col("piece")).cast("long").as("piece_len"),
           coalesce(element_at(usageLit, col("piece")), lit(0L)).as("cnt"),
@@ -1247,23 +1270,7 @@ object CurationQueries extends QuerySet {
         .select(col("w"), size(col("pieces")).cast("long").as("n"),
           concat_ws("|", col("pieces")).as("enc"))
         .localCheckpoint() // each distinct word encoded once
-      val docs = Tables.documents(s, d)
-      val words = docs
-        .select(col("doc_id"), explode(toks(col("text"))).as("w"))
-        .filter(length(col("w")) > 0)
-      val perDoc = words.join(encoded, "w")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_words"),
-          sum(col("n")).cast("long").as("n_pieces"))
-      val head = docs
-        .select(col("doc_id"), element_at(toks(col("text")), 1).as("w"))
-        .join(encoded.select(col("w"), col("enc").as("head_enc")),
-          Seq("w"), "left")
-        .select(col("doc_id"), col("head_enc"))
-      perDoc.join(head, "doc_id")
-        .select(col("doc_id"), col("n_words"), col("n_pieces"),
-          col("head_enc"))
-        .orderBy(col("doc_id"))
+      encodeCorpus(Tables.documents(s, d), encoded, "n_pieces")
     }),
 
     // Stupid-Backoff bigram LM surprisal (Brants et al. 2007, "Large
@@ -1283,25 +1290,11 @@ object CurationQueries extends QuerySet {
     // are corpus-bounded aggregates; scoring = one explode + three
     // equi-joins + a per-doc rollup — no per-row UDF, no driver state.
     "q315_backoff_lm" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val ws = toks(col("text"))
-      def pairs(df: DataFrame): DataFrame = df.select(col("doc_id"),
-        explode(when(size(ws) >= 2,
-          transform(sequence(lit(2), size(ws)),
-            i => struct(element_at(ws, i - 1).as("prev"),
-                        element_at(ws, i).as("cur"))))
-          .otherwise(array().cast("array<struct<prev:string,cur:string>>")))
-          .as("bg"))
-        .select(col("doc_id"), col("bg.prev").as("prev"),
-          col("bg.cur").as("cur"))
-      val train = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-      val held = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-      val cb = pairs(train).groupBy(col("prev"), col("cur"))
-        .agg(count(lit(1)).as("cb"))
-      val cu = train.select(explode(ws).as("w"))
+      val (train, cb, held) = bigramLm(Tables.documents(s, d))
+      val cu = train.select(explode(toks(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("cu"))
       val nTot = cu.agg(sum(col("cu")).as("n_tot"))
-      pairs(held)
+      held
         .join(cb, Seq("prev", "cur"), "left")
         .join(cu.select(col("w").as("prev"), col("cu").as("cprev")),
           Seq("prev"), "left")
@@ -1340,29 +1333,16 @@ object CurationQueries extends QuerySet {
     // is one explode + three equi-joins + a per-doc rollup — no UDF,
     // no driver state, same 100 TB shape as q315.
     "q330_kneser_ney" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val ws = toks(col("text"))
-      def pairs(df: DataFrame): DataFrame = df.select(col("doc_id"),
-        explode(when(size(ws) >= 2,
-          transform(sequence(lit(2), size(ws)),
-            i => struct(element_at(ws, i - 1).as("prev"),
-                        element_at(ws, i).as("cur"))))
-          .otherwise(array().cast("array<struct<prev:string,cur:string>>")))
-          .as("bg"))
-        .select(col("doc_id"), col("bg.prev").as("prev"),
-          col("bg.cur").as("cur"))
-      val train = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-      val held = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-      val cb = pairs(train).groupBy(col("prev"), col("cur"))
-        .agg(count(lit(1)).as("cb"))
-        .localCheckpoint() // one bigram pass feeds all 3 count tables
+      val (_, bigramCounts, held) = bigramLm(Tables.documents(s, d))
+      // one bigram pass feeds all 3 count tables
+      val cb = bigramCounts.localCheckpoint()
       // c(v) = Σ_w c(v,w) and N1+(v·) in one rollup; N1+(·w) in the
       // other; N1+(··) = total bigram TYPES (the Pcont denominator)
       val ctx = cb.groupBy(col("prev"))
         .agg(sum(col("cb")).as("cv"), count(lit(1)).as("n1v"))
       val cont = cb.groupBy(col("cur")).agg(count(lit(1)).as("ncw"))
       val nbb = cb.agg(count(lit(1)).as("nbb"))
-      pairs(held)
+      held
         .join(cb, Seq("prev", "cur"), "left")
         .join(ctx, Seq("prev"), "left")
         .join(cont, Seq("cur"), "left")
@@ -1479,7 +1459,26 @@ object CurationQueries extends QuerySet {
     * p_k/r_k (pair counts + 1-row argmax rule), w_k (the index-walk
     * re-tokenization), m_k (the round's merged vocabulary); ends at
     * m3, the fully merged vocabulary the encoder oracle reads. */
-  private val bpeTrainCte: String =
+  private val bpeTrainCte: String = {
+    def round(k: Int) =
+      s"""p$k AS (SELECT t.toks[i] AS a, t.toks[i+1] AS b,
+         |         sum(t.freq)::BIGINT AS cnt
+         |       FROM m${k - 1} t, unnest(range(1, len(t.toks))) AS u(i)
+         |       GROUP BY 1, 2),
+         |r$k AS (SELECT a, b, cnt FROM p$k ORDER BY cnt DESC, a, b LIMIT 1),
+         |w$k AS (SELECT m.w, m.freq, m.toks, r.a, r.b, 1 AS i,
+         |         []::VARCHAR[] AS out
+         |       FROM m${k - 1} m, r$k r
+         |       UNION ALL
+         |       SELECT w, freq, toks, a, b,
+         |         CASE WHEN i < len(toks) AND toks[i] = a AND toks[i+1] = b
+         |              THEN i + 2 ELSE i + 1 END,
+         |         CASE WHEN i < len(toks) AND toks[i] = a AND toks[i+1] = b
+         |              THEN list_append(out, a || b)
+         |              ELSE list_append(out, toks[i]) END
+         |       FROM w$k WHERE i <= len(toks)),
+         |m$k AS (SELECT w, freq, out AS toks FROM w$k WHERE i = len(toks) + 1),
+         |""".stripMargin
     """WITH RECURSIVE
       |wf AS (SELECT w, count(*)::BIGINT AS freq
       |       FROM (SELECT unnest(string_split(text,' ')) AS w
@@ -1488,58 +1487,23 @@ object CurationQueries extends QuerySet {
       |m0 AS (SELECT w, freq,
       |         list_transform(range(1, len(w)+1), i -> w[i:i]) AS toks
       |       FROM wf),
-      |p1 AS (SELECT t.toks[i] AS a, t.toks[i+1] AS b,
-      |         sum(t.freq)::BIGINT AS cnt
-      |       FROM m0 t, unnest(range(1, len(t.toks))) AS u(i)
-      |       GROUP BY 1, 2),
-      |r1 AS (SELECT a, b, cnt FROM p1 ORDER BY cnt DESC, a, b LIMIT 1),
-      |w1 AS (SELECT m.w, m.freq, m.toks, r.a, r.b, 1 AS i,
-      |         []::VARCHAR[] AS out
-      |       FROM m0 m, r1 r
-      |       UNION ALL
-      |       SELECT w, freq, toks, a, b,
-      |         CASE WHEN i < len(toks) AND toks[i] = a AND toks[i+1] = b
-      |              THEN i + 2 ELSE i + 1 END,
-      |         CASE WHEN i < len(toks) AND toks[i] = a AND toks[i+1] = b
-      |              THEN list_append(out, a || b)
-      |              ELSE list_append(out, toks[i]) END
-      |       FROM w1 WHERE i <= len(toks)),
-      |m1 AS (SELECT w, freq, out AS toks FROM w1 WHERE i = len(toks) + 1),
-      |p2 AS (SELECT t.toks[i] AS a, t.toks[i+1] AS b,
-      |         sum(t.freq)::BIGINT AS cnt
-      |       FROM m1 t, unnest(range(1, len(t.toks))) AS u(i)
-      |       GROUP BY 1, 2),
-      |r2 AS (SELECT a, b, cnt FROM p2 ORDER BY cnt DESC, a, b LIMIT 1),
-      |w2 AS (SELECT m.w, m.freq, m.toks, r.a, r.b, 1 AS i,
-      |         []::VARCHAR[] AS out
-      |       FROM m1 m, r2 r
-      |       UNION ALL
-      |       SELECT w, freq, toks, a, b,
-      |         CASE WHEN i < len(toks) AND toks[i] = a AND toks[i+1] = b
-      |              THEN i + 2 ELSE i + 1 END,
-      |         CASE WHEN i < len(toks) AND toks[i] = a AND toks[i+1] = b
-      |              THEN list_append(out, a || b)
-      |              ELSE list_append(out, toks[i]) END
-      |       FROM w2 WHERE i <= len(toks)),
-      |m2 AS (SELECT w, freq, out AS toks FROM w2 WHERE i = len(toks) + 1),
-      |p3 AS (SELECT t.toks[i] AS a, t.toks[i+1] AS b,
-      |         sum(t.freq)::BIGINT AS cnt
-      |       FROM m2 t, unnest(range(1, len(t.toks))) AS u(i)
-      |       GROUP BY 1, 2),
-      |r3 AS (SELECT a, b, cnt FROM p3 ORDER BY cnt DESC, a, b LIMIT 1),
-      |w3 AS (SELECT m.w, m.freq, m.toks, r.a, r.b, 1 AS i,
-      |         []::VARCHAR[] AS out
-      |       FROM m2 m, r3 r
-      |       UNION ALL
-      |       SELECT w, freq, toks, a, b,
-      |         CASE WHEN i < len(toks) AND toks[i] = a AND toks[i+1] = b
-      |              THEN i + 2 ELSE i + 1 END,
-      |         CASE WHEN i < len(toks) AND toks[i] = a AND toks[i+1] = b
-      |              THEN list_append(out, a || b)
-      |              ELSE list_append(out, toks[i]) END
-      |       FROM w3 WHERE i <= len(toks)),
-      |m3 AS (SELECT w, freq, out AS toks FROM w3 WHERE i = len(toks) + 1),
-      |""".stripMargin
+      |""".stripMargin + (1 to 3).map(round).mkString
+  }
+
+  /** q236's leakage audit as DuckDB SQL (also q237's oracle). */
+  private val splitLeakageSql =
+    s"""WITH d AS (
+      |  SELECT doc_id, text,
+      |    $contentSplitSql AS split
+      |  FROM documents),
+      |sh AS (
+      |  SELECT DISTINCT split, doc_id, sh FROM (
+      |    SELECT split, doc_id, unnest(${TextQueries.shinglesSql}) AS sh
+      |    FROM d)),
+      |train AS (SELECT DISTINCT sh FROM sh WHERE split = 'train')
+      |SELECT doc_id, count(*) AS n_shared
+      |FROM sh JOIN train USING (sh) WHERE split = 'test'
+      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q282_cluster_mix" ->
@@ -1575,9 +1539,7 @@ object CurationQueries extends QuerySet {
     "q283_contamination_13gram" ->
       s"""WITH base AS (
          |  SELECT doc_id, string_split(text,' ') AS ws,
-         |    CASE WHEN ${md5iSql("text")} % 100 < 80 THEN 'train'
-         |         WHEN ${md5iSql("text")} % 100 < 90 THEN 'val'
-         |         ELSE 'test' END AS split
+         |    $contentSplitSql AS split
          |  FROM documents),
          |g AS (
          |  SELECT doc_id, split,
@@ -1593,30 +1555,8 @@ object CurationQueries extends QuerySet {
          |  (1000 * count(tr.h)) // count(*) AS contam_permille
          |FROM te LEFT JOIN tr ON te.h = tr.h
          |GROUP BY te.doc_id ORDER BY te.doc_id""".stripMargin,
-    "q287_dedup_clusters" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |           FROM documents),
-        |grams AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, greatest(len(ws) - 1, 2)),
-        |      i -> {'pos': i,
-        |            'h': ('0x'||substr(md5(
-        |                   array_to_string(ws[i:i+2], ' ')),1,8))::BIGINT}))
-        |      AS g
-        |  FROM w),
-        |keyed AS (SELECT doc_id, g.pos AS pos,
-        |                 g.h * 1048576 + (1048575 - g.pos) AS k
-        |          FROM grams),
-        |win AS (SELECT doc_id, pos,
-        |          min(k) OVER (PARTITION BY doc_id ORDER BY pos
-        |            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mk,
-        |          max(pos) OVER (PARTITION BY doc_id) AS ng
-        |        FROM keyed),
-        |fps AS (SELECT DISTINCT doc_id, mk // 1048576 AS fh
-        |        FROM win WHERE pos <= greatest(ng - 3, 1)),
-        |dfh AS (SELECT fh FROM fps GROUP BY fh
-        |        HAVING count(*) BETWEEN 2 AND 50),
-        |p AS (SELECT f.doc_id, f.fh FROM fps f JOIN dfh USING (fh)),
+    "q287_dedup_clusters" -> ("WITH " + CorpusQueries.winnowPostingCtes +
+      """,
         |pr AS (SELECT a.doc_id AS src, b.doc_id AS dst
         |       FROM p a JOIN p b ON a.fh = b.fh AND a.doc_id < b.doc_id
         |       GROUP BY 1, 2 HAVING count(*) >= 2),
@@ -1632,7 +1572,7 @@ object CurationQueries extends QuerySet {
         |sz AS (SELECT component, count(*) AS n_members FROM cc GROUP BY 1)
         |SELECT cc.id AS doc_id, cc.component AS cluster, sz.n_members,
         |       cc.id = cc.component AS is_canonical
-        |FROM cc JOIN sz USING (component) ORDER BY doc_id""".stripMargin,
+        |FROM cc JOIN sz USING (component) ORDER BY doc_id""".stripMargin),
     "q286_bpe_merges" -> (bpeTrainCte +
       """s1 AS (SELECT sum(freq * len(toks))::BIGINT AS t FROM m1),
         |s2 AS (SELECT sum(freq * len(toks))::BIGINT AS t FROM m2),
@@ -1707,34 +1647,13 @@ object CurationQueries extends QuerySet {
          |SELECT doc_id, lang, count(*) AS n_feat, sum(qw)::BIGINT AS weight
          |FROM feat JOIN qw USING (f)
          |GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin,
-    "q216_boilerplate_strip" ->
-      s"""WITH ix AS (
-         |  SELECT doc_id, text,
-         |    unnest(range(0, (len(string_split(text,' ')) + ${chunkW - 1})
-         |                    // $chunkW)) AS idx
-         |  FROM documents),
-         |ch AS (
-         |  SELECT doc_id, idx,
-         |    array_to_string(string_split(text,' ')
-         |      [idx*$chunkW+1:idx*$chunkW+$chunkW], ' ') AS chunk
-         |  FROM ix),
-         |boiler AS (
+    "q216_boilerplate_strip" -> ("WITH " + chunkCleanSql("documents",
+      s"""boiler AS (
          |  SELECT chunk FROM ch GROUP BY chunk
          |  HAVING count(DISTINCT doc_id) >= $boilerDf),
          |kept AS (
          |  SELECT ch.doc_id, ch.idx, ch.chunk
-         |  FROM ch ANTI JOIN boiler b ON ch.chunk = b.chunk),
-         |agg AS (
-         |  SELECT doc_id, count(*) AS n_kept,
-         |         string_agg(chunk, ' ' ORDER BY idx) AS cleaned
-         |  FROM kept GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  (len(string_split(d.text,' ')) + ${chunkW - 1}) // $chunkW
-         |    AS n_chunks,
-         |  coalesce(a.n_kept, 0) AS n_kept,
-         |  coalesce(a.cleaned, '') AS cleaned
-         |FROM documents d LEFT JOIN agg a USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
+         |  FROM ch ANTI JOIN boiler b ON ch.chunk = b.chunk)""".stripMargin)),
     "q217_novelty_score" ->
       s"""WITH sh AS (
          |  SELECT DISTINCT doc_id, sh FROM (
@@ -1820,38 +1739,10 @@ object CurationQueries extends QuerySet {
          |             ${blog2Sql("c * n_s")}))::BIGINT AS drift_q
          |FROM cs JOIN ct USING (term) JOIN ns USING (source), nt
          |GROUP BY source ORDER BY source""".stripMargin,
-    "q236_split_leakage" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, text,
-         |    CASE WHEN ${md5iSql("text")} % 100 < 80 THEN 'train'
-         |         WHEN ${md5iSql("text")} % 100 < 90 THEN 'val'
-         |         ELSE 'test' END AS split
-         |  FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT split, doc_id, sh FROM (
-         |    SELECT split, doc_id, unnest(${TextQueries.shinglesSql}) AS sh
-         |    FROM d)),
-         |train AS (SELECT DISTINCT sh FROM sh WHERE split = 'train')
-         |SELECT doc_id, count(*) AS n_shared
-         |FROM sh JOIN train USING (sh) WHERE split = 'test'
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // identical SQL to q236: the streaming gate must land on the very
-    // same audit rows the one-shot batch computes
-    "q237_stream_leakage" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, text,
-         |    CASE WHEN ${md5iSql("text")} % 100 < 80 THEN 'train'
-         |         WHEN ${md5iSql("text")} % 100 < 90 THEN 'val'
-         |         ELSE 'test' END AS split
-         |  FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT split, doc_id, sh FROM (
-         |    SELECT split, doc_id, unnest(${TextQueries.shinglesSql}) AS sh
-         |    FROM d)),
-         |train AS (SELECT DISTINCT sh FROM sh WHERE split = 'train')
-         |SELECT doc_id, count(*) AS n_shared
-         |FROM sh JOIN train USING (sh) WHERE split = 'test'
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+    "q236_split_leakage" -> splitLeakageSql,
+    // the streaming gate must land on the very same audit rows the
+    // one-shot batch computes: q236's SQL
+    "q237_stream_leakage" -> splitLeakageSql,
     "q231_dup_spans_maximal" ->
       s"""WITH pos AS (
          |  SELECT doc_id, s.pos AS pos, s.sh AS sh FROM (
@@ -1928,27 +1819,7 @@ object CurationQueries extends QuerySet {
       val fin = (2 to 16)
         .map(k => s"  SELECT w, enc FROM d$k WHERE len(w) = $k")
         .mkString("\n  UNION ALL\n")
-      s"""WITH wf AS MATERIALIZED (SELECT w, count(*)::BIGINT AS freq
-         |       FROM (SELECT unnest(string_split(text,' ')) AS w
-         |             FROM documents)
-         |       WHERE len(w) > 0 GROUP BY w),
-         |sub AS MATERIALIZED (
-         |        SELECT substr(w, i, L) AS piece, sum(freq)::BIGINT AS cnt
-         |        FROM wf, LATERAL unnest(range(1, len(w)+1)) AS t(i),
-         |             (VALUES (1),(2),(3)) AS ll(L)
-         |        WHERE i + L - 1 <= len(w)
-         |        GROUP BY 1),
-         |tot AS MATERIALIZED (SELECT sum(cnt)::BIGINT AS t FROM sub),
-         |vocab AS MATERIALIZED (
-         |  SELECT piece,
-         |    (len(bin(tot.t)) - len(bin(s.cnt)) + 1)::BIGINT AS cost
-         |  FROM (
-         |    SELECT piece, cnt FROM sub WHERE len(piece) = 1
-         |    UNION ALL
-         |    SELECT piece, cnt FROM (
-         |      SELECT piece, cnt FROM sub WHERE len(piece) >= 2
-         |      ORDER BY cnt DESC, piece LIMIT 256)
-         |  ) s, tot),
+      s"""WITH ${seedCostCtes("tot", "vocab")},
          |words200 AS MATERIALIZED (
          |             SELECT w, freq FROM wf WHERE len(w) BETWEEN 2 AND 16
          |             ORDER BY freq DESC, w LIMIT 200),
@@ -2041,21 +1912,11 @@ object CurationQueries extends QuerySet {
 
     // Stupid Backoff replayed: counts from the even half, every held-
     // out position classified into its tier — integer-exact.
-    "q315_backoff_lm" ->
-      """WITH tr AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |            FROM documents WHERE doc_id % 2 = 0),
-        |hd AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |       FROM documents WHERE doc_id % 2 = 1),
-        |cb AS (SELECT prev, cur, count(*)::BIGINT AS cb FROM (
-        |         SELECT ws[i-1] AS prev, ws[i] AS cur
-        |         FROM tr, LATERAL unnest(range(2, len(ws)+1)) AS t(i))
-        |       GROUP BY 1, 2),
-        |cu AS (SELECT w, count(*)::BIGINT AS cu FROM (
+    "q315_backoff_lm" -> bigramLmSql(
+      """cu AS (SELECT w, count(*)::BIGINT AS cu FROM (
         |         SELECT unnest(ws) AS w FROM tr) GROUP BY 1),
-        |n AS (SELECT sum(cu)::BIGINT AS n_tot FROM cu),
-        |hdbg AS (SELECT doc_id, ws[i-1] AS prev, ws[i] AS cur
-        |         FROM hd, LATERAL unnest(range(2, len(ws)+1)) AS t(i)),
-        |sc AS (SELECT h.doc_id,
+        |n AS (SELECT sum(cu)::BIGINT AS n_tot FROM cu)""".stripMargin,
+      """sc AS (SELECT h.doc_id,
         |         CASE WHEN cb.cb IS NOT NULL
         |                THEN len(bin(cp.cu // cb.cb)) - 1
         |              WHEN cc.cu IS NOT NULL
@@ -2070,27 +1931,17 @@ object CurationQueries extends QuerySet {
         |SELECT doc_id, count(*)::BIGINT AS n_bigrams,
         |  sum(s)::BIGINT AS surprisal, sum(backoff)::BIGINT AS n_backoff,
         |  ((1000 * sum(s)) // count(*))::BIGINT AS milli_bits_per_bigram
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // interpolated KN with D = 3/4 as the exact integer rational; the
     // same three count tables, tier CASE, and blog2 quantization
-    "q330_kneser_ney" ->
-      """WITH tr AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |            FROM documents WHERE doc_id % 2 = 0),
-        |hd AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |       FROM documents WHERE doc_id % 2 = 1),
-        |cb AS (SELECT prev, cur, count(*)::BIGINT AS cb FROM (
-        |         SELECT ws[i-1] AS prev, ws[i] AS cur
-        |         FROM tr, LATERAL unnest(range(2, len(ws)+1)) AS t(i))
-        |       GROUP BY 1, 2),
-        |ctx AS (SELECT prev, sum(cb)::BIGINT AS cv,
+    "q330_kneser_ney" -> bigramLmSql(
+      """ctx AS (SELECT prev, sum(cb)::BIGINT AS cv,
         |               count(*)::BIGINT AS n1v
         |        FROM cb GROUP BY prev),
         |cont AS (SELECT cur, count(*)::BIGINT AS ncw FROM cb GROUP BY cur),
-        |n AS (SELECT count(*)::BIGINT AS nbb FROM cb),
-        |hdbg AS (SELECT doc_id, ws[i-1] AS prev, ws[i] AS cur
-        |         FROM hd, LATERAL unnest(range(2, len(ws)+1)) AS t(i)),
-        |sc AS (SELECT h.doc_id,
+        |n AS (SELECT count(*)::BIGINT AS nbb FROM cb)""".stripMargin,
+      """sc AS (SELECT h.doc_id,
         |         CASE WHEN x.cv IS NOT NULL AND co.ncw IS NOT NULL
         |                THEN len(bin((4 * x.cv * n.nbb) //
         |                  ((CASE WHEN cb.cb IS NULL THEN 0
@@ -2112,7 +1963,7 @@ object CurationQueries extends QuerySet {
         |  sum(s)::BIGINT AS surprisal,
         |  sum(discounted)::BIGINT AS n_cont, sum(oov)::BIGINT AS n_oov,
         |  ((1000 * sum(s)) // count(*))::BIGINT AS milli_bits_per_bigram
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     "q296_containment" ->
       """WITH sh0 AS (

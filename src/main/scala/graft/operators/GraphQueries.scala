@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -20,10 +20,27 @@ import graft.Tables
   */
 object GraphQueries extends QuerySet {
 
-  /** Canonical co-purchase edges (src < dst, distinct). */
-  private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
+  /** The orders a co-purchase graph is built from: a Spark filter and
+    * its DuckDB twin. */
+  private case class OrderWindow(filter: Column, sql: String)
+
+  /** The year graph. */
+  private val year1997 =
+    OrderWindow(year(col("o_orderdate")) === 1997, "year(o_orderdate) = 1997")
+
+  /** The sparser January graph (q124, q126, q176). */
+  private val january1997 = OrderWindow(
+    col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
+      col("o_orderdate") < lit("1997-02-01").cast("timestamp"),
+    """o_orderdate >= TIMESTAMP '1997-01-01'
+      |    AND o_orderdate < TIMESTAMP '1997-02-01'""".stripMargin)
+
+  /** Canonical co-purchase edges (src < dst, distinct) of the parts
+    * co-occurring in an order of `window`. */
+  private def coPurchaseEdges(s: SparkSession, d: String,
+                              window: OrderWindow = year1997): DataFrame = {
     val li = Tables.lineitem(s, d)
-      .join(Tables.orders(s, d).filter(year(col("o_orderdate")) === 1997)
+      .join(Tables.orders(s, d).filter(window.filter)
         .select(col("o_orderkey")),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -34,11 +51,11 @@ object GraphQueries extends QuerySet {
   }
 
   // oracle-side twin of coPurchaseEdges
-  private val edCte =
-    """WITH li AS (
+  private def edCte(window: OrderWindow = year1997) =
+    s"""WITH li AS (
       |  SELECT l_orderkey, l_partkey FROM lineitem
       |  JOIN orders ON l_orderkey = o_orderkey
-      |  WHERE year(o_orderdate) = 1997),
+      |  WHERE ${window.sql}),
       |ed AS (
       |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
@@ -90,16 +107,7 @@ object GraphQueries extends QuerySet {
     // to one giant component). Oracle = recursive reachability
     // closure + min per vertex.
     "q124_graph_cc" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-                  col("o_orderdate") < lit("1997-02-01").cast("timestamp"))
-          .select(col("o_orderkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val ed = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst")).distinct()
+      val ed = coPurchaseEdges(s, d, january1997)
       val vertices = ed.select(col("src").as("id"))
         .union(ed.select(col("dst").as("id"))).distinct()
       GraphOps.connectedComponents(vertices, ed, maxIter = 30)
@@ -129,16 +137,7 @@ object GraphQueries extends QuerySet {
     // encoding the (freq, smallest-label) preference as the single
     // sortable key f·1e7 − label (labels ≪ 1e7).
     "q126_graph_lpa" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-                  col("o_orderdate") < lit("1997-02-01").cast("timestamp"))
-          .select(col("o_orderkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val ed = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst")).distinct()
+      val ed = coPurchaseEdges(s, d, january1997)
       val vertices = ed.select(col("src").as("id"))
         .union(ed.select(col("dst").as("id"))).distinct()
       GraphOps.labelPropagation(vertices, ed, iters = 3)
@@ -215,16 +214,7 @@ object GraphQueries extends QuerySet {
     // scatter the label along edges, combine = min, gather adopts a
     // smaller label. Same January graph, same oracle as q124.
     "q176_sg_cc" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-                  col("o_orderdate") < lit("1997-02-01").cast("timestamp"))
-          .select(col("o_orderkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val ed = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst")).distinct()
+      val ed = coPurchaseEdges(s, d, january1997)
       val bidir = ed.union(ed.select(col("dst").as("src"), col("src").as("dst")))
       val vertices = bidir.select(col("src").as("id")).distinct()
       val init = vertices.select(col("id"), col("id").as("component"))
@@ -236,26 +226,53 @@ object GraphQueries extends QuerySet {
     })
   )
 
+  /** q124's BFS closure over the January graph (also q176's oracle). */
+  private val januaryCcSql = edCte(january1997) +
+    """,
+      |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed)
+      |SELECT id, min(reach) AS component FROM (
+      |  WITH RECURSIVE r(id, reach) AS (
+      |    SELECT src, src FROM (SELECT DISTINCT src FROM bidir)
+      |    UNION
+      |    SELECT r.id, e.dst FROM r JOIN bidir e ON e.src = r.reach)
+      |  SELECT id, reach FROM r)
+      |GROUP BY id ORDER BY id""".stripMargin
+
+  /** q123's unit-weight SSSP closure over the year graph (also q175's
+    * oracle). */
+  private val ssspSql = edCte() +
+    """,
+      |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
+      |s AS (SELECT min(src) AS sid FROM ed)
+      |SELECT id, min(dist)::DOUBLE AS dist FROM (
+      |  WITH RECURSIVE d(id, dist) AS (
+      |    SELECT sid, 0 FROM s
+      |    UNION
+      |    SELECT e.dst, d.dist + 1
+      |    FROM d JOIN bidir e ON e.src = d.id WHERE d.dist < 20)
+      |  SELECT id, dist FROM d)
+      |GROUP BY id ORDER BY id""".stripMargin
+
+  /** [[edCte]] of the year graph plus its triangles (a, b, c),
+    * a < b < c. */
+  private val edTriCtes = edCte() +
+    """,
+      |tri AS (
+      |  SELECT w.a, w.b, w.c FROM
+      |    (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
+      |     FROM ed e1 JOIN ed e2 ON e1.src = e2.src AND e1.dst < e2.dst) w
+      |  JOIN ed e3 ON w.b = e3.src AND w.c = e3.dst)""".stripMargin
+
   val oracle: Map[String, String] = Map(
-    "q121_graph_triangles" -> (edCte +
-      """,
-        |tri AS (
-        |  SELECT w.a, w.b, w.c FROM
-        |    (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-        |     FROM ed e1 JOIN ed e2 ON e1.src = e2.src AND e1.dst < e2.dst) w
-        |  JOIN ed e3 ON w.b = e3.src AND w.c = e3.dst)
+    "q121_graph_triangles" -> (edTriCtes +
+      """
         |SELECT id, count(*) AS n_triangles FROM (
         |  SELECT a AS id FROM tri
         |  UNION ALL SELECT b FROM tri
         |  UNION ALL SELECT c FROM tri)
         |GROUP BY id ORDER BY id""".stripMargin),
-    "q229_graph_lcc" -> (edCte +
+    "q229_graph_lcc" -> (edTriCtes +
       """,
-        |tri AS (
-        |  SELECT w.a, w.b, w.c FROM
-        |    (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-        |     FROM ed e1 JOIN ed e2 ON e1.src = e2.src AND e1.dst < e2.dst) w
-        |  JOIN ed e3 ON w.b = e3.src AND w.c = e3.dst),
         |tc AS (
         |  SELECT id, count(*) AS tri FROM (
         |    SELECT a AS id FROM tri
@@ -269,7 +286,7 @@ object GraphQueries extends QuerySet {
         |       THEN (2000000 * coalesce(tc.tri, 0)) // (deg * (deg - 1))
         |       ELSE 0 END AS lcc_ppm
         |FROM deg LEFT JOIN tc USING (id) ORDER BY id""".stripMargin),
-    "q232_graph_metrics" -> (edCte +
+    "q232_graph_metrics" -> (edCte() +
       """,
         |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
         |deg AS (SELECT src AS id, count(*) AS deg FROM bidir GROUP BY 1),
@@ -289,7 +306,7 @@ object GraphQueries extends QuerySet {
         |  (2000 * n_edges) // n_vertices AS avg_degree_milli,
         |  (3000000 * n_triangles) // greatest(n_wedges, 1) AS gcc_ppm
         |FROM dm, tri""".stripMargin),
-    "q230_graph_adamic_adar" -> (edCte +
+    "q230_graph_adamic_adar" -> (edCte() +
       """,
         |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
         |degz AS (SELECT src AS z, count(*) AS dz FROM bidir GROUP BY 1),
@@ -302,7 +319,7 @@ object GraphQueries extends QuerySet {
         |FROM co JOIN degz USING (z) WHERE dz >= 2
         |GROUP BY u, v HAVING count(*) >= 3
         |ORDER BY u, v""".stripMargin),
-    "q122_graph_jaccard" -> (edCte +
+    "q122_graph_jaccard" -> (edCte() +
       """,
         |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
         |deg AS (SELECT src AS id, count(*) AS deg FROM bidir GROUP BY 1),
@@ -315,25 +332,8 @@ object GraphQueries extends QuerySet {
         |FROM co JOIN deg du ON u = du.id JOIN deg dv ON v = dv.id
         |WHERE co::DOUBLE / (du.deg + dv.deg - co) >= 0.25
         |ORDER BY u, v""".stripMargin),
-    "q124_graph_cc" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |    AND o_orderdate < TIMESTAMP '1997-02-01'),
-        |ed AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |   AND a.l_partkey < b.l_partkey),
-        |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed)
-        |SELECT id, min(reach) AS component FROM (
-        |  WITH RECURSIVE r(id, reach) AS (
-        |    SELECT src, src FROM (SELECT DISTINCT src FROM bidir)
-        |    UNION
-        |    SELECT r.id, e.dst FROM r JOIN bidir e ON e.src = r.reach)
-        |  SELECT id, reach FROM r)
-        |GROUP BY id ORDER BY id""".stripMargin,
-    "q125_graph_pagerank" -> (edCte +
+    "q124_graph_cc" -> januaryCcSql,
+    "q125_graph_pagerank" -> (edCte() +
       """,
         |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
         |deg AS (SELECT src AS id, count(*) AS deg FROM bidir GROUP BY 1),
@@ -372,16 +372,8 @@ object GraphQueries extends QuerySet {
         |         JOIN deg d ON d.id = e.src GROUP BY e.dst) s ON v.id = s.id)
         |SELECT id, CAST(round(rank*1000000000) AS BIGINT) AS rank_e9
         |FROM r5 ORDER BY id""".stripMargin),
-    "q126_graph_lpa" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |    AND o_orderdate < TIMESTAMP '1997-02-01'),
-        |ed AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |   AND a.l_partkey < b.l_partkey),
+    "q126_graph_lpa" -> (edCte(january1997) +
+      """,
         |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
         |l0 AS (SELECT DISTINCT src AS id, src AS label FROM bidir),
         |l1 AS (
@@ -405,7 +397,7 @@ object GraphQueries extends QuerySet {
         |      SELECT e.dst AS id, l.label, count(*) AS f
         |      FROM bidir e JOIN l2 l ON e.src = l.id
         |      GROUP BY e.dst, l.label) GROUP BY id) t ON v.id = t.id)
-        |SELECT id, label FROM l3 ORDER BY id""".stripMargin,
+        |SELECT id, label FROM l3 ORDER BY id""".stripMargin),
     "q127_graph_hits" -> {
       val iter = (k: Int) => {
         val p = k - 1
@@ -439,13 +431,8 @@ object GraphQueries extends QuerySet {
         |       CAST(round(auth*1000000000) AS BIGINT) AS auth_e9
         |FROM s3 ORDER BY id""".stripMargin
     },
-    "q128_graph_clustering" -> (edCte +
+    "q128_graph_clustering" -> (edTriCtes +
       """,
-        |tri AS (
-        |  SELECT w.a, w.b, w.c FROM
-        |    (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-        |     FROM ed e1 JOIN ed e2 ON e1.src = e2.src AND e1.dst < e2.dst) w
-        |  JOIN ed e3 ON w.b = e3.src AND w.c = e3.dst),
         |tcnt AS (
         |  SELECT id, count(*) AS n_triangles FROM (
         |    SELECT a AS id FROM tri
@@ -462,50 +449,11 @@ object GraphQueries extends QuerySet {
         |             // (degree * (degree - 1)))::BIGINT END AS coeff_ppm
         |FROM deg LEFT JOIN tcnt ON deg.id = tcnt.id
         |ORDER BY deg.id""".stripMargin),
-    "q123_graph_sssp" -> (edCte +
-      """,
-        |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
-        |s AS (SELECT min(src) AS sid FROM ed)
-        |SELECT id, min(dist)::DOUBLE AS dist FROM (
-        |  WITH RECURSIVE d(id, dist) AS (
-        |    SELECT sid, 0 FROM s
-        |    UNION
-        |    SELECT e.dst, d.dist + 1
-        |    FROM d JOIN bidir e ON e.src = d.id WHERE d.dist < 20)
-        |  SELECT id, dist FROM d)
-        |GROUP BY id ORDER BY id""".stripMargin),
+    "q123_graph_sssp" -> ssspSql,
     // q175 = the q123 closure verbatim (GSA must land on the same
     // distances); q176 = the q124 closure verbatim (scatter-gather
     // must land on the same components)
-    "q175_gsa_sssp" -> (edCte +
-      """,
-        |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
-        |s AS (SELECT min(src) AS sid FROM ed)
-        |SELECT id, min(dist)::DOUBLE AS dist FROM (
-        |  WITH RECURSIVE d(id, dist) AS (
-        |    SELECT sid, 0 FROM s
-        |    UNION
-        |    SELECT e.dst, d.dist + 1
-        |    FROM d JOIN bidir e ON e.src = d.id WHERE d.dist < 20)
-        |  SELECT id, dist FROM d)
-        |GROUP BY id ORDER BY id""".stripMargin),
-    "q176_sg_cc" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |    AND o_orderdate < TIMESTAMP '1997-02-01'),
-        |ed AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |   AND a.l_partkey < b.l_partkey),
-        |bidir AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed)
-        |SELECT id, min(reach) AS component FROM (
-        |  WITH RECURSIVE r(id, reach) AS (
-        |    SELECT src, src FROM (SELECT DISTINCT src FROM bidir)
-        |    UNION
-        |    SELECT r.id, e.dst FROM r JOIN bidir e ON e.src = r.reach)
-        |  SELECT id, reach FROM r)
-        |GROUP BY id ORDER BY id""".stripMargin
+    "q175_gsa_sssp" -> ssspSql,
+    "q176_sg_cc" -> januaryCcSql
   )
 }

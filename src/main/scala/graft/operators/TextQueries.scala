@@ -392,6 +392,33 @@ object TextQueries extends QuerySet {
     """list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 2)),
       |      i -> array_to_string(string_split(text,' ')[i:i+3], ' '))""".stripMargin
 
+  /** q334's near-dup closure as DuckDB CTEs (no WITH), shared with
+    * q340's dedup stage: the df-capped distinct shingles of the
+    * (doc_id, sh) rows `shRows` selects, the pair co-counts, the
+    * ≥ 0.1-Jaccard edges and their transitive closure `reach`. */
+  private[operators] def dedupReachCtes(shRows: String): String =
+    s"""sh0 AS (
+       |  SELECT DISTINCT doc_id, sh FROM (
+       |$shRows)),
+       |sh AS (
+       |  SELECT doc_id, sh FROM sh0
+       |  QUALIFY count(*) OVER (PARTITION BY sh) <= $dfCap),
+       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+       |co AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS co
+       |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2),
+       |e AS (
+       |  SELECT id_a AS a, id_b AS b FROM co
+       |  JOIN sizes na ON na.doc_id = id_a
+       |  JOIN sizes nb ON nb.doc_id = id_b
+       |  WHERE co * 1000000 // (na.n_sh + nb.n_sh - co) >= 100000),
+       |und AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
+       |reach(a, b) AS (
+       |  SELECT a, b FROM und
+       |  UNION
+       |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)""".stripMargin
+
   private[operators] def sigSelectSql = {
     val cols = AB.zipWithIndex.map { case ((a, b), j) =>
       s"min((h * $a + $b) % $P) AS m$j"
@@ -518,35 +545,16 @@ object TextQueries extends QuerySet {
     // the q66 pairs closed transitively (recursive CTE — the oracle
     // may be slow; clusters are small so the closure stays bounded),
     // then component label = min reachable id
-    "q334_dedup_clusters" ->
-      s"""WITH RECURSIVE sh0 AS (
-         |  SELECT DISTINCT doc_id, sh FROM (
-         |    SELECT doc_id, unnest($shinglesSql) AS sh FROM documents)),
-         |sh AS (
-         |  SELECT doc_id, sh FROM sh0
-         |  QUALIFY count(*) OVER (PARTITION BY sh) <= $dfCap),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-         |co AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS co
-         |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |e AS (
-         |  SELECT id_a AS a, id_b AS b FROM co
-         |  JOIN sizes na ON na.doc_id = id_a
-         |  JOIN sizes nb ON nb.doc_id = id_b
-         |  WHERE co * 1000000 // (na.n_sh + nb.n_sh - co) >= 100000),
-         |und AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-         |lab AS (
-         |  SELECT a AS id, least(a, min(b)) AS comp
-         |  FROM reach GROUP BY a)
-         |SELECT comp AS canonical, count(*)::BIGINT AS sz,
-         |  (count(*) - 1)::BIGINT AS n_removed
-         |FROM lab GROUP BY comp HAVING count(*) >= 2
-         |ORDER BY canonical""".stripMargin,
+    "q334_dedup_clusters" -> ("WITH RECURSIVE " + dedupReachCtes(
+      s"    SELECT doc_id, unnest($shinglesSql) AS sh FROM documents") +
+      """,
+        |lab AS (
+        |  SELECT a AS id, least(a, min(b)) AS comp
+        |  FROM reach GROUP BY a)
+        |SELECT comp AS canonical, count(*)::BIGINT AS sz,
+        |  (count(*) - 1)::BIGINT AS n_removed
+        |FROM lab GROUP BY comp HAVING count(*) >= 2
+        |ORDER BY canonical""".stripMargin),
     "q68_token_count" ->
       """SELECT doc_id,
         |  len(string_split_regex(text, '\s+')) AS n_ws,

@@ -61,6 +61,23 @@ package object operators {
   private[operators] def md5iSql(e: String): String =
     s"('0x'||substr(md5($e),1,8))::BIGINT"
 
+  /** A doc's content-hash bucket 0–99 (md5 of `text`): q203's split
+    * key, so byte-identical duplicates always share a split. */
+  private[operators] def splitBucket: Column = pmod(md5i(col("text")), lit(100))
+
+  /** The split of a doc's [[splitBucket]]: train below 80, val below
+    * 90, test above. */
+  private[operators] def contentSplit: Column = {
+    val bucket = splitBucket
+    when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+  }
+
+  /** [[contentSplit]] as a DuckDB CASE expression. */
+  private[operators] val contentSplitSql =
+    s"""CASE WHEN ${md5iSql("text")} % 100 < 80 THEN 'train'
+       |         WHEN ${md5iSql("text")} % 100 < 90 THEN 'val'
+       |         ELSE 'test' END""".stripMargin
+
   /** Tokens of a text column split on single spaces. */
   private[operators] def toks(c: Column): Column = split(c, " ")
 
@@ -76,4 +93,59 @@ package object operators {
   private[operators] val bigramsSql =
     """list_transform(range(1, greatest(len(string_split(text,' ')), 2)),
       |      i -> array_to_string(string_split(text,' ')[i:i+1], ' '))""".stripMargin
+
+  /** Words per chunk of [[chunkClean]]. */
+  private[operators] val chunkW = 10
+
+  /** Chunk clean (q205, q212, q216): split each doc of `docs` into
+    * consecutive chunkW-word (doc_id, idx, chunk) rows, keep the rows
+    * `keep` returns, and reassemble each doc: (doc_id, n_chunks, n_kept,
+    * cleaned), the kept chunks joined in idx order ("" when none
+    * survive). One shuffle on the keep rule's key, one on doc_id. */
+  private[operators] def chunkClean(docs: DataFrame)(
+      keep: DataFrame => DataFrame): DataFrame = {
+    val w0 = toks(col("text"))
+    val nChunks = (((size(w0) - 1) / chunkW).cast("int") + 1)
+    val chunks = docs.select(col("doc_id"),
+      posexplode(transform(sequence(lit(0), nChunks - 1),
+        i => concat_ws(" ", slice(w0, i * chunkW + 1, lit(chunkW))))))
+      .toDF("doc_id", "idx", "chunk")
+    val rebuilt = keep(chunks).groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_kept"),
+        concat_ws(" ", transform(
+          array_sort(collect_list(struct(col("idx"), col("chunk")))),
+          s0 => s0.getField("chunk"))).as("cleaned"))
+    docs.select(col("doc_id"), nChunks.cast("long").as("n_chunks"))
+      .join(rebuilt, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_chunks"),
+        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+        coalesce(col("cleaned"), lit("")).as("cleaned"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** [[chunkClean]] of the table `src` as DuckDB CTEs (no WITH): `ch`
+    * holds the chunks, `keepCtes` must define `kept` from it. */
+  private[operators] def chunkCleanSql(src: String, keepCtes: String): String =
+    s"""ix AS (
+       |  SELECT doc_id, text,
+       |    unnest(range(0, (len(string_split(text,' ')) + ${chunkW - 1})
+       |                    // $chunkW)) AS idx
+       |  FROM $src),
+       |ch AS (
+       |  SELECT doc_id, idx,
+       |    array_to_string(string_split(text,' ')
+       |      [idx*$chunkW+1:idx*$chunkW+$chunkW], ' ') AS chunk
+       |  FROM ix),
+       |$keepCtes,
+       |agg AS (
+       |  SELECT doc_id, count(*) AS n_kept,
+       |         string_agg(chunk, ' ' ORDER BY idx) AS cleaned
+       |  FROM kept GROUP BY doc_id)
+       |SELECT d.doc_id,
+       |  (len(string_split(d.text,' ')) + ${chunkW - 1}) // $chunkW
+       |    AS n_chunks,
+       |  coalesce(a.n_kept, 0) AS n_kept,
+       |  coalesce(a.cleaned, '') AS cleaned
+       |FROM $src d LEFT JOIN agg a USING (doc_id)
+       |ORDER BY d.doc_id""".stripMargin
 }

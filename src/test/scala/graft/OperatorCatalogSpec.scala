@@ -27,4 +27,21 @@ class OperatorCatalogSpec extends SparkSpec {
     val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(dangling.isEmpty, s"oracle without query: $dangling")
   }
+
+  // oracle_sql.sha256 pins every oracle's exact text (one `key sha256`
+  // line per key), so a refactor of the SQL templates must keep each
+  // query's oracle byte-identical; a deliberate oracle change
+  // regenerates the file (see the verify skill)
+  test("oracle SQL matches the pinned digests") {
+    val src = scala.io.Source.fromResource("oracle_sql.sha256")
+    val pinned = try src.getLines().map { l =>
+      val Array(k, h) = l.split(' '); k -> h }.toMap finally src.close()
+    def sha256(s: String) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+    val now = SparkEntry.oracleSql.map { case (k, v) => k -> sha256(v) }
+    val diff = (now.keySet ++ pinned.keySet).toSeq.sorted
+      .filter(k => now.get(k) != pinned.get(k))
+    assert(diff.isEmpty, s"oracle SQL differs from oracle_sql.sha256: $diff")
+  }
 }
