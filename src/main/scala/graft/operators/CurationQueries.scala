@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.{Scratch, Tables}
+import graft.Tables
 
 /** Corpus-curation tier 3 — model-free quality scoring and corpus-
   * statistics filters for LLM training-data pipelines: unigram-LM
@@ -537,16 +537,14 @@ object CurationQueries extends QuerySet {
     // driver scalar (metadata-sized).
     "q218_stream_surprisal" -> ((s, d) => {
       import graft.streaming.Replay
-      val base = Scratch.dir("surpstream")
-      val (corpus, ep) =
-        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
+      val (corpus, ep) = Replay.snapshotSplit(Tables.documents(s, d), "doc_id")
       val cnt = corpus
         .select(explode(toks(col("text"))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("c"))
         .cache()
       val nTot = cnt.agg(sum(col("c"))).head().getLong(0)
-      val out = s"$base/out"
-      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+      val out = s"${ep.dir}/out"
+      ep.runBatches(ep.streamDf(s)) { (b, _) =>
         b.select(col("doc_id"), explode(toks(col("text"))).as("term"))
           .join(broadcast(cnt), Seq("term"), "left")
           .withColumn("surp",
@@ -724,7 +722,6 @@ object CurationQueries extends QuerySet {
     // must equal q236's one-shot audit exactly — same oracle SQL.
     "q237_stream_leakage" -> ((s, d) => {
       import graft.streaming.Replay
-      val base = Scratch.dir("leakstream")
       val docs = Tables.documents(s, d).withColumn("split", contentSplit)
       val train = docs.filter(col("split") === "train")
         .select(explode(TextQueries.shingles4(col("text"))).as("sh"))
@@ -733,9 +730,9 @@ object CurationQueries extends QuerySet {
       val test = docs.filter(col("split") === "test")
         .select(col("doc_id"), col("text"))
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val ep = Replay.idThirds(test, "doc_id", 0L, maxId, base.toString)
-      val out = s"$base/out"
-      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+      val ep = Replay.idThirds(test, "doc_id", 0L, maxId)
+      val out = s"${ep.dir}/out"
+      ep.runBatches(ep.streamDf(s)) { (b, _) =>
         b.select(col("doc_id"),
             explode(TextQueries.shingles4(col("text"))).as("sh"))
           .distinct()
@@ -1398,7 +1395,6 @@ object CurationQueries extends QuerySet {
     // legs can never drift.
     "q284_winnow_stream" -> ((s, d) => {
       import graft.streaming.Replay
-      val base = Scratch.dir("winstream2")
       // TWO projection steps, not one expression: a Column subtree is
       // DUPLICATED at every reference, so inlining `keys` into the
       // per-window lambda would re-run every gram md5 once per window
@@ -1419,8 +1415,7 @@ object CurationQueries extends QuerySet {
               lit(1048576L)).cast("long"))))
           .drop("__keys")
       }
-      val (corpus, ep) =
-        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
+      val (corpus, ep) = Replay.snapshotSplit(Tables.documents(s, d), "doc_id")
       // explode_OUTER on purpose: plain explode triggers
       // InferFiltersFromGenerate, which pushes a `size(fps) > 0`
       // filter to the scan with the WHOLE fingerprint expression
@@ -1429,8 +1424,8 @@ object CurationQueries extends QuerySet {
       // are never empty (≥1 window always), so outer ≡ inner here.
       val corpusFps = withFps(corpus)
         .select(explode_outer(col("__fps")).as("fh")).distinct().cache()
-      val out = s"$base/out"
-      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+      val out = s"${ep.dir}/out"
+      ep.runBatches(ep.streamDf(s)) { (b, _) =>
         val hits = withFps(b)
           .select(col("doc_id"), explode_outer(col("__fps")).as("fh"))
           .join(corpusFps, Seq("fh"))

@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Scratch, Tables}
-import graft.streaming.Replay.runAppend
+import graft.Tables
 
 /** Time-windowing + temporal operators over the events table — the
   * batch analogs of the reference's streaming operators (SURVEY §2.2,
@@ -242,7 +241,6 @@ object EventQueries extends QuerySet {
             Event.micros(e.ts) > Event.micros(bound("a").head.ts)
         }
         .within(600000000L)
-      val base = Scratch.dir("cepstream")
       val ev = Tables.events(s, d).as[Event]
         .filter(e => e.event_type == "view" || e.event_type == "purchase")
       // time-ordered chunks replayed one-per-micro-batch. One
@@ -263,14 +261,12 @@ object EventQueries extends QuerySet {
           col("ts") >= lo && col("ts") < hi
         }.toSeq :+
         (col("ts") >= bounds.last)
-      val (inDir, schema) = graft.streaming.Replay.fileEpochs(ev, chunks, base.toString)
-      val stream = graft.streaming.Replay.stream(s, inDir, schema)
-      val matched = Cep.matchStream(stream, pat).map { case (user, m) =>
+      val ep = graft.streaming.Replay.fileEpochs(ev, chunks)
+      val matched = Cep.matchStream(ep.stream(s), pat).map { case (user, m) =>
         val a = m("a").head; val b = m("b").head
         (user, a.event_id, b.event_id, Event.micros(b.ts) - Event.micros(a.ts))
       }.toDF("user_id", "view_id", "purchase_id", "delta_us")
-      runAppend(matched, base.toString, s)
-        .orderBy(col("user_id"), col("view_id"))
+      ep.runAppend(matched).orderBy(col("user_id"), col("view_id"))
     }),
 
     // STREAMING group window aggregate oracle-bound (the reference's
@@ -285,11 +281,8 @@ object EventQueries extends QuerySet {
     // event-time without entering the aggregate). Hashed against the
     // identical q50 SQL oracle.
     "q129_window_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay}
-      val base = Scratch.dir("winstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        Replay.flushes(1, 2))
+      import graft.streaming.Replay
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(1, 2))
       // NO flush filter anywhere inside the streaming plan: a filter
       // on event_type — even placed above the aggregate — is
       // predicate-pushed through the Aggregate (grouping column) and
@@ -307,7 +300,7 @@ object EventQueries extends QuerySet {
         .agg(count(lit(1)).as("n"), sumCents.as("cents_v"))
         .select(col("w.start").as("w_start"), col("event_type"),
           col("n"), col("cents_v"))
-      runAppend(agg, base.toString, s).filter(col("event_type") =!= "flush")
+      ep.runAppend(agg).filter(col("event_type") =!= "flush")
         .orderBy(col("w_start"), col("event_type"))
     }),
 
@@ -322,17 +315,14 @@ object EventQueries extends QuerySet {
     // output keeps only windows starting at or before the last real
     // event, which excludes the day-offset sentinels structurally.
     "q265_windowall_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay}
-      val base = Scratch.dir("winall")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        Replay.flushes(1, 2))
+      import graft.streaming.Replay
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(1, 2))
       val agg = ep.stream(s)
         .withWatermark("ts", "1 minute")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n"), sumCents.as("cents_v"))
         .select(col("w.start").as("w_start"), col("n"), col("cents_v"))
-      runAppend(agg, base.toString, s).filter(col("w_start") <= lit(Replay.tsOf(ep.hi)))
+      ep.runAppend(agg).filter(col("w_start") <= lit(Replay.tsOf(ep.hi)))
         .orderBy(col("w_start"))
     }),
 
@@ -370,11 +360,8 @@ object EventQueries extends QuerySet {
     // sentinel filter as q129 (see the pushdown note there). Hashed
     // against the identical q52 SQL oracle.
     "q130_session_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay}
-      val base = Scratch.dir("sessstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        Replay.flushes(1, 2))
+      import graft.streaming.Replay
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(1, 2))
       val sess = ep.stream(s)
         .withWatermark("ts", "1 minute")
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
@@ -383,7 +370,7 @@ object EventQueries extends QuerySet {
           sumCents.as("cents_v"))
         .select(col("user_id"), col("n_events"), col("sess_start"),
           col("sess_end"), col("cents_v"))
-      runAppend(sess, base.toString, s).filter(col("user_id") >= 0) // drop flush sentinels
+      ep.runAppend(sess).filter(col("user_id") >= 0) // drop flush sentinels
         .withColumn("sess_id", row_number().over(
           Window.partitionBy(col("user_id")).orderBy(col("sess_start")))
           .cast("long"))
@@ -401,14 +388,12 @@ object EventQueries extends QuerySet {
     // into the result. flatMapGroupsWithState emits immediately: no
     // watermark, no flush sentinels. Oracle = ROW_NUMBER()=1.
     "q131_dedup_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay, StatefulOps}
-      val base = Scratch.dir("dedupstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      import graft.streaming.{Replay, StatefulOps}
+      val ep = Replay.eventQuarters(s, d)
       val deduped = StatefulOps
         .dedupFirstWithTtl(ep.stream(s), Long.MaxValue / 2)
         .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
-      runAppend(deduped, base.toString, s).orderBy(col("user_id"), col("event_type"))
+      ep.runAppend(deduped).orderBy(col("user_id"), col("event_type"))
     }),
 
     // STREAMING interval join oracle-bound (the reference's
@@ -420,20 +405,11 @@ object EventQueries extends QuerySet {
     // EVICTION, not emission), so no flush sentinels are needed.
     // Hashed against the identical q53 SQL oracle.
     "q132_interval_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay, StreamJoins}
-      val base = Scratch.dir("ivstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      def side(tpe: String, outCol: String) =
-        ep.stream(s).toDF()
-          .filter(col("event_type") === tpe)
-          .select(col("user_id"), col("ts"), col("event_id").as(outCol))
-      val joined = StreamJoins.intervalJoin(
-          side("purchase", "p_id"), side("error", "e_id"),
-          "user_id", "ts", "1 minute", "10 MINUTES", "10 MINUTES")
+      val ep = graft.streaming.Replay.eventQuarters(s, d)
+      val joined = purchaseErrorJoin(s, ep)
         .select(expr("l.user_id").as("user_id"), col("p_id"), col("e_id"),
           (unix_micros(expr("r.ts")) - unix_micros(expr("l.ts"))).as("delta_us"))
-      runAppend(joined, base.toString, s).orderBy(col("user_id"), col("p_id"), col("e_id"))
+      ep.runAppend(joined).orderBy(col("user_id"), col("p_id"), col("e_id"))
     }),
 
     // STREAMING temporal as-of join oracle-bound (the reference's
@@ -447,15 +423,13 @@ object EventQueries extends QuerySet {
     // view for a userless key advances event time and joins
     // nothing). Hashed against the identical q54 SQL oracle.
     "q133_asof_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, EventTimeOps, Replay}
-      val base = Scratch.dir("asofstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+      import graft.streaming.{EventTimeOps, Replay}
+      val ep = Replay.eventQuarters(s, d,
         (_, hi) => Seq(1L, 2L).map(k =>
           Replay.sentinel(-k, hi + k * Replay.DayUs, "view")))
       val joined = EventTimeOps.asOfJoinBuffered(
           ep.stream(s), "view", "purchase", "1 minute")
-      runAppend(joined.toDF(), base.toString, s).filter(col("user_id") >= 0)
+      ep.runAppend(joined.toDF()).filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("purchase_id"))
     }),
 
@@ -468,18 +442,12 @@ object EventQueries extends QuerySet {
     // the hash compare. Emits per row immediately: no watermark, no
     // sentinels. Oracle = the SQL ROWS frame.
     "q134_over_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay, StatefulOps}
-      val base = Scratch.dir("overstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      val over = StatefulOps.boundedRowsOver(
-          ep.stream(s)
-            .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
-          n = 5)
-      runAppend(over.toDF()
+      import graft.streaming.{Replay, StatefulOps}
+      val ep = Replay.eventQuarters(s, d)
+      val over = StatefulOps.boundedRowsOver(centsStream(ep.stream(s)), n = 5)
+      ep.runAppend(over.toDF()
         .select(col("user_id"), col("event_id"),
-          expr("cast(sum_prev as bigint)").as("cents_prev"), col("cnt_prev")),
-        base.toString, s)
+          expr("cast(sum_prev as bigint)").as("cents_prev"), col("cnt_prev")))
         .orderBy(col("user_id"), col("event_id"))
     }),
 
@@ -496,13 +464,132 @@ object EventQueries extends QuerySet {
     })
   )
 
-  val oracle: Map[String, String] = Map(
-    "q50_window_tumble" -> (evCte +
+  /** Hourly tumbling windows per event type: q50, and q129 streamed. */
+  private val tumbleSql =
+    evCte +
       """
         |SELECT date_trunc('hour', ts) AS w_start, event_type,
         |  count(*) AS n,
         |  sum(CAST(round(value*100) AS BIGINT))::BIGINT AS cents_v
-        |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+        |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** 30-minute-gap sessions per user: q52, and q130 streamed. */
+  private val sessionSql =
+    evCte +
+      """,
+        |sess AS (
+        |  SELECT user_id, ts, event_id, value,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
+        |         THEN 1 ELSE 0 END AS new_sess
+        |  FROM ev
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |numbered AS (
+        |  SELECT *, (sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS sess_id
+        |  FROM sess)
+        |SELECT user_id, sess_id, count(*) AS n_events,
+        |  min(ts) AS sess_start, max(ts) AS sess_end,
+        |  sum(CAST(round(value*100) AS BIGINT))::BIGINT AS cents_v
+        |FROM numbered GROUP BY user_id, sess_id ORDER BY user_id, sess_id""".stripMargin
+
+  /** Purchases joined to errors of the same user within ±10 minutes: q53, and
+    * q132 streamed. */
+  private val intervalJoinSql =
+    evCte +
+      """
+        |SELECT p.user_id AS user_id, p.event_id AS p_id, x.event_id AS e_id,
+        |  epoch_us(x.ts) - epoch_us(p.ts) AS delta_us
+        |FROM (SELECT * FROM ev WHERE event_type='purchase') p
+        |JOIN (SELECT * FROM ev WHERE event_type='error') x
+        |  ON p.user_id = x.user_id
+        | AND x.ts >= p.ts - INTERVAL 10 MINUTE
+        | AND x.ts <= p.ts + INTERVAL 10 MINUTE
+        |ORDER BY user_id, p_id, e_id""".stripMargin
+
+  /** View followed by purchase within 10 minutes: q58, and q118 streamed. */
+  private val cepFollowSql =
+    evCte +
+      """
+        |SELECT user_id, view_id, purchase_id, delta_us FROM (
+        |  SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
+        |    epoch_us(p.ts) - epoch_us(v.ts) AS delta_us,
+        |    row_number() OVER (PARTITION BY v.event_id
+        |      ORDER BY p.ts, p.event_id) AS rn
+        |  FROM (SELECT * FROM ev WHERE event_type='view') v
+        |  JOIN (SELECT * FROM ev WHERE event_type='purchase') p
+        |    ON p.user_id = v.user_id AND p.ts > v.ts
+        |   AND epoch_us(p.ts) - epoch_us(v.ts) <= 600000000)
+        |WHERE rn = 1 ORDER BY user_id, view_id""".stripMargin
+
+  /** Each purchase with the latest view at or before it: q54, q59's exec
+    * node, and q133 streamed. */
+  private[operators] val asofSql =
+    evCte +
+      """
+        |SELECT user_id, purchase_id, last_view_id, lag_us FROM (
+        |  SELECT p.user_id, p.event_id AS purchase_id,
+        |    v.event_id AS last_view_id,
+        |    epoch_us(p.ts) - epoch_us(v.ts) AS lag_us,
+        |    row_number() OVER (PARTITION BY p.event_id
+        |      ORDER BY v.ts DESC, v.event_id DESC) AS rn
+        |  FROM (SELECT * FROM ev WHERE event_type='purchase') p
+        |  LEFT JOIN (SELECT * FROM ev WHERE event_type='view') v
+        |    ON p.user_id = v.user_id AND v.ts <= p.ts)
+        |WHERE rn = 1 ORDER BY user_id, purchase_id""".stripMargin
+
+  /** Latest row per (user, type): q55, and q136 and q178 streamed. */
+  private[operators] val dedupLastSql =
+    evCte +
+      """
+        |SELECT user_id, event_type, event_id, round(value,2) AS value FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
+        |    ORDER BY ts DESC, event_id DESC) AS rn FROM ev)
+        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin
+
+  /** Reluctant view loop closed by a purchase within the hour: q110, and
+    * q141's MATCH_RECOGNIZE text. */
+  private[operators] val cepLoopSql =
+    evCte +
+      """,
+        |views AS (SELECT * FROM ev WHERE event_type = 'view'),
+        |purch AS (SELECT * FROM ev WHERE event_type = 'purchase'),
+        |pairs AS (
+        |  SELECT s.user_id, s.event_id AS first_view, j.event_id AS last_view,
+        |    s.ts AS s_ts, j.ts AS j_ts, j.event_id AS j_id,
+        |    (SELECT count(*) FROM views v WHERE v.user_id = s.user_id
+        |       AND (v.ts > s.ts OR (v.ts = s.ts AND v.event_id >= s.event_id))
+        |       AND (v.ts < j.ts OR (v.ts = j.ts AND v.event_id <= j.event_id))
+        |    )::BIGINT AS n_views
+        |  FROM views s JOIN views j ON s.user_id = j.user_id
+        |   AND (j.ts > s.ts OR (j.ts = s.ts AND j.event_id >= s.event_id))
+        |   AND epoch_us(j.ts) - epoch_us(s.ts) <= 3600000000)
+        |SELECT user_id, first_view, last_view, n_views, purchase_id FROM (
+        |  SELECT pr.user_id, pr.first_view, pr.last_view, pr.n_views,
+        |    p.event_id AS purchase_id,
+        |    row_number() OVER (
+        |      PARTITION BY pr.user_id, pr.first_view, pr.last_view
+        |      ORDER BY p.ts, p.event_id) AS rn
+        |  FROM pairs pr JOIN purch p ON p.user_id = pr.user_id
+        |   AND (p.ts > pr.j_ts OR (p.ts = pr.j_ts AND p.event_id > pr.j_id))
+        |   AND epoch_us(p.ts) - epoch_us(pr.s_ts) <= 3600000000)
+        |WHERE rn = 1 ORDER BY user_id, first_view, last_view""".stripMargin
+
+  /** ROWS 4 PRECEDING running cents per user: q134, and q180 on the state-v2
+    * surface. */
+  private[operators] val rowsOverSql =
+    evCte +
+      """
+        |SELECT user_id, event_id,
+        |  (sum(CAST(round(value*100) AS BIGINT)) OVER w)::BIGINT AS cents_prev,
+        |  (count(*) OVER w)::INT AS cnt_prev
+        |FROM ev
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+        |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
+        |ORDER BY user_id, event_id""".stripMargin
+
+  val oracle: Map[String, String] = Map(
+    "q50_window_tumble" -> tumbleSql,
     // q129 minus the key: ONE global tumbling series; the streaming
     // windowAll must close every window on exactly the batch result
     "q265_windowall_stream" -> (evCte +
@@ -527,12 +614,7 @@ object EventQueries extends QuerySet {
         |FROM rk GROUP BY 1 ORDER BY 1""".stripMargin),
     // identical SQL to q50: the watermarked streaming aggregation must
     // close every window on exactly the batch result
-    "q129_window_stream" -> (evCte +
-      """
-        |SELECT date_trunc('hour', ts) AS w_start, event_type,
-        |  count(*) AS n,
-        |  sum(CAST(round(value*100) AS BIGINT))::BIGINT AS cents_v
-        |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q129_window_stream" -> tumbleSql,
     "q51_window_hop" -> (evCte +
       """
         |SELECT w_start, count(*) AS n,
@@ -544,42 +626,10 @@ object EventQueries extends QuerySet {
         |  WHERE epoch_us(ts) - ((epoch_us(ts) // 900000000) * 900000000
         |                        - k.g * 900000000) < 3600000000)
         |GROUP BY w_start ORDER BY w_start""".stripMargin),
-    "q52_window_session" -> (evCte +
-      """,
-        |sess AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM ev
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |numbered AS (
-        |  SELECT *, (sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS sess_id
-        |  FROM sess)
-        |SELECT user_id, sess_id, count(*) AS n_events,
-        |  min(ts) AS sess_start, max(ts) AS sess_end,
-        |  sum(CAST(round(value*100) AS BIGINT))::BIGINT AS cents_v
-        |FROM numbered GROUP BY user_id, sess_id ORDER BY user_id, sess_id""".stripMargin),
+    "q52_window_session" -> sessionSql,
     // identical SQL to q52: the streaming session_window assignment
     // must close every session on exactly the batch result
-    "q130_session_stream" -> (evCte +
-      """,
-        |sess AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM ev
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |numbered AS (
-        |  SELECT *, (sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS sess_id
-        |  FROM sess)
-        |SELECT user_id, sess_id, count(*) AS n_events,
-        |  min(ts) AS sess_start, max(ts) AS sess_end,
-        |  sum(CAST(round(value*100) AS BIGINT))::BIGINT AS cents_v
-        |FROM numbered GROUP BY user_id, sess_id ORDER BY user_id, sess_id""".stripMargin),
+    "q130_session_stream" -> sessionSql,
     "q131_dedup_stream" -> (evCte +
       """
         |SELECT user_id, event_type, event_id, ts FROM (
@@ -588,89 +638,19 @@ object EventQueries extends QuerySet {
         |      ORDER BY ts, event_id) AS rn
         |  FROM ev)
         |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
-    "q53_interval_join" -> (evCte +
-      """
-        |SELECT p.user_id AS user_id, p.event_id AS p_id, x.event_id AS e_id,
-        |  epoch_us(x.ts) - epoch_us(p.ts) AS delta_us
-        |FROM (SELECT * FROM ev WHERE event_type='purchase') p
-        |JOIN (SELECT * FROM ev WHERE event_type='error') x
-        |  ON p.user_id = x.user_id
-        | AND x.ts >= p.ts - INTERVAL 10 MINUTE
-        | AND x.ts <= p.ts + INTERVAL 10 MINUTE
-        |ORDER BY user_id, p_id, e_id""".stripMargin),
+    "q53_interval_join" -> intervalJoinSql,
     // identical SQL to q53: the stream-stream join must land on the
     // batch interval-join rows exactly
-    "q132_interval_stream" -> (evCte +
-      """
-        |SELECT p.user_id AS user_id, p.event_id AS p_id, x.event_id AS e_id,
-        |  epoch_us(x.ts) - epoch_us(p.ts) AS delta_us
-        |FROM (SELECT * FROM ev WHERE event_type='purchase') p
-        |JOIN (SELECT * FROM ev WHERE event_type='error') x
-        |  ON p.user_id = x.user_id
-        | AND x.ts >= p.ts - INTERVAL 10 MINUTE
-        | AND x.ts <= p.ts + INTERVAL 10 MINUTE
-        |ORDER BY user_id, p_id, e_id""".stripMargin),
-    "q54_asof_join" -> (evCte +
-      """
-        |SELECT user_id, purchase_id, last_view_id, lag_us FROM (
-        |  SELECT p.user_id, p.event_id AS purchase_id,
-        |    v.event_id AS last_view_id,
-        |    epoch_us(p.ts) - epoch_us(v.ts) AS lag_us,
-        |    row_number() OVER (PARTITION BY p.event_id
-        |      ORDER BY v.ts DESC, v.event_id DESC) AS rn
-        |  FROM (SELECT * FROM ev WHERE event_type='purchase') p
-        |  LEFT JOIN (SELECT * FROM ev WHERE event_type='view') v
-        |    ON p.user_id = v.user_id AND v.ts <= p.ts)
-        |WHERE rn = 1 ORDER BY user_id, purchase_id""".stripMargin),
+    "q132_interval_stream" -> intervalJoinSql,
+    "q54_asof_join" -> asofSql,
     // identical SQL to q54: the buffered streaming as-of join must
     // land on the batch as-of rows exactly
-    "q133_asof_stream" -> (evCte +
-      """
-        |SELECT user_id, purchase_id, last_view_id, lag_us FROM (
-        |  SELECT p.user_id, p.event_id AS purchase_id,
-        |    v.event_id AS last_view_id,
-        |    epoch_us(p.ts) - epoch_us(v.ts) AS lag_us,
-        |    row_number() OVER (PARTITION BY p.event_id
-        |      ORDER BY v.ts DESC, v.event_id DESC) AS rn
-        |  FROM (SELECT * FROM ev WHERE event_type='purchase') p
-        |  LEFT JOIN (SELECT * FROM ev WHERE event_type='view') v
-        |    ON p.user_id = v.user_id AND v.ts <= p.ts)
-        |WHERE rn = 1 ORDER BY user_id, purchase_id""".stripMargin),
-    "q134_over_stream" -> (evCte +
-      """
-        |SELECT user_id, event_id,
-        |  (sum(CAST(round(value*100) AS BIGINT)) OVER w)::BIGINT AS cents_prev,
-        |  (count(*) OVER w)::INT AS cnt_prev
-        |FROM ev
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin),
-    "q58_cep_follow" -> (evCte +
-      """
-        |SELECT user_id, view_id, purchase_id, delta_us FROM (
-        |  SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
-        |    epoch_us(p.ts) - epoch_us(v.ts) AS delta_us,
-        |    row_number() OVER (PARTITION BY v.event_id
-        |      ORDER BY p.ts, p.event_id) AS rn
-        |  FROM (SELECT * FROM ev WHERE event_type='view') v
-        |  JOIN (SELECT * FROM ev WHERE event_type='purchase') p
-        |    ON p.user_id = v.user_id AND p.ts > v.ts
-        |   AND epoch_us(p.ts) - epoch_us(v.ts) <= 600000000)
-        |WHERE rn = 1 ORDER BY user_id, view_id""".stripMargin),
+    "q133_asof_stream" -> asofSql,
+    "q134_over_stream" -> rowsOverSql,
+    "q58_cep_follow" -> cepFollowSql,
     // identical SQL to q58: the streaming replay must land on the very
     // same rows the batch NFA (and the oracle) produce
-    "q118_cep_stream" -> (evCte +
-      """
-        |SELECT user_id, view_id, purchase_id, delta_us FROM (
-        |  SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
-        |    epoch_us(p.ts) - epoch_us(v.ts) AS delta_us,
-        |    row_number() OVER (PARTITION BY v.event_id
-        |      ORDER BY p.ts, p.event_id) AS rn
-        |  FROM (SELECT * FROM ev WHERE event_type='view') v
-        |  JOIN (SELECT * FROM ev WHERE event_type='purchase') p
-        |    ON p.user_id = v.user_id AND p.ts > v.ts
-        |   AND epoch_us(p.ts) - epoch_us(v.ts) <= 600000000)
-        |WHERE rn = 1 ORDER BY user_id, view_id""".stripMargin),
+    "q118_cep_stream" -> cepFollowSql,
     "q88_cep_nofollow" -> (evCte +
       """
         |SELECT user_id, view_id, c_id AS purchase_id FROM (
@@ -684,36 +664,8 @@ object EventQueries extends QuerySet {
         |   AND epoch_us(c.ts) - epoch_us(v.ts) <= 600000000)
         |WHERE rn = 1 AND c_type = 'purchase'
         |ORDER BY user_id, view_id""".stripMargin),
-    "q110_cep_loop" -> (evCte +
-      """,
-        |views AS (SELECT * FROM ev WHERE event_type = 'view'),
-        |purch AS (SELECT * FROM ev WHERE event_type = 'purchase'),
-        |pairs AS (
-        |  SELECT s.user_id, s.event_id AS first_view, j.event_id AS last_view,
-        |    s.ts AS s_ts, j.ts AS j_ts, j.event_id AS j_id,
-        |    (SELECT count(*) FROM views v WHERE v.user_id = s.user_id
-        |       AND (v.ts > s.ts OR (v.ts = s.ts AND v.event_id >= s.event_id))
-        |       AND (v.ts < j.ts OR (v.ts = j.ts AND v.event_id <= j.event_id))
-        |    )::BIGINT AS n_views
-        |  FROM views s JOIN views j ON s.user_id = j.user_id
-        |   AND (j.ts > s.ts OR (j.ts = s.ts AND j.event_id >= s.event_id))
-        |   AND epoch_us(j.ts) - epoch_us(s.ts) <= 3600000000)
-        |SELECT user_id, first_view, last_view, n_views, purchase_id FROM (
-        |  SELECT pr.user_id, pr.first_view, pr.last_view, pr.n_views,
-        |    p.event_id AS purchase_id,
-        |    row_number() OVER (
-        |      PARTITION BY pr.user_id, pr.first_view, pr.last_view
-        |      ORDER BY p.ts, p.event_id) AS rn
-        |  FROM pairs pr JOIN purch p ON p.user_id = pr.user_id
-        |   AND (p.ts > pr.j_ts OR (p.ts = pr.j_ts AND p.event_id > pr.j_id))
-        |   AND epoch_us(p.ts) - epoch_us(pr.s_ts) <= 3600000000)
-        |WHERE rn = 1 ORDER BY user_id, first_view, last_view""".stripMargin),
-    "q55_dedup_keeplast" -> (evCte +
-      """
-        |SELECT user_id, event_type, event_id, round(value,2) AS value FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-        |    ORDER BY ts DESC, event_id DESC) AS rn FROM ev)
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
+    "q110_cep_loop" -> cepLoopSql,
+    "q55_dedup_keeplast" -> dedupLastSql,
     "q56_rolling_agg" -> (evCte +
       """
         |SELECT user_id, event_id,

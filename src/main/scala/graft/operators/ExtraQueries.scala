@@ -404,18 +404,7 @@ object ExtraQueries extends QuerySet {
         |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn
         |  FROM orders)
         |WHERE rn <= 3 ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q59_asof_exec" -> (evCte +
-      """
-        |SELECT user_id, purchase_id, last_view_id, lag_us FROM (
-        |  SELECT p.user_id, p.event_id AS purchase_id,
-        |    v.event_id AS last_view_id,
-        |    epoch_us(p.ts) - epoch_us(v.ts) AS lag_us,
-        |    row_number() OVER (PARTITION BY p.event_id
-        |      ORDER BY v.ts DESC, v.event_id DESC) AS rn
-        |  FROM (SELECT * FROM ev WHERE event_type='purchase') p
-        |  LEFT JOIN (SELECT * FROM ev WHERE event_type='view') v
-        |    ON p.user_id = v.user_id AND v.ts <= p.ts)
-        |WHERE rn = 1 ORDER BY user_id, purchase_id""".stripMargin),
+    "q59_asof_exec" -> EventQueries.asofSql,
     "q81_cogroup" ->
       """SELECT custkey, coalesce(n_orders, 0)::BIGINT AS n_orders,
         |  coalesce(cents_sum, 0)::BIGINT AS cents_sum,

@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.{Scratch, Tables}
+import graft.Tables
 import graft.streaming.FluentTable
-import graft.streaming.Replay.runAppend
 
 /** Oracle bindings for the fluent Table-API string-expression facade
   * (graft.streaming.TableApi / FluentTable — reference Table.java:104
@@ -144,13 +143,10 @@ object FluentApiQueries extends QuerySet {
     // plan hand-written streaming code produces. Hashed against the
     // q274 batch oracle.
     "q292_fluent_window_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay}
+      import graft.streaming.Replay
       import graft.streaming.GroupWindows.Tumble
       import org.apache.spark.sql.functions.col
-      val base = Scratch.dir("fluentstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        Replay.flushes(1, 2))
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(1, 2))
       val agg = new FluentTable(
           ep.stream(s).toDF()
             .withWatermark("ts", "1 minute"))
@@ -160,7 +156,7 @@ object FluentApiQueries extends QuerySet {
         .select("w.start as ws, w.end as we, event_type, " +
           "event_type.count as n, cents.sum as cents_sum")
         .toDF
-      runAppend(agg, base.toString, s).filter(col("event_type") =!= "flush")
+      ep.runAppend(agg).filter(col("event_type") =!= "flush")
         .orderBy(col("ws"), col("event_type"))
     }),
 
@@ -175,13 +171,10 @@ object FluentApiQueries extends QuerySet {
     // gap (the engine's session_window contract), which the oracle
     // reproduces as max(ts) + 30 minutes over gap-split groups.
     "q305_fluent_session_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay}
+      import graft.streaming.Replay
       import graft.streaming.GroupWindows.Session
       import org.apache.spark.sql.functions.col
-      val base = Scratch.dir("fluentsess")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        Replay.flushes(1, 2))
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(1, 2))
       val agg = new FluentTable(
           ep.stream(s).toDF()
             .withWatermark("ts", "1 minute"))
@@ -191,7 +184,7 @@ object FluentApiQueries extends QuerySet {
         .select("w.start as ss, w.end as se, user_id, " +
           "user_id.count as n_events, cents.sum as cents_v")
         .toDF
-      runAppend(agg, base.toString, s).filter(col("user_id") >= 0)
+      ep.runAppend(agg).filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("ss"))
     }),
 
@@ -222,6 +215,18 @@ object FluentApiQueries extends QuerySet {
         .toDF
     })
   )
+
+  /** Hourly windows per event type with start and end: q274, and q292
+    * streamed. */
+  private val fluentWindowSql =
+    """SELECT date_trunc('hour', ts) AS ws,
+        |  date_trunc('hour', ts) + INTERVAL 1 HOUR AS we,
+        |  event_type, count(*) AS n,
+        |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
+        |    AS cents_sum
+        |FROM events WHERE ts IS NOT NULL
+        |GROUP BY 1, 2, 3
+        |ORDER BY ws, event_type""".stripMargin
 
   val oracle: Map[String, String] = Map(
 
@@ -267,15 +272,7 @@ object FluentApiQueries extends QuerySet {
         |WHERE c_custkey <= 500 AND c_mktsegment IS NOT NULL
         |ORDER BY c_custkey""".stripMargin,
 
-    "q274_fluent_window" ->
-      """SELECT date_trunc('hour', ts) AS ws,
-        |  date_trunc('hour', ts) + INTERVAL 1 HOUR AS we,
-        |  event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-        |    AS cents_sum
-        |FROM events WHERE ts IS NOT NULL
-        |GROUP BY 1, 2, 3
-        |ORDER BY ws, event_type""".stripMargin,
+    "q274_fluent_window" -> fluentWindowSql,
 
     "q305_fluent_session_stream" ->
       """WITH sess AS (
@@ -298,15 +295,7 @@ object FluentApiQueries extends QuerySet {
         |FROM numbered GROUP BY user_id, sess_id
         |ORDER BY user_id, ss""".stripMargin,
 
-    "q292_fluent_window_stream" ->
-      """SELECT date_trunc('hour', ts) AS ws,
-        |  date_trunc('hour', ts) + INTERVAL 1 HOUR AS we,
-        |  event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-        |    AS cents_sum
-        |FROM events WHERE ts IS NOT NULL
-        |GROUP BY 1, 2, 3
-        |ORDER BY ws, event_type""".stripMargin,
+    "q292_fluent_window_stream" -> fluentWindowSql,
 
     "q288_fluent_over" ->
       """WITH base AS (

@@ -168,14 +168,11 @@ object FormatQueries extends QuerySet {
     // aggregated — a dropped/duplicated micro-batch, a partial file
     // made visible, or a quoting/type corruption breaks the row.
     "q188_stream_csv_sink" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay}
-      val base = Scratch.dir("csvsink")
-      val proj = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-        .stream(s).toDF()
+      val ep = graft.streaming.Replay.eventQuarters(s, d)
+      val proj = ep.stream(s).toDF()
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("cast(round(value*100) as bigint)").as("cents"))
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val (out, ck) = (s"${ep.dir}/out", s"${ep.dir}/ck")
       val q = proj.writeStream.format("csv")
         .option("path", out).option("checkpointLocation", ck)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -240,15 +237,11 @@ object FormatQueries extends QuerySet {
     // dropped/duplicated epoch, a partial file made visible, or an
     // encode corruption breaks the row.
     "q253_stream_avro_sink" -> ((s, d) => {
-      import graft.streaming.{Event, Replay}
-      val base = Scratch.dir("avsink")
-      val proj = Replay.quarters(
-          Tables.events(s, d).as(org.apache.spark.sql.Encoders.product[Event]),
-          base.toString)
-        .stream(s).toDF()
+      val ep = graft.streaming.Replay.eventQuarters(s, d)
+      val proj = ep.stream(s).toDF()
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("cast(round(value*100) as bigint)").as("cents"))
-      val (out, ck) = (s"$base/out", s"$base/ck")
+      val (out, ck) = (s"${ep.dir}/out", s"${ep.dir}/ck")
       val q = proj.writeStream.format("graft-avro")
         .option("path", out).option("checkpointLocation", ck)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -284,18 +277,16 @@ object FormatQueries extends QuerySet {
     // partitioning breaks the hash. (Partition-level retry and the
     // marker-PK race are pinned separately in TxnSinkSpec.)
     "q281_txn_sink_recovery" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.{Event, Replay, TxnSink}
-      val base = Scratch.dir("txnrec")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      val url = s"jdbc:derby:$base/db;create=true"
+      import graft.streaming.{Replay, TxnSink}
+      val ep = Replay.eventQuarters(s, d)
+      val url = s"jdbc:derby:${ep.dir}/db;create=true"
       TxnSink.init(url, "SUNK")
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
       def start() = ep.streamDf(s)
         .select(col("event_id").as("id"),
           expr("cast(round(value*100) as bigint)").as("v"))
         .writeStream
-        .option("checkpointLocation", s"$base/ck")
+        .option("checkpointLocation", s"${ep.dir}/ck")
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
           TxnSink.writeBatch(b, id, url, "SUNK")
           if (id == 1 && crashed.compareAndSet(false, true))
@@ -350,7 +341,6 @@ object FormatQueries extends QuerySet {
     "q303_cdc_stream_merge" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Cdc, Event, Replay}
-      val base = Scratch.dir("cdcstream")
       val real = Tables.events(s, d)
       val (lo, hi) = Replay.spanOf(real.as[Event])
       // checkpoint the wire BEFORE the replay prep: fileEpochs writes
@@ -359,9 +349,8 @@ object FormatQueries extends QuerySet {
       // once here, the encode is parallel and the chunk writes are
       // pure IO
       val wire = Cdc.envelope(real).localCheckpoint()
-      val (inDir, schema) = Replay.fileEpochs(wire,
-        Replay.quarterChunks(lo, hi), base.toString)
-      val url = s"jdbc:derby:$base/db;create=true"
+      val ep = Replay.fileEpochs(wire, Replay.quarterChunks(lo, hi))
+      val url = s"jdbc:derby:${ep.dir}/db;create=true"
       Cdc.initStateTable(url)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"))
@@ -374,8 +363,7 @@ object FormatQueries extends QuerySet {
       // shrunken split size (ADVICE r10)
       val ss = s.newSession()
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      Replay.runBatches(Cdc.parse(Replay.streamDf(ss, inDir, schema), col("json")),
-          s"$base/ck") { (b, _) =>
+      ep.runBatches(Cdc.parse(ep.streamDf(ss), col("json"))) { (b, _) =>
         Cdc.mergeBatch(
           b.withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1).drop("__rn"), url)
@@ -508,21 +496,18 @@ object FormatQueries extends QuerySet {
     "q326_cdc_compact" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.{Cdc, Event, Replay}
-      val base = Scratch.dir("cdccompact")
       val real = Tables.events(s, d)
       val (lo, hi) = Replay.spanOf(real.as[Event])
       val wire = Cdc.envelope(real).localCheckpoint()
-      val (inDir, schema) = Replay.fileEpochs(wire,
-        Replay.quarterChunks(lo, hi), base.toString)
-      val url = s"jdbc:derby:$base/db;create=true"
+      val ep = Replay.fileEpochs(wire, Replay.quarterChunks(lo, hi))
+      val url = s"jdbc:derby:${ep.dir}/db;create=true"
       Cdc.initStateTable(url)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"))
         .orderBy(col("ts_us").desc, col("pos").desc)
       val ss = s.newSession()
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      Replay.runBatches(Cdc.parse(Replay.streamDf(ss, inDir, schema), col("json")),
-          s"$base/ck") { (b, _) =>
+      ep.runBatches(Cdc.parse(ep.streamDf(ss), col("json"))) { (b, _) =>
         Cdc.mergeBatch(
           b.withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1).drop("__rn"), url)
@@ -550,8 +535,6 @@ object FormatQueries extends QuerySet {
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     import graft.streaming.{Cdc, Event, Replay}
-    val base = Scratch.dir(
-      if (timeOrdered) "scd2stream" else "scd2ooo")
     val real = Tables.events(s, d)
       .filter(pmod(col("user_id"), lit(50)) === keyMod)
     val wire = Cdc.envelope(real).localCheckpoint()
@@ -560,11 +543,10 @@ object FormatQueries extends QuerySet {
         val (lo, hi) = Replay.spanOf(Tables.events(s, d).as[Event])
         Replay.quarterChunks(lo, hi)
       } else (0 until 4).map(i => pmod(col("event_id"), lit(4)) === i)
-    val (inDir, schema) = Replay.fileEpochs(wire, chunks, base.toString)
-    val url = s"jdbc:derby:$base/db;create=true"
+    val ep = Replay.fileEpochs(wire, chunks)
+    val url = s"jdbc:derby:${ep.dir}/db;create=true"
     Cdc.initScd2Table(url)
-    Replay.runBatches(Cdc.parse(Replay.streamDf(s, inDir, schema), col("json")),
-        s"$base/ck")((b, _) => Cdc.scd2Batch(b, url))
+    ep.runBatches(Cdc.parse(ep.streamDf(s), col("json")))((b, _) => Cdc.scd2Batch(b, url))
     val hist = s.read.format("jdbc").option("url", url)
       .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       .option("dbtable", "SCD2_HIST").load()
@@ -623,6 +605,23 @@ object FormatQueries extends QuerySet {
       |  SELECT *, row_number() OVER (PARTITION BY user_id
       |             ORDER BY ts_us DESC, pos DESC) AS rn
       |  FROM ch)""".stripMargin
+
+  /** Per-type counts, cents, users and id range of the events: every format
+    * round trip and file sink that keeps the ids (q167, q168, q186, q188,
+    * q253). */
+  private val eventAggSql =
+    s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
+         |  count(DISTINCT user_id)::BIGINT AS users,
+         |  min(event_id) AS min_id, max(event_id) AS max_id
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+
+  /** Per-type counts, cents and ts range of the events: the binary round
+    * trips (q169, q242). */
+  private val eventTsAggSql =
+    s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
+         |  min(make_timestamp(epoch_ns(ts)//1000)) AS min_ts,
+         |  max(make_timestamp(epoch_ns(ts)//1000)) AS max_ts
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q302_cdc_materialize" -> (cdcCtes + """,
@@ -707,16 +706,8 @@ object FormatQueries extends QuerySet {
       |  ON v.ts_us <= p.pts AND (v.valid_to IS NULL OR p.pts < v.valid_to)
       |WHERE v.op <> 'd'
       |ORDER BY probe_no, v.user_id""".stripMargin),
-    "q167_csv_roundtrip" ->
-      s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
-         |  count(DISTINCT user_id)::BIGINT AS users,
-         |  min(event_id) AS min_id, max(event_id) AS max_id
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q168_json_roundtrip" ->
-      s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
-         |  count(DISTINCT user_id)::BIGINT AS users,
-         |  min(event_id) AS min_id, max(event_id) AS max_id
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q167_csv_roundtrip" -> eventAggSql,
+    "q168_json_roundtrip" -> eventAggSql,
     "q259_json_errmodes" ->
       """WITH ev AS (SELECT event_id,
         |  cast(round(value*100) as bigint) AS cents FROM events)
@@ -730,41 +721,21 @@ object FormatQueries extends QuerySet {
         |  (count(*) - sum(CASE WHEN event_id % 10 = 3 THEN 1 ELSE 0 END))::BIGINT
         |    AS n_kept_dropmalformed
         |FROM ev""".stripMargin,
-    "q169_orc_roundtrip" ->
-      s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
-         |  min(make_timestamp(epoch_ns(ts)//1000)) AS min_ts,
-         |  max(make_timestamp(epoch_ns(ts)//1000)) AS max_ts
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q242_avro_roundtrip" ->
-      s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
-         |  min(make_timestamp(epoch_ns(ts)//1000)) AS min_ts,
-         |  max(make_timestamp(epoch_ns(ts)//1000)) AS max_ts
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q169_orc_roundtrip" -> eventTsAggSql,
+    "q242_avro_roundtrip" -> eventTsAggSql,
     "q248_avro_evolution" ->
       s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
          |  count(CASE WHEN event_id % 2 = 0 THEN 1 END)::BIGINT AS n_old,
          |  count(CASE WHEN event_id % 2 = 1 THEN 1 END)::BIGINT AS n_new
          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q186_jdbc_roundtrip" ->
-      s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
-         |  count(DISTINCT user_id)::BIGINT AS users,
-         |  min(event_id) AS min_id, max(event_id) AS max_id
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q186_jdbc_roundtrip" -> eventAggSql,
     "q187_partitioned_table" ->
       """SELECT lang, count(*)::BIGINT AS n, sum(n_chars)::BIGINT AS chars,
         |  min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM documents WHERE source = 'src1'
         |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q188_stream_csv_sink" ->
-      s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
-         |  count(DISTINCT user_id)::BIGINT AS users,
-         |  min(event_id) AS min_id, max(event_id) AS max_id
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q253_stream_avro_sink" ->
-      s"""SELECT event_type, count(*)::BIGINT AS n, $centsSum AS cents_v,
-         |  count(DISTINCT user_id)::BIGINT AS users,
-         |  min(event_id) AS min_id, max(event_id) AS max_id
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q188_stream_csv_sink" -> eventAggSql,
+    "q253_stream_avro_sink" -> eventAggSql,
     "q281_txn_sink_recovery" ->
       """SELECT event_id AS id, CAST(round(value*100) AS BIGINT) AS v
         |FROM events ORDER BY id""".stripMargin

@@ -129,10 +129,9 @@ object IvfPqQueries extends QuerySet {
     // read-back breaks the hash.
     "q297_ivfpq_stream_ingest" -> ((s, d) => {
       import graft.streaming.Replay
-      val base = Scratch.dir("ivfingest")
-      val idx = s"$base/index"
       val e = Tables.embeddings(s, d)
-      val (trained, ep) = Replay.snapshotSplit(e, "vec_id", base.toString)
+      val (trained, ep) = Replay.snapshotSplit(e, "vec_id")
+      val idx = s"${ep.dir}/index"
       val model = IvfPq.fit(trained, "embedding", kCoarse = 8,
         lloydIters = 2, numSub = 8, codesPerSub = 16)
       // cluster-clustered write: without it every encode task writes a
@@ -142,7 +141,7 @@ object IvfPqQueries extends QuerySet {
       IvfPq.index(trained, "embedding", model)
         .repartition(col("cluster"))
         .write.partitionBy("cluster").parquet(idx)
-      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+      ep.runBatches(ep.streamDf(s)) { (b, _) =>
         IvfPq.index(b, "embedding", model)
           .write.mode("append").partitionBy("cluster").parquet(idx)
       }

@@ -368,19 +368,17 @@ object LayoutQueries extends QuerySet {
     "q336_manifest_stream" -> ((s, d) => {
       import graft.sources.ManifestTable
       import graft.streaming.Replay
-      val base = Scratch.dir("mstream")
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
         .localCheckpoint() // one scan feeds every commit/probe below (r12)
-      val (inDir, schema) = Replay.fileEpochs(o,
-        (0 to 3).map(r => pmod(col("o_orderkey"), lit(4)) === r),
-        base.toString)
-      val table = s"$base/table"
+      val ep = Replay.fileEpochs(o,
+        (0 to 3).map(r => pmod(col("o_orderkey"), lit(4)) === r))
+      val table = s"${ep.dir}/table"
       ManifestTable.create(o.limit(0), table) // v0: empty table
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def start() = Replay.streamDf(s, inDir, schema)
+      def start() = ep.streamDf(s)
         .writeStream
-        .option("checkpointLocation", s"$base/ck")
+        .option("checkpointLocation", s"${ep.dir}/ck")
         .foreachBatch { (b: DataFrame, id: Long) =>
           ManifestTable.appendBatch(b.repartition(2), table, id)
           if (id == 1 && crashed.compareAndSet(false, true))

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Scratch, Tables}
+import graft.Tables
 import graft.streaming.Replay
 
 /** Frequency-sketch operators: Count-Min heavy hitters over the corpus
@@ -65,6 +65,16 @@ object SketchQueries extends QuerySet {
       .orderBy(col("est").desc, col("term"))
   }
 
+  /** doc_id and `cols` of the documents, and their replay as four
+    * doc_id % 4 epochs (q313, q308, q323, q332). The epochs come from
+    * the unspread scan: each is one coalesce(1) write, so Tables.load's
+    * repartition would only add a shuffle (and a job) per epoch. */
+  private def docEpochs(s: SparkSession, d: String, cols: String*)
+      : (DataFrame, Replay.Epochs) = {
+    val docs = Tables.scan(s, d, "documents").select(("doc_id" +: cols).map(col): _*)
+    (docs, Replay.fileEpochs(docs, (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)))
+  }
+
   val queries: Map[String, Q] = Map(
     // Count-Min heavy hitters: build the depth×width sketch over every
     // corpus token, estimate EVERY distinct term from the sketch
@@ -98,14 +108,8 @@ object SketchQueries extends QuerySet {
     // cell table (newest emission per cell) then answers the q298
     // heavy-hitter audit bit-for-bit — same oracle.
     "q313_cms_stream" -> ((s, d) => {
-      val base = Scratch.dir("cmsstream")
-      // epochs come from the unspread scan: each is one coalesce(1)
-      // write, so Tables.load's repartition would only add a shuffle
-      // (and a job) per epoch; q308, q323 and q332 do the same
-      val docs = Tables.scan(s, d, "documents").select(col("doc_id"), col("text"))
-      val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
-      val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
-      val liveCells = Replay.streamDf(s, inDir, schema)
+      val (_, ep) = docEpochs(s, d, "text")
+      val liveCells = ep.streamDf(s)
         // the replay contract is ONE file per epoch, so each
         // micro-batch's scan gets at most a handful of byte-range
         // splits (~3 here, conc 2.4 even at the 10x soak) while the
@@ -123,8 +127,7 @@ object SketchQueries extends QuerySet {
         .groupBy(col("rb.r").as("r"), col("rb.b").as("b"))
         .agg(count(lit(1)).as("cnt"))
       val cells = Replay.latestPerKey(
-        Replay.runUpdate(liveCells, base.toString, s,
-          Replay.boundedStateConf(depth * width)),
+        ep.runUpdate(liveCells, Replay.boundedStateConf(depth * width)),
         col("r"), col("b"))
       val tok = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("term"))
@@ -215,14 +218,10 @@ object SketchQueries extends QuerySet {
     // the batch cube — live quantile dashboards without rescans.
     "q323_kll_stream" -> ((s, d) => {
       import graft.functions.Kll
-      val base = Scratch.dir("kllstream")
       val kllAgg = udaf(new Kll.Agg)
       val statsUdf = udf((b: Array[Byte]) => Kll.stats(b))
-      val docs = Tables.scan(s, d, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
-      val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
-      val live = Replay.streamDf(s, inDir, schema)
+      val (docs, ep) = docEpochs(s, d, "source", "n_chars")
+      val live = ep.streamDf(s)
         .groupBy(col("source"))
         .agg(kllAgg(col("n_chars").cast("double")).as("sk"))
         .withColumn("st", statsUdf(col("sk")))
@@ -231,8 +230,7 @@ object SketchQueries extends QuerySet {
           col("st.q25").as("q25"), col("st.q50").as("q50"),
           col("st.q75").as("q75"))
       val fin = Replay.latestPerKey(
-        Replay.runUpdate(live, base.toString, s,
-          Replay.boundedStateConf(64)), col("source"))
+        ep.runUpdate(live, Replay.boundedStateConf(64)), col("source"))
       val hist = docs
         .select(col("source"), col("n_chars").cast("double").as("v"))
         .groupBy(col("source"), col("v")).agg(count(lit(1)).as("c"))
@@ -326,20 +324,15 @@ object SketchQueries extends QuerySet {
     // unique to one), audited against the exact distinct-join counts.
     "q332_theta_stream" -> ((s, d) => {
       import graft.functions.Theta
-      val base = Scratch.dir("thstream")
       val thetaAgg = udaf(new Theta.Agg)
-      val docs = Tables.scan(s, d, "documents")
-        .select(col("doc_id"), col("source"), col("text"))
-      val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
-      val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
-      val agg = Replay.streamDf(s, inDir, schema)
+      val (docs, ep) = docEpochs(s, d, "source", "text")
+      val agg = ep.streamDf(s)
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("source"))
         .agg(thetaAgg(xxhash64(col("w"))).as("sk"))
       val fin = Replay.latestPerKey(
-        Replay.runUpdate(agg, base.toString, s,
-          Replay.boundedStateConf(64)), col("source"))
+        ep.runUpdate(agg, Replay.boundedStateConf(64)), col("source"))
       val skRows = fin.collect() // one row per source — dimension-bounded
       require(skRows.length <= 64,
         s"source dimension blew up: ${skRows.length}")
@@ -440,20 +433,15 @@ object SketchQueries extends QuerySet {
     // ingest pipeline keeps live cardinality dashboards without ever
     // re-scanning: the q307 cube's cells maintained incrementally.
     "q308_hll_stream" -> ((s, d) => {
-      val base = Scratch.dir("hllstream")
-      val docs = Tables.scan(s, d, "documents")
-        .select(col("doc_id"), col("source"), col("text"))
-      val chunks = (0 until 4).map(i => pmod(col("doc_id"), lit(4)) === i)
-      val (inDir, schema) = Replay.fileEpochs(docs, chunks, base.toString)
-      val agg = Replay.streamDf(s, inDir, schema)
+      val (docs, ep) = docEpochs(s, d, "source", "text")
+      val agg = ep.streamDf(s)
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("source"))
         .agg(expr("hll_sketch_agg(w)").as("sk"))
         .select(col("source"), expr("hll_sketch_estimate(sk)").as("est"))
       val fin = Replay.latestPerKey(
-        Replay.runUpdate(agg, base.toString, s,
-          Replay.boundedStateConf(64)), col("source"))
+        ep.runUpdate(agg, Replay.boundedStateConf(64)), col("source"))
       val exact = docs
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)

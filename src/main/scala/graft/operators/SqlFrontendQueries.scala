@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.{Scratch, Tables}
-import graft.streaming.{FlinkDdl, FlinkSql, FlinkSqlJoins, GroupWindowSql, Replay}
-import org.apache.spark.sql.Row
+import graft.streaming.{Event, FlinkDdl, FlinkSql, FlinkSqlJoins, GroupWindowSql, Replay}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** SQL-text front-end catalog — queries a reference user would paste
   * VERBATIM in the Flink SQL dialect, executed through the dialect
@@ -45,6 +46,56 @@ object SqlFrontendQueries extends QuerySet {
       |GROUP BY user_id, SESSION(ts, INTERVAL '30' MINUTE)
       |ORDER BY kind, grp, ws""".stripMargin
 
+  /** Exact whole cents of the event value. */
+  private def cents: Column = expr("cast(round(value*100) as bigint)").as("cents")
+
+  /** The event time as µs, the computed-rowtime input of the DDL tables. */
+  private def tsUs: Column = unix_micros(col("ts")).as("ts_us")
+
+  /** The columns of the DDL tables `(event_id, user_id, event_type, cents)`. */
+  private def idTypeCents: Seq[Column] =
+    Seq(col("event_id"), col("user_id"), col("event_type"), cents)
+
+  /** The events of `d` as the headerless csv source of a DDL script,
+    * in `dir`/src: `cols` in the order its CREATE TABLE declares them
+    * (q225, q226, q228, q234, q243). */
+  private def csvEventSource(s: SparkSession, d: String, dir: java.nio.file.Path,
+      cols: Column*): Unit =
+    Tables.events(s, d).select(cols: _*)
+      .write.mode("overwrite").option("header", "false").csv(s"$dir/src")
+
+  /** The DDL WATERMARK clause driving a real stream (q227 csv, q244
+    * graft-avro): the events' quarter replay plus two flush epochs,
+    * written as `format` files of the DDL table's columns, read back
+    * through the table `name` (`'format.type' = ddlFormat`) with its
+    * computed rowtime and 1-minute watermark, and aggregated into day
+    * windows per event type that close as the watermark passes. */
+  private def ddlWindowStream(s: SparkSession, d: String, name: String,
+      format: String, ddlFormat: String): DataFrame = {
+    val ep = Replay.quarters(Tables.events(s, d).as[Event](Encoders.product[Event]),
+      Replay.flushes(1, 2), format, _.select(idTypeCents :+ tsUs: _*))
+    val env = new FlinkDdl.Env(s)
+    env.executeSql(
+      s"""CREATE TABLE $name (
+         |  event_id BIGINT, user_id BIGINT, event_type STRING,
+         |  cents BIGINT, ts_us BIGINT,
+         |  ts AS timestamp_micros(ts_us),
+         |  WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE
+         |) WITH (
+         |  'connector.type' = 'filesystem',
+         |  'connector.path' = '${ep.in}',
+         |  'format.type' = '$ddlFormat'
+         |)""".stripMargin)
+    val agg = env.readStream(name, Map("maxFilesPerTrigger" -> "1"))
+      .groupBy(window(col("ts"), "1 day"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_v"))
+      .select(col("window.start").as("ws"), col("event_type"),
+        col("n"), col("cents_v"))
+    ep.runAppend(agg)
+      .filter(col("event_type") =!= "flush")
+      .orderBy(col("ws"), col("event_type"))
+  }
+
   val queries: Map[String, Q] = Map(
     // The Flink-SQL text above, run verbatim through the dialect
     // rewriter. Binds: TUMBLE→window, HOP(slide,size)→window(size,
@@ -67,12 +118,8 @@ object SqlFrontendQueries extends QuerySet {
     // read) emit the tail. Upgrades the GroupWindowSqlSpec streaming
     // claim to a driver-checked row.
     "q241_flinksql_session_stream" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions.col
-      import graft.streaming.Event
-      val base = Scratch.dir("sesssql")
-      Replay.quarters(Tables.events(s, d).as[Event], base.toString, Replay.flushes(2, 4))
-        .stream(s)
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(2, 4))
+      ep.stream(s)
         .withWatermark("ts", "1 minute")
         .createOrReplaceTempView("events_stream_q241")
       val agg = GroupWindowSql.run(s,
@@ -83,7 +130,7 @@ object SqlFrontendQueries extends QuerySet {
           |       SUM(CAST(ROUND(value*100) AS BIGINT)) AS cents
           |FROM events_stream_q241
           |GROUP BY user_id, SESSION(ts, INTERVAL '30' MINUTE)""".stripMargin)
-      Replay.runAppend(agg, base.toString, s)
+      ep.runAppend(agg)
         .filter(col("grp") =!= "-1")
         .orderBy(col("grp"), col("ws"))
     }),
@@ -96,7 +143,6 @@ object SqlFrontendQueries extends QuerySet {
     // Same semantics q54/q59 bind via the DataFrame/exec surfaces —
     // here the USER-FACING TEXT is the thing under test.
     "q222_flinksql_temporal" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
       val ev = Tables.events(s, d)
       ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"), col("ts"))
@@ -135,12 +181,8 @@ object SqlFrontendQueries extends QuerySet {
     // (mixed 1.10 dotted and flat property keys on purpose — both
     // were current across reference versions).
     "q225_flinksql_ddl_pipeline" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
       val base = Scratch.dir("ddl")
-      Tables.events(s, d).select(col("event_id"), col("user_id"),
-        col("event_type"),
-        org.apache.spark.sql.functions.expr("cast(round(value*100) as bigint)").as("cents"))
-        .write.mode("overwrite").option("header", "false").csv(s"$base/src")
+      csvEventSource(s, d, base, idTypeCents: _*)
       new FlinkDdl.Env(s).executeScript(
         s"""CREATE TABLE ev_src (
            |  event_id BIGINT, user_id BIGINT, event_type STRING,
@@ -171,12 +213,8 @@ object SqlFrontendQueries extends QuerySet {
     // CREATE VIEW over the sink — the partition pruning a real
     // warehouse sink needs, driven purely from DDL text.
     "q226_flinksql_ddl_partitioned" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
       val base = Scratch.dir("ddl2")
-      Tables.events(s, d).select(col("event_id"), col("user_id"),
-        col("event_type"),
-        org.apache.spark.sql.functions.expr("cast(round(value*100) as bigint)").as("cents"))
-        .write.mode("overwrite").option("header", "false").csv(s"$base/src")
+      csvEventSource(s, d, base, idTypeCents: _*)
       new FlinkDdl.Env(s).executeScript(
         s"""CREATE TABLE ev_src (
            |  event_id BIGINT, user_id BIGINT, event_type STRING, cents BIGINT
@@ -201,12 +239,6 @@ object SqlFrontendQueries extends QuerySet {
            |SELECT event_type, n, cents_v FROM per_type ORDER BY event_type""".stripMargin)
     }),
 
-    // The DDL WATERMARK clause driving a real STREAMING query: the
-    // declared `WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE` (over a
-    // COMPUTED rowtime column decoding csv micros) becomes
-    // withWatermark on the stream read; day-window aggregates close
-    // exactly as the watermark passes during the four-quarter csv
-    // replay (+ two far-future flush files so every window emits).
     // DDL avro leg: a `'format.type' = 'avro'` sink table routes
     // through the graft-avro DataSource V2 connector (reference
     // AvroRowFormatFactory tables port verbatim) — INSERT OVERWRITE
@@ -215,12 +247,8 @@ object SqlFrontendQueries extends QuerySet {
     // re-aggregates FROM the avro container files, so the avro leg is
     // load-bearing end to end.
     "q243_flinksql_ddl_avro" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
       val base = Scratch.dir("ddl-avro")
-      Tables.events(s, d).select(col("event_id"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value*100) as bigint)").as("cents"))
-        .write.mode("overwrite").option("header", "false").csv(s"$base/src")
+      csvEventSource(s, d, base, idTypeCents: _*)
       new FlinkDdl.Env(s).executeScript(
         s"""CREATE TABLE ev_src (
            |  event_id BIGINT, user_id BIGINT, event_type STRING,
@@ -257,115 +285,17 @@ object SqlFrontendQueries extends QuerySet {
     // day windows close across micro-batches exactly as q227's csv
     // leg, so a dup/lost/misordered file or a broken avro decode
     // shifts a window aggregate and breaks the row.
-    "q244_flinksql_ddl_avro_stream" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val base = Scratch.dir("ddl-avs")
-      val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"),
-        unix_micros(col("ts")).as("ts_us"))
-      val Row(lo: Long, hi: Long) =
-        ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-      val cut = (q: Long) => lo + (hi - lo) * q / 4
-      val in = s"$base/src"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val chunks = Seq(
-        col("ts_us") < cut(1),
-        col("ts_us") >= cut(1) && col("ts_us") < cut(2),
-        col("ts_us") >= cut(2) && col("ts_us") < cut(3),
-        col("ts_us") >= cut(3))
-      val flush = Seq(hi + 86400L * 1000000L, hi + 2 * 86400L * 1000000L)
-        .zipWithIndex.map { case (us, i) =>
-          (-(1L + i), 0L, "__flush", 0L, us)
-        }
-      val flushDf = s.createDataFrame(flush).toDF(ev.columns.toIndexedSeq: _*)
-      (chunks.map(ev.filter) ++ flush.indices.map(i =>
-        flushDf.filter(col("ts_us") === flush(i)._5)))
-        .zipWithIndex.foreach { case (df, i) =>
-          df.coalesce(1).write.format("graft-avro").mode("overwrite")
-            .save(s"$base/stage_$i")
-          val part = new java.io.File(s"$base/stage_$i").listFiles()
-            .filter(_.getName.endsWith(".avro")).head
-          java.nio.file.Files.move(part.toPath,
-            java.nio.file.Paths.get(in, f"chunk_$i%02d.avro"))
-        }
-      val env = new FlinkDdl.Env(s)
-      env.executeSql(
-        s"""CREATE TABLE ev_avro_stream (
-           |  event_id BIGINT, user_id BIGINT, event_type STRING,
-           |  cents BIGINT, ts_us BIGINT,
-           |  ts AS timestamp_micros(ts_us),
-           |  WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE
-           |) WITH (
-           |  'connector.type' = 'filesystem',
-           |  'connector.path' = '$in',
-           |  'format.type' = 'avro'
-           |)""".stripMargin)
-      val agg = env.readStream("ev_avro_stream", Map("maxFilesPerTrigger" -> "1"))
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_v"))
-        .select(col("window.start").as("ws"), col("event_type"),
-          col("n"), col("cents_v"))
-      Replay.runAppend(agg, base.toString, s)
-        .filter(col("event_type") =!= "__flush")
-        .orderBy(col("ws"), col("event_type"))
-    }),
+    "q244_flinksql_ddl_avro_stream" -> ((s, d) =>
+      ddlWindowStream(s, d, "ev_avro_stream", "graft-avro", "avro")),
 
-    "q227_flinksql_ddl_stream" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val base = Scratch.dir("ddl3")
-      val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"),
-        unix_micros(col("ts")).as("ts_us"))
-      val Row(lo: Long, hi: Long) =
-        ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-      val cut = (q: Long) => lo + (hi - lo) * q / 4
-      val in = s"$base/src"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val chunks = Seq(
-        col("ts_us") < cut(1),
-        col("ts_us") >= cut(1) && col("ts_us") < cut(2),
-        col("ts_us") >= cut(2) && col("ts_us") < cut(3),
-        col("ts_us") >= cut(3))
-      val flush = Seq(hi + 86400L * 1000000L, hi + 2 * 86400L * 1000000L)
-        .zipWithIndex.map { case (us, i) =>
-          (-(1L + i), 0L, "__flush", 0L, us)
-        }
-      val flushDf = s.createDataFrame(flush).toDF(ev.columns.toIndexedSeq: _*)
-      (chunks.map(ev.filter) ++ flush.indices.map(i => flushDf.filter(col("ts_us") ===
-        flush(i)._5))).zipWithIndex.foreach { case (df, i) =>
-        df.coalesce(1).write.mode("overwrite").option("header", "false")
-          .csv(s"$base/stage_$i")
-        val listing = java.nio.file.Files.list(java.nio.file.Paths.get(s"$base/stage_$i"))
-        val part = try listing.filter(_.getFileName.toString.endsWith(".csv"))
-          .findFirst() finally listing.close()
-        if (part.isPresent) {
-          val dst = java.nio.file.Paths.get(in, f"chunk_$i%02d.csv")
-          java.nio.file.Files.move(part.get(), dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-      }
-      val env = new FlinkDdl.Env(s)
-      env.executeSql(
-        s"""CREATE TABLE ev_stream (
-           |  event_id BIGINT, user_id BIGINT, event_type STRING,
-           |  cents BIGINT, ts_us BIGINT,
-           |  ts AS timestamp_micros(ts_us),
-           |  WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE
-           |) WITH (
-           |  'connector.type' = 'filesystem',
-           |  'connector.path' = '$in',
-           |  'format.type' = 'csv'
-           |)""".stripMargin)
-      val agg = env.readStream("ev_stream", Map("maxFilesPerTrigger" -> "1"))
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_v"))
-        .select(col("window.start").as("ws"), col("event_type"),
-          col("n"), col("cents_v"))
-      Replay.runAppend(agg, base.toString, s)
-        .filter(col("event_type") =!= "__flush")
-        .orderBy(col("ws"), col("event_type"))
-    }),
+    // The DDL WATERMARK clause driving a real STREAMING query: the
+    // declared `WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE` (over a
+    // COMPUTED rowtime column decoding csv micros) becomes
+    // withWatermark on the stream read; day-window aggregates close
+    // exactly as the watermark passes during the four-quarter csv
+    // replay (+ two far-future flush files so every window emits).
+    "q227_flinksql_ddl_stream" -> ((s, d) =>
+      ddlWindowStream(s, d, "ev_stream", "csv", "csv")),
 
     // THE unified executeSql: one script through FlinkSql.Env
     // composing the DDL surface WITH the group-window dialect — the
@@ -374,13 +304,8 @@ object SqlFrontendQueries extends QuerySet {
     // SELECT reads it back. A reference user's day-rollup ETL script,
     // pasted whole.
     "q228_flinksql_unified" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
       val base = Scratch.dir("uni")
-      Tables.events(s, d).select(col("event_id"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value*100) as bigint)").as("cents"),
-        unix_micros(col("ts")).as("ts_us"))
-        .write.mode("overwrite").option("header", "false").csv(s"$base/src")
+      csvEventSource(s, d, base, idTypeCents :+ tsUs: _*)
       new FlinkSql.Env(s).executeScript(
         s"""CREATE TABLE ev_src (
            |  event_id BIGINT, user_id BIGINT, event_type STRING,
@@ -419,14 +344,10 @@ object SqlFrontendQueries extends QuerySet {
     // result faces ONE oracle, so a value corrupted at any stage
     // (csv parse, window rewrite, NFA, join) breaks the row.
     "q234_flinksql_app" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
       val base = Scratch.dir("app")
       graft.functions.Udx.register(s)
-      Tables.events(s, d).select(col("event_id"), col("user_id"),
-        col("event_type"), col("value"), col("props"),
-        expr("cast(round(value*100) as bigint)").as("cents"),
-        unix_micros(col("ts")).as("ts_us"))
-        .write.mode("overwrite").option("header", "false").csv(s"$base/src")
+      csvEventSource(s, d, base, col("event_id"), col("user_id"),
+        col("event_type"), col("value"), col("props"), cents, tsUs)
       new FlinkSql.Env(s).executeScript(
         s"""CREATE TABLE ev_app (
            |  event_id BIGINT, user_id BIGINT, event_type STRING,
@@ -511,6 +432,13 @@ object SqlFrontendQueries extends QuerySet {
     })
   )
 
+  /** Day windows per event type: q227 and q244. */
+  private val dayWindowSql = evCte +
+    """
+      |SELECT date_trunc('day', ts) AS ws, event_type, count(*) AS n,
+      |  sum(CAST(round(value*100) AS BIGINT))::BIGINT AS cents_v
+      |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
   val oracle: Map[String, String] = Map(
     // Tumble = day-trunc; hop = the 4 slide-aligned windows covering
     // each event (slide 6h = 21_600_000_000 µs, size 1d); session =
@@ -587,16 +515,8 @@ object SqlFrontendQueries extends QuerySet {
         |  count(DISTINCT user_id) AS users,
         |  min(event_id) AS min_id, max(event_id) AS max_id
         |FROM ev GROUP BY event_type ORDER BY event_type""".stripMargin),
-    "q244_flinksql_ddl_avro_stream" -> (evCte +
-      """
-        |SELECT date_trunc('day', ts) AS ws, event_type, count(*) AS n,
-        |  sum(CAST(round(value*100) AS BIGINT))::BIGINT AS cents_v
-        |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    "q227_flinksql_ddl_stream" -> (evCte +
-      """
-        |SELECT date_trunc('day', ts) AS ws, event_type, count(*) AS n,
-        |  sum(CAST(round(value*100) AS BIGINT))::BIGINT AS cents_v
-        |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q244_flinksql_ddl_avro_stream" -> dayWindowSql,
+    "q227_flinksql_ddl_stream" -> dayWindowSql,
     "q228_flinksql_unified" -> (evCte +
       """
         |SELECT event_type, date_trunc('day', ts) AS ws,
@@ -656,13 +576,7 @@ object SqlFrontendQueries extends QuerySet {
         |       c.conversions::BIGINT AS conversions
         |FROM totals t JOIN conv c USING (user_id)
         |ORDER BY t.user_id""".stripMargin),
-    "q223_flinksql_lateral" ->
-      """SELECT doc_id, s.idx AS idx, s.tok AS tok FROM (
-        |  SELECT doc_id,
-        |    unnest(list_transform(string_split(rtrim(text, ' '), ' '),
-        |      (t, i) -> struct_pack(idx := i - 1, tok := t))) AS s
-        |  FROM documents WHERE doc_id < 50 AND length(trim(text)) > 0)
-        |ORDER BY doc_id, s.idx""".stripMargin,
+    "q223_flinksql_lateral" -> UdxQueries.tokenizeSql,
     "q224_flinksql_lateral_outer" ->
       """SELECT d.doc_id, t.tok AS tok
         |FROM documents d LEFT JOIN LATERAL (

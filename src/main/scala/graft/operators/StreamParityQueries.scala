@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{Scratch, Tables}
+import graft.Tables
 import graft.streaming.{Event, Replay, Retract, SemiAntiJoin, StatefulOps}
-import graft.streaming.Replay.{latestPerKey, runAppend, runUpdate}
+import graft.streaming.Replay.latestPerKey
 
 /** Round-5 streaming↔batch parity pack: the remaining spec-only
   * stateful streaming operators, each driven through the file-stream
@@ -50,14 +50,9 @@ object StreamParityQueries extends QuerySet {
     // and the hash compare are exact-integer on both sides (the q134
     // trick). Final state = newest refresh per (user, rank).
     "q135_topn_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("topnstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      val top = StatefulOps.topNPerKey(
-        ep.stream(s)
-          .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
-        n = 3)
-      latestPerKey(runUpdate(top.toDF(), base.toString, s),
+      val ep = Replay.eventQuarters(s, d)
+      val top = StatefulOps.topNPerKey(centsStream(ep.stream(s)), n = 3)
+      latestPerKey(ep.runUpdate(top.toDF()),
           col("user_id"), col("rank"))
         .select(col("user_id"), col("rank").as("rnk"), col("event_id"),
           expr("cast(value as bigint)").as("cents_v"))
@@ -72,11 +67,9 @@ object StreamParityQueries extends QuerySet {
     // cross-batch overwrite path is load-bearing. Final state = newest
     // emission per key; oracle = the identical q55 SQL.
     "q136_dedup_last_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("keylaststream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       val ded = StatefulOps.dedupKeepLast(ep.stream(s))
-      latestPerKey(runUpdate(ded.toDF(), base.toString, s),
+      latestPerKey(ep.runUpdate(ded.toDF()),
           col("user_id"), col("event_type"))
         .select(col("user_id"), col("event_type"), col("event_id"),
           round(col("value"), 2).as("value"))
@@ -93,17 +86,14 @@ object StreamParityQueries extends QuerySet {
     // effectively infinite so the operator's final output IS the
     // batch EXISTS semantics.
     "q137_semi_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("semistream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       val left = ep.stream(s)
         .filter(col("event_type") === "purchase")
       val right = ep.stream(s)
         .filter(col("event_type") === "error" && col("value") > 95)
       val out = SemiAntiJoin.semiJoin(left, right,
         delay = "1 minute", retentionMs = Long.MaxValue / 4)
-      runAppend(out.toDF().select(col("user_id"), col("event_id"), col("ts")),
-          base.toString, s)
+      ep.runAppend(out.toDF().select(col("user_id"), col("event_id"), col("ts")))
         .orderBy(col("user_id"), col("event_id"))
     }),
 
@@ -116,9 +106,7 @@ object StreamParityQueries extends QuerySet {
     // horizon — the first advances event time, the second triggers the
     // batch in which the armed event-time timeouts actually fire.
     "q138_anti_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("antistream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
+      val ep = Replay.eventQuarters(s, d,
         (lo, hi) => Seq(1L, 2L).map(k => Replay.sentinel(-k,
           hi + (hi - lo) / 1000 * 1000 + k * Replay.DayUs, "error", 100.0)))
       val spanMs = (ep.hi - ep.lo) / 1000
@@ -128,8 +116,7 @@ object StreamParityQueries extends QuerySet {
         .filter(col("event_type") === "error" && col("value") > 95)
       val out = SemiAntiJoin.antiJoin(left, right,
         delay = "1 minute", gapMs = spanMs, retentionMs = Long.MaxValue / 4)
-      runAppend(out.toDF().select(col("user_id"), col("event_id"), col("ts")),
-          base.toString, s)
+      ep.runAppend(out.toDF().select(col("user_id"), col("event_id"), col("ts")))
         .orderBy(col("user_id"), col("event_id"))
     }),
 
@@ -141,17 +128,11 @@ object StreamParityQueries extends QuerySet {
     // trigger), so the oracle keeps only complete windows (HAVING
     // count(*) = 10). Cents mapped before the op for exact sums.
     "q139_countwin_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("cntwinstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      val wins = StatefulOps.countTumbleWindow(
-        ep.stream(s)
-          .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
-        size = 10)
-      runAppend(wins.toDF()
+      val ep = Replay.eventQuarters(s, d)
+      val wins = StatefulOps.countTumbleWindow(centsStream(ep.stream(s)), size = 10)
+      ep.runAppend(wins.toDF()
           .select(col("user_id"), col("w_id"), col("n"),
-            expr("cast(sum_v as bigint)").as("cents_v")),
-          base.toString, s)
+            expr("cast(sum_v as bigint)").as("cents_v")))
         .orderBy(col("user_id"), col("w_id"))
     }),
 
@@ -161,17 +142,12 @@ object StreamParityQueries extends QuerySet {
     // and the seen-counter carrying across micro-batches. Oracle =
     // every 5th row by row_number with a ROWS 9 PRECEDING frame.
     "q142_countslide_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("cntslidestream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      val wins = StatefulOps.countSlideWindow(
-        ep.stream(s)
-          .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
+      val ep = Replay.eventQuarters(s, d)
+      val wins = StatefulOps.countSlideWindow(centsStream(ep.stream(s)),
         size = 10, slide = 5)
-      runAppend(wins.toDF()
+      ep.runAppend(wins.toDF()
           .select(col("user_id"), col("w_id"), col("n"),
-            expr("cast(sum_v as bigint)").as("cents_v")),
-          base.toString, s)
+            expr("cast(sum_v as bigint)").as("cents_v")))
         .orderBy(col("user_id"), col("w_id"))
     }),
 
@@ -182,17 +158,12 @@ object StreamParityQueries extends QuerySet {
     // is unique in this data, so the RANGE frame's peer-row semantics
     // cannot diverge between the op's (ts, event_id) order and SQL.
     "q143_rangeover_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("rangestream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      val over = StatefulOps.boundedRangeOver(
-        ep.stream(s)
-          .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
+      val ep = Replay.eventQuarters(s, d)
+      val over = StatefulOps.boundedRangeOver(centsStream(ep.stream(s)),
         rangeMs = 1800000L)
-      runAppend(over.toDF()
+      ep.runAppend(over.toDF()
           .select(col("user_id"), col("event_id"),
-            expr("cast(sum_prev as bigint)").as("cents_prev"), col("cnt_prev")),
-          base.toString, s)
+            expr("cast(sum_prev as bigint)").as("cents_prev"), col("cnt_prev")))
         .orderBy(col("user_id"), col("event_id"))
     }),
 
@@ -203,14 +174,9 @@ object StreamParityQueries extends QuerySet {
     // key is inherent to a global limit (the reference's global rank
     // has the same shape).
     "q144_sortlimit_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("sortlimitstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      val top = StatefulOps.sortLimitGlobal(
-        ep.stream(s)
-          .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
-        k = 20)
-      latestPerKey(runUpdate(top.toDF(), base.toString, s), col("rank"))
+      val ep = Replay.eventQuarters(s, d)
+      val top = StatefulOps.sortLimitGlobal(centsStream(ep.stream(s)), k = 20)
+      latestPerKey(ep.runUpdate(top.toDF()), col("rank"))
         .select(col("rank").as("rnk"), col("event_id"),
           expr("cast(value as bigint)").as("cents_v"))
         .orderBy(col("rnk"))
@@ -227,24 +193,13 @@ object StreamParityQueries extends QuerySet {
     // coalesced to -1/0 on both sides: a nullable int64 materializes
     // as float64 in pandas and would repr-mismatch the oracle.
     "q145_outer_interval_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.StreamJoins
-      val base = Scratch.dir("outerivstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        outerDrains)
-      def side(tpe: String, outCol: String) =
-        ep.stream(s).toDF()
-          .filter(col("event_type") === tpe)
-          .select(col("user_id"), col("ts"), col("event_id").as(outCol))
-      val joined = StreamJoins.intervalJoin(
-          side("purchase", "p_id"), side("error", "e_id"),
-          "user_id", "ts", "1 minute", "10 MINUTES", "10 MINUTES",
-          joinType = "left_outer")
+      val ep = Replay.eventQuarters(s, d, outerDrains)
+      val joined = purchaseErrorJoin(s, ep, "left_outer")
         .select(expr("l.user_id").as("user_id"), col("p_id"),
           coalesce(col("e_id"), lit(-1L)).as("e_id"),
           coalesce(unix_micros(expr("r.ts")) - unix_micros(expr("l.ts")), lit(0L))
             .as("delta_us"))
-      runAppend(joined, base.toString, s)
+      ep.runAppend(joined)
         .filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("p_id"), col("e_id"))
     }),
@@ -260,11 +215,8 @@ object StreamParityQueries extends QuerySet {
     // prior sessions' ends can never exceed the current session's
     // start, so the cumulative max is safe.
     "q150_session_dynamic_stream" -> ((s, d) => {
-      import s.implicits._
       import graft.streaming.WindowedAggs
-      val base = Scratch.dir("dynsessstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        Replay.flushes(1, 2))
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(1, 2))
       // session_window's dynamic gap must be CalendarIntervalType
       // (ANSI INTERVAL literals parse as DayTimeIntervalType)
       def mins(m: Int) =
@@ -277,7 +229,7 @@ object StreamParityQueries extends QuerySet {
         Seq(count(lit(1)).as("n"), sum(col("cents")).as("cents_v")))
         .select(col("user_id"), col("session_window.start").as("w_start"),
           col("session_window.end").as("w_end"), col("n"), col("cents_v"))
-      runAppend(sess, base.toString, s)
+      ep.runAppend(sess)
         .filter(col("user_id") >= 0) // drop flush sentinels
         .orderBy(col("user_id"), col("w_start"))
     }),
@@ -288,17 +240,15 @@ object StreamParityQueries extends QuerySet {
     // resolving user_id%25 against the nation dimension; the oracle is
     // the plain relational join the lookup must agree with.
     "q151_lookup_stream" -> ((s, d) => {
-      import s.implicits._
       import graft.streaming.StreamJoins
-      val base = Scratch.dir("lookupstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       val nmap = Tables.load(s, d, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       val joined = StreamJoins.lookupJoin(
         ep.stream(s).toDF().select("event_id", "user_id"),
         "user_id", () => (k: Long) => nmap.get(k % 25), "n_name")
-      runAppend(joined, base.toString, s).orderBy(col("event_id"))
+      ep.runAppend(joined).orderBy(col("event_id"))
     }),
 
     // STREAMING async lookup join oracle-bound (AsyncDataStream
@@ -306,10 +256,8 @@ object StreamParityQueries extends QuerySet {
     // bounded in-flight concurrency; unordered completion within a
     // partition cannot show through the sorted compare — same oracle.
     "q152_lookup_async_stream" -> ((s, d) => {
-      import s.implicits._
       import graft.streaming.StreamJoins
-      val base = Scratch.dir("alookupstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       val nmap = Tables.load(s, d, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -318,7 +266,7 @@ object StreamParityQueries extends QuerySet {
         "user_id",
         () => (k: Long) => scala.concurrent.Future.successful(nmap.get(k % 25)),
         "n_name")
-      runAppend(joined, base.toString, s).orderBy(col("event_id"))
+      ep.runAppend(joined).orderBy(col("event_id"))
     }),
 
     // STREAMING late-data side output oracle-bound (WindowOperator
@@ -331,16 +279,14 @@ object StreamParityQueries extends QuerySet {
     "q153_late_tag_stream" -> ((s, d) => {
       import s.implicits._
       import graft.streaming.WindowedAggs
-      val base = Scratch.dir("latestream")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = Replay.spanOf(real)
       val Seq(q1, q2, q3, q4) = Replay.quarterChunks(lo, hi)
       // quarter 2 arrives FIRST; quarter 1 is late
-      val (inDir, schema) = Replay.fileEpochs(real, Seq(q2, q1, q3, q4), base.toString)
-      val tagged = WindowedAggs.tagLate(Replay.stream(s, inDir, schema), 600000L)
-      runAppend(tagged.toDF()
-          .select(col("_1.event_id").as("event_id"), col("_2").as("is_late")),
-        base.toString, s)
+      val ep = Replay.fileEpochs(real, Seq(q2, q1, q3, q4))
+      val tagged = WindowedAggs.tagLate(ep.stream(s), 600000L)
+      ep.runAppend(tagged.toDF()
+          .select(col("_1.event_id").as("event_id"), col("_2").as("is_late")))
         .orderBy(col("event_id"))
     }),
 
@@ -351,11 +297,9 @@ object StreamParityQueries extends QuerySet {
     // stream-static LEFT ANTI on md5(text) drops exact re-crawls.
     "q154_dedup_corpus_stream" -> ((s, d) => {
       import graft.streaming.StreamDedup
-      val base = Scratch.dir("dedupstream")
-      val (corpus, ep) =
-        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
+      val (corpus, ep) = Replay.snapshotSplit(Tables.documents(s, d), "doc_id")
       val out = StreamDedup.dropSeenExact(ep.streamDf(s), corpus).select("doc_id")
-      runAppend(out, base.toString, s).orderBy(col("doc_id"))
+      ep.runAppend(out).orderBy(col("doc_id"))
     }),
 
     // STREAMING near-dup flagging vs the corpus's LSH bucket table
@@ -366,36 +310,23 @@ object StreamParityQueries extends QuerySet {
     // banded-minhash algebra in DuckDB (sig SQL shared with q64/q65).
     "q155_neardup_corpus_stream" -> ((s, d) => {
       import graft.streaming.StreamDedup
-      val base = Scratch.dir("neardupstream")
-      val (corpus, ep) =
-        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
+      val (corpus, ep) = Replay.snapshotSplit(Tables.documents(s, d), "doc_id")
       val out = StreamDedup.flagNearDups(ep.streamDf(s), StreamDedup.corpusBands(corpus))
-      runAppend(out, base.toString, s).orderBy(col("doc_id"))
+      ep.runAppend(out).orderBy(col("doc_id"))
     }),
 
     // STREAMING FULL OUTER interval join oracle-bound — q145's
     // left-outer sibling: BOTH sides' unmatched rows must null-pad
     // exactly once when the watermark proves no partner can arrive.
     "q156_full_outer_interval_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.StreamJoins
-      val base = Scratch.dir("fouterivstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        outerDrains)
-      def side(tpe: String, outCol: String) =
-        ep.stream(s).toDF()
-          .filter(col("event_type") === tpe)
-          .select(col("user_id"), col("ts"), col("event_id").as(outCol))
-      val joined = StreamJoins.intervalJoin(
-          side("purchase", "p_id"), side("error", "e_id"),
-          "user_id", "ts", "1 minute", "10 MINUTES", "10 MINUTES",
-          joinType = "full_outer")
+      val ep = Replay.eventQuarters(s, d, outerDrains)
+      val joined = purchaseErrorJoin(s, ep, "full_outer")
         .select(coalesce(expr("l.user_id"), expr("r.user_id")).as("user_id"),
           coalesce(col("p_id"), lit(-1L)).as("p_id"),
           coalesce(col("e_id"), lit(-1L)).as("e_id"),
           coalesce(unix_micros(expr("r.ts")) - unix_micros(expr("l.ts")), lit(0L))
             .as("delta_us"))
-      runAppend(joined, base.toString, s)
+      ep.runAppend(joined)
         .filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("p_id"), col("e_id"))
     }),
@@ -438,13 +369,11 @@ object StreamParityQueries extends QuerySet {
     // demotion, order-independent delta application) against the
     // oracle, not just the property models.
     "q140_retract_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("retractstream")
-      val url = s"jdbc:derby:$base/db;create=true"
+      val ep = Replay.eventQuarters(s, d)
+      val url = s"jdbc:derby:${ep.dir}/db;create=true"
       initRankTable(url)
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
       val ranks = Retract.topUsersByCount(ep.stream(s), n = 10)
-      Replay.runBatches(ranks.toDF(), s"$base/ck")((b, _) => mergeRanks(b, url))
+      ep.runBatches(ranks.toDF())((b, _) => mergeRanks(b, url))
       s.read.format("jdbc").option("url", url)
         .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
         .option("dbtable", "RANKS").load()
@@ -509,6 +438,15 @@ object StreamParityQueries extends QuerySet {
     }
   }
 
+  /** Events enriched with the nation of user_id % 25: q151, and q152's async
+    * lookup. */
+  private val lookupSql =
+    evCte +
+      """
+        |SELECT e.event_id, e.user_id, n.n_name
+        |FROM ev e JOIN nation n ON n.n_nationkey = e.user_id % 25
+        |ORDER BY e.event_id""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q135_topn_stream" -> (evCte +
       """
@@ -521,12 +459,7 @@ object StreamParityQueries extends QuerySet {
         |WHERE rnk <= 3 ORDER BY user_id, rnk""".stripMargin),
     // identical SQL to q55: the streaming keep-last final state must
     // land on the batch keep-last rows exactly
-    "q136_dedup_last_stream" -> (evCte +
-      """
-        |SELECT user_id, event_type, event_id, round(value,2) AS value FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-        |    ORDER BY ts DESC, event_id DESC) AS rn FROM ev)
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
+    "q136_dedup_last_stream" -> EventQueries.dedupLastSql,
     "q137_semi_stream" -> (evCte +
       """
         |SELECT user_id, event_id, ts FROM ev p
@@ -596,30 +529,7 @@ object StreamParityQueries extends QuerySet {
         |ORDER BY user_id, p_id, e_id""".stripMargin),
     // identical SQL to q110: the SQL-text front-end must land on the
     // DSL-compiled NFA's exact rows
-    "q141_match_recognize" -> (evCte +
-      """,
-        |views AS (SELECT * FROM ev WHERE event_type = 'view'),
-        |purch AS (SELECT * FROM ev WHERE event_type = 'purchase'),
-        |pairs AS (
-        |  SELECT s.user_id, s.event_id AS first_view, j.event_id AS last_view,
-        |    s.ts AS s_ts, j.ts AS j_ts, j.event_id AS j_id,
-        |    (SELECT count(*) FROM views v WHERE v.user_id = s.user_id
-        |       AND (v.ts > s.ts OR (v.ts = s.ts AND v.event_id >= s.event_id))
-        |       AND (v.ts < j.ts OR (v.ts = j.ts AND v.event_id <= j.event_id))
-        |    )::BIGINT AS n_views
-        |  FROM views s JOIN views j ON s.user_id = j.user_id
-        |   AND (j.ts > s.ts OR (j.ts = s.ts AND j.event_id >= s.event_id))
-        |   AND epoch_us(j.ts) - epoch_us(s.ts) <= 3600000000)
-        |SELECT user_id, first_view, last_view, n_views, purchase_id FROM (
-        |  SELECT pr.user_id, pr.first_view, pr.last_view, pr.n_views,
-        |    p.event_id AS purchase_id,
-        |    row_number() OVER (
-        |      PARTITION BY pr.user_id, pr.first_view, pr.last_view
-        |      ORDER BY p.ts, p.event_id) AS rn
-        |  FROM pairs pr JOIN purch p ON p.user_id = pr.user_id
-        |   AND (p.ts > pr.j_ts OR (p.ts = pr.j_ts AND p.event_id > pr.j_id))
-        |   AND epoch_us(p.ts) - epoch_us(pr.s_ts) <= 3600000000)
-        |WHERE rn = 1 ORDER BY user_id, first_view, last_view""".stripMargin),
+    "q141_match_recognize" -> EventQueries.cepLoopSql,
     "q140_retract_stream" -> (evCte +
       """,
         |counts AS (SELECT user_id, count(*)::BIGINT AS cnt FROM ev GROUP BY user_id)
@@ -649,16 +559,8 @@ object StreamParityQueries extends QuerySet {
         |  count(*)::BIGINT AS n, sum(cents)::BIGINT AS cents_v
         |FROM s GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
     // the lookup enrich must agree with the plain relational join
-    "q151_lookup_stream" -> (evCte +
-      """
-        |SELECT e.event_id, e.user_id, n.n_name
-        |FROM ev e JOIN nation n ON n.n_nationkey = e.user_id % 25
-        |ORDER BY e.event_id""".stripMargin),
-    "q152_lookup_async_stream" -> (evCte +
-      """
-        |SELECT e.event_id, e.user_id, n.n_name
-        |FROM ev e JOIN nation n ON n.n_nationkey = e.user_id % 25
-        |ORDER BY e.event_id""".stripMargin),
+    "q151_lookup_stream" -> lookupSql,
+    "q152_lookup_async_stream" -> lookupSql,
     // per-key running max over ARRIVAL order (epoch = the replay's
     // chunk index: quarter 2 first, then 1, 3, 4; the cut timestamps
     // replicate tsOf's µs→ms truncation), strict < with a 10-minute

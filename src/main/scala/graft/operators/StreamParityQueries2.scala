@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.{Scratch, Tables}
 import graft.streaming.{Event, EventTimeOps, Replay, StreamDedup, StreamIterate, WindowOps}
-import graft.streaming.Replay.runAppend
 
 /** Round-5 parity pack, part 2: the window-machinery TRIGGERS and
   * EVICTORS, streaming event-time sort, the stream-feedback iteration,
@@ -34,33 +33,20 @@ import graft.streaming.Replay.runAppend
   */
 object StreamParityQueries2 extends QuerySet {
 
-  /** The quarter replay plus two flush sentinels (user_id = -1) that
-    * advance the watermark so final windows/buffers emit; callers drop
-    * user_id < 0 at sink read. */
-  private def flushedReplay(s: SparkSession, d: String, base: String): Replay.Epochs = {
-    import s.implicits._
-    Replay.quarters(Tables.events(s, d).as[Event], base, Replay.flushes(1, 2))
-  }
-
-  /** Whole-cent prescale (the q134 trick): ranking/sums stay exact
-    * integers on both sides of the compare. */
-  private def centsStream(s: SparkSession, ep: Replay.Epochs) = {
-    import s.implicits._
-    ep.stream(s).map(e => e.copy(value = math.round(e.value * 100).toDouble))
-  }
-
   private val weekMs = 604800000L // 7-day tumble ≈ 17 events/user-window
 
-  /** Run a trigger/evictor tumble through the flushed replay and
-    * normalize the WindowFire output for the oracle compare. */
-  private def fires(s: SparkSession, d: String, tag: String,
+  /** Run a trigger/evictor tumble through the quarter replay plus two
+    * flush sentinels (user_id = -1, dropped at sink read) that advance
+    * the watermark so the final windows emit, and normalize the
+    * WindowFire output for the oracle compare. */
+  private def fires(s: SparkSession, d: String,
                     trigger: WindowOps.Trigger,
                     evictor: WindowOps.Evictor): DataFrame = {
-    val base = Scratch.dir(tag)
-    val out = WindowOps.tumble(centsStream(s, flushedReplay(s, d, base.toString)),
+    val ep = Replay.eventQuarters(s, d, Replay.flushes(1, 2))
+    val out = WindowOps.tumble(centsStream(ep.stream(s)),
       sizeMs = weekMs, delay = "1 minute", trigger = trigger,
       evictor = evictor)
-    runAppend(out.toDF(), base.toString, s)
+    ep.runAppend(out.toDF())
       .filter(col("user_id") >= 0) // drop flush sentinels
       .select(col("user_id"), col("w_start_ms"), col("n"), col("sum_v"),
         col("closing"))
@@ -101,8 +87,7 @@ object StreamParityQueries2 extends QuerySet {
     // buffering/release — the part with state in it.)
     "q157_sort_delta_stream" -> ((s, d) => {
       import s.implicits._
-      val base = Scratch.dir("sortstream")
-      val ep = flushedReplay(s, d, base.toString)
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(1, 2))
       // The sort RELEASES rows as the watermark passes them, so by
       // construction its output is at-watermark — Spark's global-
       // watermark check flags any stateful consumer of it as a late-row
@@ -110,7 +95,7 @@ object StreamParityQueries2 extends QuerySet {
       // NoTimeout), which is exactly the Flink chained-operator shape;
       // scope the check off for this stream only.
       val sorted = EventTimeOps.eventTimeSorted(
-        centsStream(s, ep), "1 minute")
+        centsStream(ep.stream(s)), "1 minute")
       val deltas = sorted.groupByKey(_.user_id)
         .flatMapGroupsWithState[Long, (Long, Long)](
           OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -127,7 +112,7 @@ object StreamParityQueries2 extends QuerySet {
             st.update(prev)
             out.iterator
         }
-      runAppend(deltas.toDF("event_id", "delta_cents"), base.toString, s,
+      ep.runAppend(deltas.toDF("event_id", "delta_cents"),
           Map("spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false"))
         .filter(col("event_id") >= 0)
         .orderBy(col("event_id"))
@@ -166,12 +151,10 @@ object StreamParityQueries2 extends QuerySet {
     // survivors-count aggregation makes this a batch-composed stage
     // (foreachBatch), the documented scale shape for it.
     "q159_neardrop_corpus_stream" -> ((s, d) => {
-      val base = Scratch.dir("neardropstream")
-      val (corpus, ep) =
-        Replay.snapshotSplit(Tables.documents(s, d), "doc_id", base.toString)
+      val (corpus, ep) = Replay.snapshotSplit(Tables.documents(s, d), "doc_id")
       val bands = StreamDedup.corpusBands(corpus).localCheckpoint()
-      val out = s"$base/out"
-      Replay.runBatches(ep.streamDf(s), s"$base/ck") { (b, _) =>
+      val out = s"${ep.dir}/out"
+      ep.runBatches(ep.streamDf(s)) { (b, _) =>
         StreamDedup.dropNearDups(b, bands).select("doc_id")
           .write.mode("append").parquet(out)
       }
@@ -183,7 +166,7 @@ object StreamParityQueries2 extends QuerySet {
     // (full window). 7-day windows span quarter boundaries, so the
     // count cadence provably survives micro-batch crossings.
     "q160_count_trigger_stream" -> ((s, d) =>
-      fires(s, d, "ctrig", WindowOps.CountTrigger(4), WindowOps.NoEvictor)),
+      fires(s, d, WindowOps.CountTrigger(4), WindowOps.NoEvictor)),
 
     // PurgingTrigger(CountTrigger) oracle-bound: each early fire emits
     // ONLY the rows since the last fire (blocks of exactly 4) and
@@ -191,44 +174,33 @@ object StreamParityQueries2 extends QuerySet {
     // including an EMPTY one (n=0) when the window size divides evenly,
     // which is the purge-path edge the oracle must see.
     "q161_purging_trigger_stream" -> ((s, d) =>
-      fires(s, d, "ptrig", WindowOps.PurgingTrigger(WindowOps.CountTrigger(4)),
+      fires(s, d, WindowOps.PurgingTrigger(WindowOps.CountTrigger(4)),
         WindowOps.NoEvictor)),
 
     // CountEvictor oracle-bound: the closing fire keeps only the
     // newest 5 rows by (ts, event_id) — aggregate over a suffix frame.
     "q162_count_evictor_stream" -> ((s, d) =>
-      fires(s, d, "cevict", WindowOps.EventTimeTrigger,
+      fires(s, d, WindowOps.EventTimeTrigger,
         WindowOps.CountEvictor(5))),
 
     // DeltaEvictor oracle-bound: at fire time, evict rows whose value
     // differs from the NEWEST buffered row's value by ≥ $100 (10000
     // cents) — value-relative eviction anchored at the last row.
     "q163_delta_evictor_stream" -> ((s, d) =>
-      fires(s, d, "devict", WindowOps.EventTimeTrigger,
+      fires(s, d, WindowOps.EventTimeTrigger,
         WindowOps.DeltaEvictor(10000.0))),
 
     // STREAMING RIGHT OUTER interval join oracle-bound — completes the
     // outer family (LEFT q145, FULL q156): unmatched ERROR rows
     // null-pad exactly once at the watermark horizon.
     "q170_right_outer_interval_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.StreamJoins
-      val base = Scratch.dir("routerivstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        StreamParityQueries.outerDrains)
-      def side(tpe: String, outCol: String) =
-        ep.stream(s).toDF()
-          .filter(col("event_type") === tpe)
-          .select(col("user_id"), col("ts"), col("event_id").as(outCol))
-      val joined = StreamJoins.intervalJoin(
-          side("purchase", "p_id"), side("error", "e_id"),
-          "user_id", "ts", "1 minute", "10 MINUTES", "10 MINUTES",
-          joinType = "right_outer")
+      val ep = Replay.eventQuarters(s, d, StreamParityQueries.outerDrains)
+      val joined = purchaseErrorJoin(s, ep, "right_outer")
         .select(coalesce(expr("l.user_id"), expr("r.user_id")).as("user_id"),
           coalesce(col("p_id"), lit(-1L)).as("p_id"), col("e_id"),
           coalesce(unix_micros(expr("r.ts")) - unix_micros(expr("l.ts")), lit(0L))
             .as("delta_us"))
-      runAppend(joined, base.toString, s)
+      ep.runAppend(joined)
         .filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("p_id"), col("e_id"))
     }),
@@ -239,16 +211,14 @@ object StreamParityQueries2 extends QuerySet {
     // current state, so `spark.table(...)` is the point-lookup surface
     // while the query runs. Its FINAL content faces the one-shot SQL.
     "q171_queryable_state" -> ((s, d) => {
-      val base = Scratch.dir("qstate")
-      val ep = Replay.quarters(
-        { import s.implicits._; Tables.events(s, d).as[Event] }, base.toString)
+      val ep = Replay.eventQuarters(s, d)
       s.catalog.dropTempView("graft_qstate")
       val counts = ep.stream(s).toDF()
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"),
           sum(expr("cast(round(value*100) as bigint)")).as("cents_v"))
       val q = counts.writeStream
-        .option("checkpointLocation", s"$base/ck")
+        .option("checkpointLocation", s"${ep.dir}/ck")
         .outputMode("complete").format("memory").queryName("graft_qstate")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -262,15 +232,12 @@ object StreamParityQueries2 extends QuerySet {
     // GROUP BY. Savepoint analysis facing the oracle.
     "q172_state_read" -> ((s, d) => {
       import graft.streaming.StateInspect
-      val base = Scratch.dir("stateread")
-      val ep = Replay.quarters(
-        { import s.implicits._; Tables.events(s, d).as[Event] }, base.toString)
-      val ck = s"$base/ck"
+      val ep = Replay.eventQuarters(s, d)
       val counts = ep.stream(s).toDF()
         .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
       // the batch must still EXECUTE for the state stores to commit
-      Replay.runBatches(counts, ck, "update") { (b, _) => b.count(); () }
-      val st = StateInspect.readState(s, ck)
+      ep.runBatches(counts, "update") { (b, _) => b.count(); () }
+      val st = StateInspect.readState(s, s"${ep.dir}/ck")
       val valField = st.select(col("value.*")).columns.head
       st.select(col("key.user_id").as("user_id"),
           col(s"value.`$valField`").cast("long").as("n"))
@@ -281,7 +248,7 @@ object StreamParityQueries2 extends QuerySet {
     // within 2 days of the NEWEST buffered row — a window-relative
     // time suffix.
     "q165_time_evictor_stream" -> ((s, d) =>
-      fires(s, d, "tevict", WindowOps.EventTimeTrigger,
+      fires(s, d, WindowOps.EventTimeTrigger,
         WindowOps.TimeEvictor(keepMs = 2 * 86400000L))),
 
     // DeltaTrigger oracle-bound: fire when a row's value drifts ≥ $100
@@ -289,7 +256,7 @@ object StreamParityQueries2 extends QuerySet {
     // fire) — a data-dependent recurrence the oracle walks with a
     // recursive CTE carrying the anchor row-by-row.
     "q166_delta_trigger_stream" -> ((s, d) =>
-      fires(s, d, "dtrig", WindowOps.DeltaTrigger(10000.0),
+      fires(s, d, WindowOps.DeltaTrigger(10000.0),
         WindowOps.NoEvictor)),
 
     // ContinuousEventTimeTrigger oracle-bound (the last trigger that
@@ -305,8 +272,7 @@ object StreamParityQueries2 extends QuerySet {
     // batch — a wrong watermark model, a missed batch callback, or an
     // extra per-batch fire all break the hash.
     "q276_continuous_trigger_stream" -> ((s, d) =>
-      fires(s, d, "cet",
-        WindowOps.ContinuousEventTimeTrigger(2L * 86400000L),
+      fires(s, d, WindowOps.ContinuousEventTimeTrigger(2L * 86400000L),
         WindowOps.NoEvictor)),
 
     // Weighted community detection oracle-bound (the one Gelly library
@@ -452,7 +418,7 @@ object StreamParityQueries2 extends QuerySet {
     // carried anchor and then becomes the new anchor. Early fires emit
     // the full cumulative buffer (no purging); closing emits the
     // whole window.
-    // the 6-batch watermark walk: quarter cuts replicate flushedReplay
+    // the 6-batch watermark walk: quarter cuts replicate Replay.quarterChunks
     // (lo + (hi−lo)·q/4 in µs), per-batch max-ts in ms, wm at batch b =
     // cummax(batches < b) − 60 000; recursion carries last_fire per
     // open window and emits cumulative prefix aggregates at each fire

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.{Scratch, Tables}
+import graft.Tables
 import graft.streaming.{BroadcastState, Cep, CepDsl, Event, MatchRecognize, Replay, StateBootstrap, StateV2, StatefulOps, WindowOps}
-import graft.streaming.Replay.{latestPerKey, runAppend, runUpdate, spanOf, tsOf}
+import graft.streaming.Replay.{latestPerKey, spanOf, tsOf}
 
 /** Round-5 parity pack, part 3: the state BOOTSTRAP (write) path —
   * the last partial row of SURVEY §2.8 — oracle-bound.
@@ -32,7 +32,6 @@ object StreamParityQueries3 extends QuerySet {
     // merge path is load-bearing for nearly every output row.
     "q173_state_bootstrap" -> ((s, d) => {
       import s.implicits._
-      val base = Scratch.dir("bootstrap")
       val real = Tables.events(s, d).as[Event]
       val (lo, hi) = spanOf(real)
       val mid = tsOf(lo + (hi - lo) / 2)
@@ -41,22 +40,14 @@ object StreamParityQueries3 extends QuerySet {
       // batch "savepoint": keyed state computed from the first half
       val init = real.filter(col("ts") < lit(mid))
         .groupByKey(_.user_id)
-        .mapGroups { (u, it) =>
-          var (c, cents) = (0L, 0L)
-          it.foreach { e => c += 1; cents += math.round(e.value * 100) }
-          StateBootstrap.KeyAgg(u, c, cents)
-        }
+        .mapGroups((u, it) => StateBootstrap.KeyAgg(u, 0L, 0L).plus(it))
 
       // stream continuation: ONLY the second half replays
-      val (inDir, schema) = Replay.fileEpochs(
-        real.filter(col("ts") >= lit(mid)),
-        Seq(col("ts") < lit(cut34), col("ts") >= lit(cut34)),
-        base.toString)
-      val cont = StateBootstrap.runningAggBootstrapped(
-        Replay.stream(s, inDir, schema), init)
+      val ep = Replay.fileEpochs(real.filter(col("ts") >= lit(mid)),
+        Seq(col("ts") < lit(cut34), col("ts") >= lit(cut34)))
+      val cont = StateBootstrap.runningAggBootstrapped(ep.stream(s), init)
 
-      val touched = latestPerKey(
-        runUpdate(cont.toDF(), base.toString, s), col("user_id"))
+      val touched = latestPerKey(ep.runUpdate(cont.toDF()), col("user_id"))
       // untouched keys: bootstrapped state the stream never saw
       val untouched = init.toDF().join(touched.select("user_id"),
         Seq("user_id"), "left_anti")
@@ -89,17 +80,15 @@ object StreamParityQueries3 extends QuerySet {
     // Reference: windowing/triggers/ContinuousEventTimeTrigger.java.
     "q174_cont_trigger_stream" -> ((s, d) => {
       import s.implicits._
-      val base = Scratch.dir("cet")
-      val real = Tables.events(s, d).as[Event]
-        .map(e => e.copy(value = math.round(e.value * 100).toDouble))
+      val real = centsStream(Tables.events(s, d).as[Event])
       val endUs = 2_000_000_000_000_000L // window = [1e12, 2e12) ms
-      val ep = Replay.quarters(real, base.toString, (_, _) => Seq(
+      val ep = Replay.quarters(real, (_, _) => Seq(
         Replay.sentinel(-1L, endUs + 120_000_000L),       // closes the real window
         Replay.sentinel(-2L, endUs + Replay.DayUs)))      // runs the closing batch
       val fires = WindowOps.tumble(ep.stream(s),
         sizeMs = 1_000_000_000_000L, delay = "1 minute",
         trigger = WindowOps.ContinuousEventTimeTrigger(1L))
-      runAppend(fires.toDF(), base.toString, s)
+      ep.runAppend(fires.toDF())
         .filter(col("user_id") >= 0)
         .groupBy(col("user_id"), col("n"),
           expr("cast(sum_v as bigint)").as("cents"), col("closing"))
@@ -118,12 +107,10 @@ object StreamParityQueries3 extends QuerySet {
     // earlier — apply-before-merge, a dropped store merge, or
     // cross-batch leakage each break the hash.
     "q177_broadcast_state_stream" -> ((s, d) => {
-      val base = Scratch.dir("bstate")
-      import s.implicits._
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       BroadcastState.run(
           ep.streamDf(s),
-          StructType(Seq(StructField("user_id", LongType))), base.toString)(
+          StructType(Seq(StructField("user_id", LongType))), ep.dir)(
         extractRules = b => b
           .filter(col("event_type") === "error" && col("value") > 90)
           .select(col("user_id")).distinct())(
@@ -141,11 +128,9 @@ object StreamParityQueries3 extends QuerySet {
     // quarter replay as q136, against the identical ROW_NUMBER DESC
     // oracle — the v2 API must land on the v1 rows exactly.
     "q178_statev2_dedup_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("statev2")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       val ded = StateV2.dedupKeepLastV2(ep.stream(s))
-      latestPerKey(runUpdate(ded.toDF(), base.toString, s, StateV2.rocksDb),
+      latestPerKey(ep.runUpdate(ded.toDF(), StateV2.rocksDb),
           col("user_id"), col("event_type"))
         .select(col("user_id"), col("event_type"), col("event_id"),
           round(col("value"), 2).as("value"))
@@ -190,17 +175,12 @@ object StreamParityQueries3 extends QuerySet {
     // ListState must land on the v1 rows exactly. Cents mapping keeps
     // the running double sum exact (q134 trick).
     "q180_statev2_liststate" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("statev2l")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
-      val over = StateV2.boundedRowsOverV2(
-        ep.stream(s)
-          .map(e => e.copy(value = math.round(e.value * 100).toDouble)),
-        n = 5)
-      runAppend(over.toDF()
+      val ep = Replay.eventQuarters(s, d)
+      val over = StateV2.boundedRowsOverV2(centsStream(ep.stream(s)), n = 5)
+      ep.runAppend(over.toDF()
           .select(col("user_id"), col("event_id"),
             expr("cast(sum_prev as bigint)").as("cents_prev"), col("cnt_prev")),
-          base.toString, s, StateV2.rocksDb)
+          StateV2.rocksDb)
         .orderBy(col("user_id"), col("event_id"))
     }),
 
@@ -212,11 +192,9 @@ object StreamParityQueries3 extends QuerySet {
     // a lost map entry, a reset counter, or cross-batch leakage each
     // break the hash.
     "q181_statev2_mapstate" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("statev2m")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       val cnts = StateV2.typeCountsV2(ep.stream(s))
-      latestPerKey(runUpdate(cnts.toDF(), base.toString, s, StateV2.rocksDb),
+      latestPerKey(ep.runUpdate(cnts.toDF(), StateV2.rocksDb),
           col("user_id"), col("event_type"))
         .select(col("user_id"), col("event_type"), col("cnt"))
         .orderBy(col("user_id"), col("event_type"))
@@ -274,7 +252,6 @@ object StreamParityQueries3 extends QuerySet {
                  C AS C.event_type = 'purchase'
         )"""
       val parsed = MatchRecognize.parse(sql)
-      val base = Scratch.dir("starstream")
       val types = Set("view", "click", "purchase")
       val ev = Tables.events(s, d).as[Event].filter(e => types(e.event_type))
       val straddleTs = Cep.matchBatchSorted(ev, parsed.pattern, parsed.skip)
@@ -288,11 +265,10 @@ object StreamParityQueries3 extends QuerySet {
         bounds.sliding(2).map { case Seq(a, b) => col("ts") >= a && col("ts") < b }
           .toSeq :+
         (col("ts") >= bounds.last)
-      val (inDir, schema) = Replay.fileEpochs(ev, chunks, base.toString)
-      val matches = Cep.matchStream(Replay.stream(s, inDir, schema),
-        parsed.pattern, parsed.skip)
+      val ep = Replay.fileEpochs(ev, chunks)
+      val matches = Cep.matchStream(ep.stream(s), parsed.pattern, parsed.skip)
       val measures = CepDsl.compileMeasures[Event](parsed.measuresSrc, Event.fieldTable)
-      runAppend(Cep.selectMeasures(matches, parsed.partitionBy, measures), base.toString, s)
+      ep.runAppend(Cep.selectMeasures(matches, parsed.partitionBy, measures))
         .orderBy(col("user_id"), col("view_id"))
     }),
 
@@ -308,12 +284,10 @@ object StreamParityQueries3 extends QuerySet {
     // recursive CTE; a dropped state update, a batch-boundary leak,
     // or an off-by-one at exactly TTL each break the hash.
     "q190_ttl_dedup_stream" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("ttl")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       val ded = StatefulOps.dedupFirstEventTtl(
         ep.stream(s), ttlUs = 172_800_000_000L) // 48 h
-      runAppend(ded.toDF(), base.toString, s)
+      ep.runAppend(ded.toDF())
         .select(col("user_id"), col("event_type"), col("event_id"))
         .orderBy(col("user_id"), col("event_type"), col("event_id"))
     }),
@@ -327,11 +301,9 @@ object StreamParityQueries3 extends QuerySet {
     // the wrong operand order, a lost champion at a batch boundary,
     // or an emit on non-change each break the hash.
     "q200_statev2_reducing" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("statev2r")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       val mx = StateV2.runningMaxV2(ep.stream(s))
-      latestPerKey(runUpdate(mx.toDF(), base.toString, s, StateV2.rocksDb),
+      latestPerKey(ep.runUpdate(mx.toDF(), StateV2.rocksDb),
           col("user_id"))
         .select(col("user_id"), col("event_id"),
           round(col("value"), 2).as("value"))
@@ -349,15 +321,13 @@ object StreamParityQueries3 extends QuerySet {
     // the (q, user) hash. Reference: `flink-queryable-state/.../
     // QueryableStateClient.java` + `KeyedStream.java:1005`.
     "q182_queryable_history" -> ((s, d) => {
-      import s.implicits._
-      val base = Scratch.dir("qhist")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString)
+      val ep = Replay.eventQuarters(s, d)
       val counts = ep.stream(s).toDF()
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"),
           sum(expr("cast(round(value*100) as bigint)")).as("cents_v"))
-      val snapDir = s"$base/snap"
-      Replay.runBatches(counts, s"$base/ck", "complete") { (b, id) =>
+      val snapDir = s"${ep.dir}/snap"
+      ep.runBatches(counts, "complete") { (b, id) =>
         // the point-lookup surface at this boundary = the full table
         b.withColumn("q", lit(id + 1)).write.mode("append").parquet(snapDir)
       }
@@ -365,6 +335,30 @@ object StreamParityQueries3 extends QuerySet {
         .select(col("q"), col("user_id"), col("n"), col("cents_v"))
         .orderBy(col("q"), col("user_id"))
     }))
+
+  /** View, greedy clicks, then the first purchase within the hour: q189, and
+    * q198 streamed. */
+  private val matchStarSql =
+    evCte +
+      """,
+        |v AS (SELECT * FROM ev WHERE event_type = 'view'),
+        |p AS (SELECT * FROM ev WHERE event_type = 'purchase'),
+        |k AS (SELECT * FROM ev WHERE event_type = 'click'),
+        |fp AS (
+        |  SELECT v.user_id, v.event_id AS view_id, v.ts AS vts,
+        |    p.ts AS pts, p.event_id AS buy_id,
+        |    row_number() OVER (PARTITION BY v.user_id, v.event_id
+        |      ORDER BY p.ts, p.event_id) AS rn
+        |  FROM v JOIN p ON p.user_id = v.user_id
+        |   AND (p.ts > v.ts OR (p.ts = v.ts AND p.event_id > v.event_id))
+        |   AND epoch_us(p.ts) - epoch_us(v.ts) <= 3600000000)
+        |SELECT f.user_id, f.view_id,
+        |  (SELECT count(*) FROM k WHERE k.user_id = f.user_id
+        |     AND (k.ts > f.vts OR (k.ts = f.vts AND k.event_id > f.view_id))
+        |     AND (k.ts < f.pts OR (k.ts = f.pts AND k.event_id < f.buy_id)))
+        |    ::BIGINT AS n_clicks,
+        |  f.buy_id
+        |FROM fp f WHERE rn = 1 ORDER BY user_id, view_id""".stripMargin
 
   val oracle: Map[String, String] = Map(
     // one-shot truth over the WHOLE table: bootstrap half + stream half
@@ -423,12 +417,7 @@ object StreamParityQueries3 extends QuerySet {
 
     // identical SQL to q136/q55: the v2 API's final state must equal
     // the batch keep-last rows
-    "q178_statev2_dedup_stream" -> (evCte +
-      """
-        |SELECT user_id, event_type, event_id, round(value,2) AS value FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-        |    ORDER BY ts DESC, event_id DESC) AS rn FROM ev)
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
+    "q178_statev2_dedup_stream" -> EventQueries.dedupLastSql,
 
     // first purchase-or-error after each view within the hour; the
     // classifier split is the CASE over the winner's type
@@ -450,15 +439,7 @@ object StreamParityQueries3 extends QuerySet {
 
     // identical frame to q134: the v2 ListState must land on the SQL
     // ROWS-frame rows exactly
-    "q180_statev2_liststate" -> (evCte +
-      """
-        |SELECT user_id, event_id,
-        |  (sum(CAST(round(value*100) AS BIGINT)) OVER w)::BIGINT AS cents_prev,
-        |  (count(*) OVER w)::INT AS cnt_prev
-        |FROM ev
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin),
+    "q180_statev2_liststate" -> EventQueries.rowsOverSql,
 
     // one-shot GROUP BY truth for the MapState changelog's final state
     "q181_statev2_mapstate" -> (evCte +
@@ -469,49 +450,11 @@ object StreamParityQueries3 extends QuerySet {
 
     // first purchase after each view within the hour; the greedy B*
     // binding set = clicks strictly between them in (ts,event_id) order
-    "q189_match_star" -> (evCte +
-      """,
-        |v AS (SELECT * FROM ev WHERE event_type = 'view'),
-        |p AS (SELECT * FROM ev WHERE event_type = 'purchase'),
-        |k AS (SELECT * FROM ev WHERE event_type = 'click'),
-        |fp AS (
-        |  SELECT v.user_id, v.event_id AS view_id, v.ts AS vts,
-        |    p.ts AS pts, p.event_id AS buy_id,
-        |    row_number() OVER (PARTITION BY v.user_id, v.event_id
-        |      ORDER BY p.ts, p.event_id) AS rn
-        |  FROM v JOIN p ON p.user_id = v.user_id
-        |   AND (p.ts > v.ts OR (p.ts = v.ts AND p.event_id > v.event_id))
-        |   AND epoch_us(p.ts) - epoch_us(v.ts) <= 3600000000)
-        |SELECT f.user_id, f.view_id,
-        |  (SELECT count(*) FROM k WHERE k.user_id = f.user_id
-        |     AND (k.ts > f.vts OR (k.ts = f.vts AND k.event_id > f.view_id))
-        |     AND (k.ts < f.pts OR (k.ts = f.pts AND k.event_id < f.buy_id)))
-        |    ::BIGINT AS n_clicks,
-        |  f.buy_id
-        |FROM fp f WHERE rn = 1 ORDER BY user_id, view_id""".stripMargin),
+    "q189_match_star" -> matchStarSql,
 
     // identical SQL to q189: the streaming replay must land on the
     // batch star rows exactly
-    "q198_match_star_stream" -> (evCte +
-      """,
-        |v AS (SELECT * FROM ev WHERE event_type = 'view'),
-        |p AS (SELECT * FROM ev WHERE event_type = 'purchase'),
-        |k AS (SELECT * FROM ev WHERE event_type = 'click'),
-        |fp AS (
-        |  SELECT v.user_id, v.event_id AS view_id, v.ts AS vts,
-        |    p.ts AS pts, p.event_id AS buy_id,
-        |    row_number() OVER (PARTITION BY v.user_id, v.event_id
-        |      ORDER BY p.ts, p.event_id) AS rn
-        |  FROM v JOIN p ON p.user_id = v.user_id
-        |   AND (p.ts > v.ts OR (p.ts = v.ts AND p.event_id > v.event_id))
-        |   AND epoch_us(p.ts) - epoch_us(v.ts) <= 3600000000)
-        |SELECT f.user_id, f.view_id,
-        |  (SELECT count(*) FROM k WHERE k.user_id = f.user_id
-        |     AND (k.ts > f.vts OR (k.ts = f.vts AND k.event_id > f.view_id))
-        |     AND (k.ts < f.pts OR (k.ts = f.pts AND k.event_id < f.buy_id)))
-        |    ::BIGINT AS n_clicks,
-        |  f.buy_id
-        |FROM fp f WHERE rn = 1 ORDER BY user_id, view_id""".stripMargin),
+    "q198_match_star_stream" -> matchStarSql,
 
     // the TTL chain walked explicitly: seed = first row per key, step
     // = earliest row more than TTL past the last kept one (argmin via

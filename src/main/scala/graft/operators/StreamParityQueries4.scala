@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.{Scratch, Tables}
+import graft.Tables
 import graft.streaming.{QuotaSampler, Replay}
-import graft.streaming.Replay.{runAppend, runUpdate}
 
 /** Round-7 parity pack: streaming corpus-curation additions. */
 object StreamParityQueries4 extends QuerySet {
@@ -20,14 +19,13 @@ object StreamParityQueries4 extends QuerySet {
     // key partitioning leaks rows across languages.
     "q207_stream_quota" -> ((s, d) => {
       import s.implicits._
-      val base = Scratch.dir("quota")
       val docs = Tables.documents(s, d)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       val ep = Replay.idThirds(docs.select(col("doc_id"), col("lang").as("k")),
-        "doc_id", 0L, maxId, base.toString)
+        "doc_id", 0L, maxId)
       val admitted = QuotaSampler.admitFirstN(
         ep.streamDf(s).as[QuotaSampler.DocKey], 40)
-      runAppend(admitted.toDF(), base.toString, s)
+      ep.runAppend(admitted.toDF())
         .select(col("doc_id"), col("k").as("lang"))
         .orderBy(col("doc_id"))
     }),
@@ -39,11 +37,7 @@ object StreamParityQueries4 extends QuerySet {
     // double-flush sentinels emit the tail. Oracle = the slide-
     // aligned window algebra of q208's HOP branch.
     "q239_hop_window_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.Event
-      val base = Scratch.dir("hopstream")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        Replay.flushes(2, 4))
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(2, 4))
       val agg = ep.stream(s)
         .withWatermark("ts", "1 minute")
         .groupBy(window(col("ts"), "1 day", "6 hours").as("w"),
@@ -52,7 +46,7 @@ object StreamParityQueries4 extends QuerySet {
           sum(expr("cast(round(value*100) as bigint)")).as("cents_v"))
         .select(col("w.start").as("ws"), col("w.end").as("we"),
           col("event_type"), col("n"), col("cents_v"))
-      runAppend(agg, base.toString, s)
+      ep.runAppend(agg)
         .filter(col("event_type") =!= "flush")
         .orderBy(col("event_type"), col("ws"))
     }),
@@ -65,11 +59,7 @@ object StreamParityQueries4 extends QuerySet {
     // q129's double-flush sentinels; dedup state evicts because the
     // window struct on the watermarked column is among the keys.
     "q238_distinct_window_stream" -> ((s, d) => {
-      import s.implicits._
-      import graft.streaming.Event
-      val base = Scratch.dir("distinctwin")
-      val ep = Replay.quarters(Tables.events(s, d).as[Event], base.toString,
-        Replay.flushes(2, 4))
+      val ep = Replay.eventQuarters(s, d, Replay.flushes(2, 4))
       val ded = ep.stream(s)
         .withWatermark("ts", "1 minute")
         .select(window(col("ts"), "1 day").as("w"), col("event_type"),
@@ -78,7 +68,7 @@ object StreamParityQueries4 extends QuerySet {
       val agg = ded.groupBy(col("w"), col("event_type"))
         .agg(count(lit(1)).as("n_users"))
         .select(col("w.start").as("ws"), col("event_type"), col("n_users"))
-      runAppend(agg, base.toString, s)
+      ep.runAppend(agg)
         .filter(col("event_type") =!= "flush")
         .orderBy(col("ws"), col("event_type"))
     }),
@@ -94,7 +84,6 @@ object StreamParityQueries4 extends QuerySet {
     // update mode over- or under-emits, state resets between batches,
     // or the late quarter fails to re-fire its windows.
     "q233_window_update_history" -> ((s, d) => {
-      val base = Scratch.dir("updhist")
       val ev = Tables.events(s, d).select(col("event_type"),
         expr("cast(round(value*100) as bigint)").as("cents"), col("ts"),
         unix_micros(col("ts")).as("tu"))
@@ -106,13 +95,13 @@ object StreamParityQueries4 extends QuerySet {
         col("tu") < cut(1),
         col("tu") >= cut(2) && col("tu") < cut(3),
         col("tu") >= cut(3))
-      val (inDir, schema) = Replay.fileEpochs(ev.drop("tu"), chunks, base.toString)
-      val agg = Replay.streamDf(s, inDir, schema)
+      val ep = Replay.fileEpochs(ev.drop("tu"), chunks)
+      val agg = ep.streamDf(s)
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_v"))
         .select(col("window.start").as("ws"), col("event_type"),
           col("n"), col("cents_v"))
-      runUpdate(agg, base.toString, s)
+      ep.runUpdate(agg)
         .orderBy(col("ws"), col("event_type"), col("batch_id"))
     }),
 
@@ -129,9 +118,7 @@ object StreamParityQueries4 extends QuerySet {
     // by cluster id so a micro-batch touches only its clusters'
     // members — never the whole corpus.
     "q213_semdedup_stream" -> ((s, d) => {
-      val base = Scratch.dir("semdedupstream")
-      val (lower, ep) =
-        Replay.snapshotSplit(Tables.embeddings(s, d), "vec_id", base.toString)
+      val (lower, ep) = Replay.snapshotSplit(Tables.embeddings(s, d), "vec_id")
       val corpusQ = VectorQueries.quantI8(lower, "vec_id")
       val seeds = corpusQ.orderBy(col("vec_id")).limit(32).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
@@ -150,7 +137,7 @@ object StreamParityQueries4 extends QuerySet {
         .filter(cos >= 0.4)
         .select(col("vec_id"))
         .dropDuplicates("vec_id")
-      runAppend(flagged, base.toString, s).orderBy(col("vec_id"))
+      ep.runAppend(flagged).orderBy(col("vec_id"))
     }),
 
     // STREAMING Gaussian outlier gate — q261's Mahalanobis scorer in
@@ -166,9 +153,7 @@ object StreamParityQueries4 extends QuerySet {
     // frozen moments drift between batches, the gate is recomputed
     // per-batch, or a batch boundary splits a score.
     "q263_gaussian_gate_stream" -> ((s, d) => {
-      val base = Scratch.dir("gaussgate")
-      val (lower, ep) =
-        Replay.snapshotSplit(Tables.embeddings(s, d), "vec_id", base.toString)
+      val (lower, ep) = Replay.snapshotSplit(Tables.embeddings(s, d), "vec_id")
       val corpusCodes = VectorQueries.gridCodes(lower)
       val m = VectorQueries.gaussianMoments(corpusCodes)
       val k = math.min(math.max(m.n / 10, 1L), Int.MaxValue.toLong).toInt
@@ -181,7 +166,7 @@ object StreamParityQueries4 extends QuerySet {
         .withColumn("score", VectorQueries.mahalanobis(col("xs"), m))
         .filter(col("score") > gate)
         .select(col("vec_id"), col("label"), col("score"))
-      runAppend(scored, base.toString, s).orderBy(col("vec_id"))
+      ep.runAppend(scored).orderBy(col("vec_id"))
     })
   )
 

@@ -82,6 +82,16 @@ object UdxQueries extends QuerySet {
     })
   )
 
+  /** Space tokens of the first 50 docs: q149, and q223's LATERAL
+    * TABLE text. */
+  private[operators] val tokenizeSql =
+    """SELECT doc_id, s.idx AS idx, s.tok AS tok FROM (
+        |  SELECT doc_id,
+        |    unnest(list_transform(string_split(rtrim(text, ' '), ' '),
+        |      (t, i) -> struct_pack(idx := i - 1, tok := t))) AS s
+        |  FROM documents WHERE doc_id < 50 AND length(trim(text)) > 0)
+        |ORDER BY doc_id, s.idx""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q147_wavg_udaf" ->
       """SELECT l_returnflag,
@@ -91,13 +101,7 @@ object UdxQueries extends QuerySet {
     "q148_geomean_udaf" ->
       """SELECT l_linestatus, round(exp(avg(ln(l_quantity::DOUBLE))), 2) AS gmean2
         |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-    "q149_udtf_tokenize" ->
-      """SELECT doc_id, s.idx AS idx, s.tok AS tok FROM (
-        |  SELECT doc_id,
-        |    unnest(list_transform(string_split(rtrim(text, ' '), ' '),
-        |      (t, i) -> struct_pack(idx := i - 1, tok := t))) AS s
-        |  FROM documents WHERE doc_id < 50 AND length(trim(text)) > 0)
-        |ORDER BY doc_id, s.idx""".stripMargin,
+    "q149_udtf_tokenize" -> tokenizeSql,
     "q185_udtaf_top2" ->
       """SELECT user_id, cents, event_id, rnk::INT AS rnk FROM (
         |  SELECT user_id, CAST(round(value*100) AS BIGINT) AS cents, event_id,

@@ -653,6 +653,22 @@ object VectorQueries extends QuerySet {
       s"(CASE WHEN $e[${i + 1}] > 0 THEN $v::BIGINT ELSE 0::BIGINT END)"
     }.mkString("(", " | ", ")")
 
+  /** Exact top-5 cosine neighbours: q70, and q146 at nprobe = K. */
+  private val knnBruteSql =
+    s"""WITH pairs AS (
+         |  SELECT p.vec_id AS pid, c.vec_id AS cid,
+         |    p.embedding AS pe, c.embedding AS ce
+         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
+         |  WHERE p.vec_id <= 20),
+         |sims AS (
+         |  SELECT pid, cid, $cosineSql AS sim FROM pairs),
+         |ranked AS (
+         |  SELECT pid, cid, sim,
+         |    row_number() OVER (PARTITION BY pid ORDER BY sim DESC, cid) AS rk
+         |  FROM sims)
+         |SELECT pid, rk, cid, round(sim, 6) AS sim6
+         |FROM ranked WHERE rk <= 5 ORDER BY pid, rk""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q333_binary_quant_ann" ->
       s"""WITH coded AS (
@@ -678,20 +694,7 @@ object VectorQueries extends QuerySet {
          |  FROM rer)
          |SELECT pid, rk, cid, ham, round(sim, 6) AS sim6
          |FROM ranked WHERE rk <= 5 ORDER BY pid, rk""".stripMargin,
-    "q70_knn_brute" ->
-      s"""WITH pairs AS (
-         |  SELECT p.vec_id AS pid, c.vec_id AS cid,
-         |    p.embedding AS pe, c.embedding AS ce
-         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-         |  WHERE p.vec_id <= 20),
-         |sims AS (
-         |  SELECT pid, cid, $cosineSql AS sim FROM pairs),
-         |ranked AS (
-         |  SELECT pid, cid, sim,
-         |    row_number() OVER (PARTITION BY pid ORDER BY sim DESC, cid) AS rk
-         |  FROM sims)
-         |SELECT pid, rk, cid, round(sim, 6) AS sim6
-         |FROM ranked WHERE rk <= 5 ORDER BY pid, rk""".stripMargin,
+    "q70_knn_brute" -> knnBruteSql,
     "q73_embed_neardup" -> {
       val bandsSql = (0 until nBands).map { b =>
         val sig = (0 until planesPerBand).map { j =>
@@ -836,20 +839,7 @@ object VectorQueries extends QuerySet {
     "q211_pq_ann" -> flatAdcSql(plainDeCte, " WHERE rn = 1"),
 
     // nprobe=K ≡ brute force: the oracle is exactly q70's.
-    "q146_ivf_exact" ->
-      s"""WITH pairs AS (
-         |  SELECT p.vec_id AS pid, c.vec_id AS cid,
-         |    p.embedding AS pe, c.embedding AS ce
-         |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-         |  WHERE p.vec_id <= 20),
-         |sims AS (
-         |  SELECT pid, cid, $cosineSql AS sim FROM pairs),
-         |ranked AS (
-         |  SELECT pid, cid, sim,
-         |    row_number() OVER (PARTITION BY pid ORDER BY sim DESC, cid) AS rk
-         |  FROM sims)
-         |SELECT pid, rk, cid, round(sim, 6) AS sim6
-         |FROM ranked WHERE rk <= 5 ORDER BY pid, rk""".stripMargin,
+    "q146_ivf_exact" -> knnBruteSql,
 
     // The same fixed-point pipeline recomputed relationally: grid
     // codes, per-dim integer moments, rounded mean (2Σx+n)//(2n),

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.{Event, Replay, StreamJoins}
 
 package object operators {
   /** A catalog query: (session, sf-dir) => result. Matches the driver
@@ -27,6 +28,27 @@ package object operators {
   private[operators] val evCte =
     """WITH ev AS (SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts,
       |            user_id, event_type, value, props FROM events)""".stripMargin
+
+  // ---- streaming replay helpers, shared by the streaming-parity queries
+
+  /** Whole-cent prescale (the q134 trick): each event's value as whole
+    * cents, so running sums and rankings stay exact integers on both
+    * sides of the oracle compare. */
+  private[operators] def centsStream(ev: Dataset[Event]): Dataset[Event] =
+    ev.map(e => e.copy(value = math.round(e.value * 100).toDouble))(Encoders.product[Event])
+
+  /** The replay's purchases (`p_id`) interval-joined to its errors
+    * (`e_id`) of the same user within ±10 minutes, 1-minute watermark
+    * delay: q132 (inner), q145, q156 and q170 (outer). */
+  private[operators] def purchaseErrorJoin(s: SparkSession, ep: Replay.Epochs,
+      joinType: String = "inner"): DataFrame = {
+    def side(tpe: String, outCol: String) =
+      ep.stream(s).toDF()
+        .filter(col("event_type") === tpe)
+        .select(col("user_id"), col("ts"), col("event_id").as(outCol))
+    StreamJoins.intervalJoin(side("purchase", "p_id"), side("error", "e_id"),
+      "user_id", "ts", "1 minute", "10 MINUTES", "10 MINUTES", joinType)
+  }
 
   /** Exact revenue Σ l_extendedprice·(1 − l_discount) ×10⁴ as a BIGINT:
     * each product of two 2-decimal values has exactly 4 decimals, so

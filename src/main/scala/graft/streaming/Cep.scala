@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Complex event processing: a Flink-CEP-style pattern API compiled to
   * a small NFA, runnable over batch groups and keyed streams.
@@ -960,28 +959,15 @@ object Cep {
                   skip: AfterMatchSkip = NoSkip,
                   guard: CepGuard = CepGuard())
       : Dataset[(Long, Map[String, Vector[Event]])] = {
-    import events.sparkSession.implicits._
-    implicit val stateEnc: Encoder[List[PartialMatch[Event]]] =
-      Encoders.kryo[List[PartialMatch[Event]]]
-    implicit val outEnc: Encoder[(Long, Map[String, Vector[Event]])] =
-      Encoders.kryo[(Long, Map[String, Vector[Event]])]
     val shedAcc = events.sparkSession.sparkContext
       .longAccumulator("graft.cep.shed_starts")
     val userDrop = guard.onDrop
     val metered = guard.copy(onDrop = n => { shedAcc.add(n); userDrop(n) })
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[PartialMatch[Event]], (Long, Map[String, Vector[Event]])](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (user, rows, state: GroupState[List[PartialMatch[Event]]]) =>
-          val sorted = rows.toList.sortBy(e => (Event.micros(e.ts), e.event_id))
-            .map(e => (Event.micros(e.ts), e))
-          val prev = state.getOption.getOrElse(Nil)
-          val (done, open, _) =
-            advance(pattern, prev, sorted.iterator, skip, nextSeqBase(prev),
-              guard = metered)
-          state.update(open)
-          done.map(m => (user, m)).iterator
-      }
+    implicit val outEnc: Encoder[(Long, Map[String, Vector[Event]])] =
+      Encoders.kryo[(Long, Map[String, Vector[Event]])]
+    runStream(events, pattern, skip, metered) { (user, done, _) =>
+      done.map(m => (user, m)).iterator
+    }
   }
 
   /** Streaming CEP with the timed-out side channel (Flink emits
@@ -994,23 +980,26 @@ object Cep {
   def matchStreamWithTimeouts(events: Dataset[Event], pattern: Pattern[Event],
                               skip: AfterMatchSkip = NoSkip)
       : Dataset[(Long, Map[String, Vector[Event]], Boolean)] = {
-    import events.sparkSession.implicits._
-    implicit val stateEnc: Encoder[List[PartialMatch[Event]]] =
-      Encoders.kryo[List[PartialMatch[Event]]]
     implicit val outEnc: Encoder[(Long, Map[String, Vector[Event]], Boolean)] =
       Encoders.kryo[(Long, Map[String, Vector[Event]], Boolean)]
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[PartialMatch[Event]], (Long, Map[String, Vector[Event]], Boolean)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (user, rows, state: GroupState[List[PartialMatch[Event]]]) =>
-          val sorted = rows.toList.sortBy(e => (Event.micros(e.ts), e.event_id))
-            .map(e => (Event.micros(e.ts), e))
-          val prev = state.getOption.getOrElse(Nil)
-          val (done, open, expired) =
-            advance(pattern, prev, sorted.iterator, skip, nextSeqBase(prev))
-          state.update(open)
-          (done.map(m => (user, m, false)) ++
-            expired.map(p => (user, p.bindings, true))).iterator
-      }
+    runStream(events, pattern, skip, CepGuard()) { (user, done, expired) =>
+      (done.map(m => (user, m, false)) ++
+        expired.map(p => (user, p.bindings, true))).iterator
+    }
   }
+
+  /** The one stream runner: per user, the batch's events in event-time
+    * order advance the partials kept in state; `emit` turns the key's
+    * completed matches and expired partials into output rows. */
+  private def runStream[O: Encoder](events: Dataset[Event], pattern: Pattern[Event],
+      skip: AfterMatchSkip, guard: CepGuard)(
+      emit: (Long, List[Map[String, Vector[Event]]], List[PartialMatch[Event]]) => Iterator[O])
+      : Dataset[O] =
+    StatefulOps.perUser[List[PartialMatch[Event]], O](events) { (user, prev, rows) =>
+      val partials = prev.getOrElse(Nil)
+      val (done, open, expired) =
+        advance(pattern, partials, rows.iterator.map(e => (Event.micros(e.ts), e)), skip,
+          nextSeqBase(partials), guard = guard)
+      (emit(user, done, expired), open)
+    }
 }

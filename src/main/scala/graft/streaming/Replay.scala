@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
@@ -8,17 +8,18 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, max, min, row_number}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-import graft.{Par, Tables}
+import graft.{Par, Scratch, Tables}
 
 /** Epoch replay: turns a finite table into a multi-epoch file stream
   * and runs a stream over it to completion — the harness behind every
   * streaming-vs-oracle parity query. The replay proves that keyed state
   * carries across micro-batches, so ONE policy decides the epochs.
   *
-  * Epoch shapes:
+  * Epoch shapes, each returning an [[Epochs]]:
   *  - `quarters`: the four event-time quarters of an event table, then
   *    one epoch per caller-supplied sentinel event (drain/flush rows
-  *    that push the watermark past the data);
+  *    that push the watermark past the data); `eventQuarters` opens it
+  *    over the events table;
   *  - `snapshotSplit`: the lower half of the ids stays a frozen batch
   *    snapshot, the upper half streams as three id-range epochs
   *    (`idThirds`);
@@ -26,21 +27,24 @@ import graft.{Par, Tables}
   *    (a straddle boundary, a late quarter, a half-plus-quarter
   *    continuation, non-event tables).
   *
-  * Sinks: `runAppend` (append mode to parquet, read back), `runUpdate`
-  * (update mode through foreachBatch, each refresh tagged with its
-  * batch id, reduced by `latestPerKey`), and `runBatches`, the one
-  * foreachBatch-to-termination driver under Trigger.AvailableNow that
-  * `runUpdate` and the hand-rolled per-batch sinks build on.
+  * Sinks are methods of the [[Epochs]]: `runAppend` (append mode to
+  * parquet, read back), `runUpdate` (update mode through foreachBatch,
+  * each refresh tagged with its batch id, reduced by `latestPerKey`),
+  * and `runBatches`, the one foreachBatch-to-termination driver under
+  * Trigger.AvailableNow that `runUpdate` and the hand-rolled per-batch
+  * sinks build on.
   *
-  * Each epoch is written as ONE parquet file (coalesce(1) is replay
-  * fidelity, not an operator choice: several part files per epoch
-  * would split it across micro-batches in undefined file order) with
-  * an explicitly increasing modification time, so the file source's
+  * Each epoch is written as ONE file (coalesce(1) is replay fidelity,
+  * not an operator choice: several part files per epoch would split it
+  * across micro-batches in undefined file order) with an explicitly
+  * increasing modification time, so the file source's
   * oldest-modtime-first order under maxFilesPerTrigger=1 replays the
   * epochs as consecutive micro-batches. An empty epoch is one empty
   * file (Spark writes the lone partition's file even without rows), so
   * it still runs as a 0-row micro-batch and batch ids equal epoch
-  * indices.
+  * indices. Epochs are parquet unless `quarters` is given another
+  * format: the DDL stream queries read their tables as csv or
+  * graft-avro, and their epochs are written through the same writer.
   *
   * Sentinel rows (user_id -1, event_id < 0, far-future ts) are dropped
   * at SINK READ, never inside the streaming plan: a filter on them —
@@ -52,12 +56,75 @@ object Replay {
 
   val DayUs: Long = 86400L * 1000000L
 
-  /** A written replay: the file-source directory, its schema, and the
-    * replayed key span — event-time µs for `quarters`, ids for
-    * `idThirds`. */
-  final case class Epochs(in: String, schema: StructType, lo: Long, hi: Long) {
-    def stream(s: SparkSession): Dataset[Event] = Replay.stream(s, in, schema)
-    def streamDf(s: SparkSession): DataFrame = Replay.streamDf(s, in, schema)
+  /** A written replay and the handle its streams and sinks run
+    * through. The replay owns `dir`, a fresh `graft.Scratch`
+    * directory laid out as:
+    *  - `in/`: one file per epoch, `chunk_NN.<format extension>`,
+    *    modification times increasing with the epoch index;
+    *  - `stage_i/`: the write of epoch i before its file moves to `in/`;
+    *  - `ck/`: the checkpoint of the sinks below;
+    *  - `out/`: what `runAppend` and `runUpdate` write and read back.
+    * A caller that keeps other files beside the replay (a JDBC db, a
+    * manifest table, a snapshot dir) puts them under `dir` too.
+    * `schema` is the epochs' schema as the file source reads it (every
+    * column nullable), `format` their file format, and `lo`/`hi` the
+    * replayed key span: event-time µs for `quarters`, ids for
+    * `idThirds`, 0 for `fileEpochs`. */
+  final case class Epochs(dir: String, schema: StructType, format: String,
+      lo: Long = 0L, hi: Long = 0L) {
+
+    /** The file-source directory. */
+    def in: String = s"$dir/in"
+
+    /** The epochs as a one-file-per-trigger stream. */
+    def streamDf(s: SparkSession): DataFrame =
+      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .format(format).load(in)
+
+    /** [[streamDf]] typed as events. */
+    def stream(s: SparkSession): Dataset[Event] =
+      streamDf(s).as[Event](Encoders.product[Event])
+
+    /** Run an append-mode streaming frame into a parquet `out/`, read
+      * it back. `conf` applies to this stream only (see [[started]]). */
+    def runAppend(df: DataFrame, conf: Map[String, String] = Map.empty): DataFrame = {
+      val out = s"$dir/out"
+      val q = started(df.sparkSession, conf) {
+        df.writeStream.option("checkpointLocation", s"$dir/ck")
+          .outputMode("append").format("parquet").option("path", out)
+          .trigger(Trigger.AvailableNow()).start()
+      }
+      q.awaitTermination()
+      Tables.read(df.sparkSession, out)
+    }
+
+    /** Run an update-mode streaming frame via foreachBatch (parquet
+      * has no update sink): every per-batch refresh is appended to
+      * `out/` tagged with its batchId; the caller reduces to
+      * newest-emission-per-key. `conf` applies to this stream only. */
+    def runUpdate(df: DataFrame, conf: Map[String, String] = Map.empty): DataFrame = {
+      val out = s"$dir/out"
+      runBatches(df, "update", conf) { (b, id) =>
+        b.withColumn("batch_id", lit(id)).write.mode("append").parquet(out)
+      }
+      Tables.read(df.sparkSession, out)
+    }
+
+    /** Run `df` to termination under Trigger.AvailableNow, handing
+      * every micro-batch and its batch id to `f`; returns the finished
+      * query (its progress log). The checkpoint is `ck/`. `conf`
+      * applies to this stream only (see [[started]]), not to the
+      * caller's session that `f` may use. */
+    def runBatches(df: DataFrame, outputMode: String = "append",
+        conf: Map[String, String] = Map.empty)(
+        f: (DataFrame, Long) => Unit): StreamingQuery = {
+      val q = started(df.sparkSession, conf) {
+        df.writeStream.option("checkpointLocation", s"$dir/ck").outputMode(outputMode)
+          .foreachBatch(f).trigger(Trigger.AvailableNow()).start()
+      }
+      q.awaitTermination()
+      q
+    }
   }
 
   /** µs since epoch → Timestamp, truncated to ms (the cut and sentinel
@@ -95,72 +162,80 @@ object Replay {
 
   /** The quarter replay of `real`: its four time quarters, then one
     * epoch per sentinel, in that order. `sentinels` gets the span of
-    * `real` (µs). */
-  def quarters(real: Dataset[Event], base: String,
-      sentinels: (Long, Long) => Seq[Event] = (_, _) => Nil): Epochs = {
+    * `real` (µs). Every epoch, sentinels included, is written through
+    * `project` as `format` (parquet, csv or graft-avro). */
+  def quarters(real: Dataset[Event],
+      sentinels: (Long, Long) => Seq[Event] = (_, _) => Nil,
+      format: String = "parquet",
+      project: DataFrame => DataFrame = identity): Epochs = {
     val (lo, hi) = spanOf(real)
     val cols = real.columns.map(col)
     val tail = sentinels(lo, hi).map(e =>
       real.sparkSession.createDataset(Seq(e))(Encoders.product[Event]).select(cols: _*))
-    val (in, schema) =
-      writeEpochs(quarterChunks(lo, hi).map(real.filter) ++ tail, real.schema, base)
-    Epochs(in, schema, lo, hi)
+    val epochs = (quarterChunks(lo, hi).map(c => real.filter(c).toDF()) ++ tail).map(project)
+    writeEpochs(epochs, project(real.toDF()).schema, format).copy(lo = lo, hi = hi)
   }
+
+  /** [[quarters]] of the events table in the scale-factor dir `sf`. */
+  def eventQuarters(s: SparkSession, sf: String,
+      sentinels: (Long, Long) => Seq[Event] = (_, _) => Nil): Epochs =
+    quarters(Tables.events(s, sf).as[Event](Encoders.product[Event]), sentinels)
 
   /** Snapshot/stream split by id: rows below half the max id are the
     * frozen batch snapshot, the upper half is written as three id-range
     * epochs. Returns (snapshot, epochs). */
-  def snapshotSplit(ds: DataFrame, idCol: String, base: String): (DataFrame, Epochs) = {
+  def snapshotSplit(ds: DataFrame, idCol: String): (DataFrame, Epochs) = {
     val maxId = ds.agg(max(col(idCol))).head().getLong(0)
     val half = maxId / 2
     (ds.filter(col(idCol) < half),
-      idThirds(ds.filter(col(idCol) >= half), idCol, half, maxId, base))
+      idThirds(ds.filter(col(idCol) >= half), idCol, half, maxId))
   }
 
   /** Ids in [from, maxId] as three equal id-range epochs. */
-  def idThirds(ds: DataFrame, idCol: String, from: Long, maxId: Long,
-      base: String): Epochs = {
+  def idThirds(ds: DataFrame, idCol: String, from: Long, maxId: Long): Epochs = {
     val step = (maxId - from) / 3
     val (c1, c2, id) = (from + step, from + 2 * step, col(idCol))
-    val (in, schema) = fileEpochs(ds,
-      Seq(id >= from && id < c1, id >= c1 && id < c2, id >= c2), base)
-    Epochs(in, schema, from, maxId)
+    fileEpochs(ds, Seq(id >= from && id < c1, id >= c1 && id < c2, id >= c2))
+      .copy(lo = from, hi = maxId)
   }
 
-  /** Write `ds` into `base/in` as one epoch per condition; returns
-    * (inputDir, schema). Rows matching no condition are dropped — make
-    * the conditions a partition of the rows you mean to replay.
-    * Schema-generic: any Dataset replays (events, documents, ...). */
-  def fileEpochs(ds: Dataset[_], conds: Seq[Column], base: String)
-      : (String, StructType) =
-    writeEpochs(conds.map(c => ds.filter(c)), ds.schema, base)
+  /** `ds` as one parquet epoch per condition. Rows matching no
+    * condition are dropped — make the conditions a partition of the
+    * rows you mean to replay. Schema-generic: any Dataset replays
+    * (events, documents, ...). */
+  def fileEpochs(ds: Dataset[_], conds: Seq[Column]): Epochs =
+    writeEpochs(conds.map(c => ds.filter(c)), ds.schema, "parquet")
 
+  /** The one epoch writer: a fresh replay dir, and epoch i as the file
+    * `in/chunk_<i>` in `format`. */
   private def writeEpochs(epochs: Seq[Dataset[_]], schema: StructType,
-      base: String): (String, StructType) = {
-    val in = s"$base/in"
-    Files.createDirectories(Paths.get(in))
+      format: String): Epochs = {
+    val dir = Scratch.dir("replay").toString
+    val in = Files.createDirectories(Paths.get(dir, "in"))
     // epochs are independent single-task write jobs: overlap them (at a
     // 10 M-row replay the serial writes were most of the prep time)
-    Par.run(epochs.zipWithIndex.map { case (ep, i) => () => writeEpoch(ep, i, base, in) })
+    Par.run(epochs.zipWithIndex.map { case (ep, i) => () => writeEpoch(ep, i, dir, in, format) })
     // the file source reads every column as nullable
-    (in, nullable(schema).asInstanceOf[StructType])
+    Epochs(dir, nullable(schema).asInstanceOf[StructType], format)
   }
 
-  private def writeEpoch(ep: Dataset[_], i: Int, base: String, in: String): Unit = {
-    val stage = Paths.get(s"$base/stage_$i")
+  private def writeEpoch(ep: Dataset[_], i: Int, dir: String, in: Path,
+      format: String): Unit = {
+    val stage = Paths.get(dir, s"stage_$i")
     // small row groups: an epoch is ONE file, and parquet assigns a row
     // group to the byte-range split holding its midpoint — one
     // default-sized row group would make every micro-batch read
     // effectively serial no matter how many splits the planner creates
-    ep.coalesce(1).write.mode("overwrite")
+    ep.coalesce(1).write.mode("overwrite").format(format)
       .option("parquet.block.size", (4 * 1024 * 1024).toString)
-      .parquet(stage.toString)
+      .save(stage.toString)
     val listing = Files.list(stage)
     val part =
-      try listing.filter(p => p.getFileName.toString.endsWith(".parquet")).findFirst()
+      try listing.filter(p => p.getFileName.toString.startsWith("part-")).findFirst()
       finally listing.close() // Files.list holds a directory handle
     if (part.isPresent) {
-      val dst = Paths.get(in, f"chunk_$i%02d.parquet")
+      val name = part.get().getFileName.toString
+      val dst = in.resolve(f"chunk_$i%02d" + name.substring(name.lastIndexOf('.')))
       Files.move(part.get(), dst)
       // concurrent (or coarse-modtime) writes can TIE; pin an
       // explicitly increasing modtime per epoch index
@@ -177,18 +252,6 @@ object Replay {
     case other => other
   }
 
-  /** Open the replay as a one-file-per-trigger stream. */
-  def stream(spark: SparkSession, in: String, schema: StructType)
-      : Dataset[Event] = {
-    import spark.implicits._
-    streamDf(spark, in, schema).as[Event]
-  }
-
-  /** Untyped replay stream for non-Event schemas. */
-  def streamDf(spark: SparkSession, in: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-
   /** Start a stream with `conf` set on the session for the call only.
     * `start()` clones the session (StreamExecution's constructor calls
     * `cloneSession()`), so the stream keeps these values for its whole
@@ -204,35 +267,6 @@ object Replay {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None)    => s.conf.unset(k)
     }
-  }
-
-  /** Run an append-mode streaming frame to parquet, read it back.
-    * `conf` applies to this stream only (see [[started]]). */
-  def runAppend(df: DataFrame, base: String, s: SparkSession,
-      conf: Map[String, String] = Map.empty): DataFrame = {
-    val (out, ck) = (s"$base/out", s"$base/ck")
-    val q = started(s, conf) {
-      df.writeStream.option("checkpointLocation", ck)
-        .outputMode("append").format("parquet").option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    Tables.read(s, out)
-  }
-
-  /** Run `df` to termination under Trigger.AvailableNow, handing every
-    * micro-batch and its batch id to `f`; returns the finished query
-    * (its progress log). `conf` applies to this stream only (see
-    * [[started]]), not to the caller's session that `f` may use. */
-  def runBatches(df: DataFrame, ck: String, outputMode: String = "append",
-      conf: Map[String, String] = Map.empty)(
-      f: (DataFrame, Long) => Unit): StreamingQuery = {
-    val q = started(df.sparkSession, conf) {
-      df.writeStream.option("checkpointLocation", ck).outputMode(outputMode)
-        .foreachBatch(f).trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    q
   }
 
   /** Per-stream conf for streams whose keyed state is BOUNDED BY
@@ -260,19 +294,6 @@ object Replay {
   def boundedStateConf(stateCells: Long): Map[String, String] =
     Map("spark.sql.shuffle.partitions" ->
       math.max(1L, math.min(4L, (stateCells + 511) / 512)).toString)
-
-  /** Run an UPDATE-mode streaming frame via foreachBatch (parquet has
-    * no update sink): every per-batch refresh is appended tagged with
-    * its batchId; the caller reduces to newest-emission-per-key.
-    * `conf` applies to this stream only (see [[started]]). */
-  def runUpdate(df: DataFrame, base: String, s: SparkSession,
-      conf: Map[String, String] = Map.empty): DataFrame = {
-    val out = s"$base/out"
-    runBatches(df, s"$base/ck", "update", conf) { (b, id) =>
-      b.withColumn("batch_id", lit(id)).write.mode("append").parquet(out)
-    }
-    Tables.read(s, out)
-  }
 
   /** Newest emission per key group = the operator's final state. */
   def latestPerKey(hist: DataFrame, keys: Column*): DataFrame =

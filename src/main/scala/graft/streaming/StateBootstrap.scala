@@ -35,7 +35,15 @@ object StateBootstrap {
 
   /** Per-key running aggregate state: the shape both the batch
     * bootstrap job and the streaming continuation share. */
-  case class KeyAgg(user_id: Long, cnt: Long, cents: Long)
+  case class KeyAgg(user_id: Long, cnt: Long, cents: Long) {
+    /** This state with `rows` counted and their whole cents added: the
+      * one fold of the batch bootstrap and the stream continuation. */
+    def plus(rows: Iterator[Event]): KeyAgg = {
+      var (c, cs) = (cnt, cents)
+      rows.foreach { e => c += 1; cs += math.round(e.value * 100) }
+      KeyAgg(user_id, c, cs)
+    }
+  }
 
   /** Continue a per-user running (count, sum-of-cents) aggregate on
     * top of batch-bootstrapped state. Emits the refreshed state for a
@@ -54,13 +62,8 @@ object StateBootstrap {
         OutputMode.Update, GroupStateTimeout.NoTimeout,
         initialState = init.groupByKey(_.user_id)) {
         case (user, rows, state: GroupState[KeyAgg]) =>
-          val s0 = state.getOption.getOrElse(KeyAgg(user, 0L, 0L))
-          var (c, cents) = (s0.cnt, s0.cents)
-          var touched = false
-          rows.foreach { e =>
-            c += 1; cents += math.round(e.value * 100); touched = true
-          }
-          val s1 = KeyAgg(user, c, cents)
+          val touched = rows.hasNext
+          val s1 = state.getOption.getOrElse(KeyAgg(user, 0L, 0L)).plus(rows)
           state.update(s1)
           if (touched) Iterator(s1) else Iterator.empty
       }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom keyed stateful streaming operators — the reference's
@@ -27,6 +28,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StatefulOps {
 
   implicit private def eventEnc: Encoder[Event] = Encoders.product[Event]
+
+  /** The per-user skeleton of the count windows, the bounded OVERs and
+    * `Cep`'s stream runners: events grouped by user_id, append mode, no
+    * timeout, kryo state. `step` gets the key, its state (None on first
+    * sight) and the batch's rows in (event time, event_id) order, and
+    * returns the output rows and the key's new state. */
+  private[streaming] def perUser[S: ClassTag, O: Encoder](events: Dataset[Event])(
+      step: (Long, Option[S], List[Event]) => (Iterator[O], S)): Dataset[O] = {
+    implicit val stateEnc: Encoder[S] = Encoders.kryo[S]
+    events.groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        case (user, rows, state: GroupState[S]) =>
+          val (out, next) = step(user, state.getOption,
+            rows.toList.sortBy(e => (Event.micros(e.ts), e.event_id)))
+          state.update(next)
+          out
+      }
+  }
 
   // ---- keep-last dedup ----------------------------------------------
 
@@ -118,27 +137,17 @@ object StatefulOps {
     * within each batch): emits one aggregate row per completed window.
     * Flink analog: CountTumblingWindowAssigner + count trigger. */
   def countTumbleWindow(events: Dataset[Event], size: Int): Dataset[CountWindowAgg] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    implicit val stateEnc: Encoder[CountWinState] = Encoders.kryo[CountWinState]
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CountWinState, CountWindowAgg](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (user, rows, state: GroupState[CountWinState]) =>
-          val st = state.getOption.getOrElse(CountWinState(0L, Nil))
-          val all = st.buf ++ rows
-            .map(e => (Event.micros(e.ts), e.event_id, e.value))
-            .toList.sortBy { case (t, id, _) => (t, id) }
-          val (complete, rest) = all.splitAt(all.size - all.size % size)
-          val out = complete.grouped(size).zipWithIndex.map {
-            case (grp, i) =>
-              CountWindowAgg(user, st.nextW + i, grp.size,
-                grp.map(_._3).sum)
-          }.toList
-          state.update(CountWinState(st.nextW + out.size, rest))
-          out.iterator
-      }
+    import events.sparkSession.implicits._
+    perUser[CountWinState, CountWindowAgg](events) { (user, prev, rows) =>
+      val st = prev.getOrElse(CountWinState(0L, Nil))
+      val all = st.buf ++ rows.map(e => (Event.micros(e.ts), e.event_id, e.value))
+      val (complete, rest) = all.splitAt(all.size - all.size % size)
+      val out = complete.grouped(size).zipWithIndex.map {
+        case (grp, i) =>
+          CountWindowAgg(user, st.nextW + i, grp.size, grp.map(_._3).sum)
+      }.toList
+      (out.iterator, CountWinState(st.nextW + out.size, rest))
+    }
   }
 
   /** Sliding count windows (CountSlidingWindowAssigner): every `slide`
@@ -146,32 +155,21 @@ object StatefulOps {
     * while the stream warms up). State = last `size` rows + a counter. */
   def countSlideWindow(events: Dataset[Event], size: Int, slide: Int)
       : Dataset[CountWindowAgg] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    implicit val stateEnc: Encoder[CountWinState] = Encoders.kryo[CountWinState]
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CountWinState, CountWindowAgg](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (user, rows, state: GroupState[CountWinState]) =>
-          // nextW doubles as the total-events-seen counter here
-          val st = state.getOption.getOrElse(CountWinState(0L, Nil))
-          var seen = st.nextW
-          var buf = st.buf
-          val out = List.newBuilder[CountWindowAgg]
-          rows.toList
-            .map(e => (Event.micros(e.ts), e.event_id, e.value))
-            .sortBy { case (t, id, _) => (t, id) }
-            .foreach { r =>
-              buf = (buf :+ r).takeRight(size)
-              seen += 1
-              if (seen % slide == 0)
-                out += CountWindowAgg(user, seen / slide - 1, buf.size,
-                  buf.map(_._3).sum)
-            }
-          state.update(CountWinState(seen, buf))
-          out.result().iterator
+    import events.sparkSession.implicits._
+    perUser[CountWinState, CountWindowAgg](events) { (user, prev, rows) =>
+      // nextW doubles as the total-events-seen counter here
+      val st = prev.getOrElse(CountWinState(0L, Nil))
+      var seen = st.nextW
+      var buf = st.buf
+      val out = List.newBuilder[CountWindowAgg]
+      rows.foreach { e =>
+        buf = (buf :+ ((Event.micros(e.ts), e.event_id, e.value))).takeRight(size)
+        seen += 1
+        if (seen % slide == 0)
+          out += CountWindowAgg(user, seen / slide - 1, buf.size, buf.map(_._3).sum)
       }
+      (out.result().iterator, CountWinState(seen, buf))
+    }
   }
 
   // ---- TTL'd dedup (StateTtlConfig analog) -------------------------
@@ -246,26 +244,15 @@ object StatefulOps {
     * (reference RowTimeRangeBoundedPrecedingFunction.java and its ROWS
     * sibling). State = the last n rows per key (bounded). */
   def boundedRowsOver(events: Dataset[Event], n: Int): Dataset[OverRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    implicit val stateEnc: Encoder[List[(Long, Long, Double)]] =
-      Encoders.kryo[List[(Long, Long, Double)]]
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[(Long, Long, Double)], OverRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (user, rows, state: GroupState[List[(Long, Long, Double)]]) =>
-          var window = state.getOption.getOrElse(Nil) // oldest..newest, ≤ n
-          val out = rows.toList
-            .sortBy(e => (Event.micros(e.ts), e.event_id))
-            .map { e =>
-              window = (window :+ ((Event.micros(e.ts), e.event_id, e.value)))
-                .takeRight(n)
-              OverRow(user, e.event_id, window.map(_._3).sum, window.size)
-            }
-          state.update(window)
-          out.iterator
+    import events.sparkSession.implicits._
+    perUser[List[(Long, Long, Double)], OverRow](events) { (user, prev, rows) =>
+      var window = prev.getOrElse(Nil) // oldest..newest, ≤ n
+      val out = rows.map { e =>
+        window = (window :+ ((Event.micros(e.ts), e.event_id, e.value))).takeRight(n)
+        OverRow(user, e.event_id, window.map(_._3).sum, window.size)
       }
+      (out.iterator, window)
+    }
   }
 
   /** Streaming OVER (RANGE interval PRECEDING): per key, aggregates
@@ -275,27 +262,17 @@ object StatefulOps {
     * boundedRowsOver). State = rows inside the time range (bounded by
     * data rate × range, the reference's retention). */
   def boundedRangeOver(events: Dataset[Event], rangeMs: Long): Dataset[OverRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    implicit val stateEnc: Encoder[List[(Long, Long, Double)]] =
-      Encoders.kryo[List[(Long, Long, Double)]]
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[(Long, Long, Double)], OverRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (user, rows, state: GroupState[List[(Long, Long, Double)]]) =>
-          var window = state.getOption.getOrElse(Nil) // oldest..newest
-          val out = rows.toList
-            .sortBy(e => (Event.micros(e.ts), e.event_id))
-            .map { e =>
-              val t = Event.micros(e.ts)
-              window = (window :+ ((t, e.event_id, e.value)))
-                .dropWhile { case (ts, _, _) => ts < t - rangeMs * 1000 }
-              OverRow(user, e.event_id, window.map(_._3).sum, window.size)
-            }
-          state.update(window)
-          out.iterator
+    import events.sparkSession.implicits._
+    perUser[List[(Long, Long, Double)], OverRow](events) { (user, prev, rows) =>
+      var window = prev.getOrElse(Nil) // oldest..newest
+      val out = rows.map { e =>
+        val t = Event.micros(e.ts)
+        window = (window :+ ((t, e.event_id, e.value)))
+          .dropWhile { case (ts, _, _) => ts < t - rangeMs * 1000 }
+        OverRow(user, e.event_id, window.map(_._3).sum, window.size)
       }
+      (out.iterator, window)
+    }
   }
 
   // ---- temporal (as-of) join ---------------------------------------

@@ -71,13 +71,11 @@ class HarnessSpec extends SparkSpec {
 
   test("micro-batch jobs carry a one-line label naming their batch") {
     import org.apache.spark.sql.functions.col
-    val base = Scratch.dir("hbatch").toString
-    val (in, schema) = streaming.Replay.fileEpochs(Tables.events(spark, sf),
-      Seq(col("event_id") % 2 === 0, col("event_id") % 2 === 1), base)
+    val ep = streaming.Replay.fileEpochs(Tables.events(spark, sf),
+      Seq(col("event_id") % 2 === 0, col("event_id") % 2 === 1))
     withLog { log =>
       val since = System.currentTimeMillis()
-      streaming.Replay.runBatches(streaming.Replay.streamDf(spark, in, schema),
-        s"$base/ck") { (b, _) => b.count(); () }
+      ep.runBatches(ep.streamDf(spark)) { (b, _) => b.count(); () }
       Harness.drain(spark)
       val jobs = log.jobs(since)
       assert(jobs.nonEmpty)

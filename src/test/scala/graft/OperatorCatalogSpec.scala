@@ -44,4 +44,14 @@ class OperatorCatalogSpec extends SparkSpec {
       .filter(k => now.get(k) != pinned.get(k))
     assert(diff.isEmpty, s"oracle SQL differs from oracle_sql.sha256: $diff")
   }
+
+  test("equal oracle SQL texts are one definition") {
+    // a copy-pasted oracle drifts from its twin unseen; twins share
+    // one String (a val), so equal texts must be the same instance
+    val copies = SparkEntry.oracleSql.toSeq.groupBy(_._2).values
+      .map(_.sortBy(_._1))
+      .filter(g => g.exists(kv => !(kv._2 eq g.head._2)))
+      .map(_.map(_._1).mkString(" = ")).toSeq.sorted
+    assert(copies.isEmpty, s"oracle SQL copies: ${copies.mkString("; ")}")
+  }
 }

@@ -125,14 +125,12 @@ class TablesSchemaSpec extends SparkSpec {
 
     // the stream's own jobs run under SQL executions; an inference job
     // for the readback would run under none
-    val base = Scratch.dir("rupd").toString
     val ids = spark.range(40).toDF("id")
-    val (in, schema) =
-      Replay.fileEpochs(ids, (0 until 2).map(i => pmod(col("id"), lit(2)) === i), base)
-    val counts = Replay.streamDf(spark, in, schema)
+    val ep = Replay.fileEpochs(ids, (0 until 2).map(i => pmod(col("id"), lit(2)) === i))
+    val counts = ep.streamDf(spark)
       .groupBy(pmod(col("id"), lit(5)).as("k")).agg(count(lit(1)).as("n"))
     var out: org.apache.spark.sql.DataFrame = null
-    val jobs = jobsDuring { out = Replay.runUpdate(counts, base, spark) }
+    val jobs = jobsDuring { out = ep.runUpdate(counts) }
     assert(jobs.nonEmpty)
     assert(jobs.forall(_.sqlId.isDefined), jobs.filter(_.sqlId.isEmpty).map(_.desc))
     assert(Replay.latestPerKey(out, col("k")).count() == 5)

@@ -88,4 +88,25 @@ class CepSpec extends SparkSpec {
     val got = spark.table("cep").as[(Long, Long, Long)].collect().toList
     assert(got == List((5L, 1L, 2L)))
   }
+
+  test("matchStreamWithTimeouts emits an expired partial and a match once each") {
+    val spark2 = spark; import spark2.implicits._
+    implicit val ctx = spark.sqlContext
+    val pat = Cep.Pattern.begin[Event]("v")(isType("view"))
+      .followedBy("p")(isType("purchase"))
+      .within(5000000L) // 5 s
+    val ms = MemoryStream[Event]
+    val q = Cep.matchStreamWithTimeouts(ms.toDS(), pat)
+      .map { case (u, m, timedOut) => (u, m("v").head.event_id, timedOut) }
+      .writeStream.format("memory").queryName("cep_timeouts").outputMode("append").start()
+    ms.addData(ev(1, 10, 7, "view"), ev(3, 10, 8, "view"))
+    q.processAllAvailable() // two open partials
+    ms.addData(ev(2, 100, 7, "purchase"), ev(4, 12, 8, "purchase"))
+    q.processAllAvailable() // user 7's partial outlived `within`, user 8's completed
+    ms.addData(ev(5, 200, 7, "purchase"), ev(6, 201, 8, "purchase"))
+    q.processAllAvailable() // neither is emitted again
+    q.stop()
+    val got = spark.table("cep_timeouts").as[(Long, Long, Boolean)].collect().toList.sorted
+    assert(got == List((7L, 1L, true), (8L, 3L, false)))
+  }
 }

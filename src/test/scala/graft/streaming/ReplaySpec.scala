@@ -23,7 +23,7 @@ class ReplaySpec extends SparkSpec {
   /** The epoch files of a replay, oldest modification time first. */
   private def epochFiles(in: String): Seq[Path] = {
     val ls = Files.list(Paths.get(in))
-    try ls.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+    try ls.iterator().asScala.filter(_.getFileName.toString.startsWith("chunk_")).toSeq
       .sortBy(p => Files.getLastModifiedTime(p).toMillis)
     finally ls.close()
   }
@@ -37,7 +37,7 @@ class ReplaySpec extends SparkSpec {
 
   test("the quarter epochs partition the input rows exactly") {
     val real = events
-    val ep = Replay.quarters(real, Scratch.dir("rq").toString)
+    val ep = Replay.quarters(real)
     val files = epochFiles(ep.in)
     assert(files.map(_.getFileName.toString) ==
       (0 until 4).map(i => f"chunk_$i%02d.parquet"))
@@ -49,23 +49,20 @@ class ReplaySpec extends SparkSpec {
 
   test("each epoch is one file; an empty epoch is an empty file and a 0-row batch") {
     val real = events.toDF()
-    val base = Scratch.dir("rempty").toString
     val conds = Seq(col("event_id") % 2 === 0, col("user_id") < 0, col("event_id") % 2 === 1)
-    val (in, schema) = Replay.fileEpochs(real, conds, base)
-    val files = epochFiles(in)
+    val ep = Replay.fileEpochs(real, conds)
+    val files = epochFiles(ep.in)
     assert(files.map(_.getFileName.toString) ==
       (0 until 3).map(i => f"chunk_$i%02d.parquet"))
     conds.zip(files).foreach { case (cond, f) => sameRows(read(f), real.filter(cond)) }
     assert(read(files(1)).isEmpty)
-    val q = Replay.runBatches(Replay.streamDf(spark, in, schema), s"$base/ck") { (b, _) =>
-      b.count(); ()
-    }
+    val q = ep.runBatches(ep.streamDf(spark)) { (b, _) => b.count(); () }
     assert(q.recentProgress.map(_.numInputRows).toSeq == files.map(read(_).count()))
   }
 
   test("sentinel epochs follow the quarters in modification-time order") {
     val real = events
-    val ep = Replay.quarters(real, Scratch.dir("rsent").toString, Replay.flushes(1, 2))
+    val ep = Replay.quarters(real, Replay.flushes(1, 2))
     val files = epochFiles(ep.in)
     assert(files.map(_.getFileName.toString) ==
       (0 until 6).map(i => f"chunk_$i%02d.parquet"))
@@ -82,21 +79,18 @@ class ReplaySpec extends SparkSpec {
 
   test("a replay of N epochs runs as exactly N micro-batches") {
     val real = events
-    val base = Scratch.dir("rbatches").toString
-    val ep = Replay.quarters(real, base, Replay.flushes(1, 2))
+    val ep = Replay.quarters(real, Replay.flushes(1, 2))
     val expected = epochFiles(ep.in).map(read(_).count())
     assert(expected.size == 6 && expected.drop(4) == Seq(1L, 1L))
     val seen = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    val q = Replay.runBatches(ep.streamDf(spark), s"$base/ck") { (b, id) =>
-      seen += ((id, b.count()))
-    }
+    val q = ep.runBatches(ep.streamDf(spark)) { (b, id) => seen += ((id, b.count())) }
     assert(seen.toSeq == expected.indices.map(_.toLong).zip(expected))
     assert(q.recentProgress.map(_.numInputRows).toSeq == expected)
   }
 
   test("the id split gives snapshot ∪ streamed = input, with no overlap") {
     val docs = Tables.documents(spark, sf)
-    val (snap, ep) = Replay.snapshotSplit(docs, "doc_id", Scratch.dir("rsplit").toString)
+    val (snap, ep) = Replay.snapshotSplit(docs, "doc_id")
     val streamed = spark.read.parquet(ep.in)
     assert(epochFiles(ep.in).size == 3)
     assert(snap.join(streamed, "doc_id").isEmpty)
@@ -120,10 +114,10 @@ class ReplaySpec extends SparkSpec {
         col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"),
         unix_micros(col("ts")).as("ts_us")))
     cases.foreach { case (name, ds) =>
-      val (in, schema) = Replay.fileEpochs(ds, Seq(lit(true)), Scratch.dir("rschema").toString)
-      assert(schema == spark.read.parquet(in).schema, name)
+      val ep = Replay.fileEpochs(ds, Seq(lit(true)))
+      assert(ep.schema == spark.read.parquet(ep.in).schema, name)
     }
-    val ep = Replay.quarters(events, Scratch.dir("rschema").toString, Replay.flushes(1, 2))
+    val ep = Replay.quarters(events, Replay.flushes(1, 2))
     assert(ep.schema == spark.read.parquet(ep.in).schema, "quarters with sentinels")
   }
 
@@ -132,12 +126,10 @@ class ReplaySpec extends SparkSpec {
     val key = "spark.sql.shuffle.partitions"
     val own = spark.conf.get(key)
     val requested = own.toInt + 1
-    val base = Scratch.dir("rconf").toString
-    val ep = Replay.quarters(events, base)
+    val ep = Replay.quarters(events)
     val counts = ep.stream(spark).groupBy($"user_id").count()
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = Replay.runBatches(counts, s"$base/ck", "update",
-        Map(key -> requested.toString)) { (b, _) =>
+    val q = ep.runBatches(counts, "update", Map(key -> requested.toString)) { (b, _) =>
       seen.add(spark.conf.get(key))
       b.count()
     }
@@ -148,20 +140,19 @@ class ReplaySpec extends SparkSpec {
   }
 
   test("a replay stopped after its second batch resumes at batch 2 on its checkpoint") {
-    val base = Scratch.dir("rresume").toString
-    val counts = Replay.quarters(events, base).streamDf(spark).groupBy("event_type").count()
     type Batches = ArrayBuffer[(Long, Map[String, Long])]
-    def run(ck: String, seen: Batches, stopAt: Long = -1L): Unit =
-      Replay.runBatches(counts, s"$base/$ck", "update") { (b, id) =>
+    def run(ep: Replay.Epochs, seen: Batches, stopAt: Long = -1L): Unit =
+      ep.runBatches(ep.streamDf(spark).groupBy("event_type").count(), "update") { (b, id) =>
         if (id == stopAt) throw new IllegalStateException(s"stopped at batch $id")
         seen += id -> b.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
     // update mode emits the changed counts; the last emission per key wins
     def cells(bs: Batches) = bs.map(_._2).foldLeft(Map.empty[String, Long])(_ ++ _)
     val whole, first, rest = new Batches
-    run("ck_whole", whole)
-    intercept[StreamingQueryException](run("ck", first, stopAt = 2))
-    run("ck", rest)
+    run(Replay.quarters(events), whole)
+    val ep = Replay.quarters(events)
+    intercept[StreamingQueryException](run(ep, first, stopAt = 2))
+    run(ep, rest)
     assert(whole.map(_._1) == Seq(0L, 1L, 2L, 3L))
     assert(first.map(_._1) == Seq(0L, 1L))
     assert(rest.map(_._1) == Seq(2L, 3L))
@@ -171,9 +162,9 @@ class ReplaySpec extends SparkSpec {
   }
 
   test("a second offsets/N write for an existing batch is refused") {
-    val ep = Replay.quarters(events, Scratch.dir("roffsets").toString)
-    val ck = Scratch.dir("roffsets-ck").toString
-    Replay.runBatches(ep.streamDf(spark), ck) { (b, _) => b.count(); () }
+    val ep = Replay.quarters(events)
+    ep.runBatches(ep.streamDf(spark)) { (b, _) => b.count(); () }
+    val ck = s"${ep.dir}/ck"
     val file = Paths.get(ck, "offsets", "1")
     val written = Files.readAllBytes(file)
     assert(Files.exists(file.resolveSibling(".1.crc")))
@@ -185,5 +176,40 @@ class ReplaySpec extends SparkSpec {
     out.write("v1\n{}".getBytes("UTF-8"))
     intercept[FileAlreadyExistsException](out.close())
     assert(Files.readAllBytes(file).sameElements(written))
+  }
+
+  /** The DDL stream tables' columns (q227, q244). */
+  private def ddlColumns(df: DataFrame): DataFrame =
+    df.select(col("event_id"), col("user_id"), col("event_type"),
+      expr("cast(round(value*100) as bigint)").as("cents"),
+      unix_micros(col("ts")).as("ts_us"))
+
+  /** (batch id, sorted rows) of every micro-batch of a replay. */
+  private def batches(ep: Replay.Epochs): Seq[(Long, Seq[String])] = {
+    val seen = ArrayBuffer[(Long, Seq[String])]()
+    ep.runBatches(ep.streamDf(spark)) { (b, id) =>
+      seen += id -> b.collect().map(_.toString).toSeq.sorted
+    }
+    seen.toSeq
+  }
+
+  test("csv and graft-avro epochs replay as the parquet epochs of the same rows") {
+    val parquet = Replay.quarters(events, Replay.flushes(1, 2), project = ddlColumns)
+    val expected = batches(parquet)
+    assert(expected.map(_._1) == (0L until 6L))
+    assert(expected.map(_._2.size.toLong) == epochFiles(parquet.in).map(read(_).count()))
+    Seq("csv" -> "csv", "graft-avro" -> "avro").foreach { case (format, ext) =>
+      val ep = Replay.quarters(events, Replay.flushes(1, 2), format, ddlColumns)
+      assert(epochFiles(ep.in).map(_.getFileName.toString) ==
+        (0 until 6).map(i => f"chunk_$i%02d.$ext"), format)
+      assert(batches(ep) == expected, format)
+    }
+  }
+
+  test("every replay owns a fresh dir under the Scratch root") {
+    val ids = spark.range(4).toDF("id")
+    val (a, b) = (Replay.fileEpochs(ids, Seq(lit(true))), Replay.fileEpochs(ids, Seq(lit(true))))
+    assert(a.dir != b.dir)
+    Seq(a, b).foreach(ep => assert(Paths.get(ep.dir).getParent == Scratch.root))
   }
 }
